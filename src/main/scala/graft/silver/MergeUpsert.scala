@@ -75,8 +75,7 @@ object MergeUpsert extends QueryModule {
     * dynamic overwrite replaces the partition normally and no
     * out-of-band file deletion is needed. */
   def merge(silverDir: String, delta: DataFrame, keyCols: Seq[String],
-            versionCol: String, partitionCol: String,
-            tombstoneCol: Option[String] = None): Unit = {
+            versionCol: String, partitionCol: String): Unit = {
     val spark = delta.sparkSession
     val exists = Files.isDirectory(Paths.get(silverDir)) && {
       val s = Files.list(Paths.get(silverDir))
@@ -185,13 +184,11 @@ object MergeUpsert extends QueryModule {
     if (!Files.isDirectory(Paths.get(silverDir))) Files.deleteIfExists(marker)
     if (!Files.exists(marker)) {
       graft.util.Fs.deleteRecursively(silverDir)
-      merge(silverDir, baseEventsDel(spark, d), Seq("event_id"), "load_seq",
-        "event_date", tombstoneCol = Some("deleted"))
+      merge(silverDir, baseEventsDel(spark, d), Seq("event_id"), "load_seq", "event_date")
       Files.write(marker, Array.emptyByteArray,
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
-    merge(silverDir, deltaEventsDel(spark, d), Seq("event_id"), "load_seq",
-      "event_date", tombstoneCol = Some("deleted"))
+    merge(silverDir, deltaEventsDel(spark, d), Seq("event_id"), "load_seq", "event_date")
     refreshedSummary(spark, silverDir, tombstoneCol = Some("deleted"))
   }
 

@@ -1040,7 +1040,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
       case v @ ("create_view" | "drop_view" | "rename_view" | "list_views" |
                 "describe_view") => new GraftProcedures.ViewDdlUnbound(root, v)
       case v @ ("create_materialized_view" | "refresh_materialized_view") =>
-        new GraftProcedures.MvDdlUnbound(catName, root, v)
+        new MvLifecycle.MvDdlUnbound(catName, root, v)
       case _ => throw new RuntimeException(s"no such procedure $ident in $catName")
     }
 

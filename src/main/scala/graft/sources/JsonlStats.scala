@@ -260,7 +260,7 @@ object JsonlStats {
   /** Run-count ceiling per manifest entry (r12): past this, compact
     * MATERIALIZES the bin's lineage in-row instead of publishing a
     * runaway run list — manifest entries stay O(1) regardless of
-    * compaction cadence (LineageDeepBench's kilocommit law). */
+    * compaction cadence (SCALING.md's LineageDeepBench kilocommit law). */
   val MaxRunsPerEntry = 32
 
   /** Manifest entry: data file path (relative to the table root), its

@@ -1341,7 +1341,7 @@ object JsonlStatsQueries extends QueryModule {
 
   /** q245's fixture: a 24-commit history (one deterministic slice of
     * the feed per INSERT) through the catalog — the commit-per-append
-    * shape whose archive MetaBench priced at manifest-size ×
+    * shape whose archive SCALING.md's MetaBench priced at manifest-size ×
     * commit-rate. Records the version current after slice 12 so the
     * time-travel read below is pinned by construction. */
   def ensureHistoryFixture(spark: SparkSession, d: String): String = {
@@ -1783,10 +1783,8 @@ object JsonlStatsQueries extends QueryModule {
          |FROM $cat.jsonl_stats_table""".stripMargin)
     Seq("jsonl_cbo_fact", "jsonl_cbo_users", "jsonl_cbo_types")
       .foreach(t => spark.sql(s"CALL $cat.analyze_table('$t')"))
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    saved.foreach { case (k, _) => spark.conf.set(k, "true") }
-    try {
+    graft.util.Confs.withConfs(spark,
+        "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val df = spark.sql(
         s"""SELECT t.event_type, count(*) AS n,
            |  CAST(SUM(CAST(f.value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum,
@@ -1803,14 +1801,13 @@ object JsonlStatsQueries extends QueryModule {
       // here executed the star join a second, thrown-away time (r16).
       // NOTE (ADVICE r16): this pins LOGICAL-phase confs only (CBO join
       // reorder). AQE re-derives the final physical plan at execution
-      // time, AFTER the finally below restores the session confs — any
+      // time, AFTER the conf scope below restores the session confs — any
       // conf AQE's runtime re-planning reads (broadcast thresholds
       // etc.) is no longer in effect when the caller executes.
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.executedPlan
       df
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   /** The id-ranged layout (monotone ids ↔ arrival order — the
@@ -1837,7 +1834,7 @@ object JsonlStatsQueries extends QueryModule {
     * prune task ranges BEFORE parsing, so auditing K probes against
     * 100 TB of text costs K × (sidecar reads + the hit files' parses)
     * — most probes are absent and touch no text at all (no false
-    * negatives by construction; GramBench measured the byte law).
+    * negatives by construction; SCALING.md's GramBench measured the byte law).
     * Results exact by oracle; the absent probe pins that pruning
     * never fabricates a miss. */
   def indexedContamination(spark: SparkSession, d: String): DataFrame = {
@@ -1923,10 +1920,8 @@ object JsonlStatsQueries extends QueryModule {
          |FROM $cat.jsonl_stats_table""".stripMargin)
     spark.sql(s"CALL $cat.analyze_table('jsonl_hist_skew', histogram => true, " +
       "hist_bins => 20, hist_cols => 'sk')")
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    saved.foreach { case (k, _) => spark.conf.set(k, "true") }
-    try {
+    graft.util.Confs.withConfs(spark,
+        "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val df = spark.sql(
         s"""SELECT count(*) AS n,
            |  min(event_id) AS min_id, max(event_id) AS max_id,
@@ -1937,8 +1932,7 @@ object JsonlStatsQueries extends QueryModule {
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.executedPlan
       df
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   /** q260 (r9c): RATE-LIMITED STREAM DRAIN — `maxFilesPerTrigger`
@@ -3380,7 +3374,7 @@ object JsonlStatsQueries extends QueryModule {
     * recomputes the post-churn aggregate from raw parquet — delta
     * application must equal recomputation exactly. At 100 TB this is
     * the nightly-refresh contract: cost proportional to the DELTA, not
-    * the source (MvSampleBench's refresh law measures it). */
+    * the source (SCALING.md's MvSampleBench refresh law). */
   def incrementalMvRefresh(spark: SparkSession, d: String): DataFrame = {
     val cat = ensureCatalog(spark, d)
     spark.sql(s"DROP TABLE IF EXISTS $cat.mvi_src")

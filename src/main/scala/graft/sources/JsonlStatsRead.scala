@@ -183,9 +183,6 @@ class JsonlStatsScanBuilder(root: String, full: StructType,
       : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
     import org.apache.spark.sql.connector.expressions.{Expression => V2Expression,
       GeneralScalarExpression, Literal, NamedReference, UserDefinedScalarFunc}
-    if (sys.env.contains("GRAFT_DEBUG_PUSH"))
-      predicates.foreach(p => println(s"[push-debug] ${p.getClass.getName}: $p " +
-        s"(name=${p.name()}, children=${p.children().map(c => c.getClass.getSimpleName + ":" + c).mkString(" | ")})"))
     val v1 = predicates.flatMap(p =>
       org.apache.spark.sql.graft.PredicateBridge.toV1(p).toSeq)
     pushFilters(v1)

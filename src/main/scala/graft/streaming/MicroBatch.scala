@@ -487,11 +487,8 @@ object MicroBatch extends QueryModule {
     import spark.implicits._
     val name = "stream_tws_" + d.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + runSeq.incrementAndGet()
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.util.Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = spark.readStream.schema(wireSchema)
         .option("maxFilesPerTrigger", "1000000") // unordered fixture: one batch
         .json(landing)
@@ -511,11 +508,6 @@ object MicroBatch extends QueryModule {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
     }
     spark.table(name)
       .select($"user_id", $"n_sessions", $"n_events")
@@ -539,11 +531,8 @@ object MicroBatch extends QueryModule {
     import spark.implicits._
     val name = "stream_timer_sess_" + d.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + runSeq.incrementAndGet()
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.util.Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = spark.readStream.schema(wireSchema)
         .option("maxFilesPerTrigger", "1000000") // one data batch; timers fire in the no-data batch
         .json(landing)
@@ -564,11 +553,6 @@ object MicroBatch extends QueryModule {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
     }
     spark.table(name)
       .select($"user_id", $"session_start_us", $"session_end_us", $"n_events")

@@ -56,10 +56,8 @@ class MergeUpsertSpec extends SparkSpec {
     val silver = freshDir("silver_del")
     val base = MergeUpsert.baseEventsDel(spark, sfDir)
     val delta = MergeUpsert.deltaEventsDel(spark, sfDir)
-    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
-    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
+    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date")
+    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date")
     val current = MergeUpsert.readCurrent(spark, silver, Some("deleted"))
     val nDeletes = delta.filter(col("deleted")).count()
     assert(nDeletes > 0, "fixture must exercise the delete arm")
@@ -74,8 +72,7 @@ class MergeUpsertSpec extends SparkSpec {
     assert(stored.filter(col("deleted")).count() === nDeletes)
     // idempotence with deletes
     val once = snapshot(silver)
-    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
+    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date")
     assert(snapshot(silver) === once)
   }
 
@@ -83,17 +80,14 @@ class MergeUpsertSpec extends SparkSpec {
     val silver = freshDir("silver_resurrect")
     val base = MergeUpsert.baseEventsDel(spark, sfDir)
     val delta = MergeUpsert.deltaEventsDel(spark, sfDir)
-    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
-    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
+    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date")
+    MergeUpsert.merge(silver, delta, Seq("event_id"), "load_seq", "event_date")
     val current = MergeUpsert.readCurrent(spark, silver, Some("deleted"))
     val visibleAfterDelete = current.count()
     // at-least-once delivery: the ORIGINAL base batch (load_seq=1) is
     // redelivered AFTER the delete batch — the stored tombstones
     // (load_seq=2) must outversion it, or deleted keys come back
-    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date",
-      tombstoneCol = Some("deleted"))
+    MergeUpsert.merge(silver, base, Seq("event_id"), "load_seq", "event_date")
     val replayed = MergeUpsert.readCurrent(spark, silver, Some("deleted"))
     val victims = delta.filter(col("deleted")).select("event_id")
     assert(replayed.join(victims, Seq("event_id"), "left_semi").count() === 0,

@@ -388,23 +388,70 @@ class MvIncrementalSpec extends SparkSpec {
   test("consumed signed-delta manifests are swept: an incremental refresh " +
     "leaves no _cdf ivm files behind (ADVICE r13)") {
     cat
+    val gfKey = "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
+    // derived manifests a refresh writes under a table's _cdf: signed
+    // window pairs (`..._ivm<nonce>...`) and version pins (`..._pin<nonce>`)
+    def derivedCdf(table: String): Seq[String] = {
+      val cdf = java.nio.file.Paths.get(root, table, "_cdf")
+      if (!Files.isDirectory(cdf)) Seq.empty
+      else {
+        val s = Files.list(cdf)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.contains("ivm") || n.contains("_pin")).toSeq
+        finally s.close()
+      }
+    }
+    // each window refreshes under a different caller state of the
+    // group-filter conf (unset, then set): the refresh may flip it for
+    // its own MERGEs, but must hand back exactly what the caller had
+    def check(view: String, src: String, body: String, mode: String,
+        windows: Seq[String]): Unit = {
+      spark.sql(s"CALL mvinc.create_materialized_view('$view', '$body', or_replace => true)")
+      val liveness = Iterator.from(0).map(graft.plans.MvIncremental.auxTableName(view, _))
+        .takeWhile(t => Files.isDirectory(java.nio.file.Paths.get(root, t))).toSeq
+      windows.zipWithIndex.foreach { case (dml, i) =>
+        spark.sql(dml)
+        val callerValue = if (i % 2 == 0) None else Some("true")
+        callerValue.fold(spark.conf.unset(gfKey))(spark.conf.set(gfKey, _))
+        try {
+          assert(refreshMode(view) === mode, s"$view window $i")
+          assert(spark.conf.getAll.get(gfKey) === callerValue,
+            s"$view window $i: the group-filter conf must come back as the caller left it")
+        } finally spark.conf.unset(gfKey)
+        assert(mvRows(view) === direct(body), s"$view window $i")
+        (src +: liveness).foreach { t =>
+          assert(derivedCdf(t).isEmpty,
+            s"$view window $i: ivm manifests must be swept from $t: ${derivedCdf(t)}")
+        }
+        val leaked = spark.catalog.listTables().collect()
+          .filter(t => t.isTemporary && t.name.startsWith("graft_ivm_")).map(_.name).toSeq
+        assert(leaked.isEmpty, s"$view window $i: temp views must be dropped: $leaked")
+      }
+    }
     spark.sql("DROP TABLE IF EXISTS mvinc.src10")
     Seq(("a", 1.0)).toDF("k", "v").createOrReplaceTempView("mvinc_seed10")
     spark.sql("CREATE TABLE mvinc.src10 AS SELECT * FROM mvinc_seed10")
-    val body = "SELECT k, count(*) AS n FROM mvinc.src10 GROUP BY k"
-    spark.sql(s"CALL mvinc.create_materialized_view('mv10', '$body', or_replace => true)")
-    spark.sql("INSERT INTO mvinc.src10 VALUES ('b', 2.0)")
-    assert(refreshMode("mv10") === "incremental")
-    val cdf = java.nio.file.Paths.get(root, "src10", "_cdf")
-    val leftover =
-      if (!java.nio.file.Files.isDirectory(cdf)) Seq.empty
-      else {
-        val s = java.nio.file.Files.list(cdf)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.contains("ivm")).toSeq
-        finally s.close()
-      }
-    assert(leftover.isEmpty, s"ivm manifests must be swept after the merge: $leftover")
+    check("mv10", "src10", "SELECT k, count(*) AS n FROM mvinc.src10 GROUP BY k", "incremental",
+      Seq("INSERT INTO mvinc.src10 VALUES ('b', 2.0)", "INSERT INTO mvinc.src10 VALUES ('c', 3.0)"))
+    // COUNT(DISTINCT): the liveness table's pinned read and MERGE too
+    spark.sql("DROP TABLE IF EXISTS mvinc.src10d")
+    Seq(("a", "u1"), ("a", "u2"), ("b", "u1")).toDF("k", "u")
+      .createOrReplaceTempView("mvinc_seed10d")
+    spark.sql("CREATE TABLE mvinc.src10d AS SELECT * FROM mvinc_seed10d")
+    check("mv10d", "src10d",
+      "SELECT k, count(DISTINCT u) AS du, count(*) AS n FROM mvinc.src10d GROUP BY k",
+      "incremental", Seq("INSERT INTO mvinc.src10d VALUES ('a', 'u3'), ('c', 'u1')",
+        "DELETE FROM mvinc.src10d WHERE u = 'u2'"))
+    // MIN/MAX over deleting windows: the group-scoped repair's spool
+    // and head-version pins too
+    spark.sql("DROP TABLE IF EXISTS mvinc.src10m")
+    Seq(("a", 1.0), ("a", 5.0), ("b", 2.0), ("b", 7.0)).toDF("k", "v")
+      .createOrReplaceTempView("mvinc_seed10m")
+    spark.sql("CREATE TABLE mvinc.src10m AS SELECT * FROM mvinc_seed10m")
+    check("mv10m", "src10m",
+      "SELECT k, min(v) AS mn, max(v) AS mx, count(*) AS n FROM mvinc.src10m GROUP BY k",
+      "incremental-repair", Seq("DELETE FROM mvinc.src10m WHERE v = 1.0",
+        "DELETE FROM mvinc.src10m WHERE v = 7.0"))
   }
 
   test("left-outer fact⋈dim bodies maintain incrementally on BOTH sides " +
@@ -686,13 +733,6 @@ class MvIncrementalSpec extends SparkSpec {
       assert(refreshMode("mv7") === "incremental-repair")
       assert(mvRows("mv7") === direct(body))
     } finally spark.conf.unset("spark.graft.mv.repairMaxGroups")
-    // the operator escape hatch declines repair entirely — RTAS
-    spark.conf.set("spark.graft.mv.repairDisable", "true")
-    try {
-      spark.sql("DELETE FROM mvinc.src7 WHERE v = 5.0")
-      assert(refreshMode("mv7") === "full")
-      assert(mvRows("mv7") === direct(body))
-    } finally spark.conf.unset("spark.graft.mv.repairDisable")
     // and the NEXT pure-append window is incremental again
     spark.sql("INSERT INTO mvinc.src7 VALUES ('c', -2.0)")
     assert(refreshMode("mv7") === "incremental")

@@ -419,7 +419,7 @@ class TypedColumnsSpec extends SparkSpec {
     // adversarial layout for the r11 interval: file k holds cells
     // {k, k+8, ..., k+56} (id % 8 routing), so every file's [min, max]
     // interval spans nearly the whole domain while its true cell SET
-    // is 8 scattered values — the straddle shape VecStatsBench measured
+    // is 8 scattered values — the straddle shape SCALING.md's VecStatsBench measured
     // at 37.5% planned vs 11% true in r11
     val df = spark.range(64).select($"id",
       transform(sequence(lit(0), lit(7)),
