@@ -41,10 +41,7 @@ object SparkEntry {
     ext.DedupClusters,
     ext.Sketches,
     ingest.PipelineQueries,
-    ingest.Compaction,
     ingest.ColumnarFormats,
-    ingest.ZOrder,
-    ingest.StatsManifest,
     ingest.DynamicPruning,
     sources.JsonlStatsQueries,
     silver.ReferenceEtl,

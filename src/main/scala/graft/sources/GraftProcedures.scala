@@ -114,9 +114,10 @@ object GraftProcedures {
     * per-column manifest stats: a z-clustered file has TIGHT bounds on
     * BOTH dimensions at once, so an ordinary 2-D box predicate prunes
     * ≈ the product of the selectivities from the manifest alone — no
-    * z-cell arithmetic, no bounds artifact, no special read path (the
-    * `ingest/ZOrder` parquet variant needs all three; here the manifest
-    * IS the index and plain range predicates do the work). */
+    * z-cell arithmetic, no bounds artifact, no special read path: the
+    * manifest IS the index and plain range predicates do the work
+    * (q122, q190). Either dimension may be a number, a DATE or a
+    * timestamp. */
   class ZOrderBound(root: String) extends BoundProcedure {
     override def name(): String = "zorder"
     override def description(): String =
@@ -143,10 +144,7 @@ object GraftProcedures {
       val part = Option(input.getUTF8String(4)).map(_.toString).filter(_.nonEmpty)
       val dir = Paths.get(root, table)
       require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (before, after, rows) = part match {
-        case Some(p) => GraftProcedures.zorderScoped(dir.toString, colA, colB, target, p)
-        case None => GraftProcedures.zorder(dir.toString, colA, colB, target)
-      }
+      val (before, after, rows) = GraftProcedures.zorder(dir.toString, colA, colB, target, part)
       java.util.List.of[Scan](new ZOrderResultScan(before, after, rows)).iterator()
     }
   }
@@ -1015,210 +1013,193 @@ object GraftProcedures {
     (expired.size, dataDeleted, orphansDeleted, keepFrom)
   }
 
-  /** The maintenance core. Greedy first-fit over size-sorted
-    * sub-target files, binned WITHIN each pkey (an unkeyed table is one
-    * key group of None); only bins of ≥2 members rewrite anything.
-    * Returns (files_before, files_after, files_merged). */
-  /** The zorder rewrite: read the live generation through the connector,
-    * cluster by the Morton interleave of `colA`/`colB`, write back
-    * through the connector's own overwrite path. Self-overwrite is safe
-    * by the table format's own laws: the scan pins the live manifest at
-    * planning, writer tasks emit attempt-unique new files, the atomic
-    * manifest swap is the only visibility change, and deferred GC keeps
-    * the old generation's files on disk for its archived snapshot —
-    * so `VERSION AS OF` still reads the pre-zorder layout afterwards.
+  /** The zorder rewrite: read the live rows through the connector,
+    * cluster them by the Morton interleave of `colA`/`colB`, and write
+    * them back through the connector's own write path. One body serves
+    * both scopes; they differ only in which entries they read and how
+    * they commit.
     *
-    * Refuses key-grouped layouts: re-clustering would destroy the
-    * one-pkey-per-file contract the SPJ leg depends on ([[compact]]
-    * preserves keys by never binning across them; zorder by definition
-    * mixes rows across files). Bucket ranks use double math over the
-    * observed [min, max] of each dimension — monotone, which is all
-    * clustering needs (no read-side mirror exists to disagree with:
-    * the manifest bounds the writer measures ARE the index).
-    * Null dimension values rank as bucket 0 (clustered together,
-    * still within every file's recorded non-null bounds only). */
-  /** SCOPED zorder (r12, the `OPTIMIZE ... WHERE` shape for keyed
-    * layouts): re-cluster ONE partition's files by the Morton
-    * interleave, leaving every other entry byte-untouched. At 100 TB
-    * you zorder yesterday's `days(ts)` partition after it closes —
-    * never the table. The scope's rows are read through a TEMPORARY
-    * manifest naming exactly the scoped entries (plus the table's
-    * eqdel/txn lines, so masks apply with their seq semantics), the
-    * z-clustered output lands via a STAGED plain write (no keyed
-    * distribution requirement to fight the z range-partitioning — the
-    * pkey is a constant over the scope, so it is stamped onto the
-    * fresh entries directly, `pspec` included), files move into the
-    * table directory, and ONE rewrite commit replaces the scoped
-    * entries under the same OCC law as row-level DML: a rival that
-    * touched a scoped file (DV attach, compaction) conflicts loudly.
-    * Lineage rides in-row exactly like the global path (ids project
-    * through the rewrite, entries publish frid = -2); an unassigned
-    * table's fresh entries stay unassigned. */
-  def zorderScoped(tableRoot: String, colA: String, colB: String,
-                   targetBytes: Long, partition: String): (Int, Int, Long) = {
+    *   - Global (`partition` = None): the whole live generation,
+    *     committed as an OVERWRITE of the table. Self-overwrite is safe
+    *     by the table format's own laws: the scan pins the live
+    *     manifest at planning, writer tasks emit attempt-unique new
+    *     files, the atomic manifest swap is the only visibility change,
+    *     and deferred GC keeps the old generation's files on disk for
+    *     its archived snapshot — so `VERSION AS OF` still reads the
+    *     pre-zorder layout afterwards. Refuses key-grouped layouts:
+    *     re-clustering would destroy the one-pkey-per-file contract the
+    *     SPJ leg depends on ([[compact]] preserves keys by never binning
+    *     across them; zorder by definition mixes rows across files).
+    *   - Scoped (r12, the `OPTIMIZE ... WHERE` shape for keyed layouts):
+    *     ONE partition's files, every other entry byte-untouched. At
+    *     100 TB you zorder yesterday's `days(ts)` partition after it
+    *     closes — never the table. The scope's rows are read through a
+    *     TEMPORARY manifest naming exactly the scoped entries (plus the
+    *     table's eqdel/txn lines, so masks apply with their seq
+    *     semantics), the z-clustered output lands via a STAGED plain
+    *     write (no keyed distribution requirement to fight the z
+    *     range-partitioning — the pkey is a constant over the scope, so
+    *     it is stamped onto the fresh entries directly, `pspec`
+    *     included), files and their bloom/gram sidecars move into the
+    *     table directory, and ONE rewrite commit replaces the scoped
+    *     entries under the same OCC law as row-level DML: a rival that
+    *     touched a scoped file (DV attach, compaction) conflicts loudly.
+    *
+    * Row lineage (r10): a clustering rewrite SCATTERS rows, so ids ride
+    * through as projected metadata columns and land as materialized
+    * in-row fields (the write sees `_row_id`/`_luv` in its schema →
+    * publishes frid = -2 and keeps them out of stats and the table
+    * contract) — only when the scope has assigned ids; an unstamped
+    * table rewrites plainly and gets stamped fresh. */
+  def zorder(tableRoot: String, colA: String, colB: String, targetBytes: Long,
+             partition: Option[String] = None): (Int, Int, Long) = {
     import org.apache.spark.sql.functions._
     val meta = JsonlStats.readTableMeta(tableRoot)
-    val statsCol = meta.statsCol.getOrElse(JsonlStats.statsColumn)
-    val spark = SparkSession.active
-    val raw = JsonlStats.readManifestLines(tableRoot, "_stats.jsonl").filter(_.nonEmpty)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def isEntry(l: String) = mapper.readTree(l).hasNonNull("file")
-    val all = JsonlStats.parseStatsLines(raw)
-    val scoped = all.filter(_.pkey.contains(partition))
-    require(scoped.nonEmpty,
-      s"zorder($tableRoot, partition => '$partition'): no live file carries that pkey " +
-        s"(pkeys: ${all.flatMap(_.pkey).distinct.sorted.take(10).mkString(", ")})")
-    if (scoped.size == 1 && scoped.head.dvs.isEmpty) return (all.size, all.size, scoped.head.rows)
-    val scopedNames = scoped.map(_.file).toSet
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    // a read-only snapshot manifest of exactly the scope: scoped entry
-    // lines verbatim + every non-entry line except the counter (eqdels
-    // keep their seq semantics; the counter is commit-protocol state)
-    val tmpManifest = s"_zscope-$runId.jsonl"
-    val tmpLines = raw.filter(l =>
-      if (isEntry(l)) scopedNames.contains(mapper.readTree(l).get("file").asText())
-      else !l.contains(JsonlStats.NextRowIdKey))
-    Files.write(Paths.get(tableRoot, tmpManifest), tmpLines.asJava)
-    val staging = Paths.get(tableRoot, s"_zorder-staging-$runId")
-    try {
-      var reader = spark.read.format("graft-jsonl-stats")
-        .option("path", tableRoot).option("manifest", tmpManifest)
-        .option("statsColumn", statsCol)
-      meta.schema.foreach(s => reader = reader.schema(s))
-      val df = reader.load()
-      require(df.columns.contains(colA) && df.columns.contains(colB),
-        s"zorder columns must exist in the table schema: $colA, $colB vs ${df.columns.mkString(",")}")
-      val b = df.agg(
-        min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-        min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-      if (b.isNullAt(0) || b.isNullAt(2)) return (all.size, all.size, scoped.map(_.rows).sum)
-      val zc = mortonColumn(colA, colB, b.getDouble(0), b.getDouble(1),
-        b.getDouble(2), b.getDouble(3))
-      val hasLineage = scoped.exists(s => s.frid >= 0L || s.frid == -2L || s.runs.nonEmpty)
-      val src =
-        if (!hasLineage) df
-        else df.select(col("*"), col(JsonlStats.RowIdMeta),
-          col(JsonlStats.LuvMeta).as(JsonlStats.LuvField))
-      val liveBytes = scoped.map { s =>
-        val p = Paths.get(tableRoot, s.file)
-        if (Files.exists(p)) Files.size(p) else 0L
-      }.sum
-      val nOut = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
-      Files.createDirectories(staging)
-      // the staged write must speak the TABLE's physical dialect —
-      // column mapping renames are metadata-only and files carry
-      // PHYSICAL keys, so seed the staging sidecar with the table meta
-      // (minus the layout columns: partitionCol would re-key the write
-      // and fight the z range-partitioning; sortCol would re-sort it)
-      JsonlStats.writeTableMeta(staging.toString,
-        meta.copy(partitionCol = None, sortCol = None))
-      var writer = src.withColumn("__graft_z", zc)
-        .repartitionByRange(nOut, col("__graft_z"))
-        .sortWithinPartitions("__graft_z")
-        .drop("__graft_z")
-        .write.format("graft-jsonl-stats")
-        .option("path", staging.toString).option("statsColumn", statsCol)
-      meta.bloomCol.foreach(bc => writer = writer.option("bloomColumn", bc))
-      meta.gramCol.foreach(gc => writer = writer.option("gramColumn", gc))
-      writer.mode("overwrite").save()
-      val staged = JsonlStats.readStats(staging.toString)
-      staged.foreach(s => Files.move(staging.resolve(s.file), Paths.get(tableRoot, s.file)))
-      // the scope's pkey is a row-level invariant (every source file
-      // carried it), so fresh entries stamp it directly — the staged
-      // write was deliberately UNKEYED so z range-partitioning survives
-      val fresh = staged.map { s =>
-        val keyed = s.copy(pkey = Some(partition), pspec = meta.partitionCol)
-        if (hasLineage) keyed // frid = -2, ids materialized in-row
-        else keyed.copy(frid = -1L, luv = 0L, runs = Nil) // stays unassigned/restamps like any rewrite
-      }
-      val removedLines = scoped.map(JsonlStats.statsLine)
-      JsonlStats.commitAtomic(tableRoot, s"zorder-scoped-$runId", base => {
-        val m = JsonlEqualityDeletes.maxSeq(base)
-        val freshLines = fresh.map(fs => JsonlStats.statsLine(
-          if (m == 0L) fs else fs.copy(seq = m)))
-        JsonlStats.rebaseRewrite(removedLines, freshLines)(base)
-      })
-      (all.size, all.size - scoped.size + staged.size, fresh.map(_.rows).sum)
-    } finally {
-      Files.deleteIfExists(Paths.get(tableRoot, tmpManifest))
-      if (Files.exists(staging)) graft.util.Fs.deleteRecursively(staging.toString)
-    }
-  }
-
-  /** Morton z-value of two 256-rank range buckets (shared by the
-    * global and scoped zorder paths). */
-  private def mortonColumn(colA: String, colB: String,
-      aLo: Double, aHi: Double, bLo: Double, bHi: Double): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    def bucket(c: Column, mn: Double, mx: Double): Column =
-      if (mx <= mn) lit(0)
-      else least(lit(255), greatest(lit(0),
-        floor((c.cast("double") - lit(mn)) / lit(mx - mn) * 256).cast("int")))
-    val bx = coalesce(bucket(col(colA), aLo, aHi), lit(0))
-    val by = coalesce(bucket(col(colB), bLo, bHi), lit(0))
-    (0 until 8).map { i =>
-      shiftleft(shiftright(bx, i).bitwiseAND(lit(1)), 2 * i + 1)
-        .bitwiseOR(shiftleft(shiftright(by, i).bitwiseAND(lit(1)), 2 * i))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  def zorder(tableRoot: String, colA: String, colB: String, targetBytes: Long): (Int, Int, Long) = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    val meta = JsonlStats.readTableMeta(tableRoot)
-    require(meta.partitionCol.isEmpty,
+    require(partition.isDefined || meta.partitionCol.isEmpty,
       "zorder refuses key-grouped layouts: re-clustering would destroy the " +
         "one-pkey-per-file SPJ contract (compact preserves keys; zorder cannot) — " +
         "scope it instead: zorder(table, a, b, target, partition => '<pkey>') " +
         "re-clusters ONE partition and keeps the contract")
     val statsCol = meta.statsCol.getOrElse(JsonlStats.statsColumn)
     val spark = SparkSession.active
-    val stats = JsonlStats.readStats(tableRoot)
-    val liveBytes = stats.map { s =>
-      val p = Paths.get(tableRoot, s.file)
-      if (Files.exists(p)) Files.size(p) else 0L
-    }.sum
-    val nOut = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
-    var reader = spark.read.format("graft-jsonl-stats")
-      .option("path", tableRoot).option("statsColumn", statsCol)
-    meta.bloomCol.foreach(bc => reader = reader.option("bloomColumn", bc))
-    meta.gramCol.foreach(gc => reader = reader.option("gramColumn", gc))
-    meta.schema.foreach(s => reader = reader.schema(s))
-    val df = reader.load()
-    require(df.columns.contains(colA) && df.columns.contains(colB),
-      s"zorder columns must exist in the table schema: $colA, $colB vs ${df.columns.mkString(",")}")
-    val b = df.agg(
-      min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-    if (b.isNullAt(0) || b.isNullAt(2))
-      // empty table or an all-null dimension: no meaningful clustering
-      return (stats.size, stats.size, math.max(0L, stats.map(_.rows).sum))
-    // 256 range buckets per dimension (8 bits each → 16-bit z), monotone
-    val zc = mortonColumn(colA, colB, b.getDouble(0), b.getDouble(1),
-      b.getDouble(2), b.getDouble(3))
-    // row lineage (r10): a clustering rewrite SCATTERS rows, so ids
-    // ride through the rewrite as projected metadata columns and land
-    // as materialized in-row fields (the write sees `_row_id`/`_luv`
-    // in its schema → publishes frid = -2 and keeps them out of stats
-    // and the table contract). Only when the table has assigned ids —
-    // an unstamped table rewrites plainly and gets stamped fresh.
-    val hasLineage = stats.exists(s => s.frid >= 0L || s.frid == -2L || s.runs.nonEmpty)
-    val src =
-      if (!hasLineage) df
-      else df.select(col("*"), col(JsonlStats.RowIdMeta),
-        col(JsonlStats.LuvMeta).as(JsonlStats.LuvField))
-    var writer = src.withColumn("__graft_z", zc)
-      .repartitionByRange(nOut, col("__graft_z"))
-      .sortWithinPartitions("__graft_z")
-      .drop("__graft_z")
-      .write.format("graft-jsonl-stats")
-      .option("path", tableRoot).option("statsColumn", statsCol)
-    meta.bloomCol.foreach(bc => writer = writer.option("bloomColumn", bc))
-    meta.gramCol.foreach(gc => writer = writer.option("gramColumn", gc))
-    writer.mode("overwrite").save()
-    val after = JsonlStats.readStats(tableRoot)
-    (stats.size, after.size, after.map(_.rows).sum)
+    val all = JsonlStats.readStats(tableRoot)
+    val scope = partition.fold(all)(p => all.filter(_.pkey.contains(p)))
+    partition.foreach { p =>
+      require(scope.nonEmpty,
+        s"zorder($tableRoot, partition => '$p'): no live file carries that pkey " +
+          s"(pkeys: ${all.flatMap(_.pkey).distinct.sorted.take(10).mkString(", ")})")
+    }
+    val unchanged = (all.size, all.size, math.max(0L, scope.map(_.rows).sum))
+    if (partition.isDefined && scope.size == 1 && scope.head.dvs.isEmpty) return unchanged
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    // the scoped read goes through a read-only snapshot manifest of
+    // exactly the scope: scoped entry lines verbatim + every non-entry
+    // line except the counter (eqdels keep their seq semantics; the
+    // counter is commit-protocol state)
+    val scopeManifest = partition.map { _ =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val names = scope.map(_.file).toSet
+      val lines = JsonlStats.readManifestLines(tableRoot, "_stats.jsonl").filter(_.nonEmpty)
+        .filter { l =>
+          val n = mapper.readTree(l)
+          if (n.hasNonNull("file")) names.contains(n.get("file").asText())
+          else !l.contains(JsonlStats.NextRowIdKey)
+        }
+      val name = s"_zscope-$runId.jsonl"
+      Files.write(Paths.get(tableRoot, name), lines.asJava)
+      name
+    }
+    val staging = partition.map(_ => Paths.get(tableRoot, s"_zorder-staging-$runId"))
+    try {
+      var reader = spark.read.format("graft-jsonl-stats")
+        .option("path", tableRoot).option("statsColumn", statsCol)
+      scopeManifest.foreach(m => reader = reader.option("manifest", m))
+      meta.bloomCol.foreach(bc => reader = reader.option("bloomColumn", bc))
+      meta.gramCol.foreach(gc => reader = reader.option("gramColumn", gc))
+      meta.schema.foreach(s => reader = reader.schema(s))
+      val df = reader.load()
+      require(df.columns.contains(colA) && df.columns.contains(colB),
+        s"zorder columns must exist in the table schema: $colA, $colB vs ${df.columns.mkString(",")}")
+      val (rankA, rankB) = (zRank(df, colA), zRank(df, colB))
+      val b = df.agg(min(rankA), max(rankA), min(rankB), max(rankB)).head()
+      // empty scope or an all-null dimension: no meaningful clustering
+      if (b.isNullAt(0) || b.isNullAt(2)) return unchanged
+      // 256 range buckets per dimension (8 bits each → 16-bit z), monotone
+      val zc = mortonColumn(rankA, rankB, b.getDouble(0), b.getDouble(1),
+        b.getDouble(2), b.getDouble(3))
+      val hasLineage = scope.exists(s => s.frid >= 0L || s.frid == -2L || s.runs.nonEmpty)
+      val src =
+        if (!hasLineage) df
+        else df.select(col("*"), col(JsonlStats.RowIdMeta),
+          col(JsonlStats.LuvMeta).as(JsonlStats.LuvField))
+      val liveBytes = scope.map { s =>
+        val p = Paths.get(tableRoot, s.file)
+        if (Files.exists(p)) Files.size(p) else 0L
+      }.sum
+      val nOut = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
+      staging.foreach { st =>
+        Files.createDirectories(st)
+        // the staged write must speak the TABLE's physical dialect —
+        // column mapping renames are metadata-only and files carry
+        // PHYSICAL keys, so seed the staging sidecar with the table meta
+        // (minus the layout columns: partitionCol would re-key the write
+        // and fight the z range-partitioning; sortCol would re-sort it)
+        JsonlStats.writeTableMeta(st.toString, meta.copy(partitionCol = None, sortCol = None))
+      }
+      var writer = src.withColumn("__graft_z", zc)
+        .repartitionByRange(nOut, col("__graft_z"))
+        .sortWithinPartitions("__graft_z")
+        .drop("__graft_z")
+        .write.format("graft-jsonl-stats")
+        .option("path", staging.fold(tableRoot)(_.toString)).option("statsColumn", statsCol)
+      meta.bloomCol.foreach(bc => writer = writer.option("bloomColumn", bc))
+      meta.gramCol.foreach(gc => writer = writer.option("gramColumn", gc))
+      writer.mode("overwrite").save()
+      (partition, staging) match {
+        case (Some(p), Some(st)) =>
+          val staged = JsonlStats.readStats(st.toString)
+          // each data file moves WITH its index sidecars — the fresh
+          // entries stay bloom/gram-probeable like the ones they replace
+          staged.flatMap(s => Seq(s.file, Bloom.sidecarName(s.file), Bloom.gramSidecarName(s.file)))
+            .filter(f => Files.exists(st.resolve(f)))
+            .foreach(f => Files.move(st.resolve(f), Paths.get(tableRoot, f)))
+          // the scope's pkey is a row-level invariant (every source file
+          // carried it), so fresh entries stamp it directly — the staged
+          // write was deliberately UNKEYED so z range-partitioning survives
+          val fresh = staged.map { s =>
+            val keyed = s.copy(pkey = Some(p), pspec = meta.partitionCol)
+            if (hasLineage) keyed // frid = -2, ids materialized in-row
+            else keyed.copy(frid = -1L, luv = 0L, runs = Nil) // stays unassigned/restamps like any rewrite
+          }
+          JsonlStats.commitAtomic(tableRoot, s"zorder-scoped-$runId", base => {
+            val m = JsonlEqualityDeletes.maxSeq(base)
+            val freshLines = fresh.map(fs => JsonlStats.statsLine(
+              if (m == 0L) fs else fs.copy(seq = m)))
+            JsonlStats.rebaseRewrite(scope.map(JsonlStats.statsLine), freshLines)(base)
+          })
+          (all.size, all.size - scope.size + staged.size, fresh.map(_.rows).sum)
+        case _ =>
+          val after = JsonlStats.readStats(tableRoot)
+          (all.size, after.size, after.map(_.rows).sum)
+      }
+    } finally {
+      scopeManifest.foreach(m => Files.deleteIfExists(Paths.get(tableRoot, m)))
+      staging.filter(Files.exists(_)).foreach(st => graft.util.Fs.deleteRecursively(st.toString))
+    }
+  }
+
+  /** A z dimension's numeric rank: the value itself for numbers, the
+    * epoch day / epoch microsecond for dates and timestamps (ANSI casts
+    * refuse DATE and TIMESTAMP_NTZ → DOUBLE). Monotone in the value,
+    * which is all bucketing needs. */
+  private def zRank(df: org.apache.spark.sql.DataFrame, c: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    df.schema(c).dataType match {
+      case DateType => unix_date(col(c)).cast("double")
+      case TimestampType | TimestampNTZType => unix_micros(col(c).cast(TimestampType)).cast("double")
+      case _ => col(c).cast("double")
+    }
+  }
+
+  /** Morton z-value of two 256-rank range buckets over the dimensions'
+    * [[zRank]]s and their observed [lo, hi] — monotone, which is all
+    * clustering needs (no read-side mirror exists to disagree with: the
+    * manifest bounds the writer measures ARE the index). Null dimension
+    * values rank as bucket 0. */
+  private def mortonColumn(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
+      aLo: Double, aHi: Double, bLo: Double, bHi: Double): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    def bucket(c: Column, mn: Double, mx: Double): Column =
+      if (mx <= mn) lit(0)
+      else least(lit(255), greatest(lit(0),
+        floor((c - lit(mn)) / lit(mx - mn) * 256).cast("int")))
+    val bx = coalesce(bucket(a, aLo, aHi), lit(0))
+    val by = coalesce(bucket(b, bLo, bHi), lit(0))
+    (0 until 8).map { i =>
+      shiftleft(shiftright(bx, i).bitwiseAND(lit(1)), 2 * i + 1)
+        .bitwiseOR(shiftleft(shiftright(by, i).bitwiseAND(lit(1)), 2 * i))
+    }.reduce(_ bitwiseOR _)
   }
 
   /** The DV-collapse core: one Spark task per DV'd file, each streaming
@@ -1582,6 +1563,10 @@ object GraftProcedures {
       sorted = sorted)
   }
 
+  /** The maintenance core. Greedy first-fit over size-sorted
+    * sub-target files, binned WITHIN each pkey (an unkeyed table is one
+    * key group of None); only bins of ≥2 members rewrite anything.
+    * Returns (files_before, files_after, files_merged). */
   def compact(tableRoot: String, targetBytes: Long,
               partition: Option[String] = None): (Int, Int, Int) = {
     val stats = JsonlStats.readStats(tableRoot)

@@ -3,7 +3,7 @@ package graft.sources
 import graft.QueryModule
 import graft.ingest.{Landing, Tables}
 import graft.util.Det._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
@@ -25,8 +25,7 @@ object JsonlStatsQueries extends QueryModule {
 
   /** Build-once JSONL + manifest fixture under the shared marker
     * convention. The manifest rows are per-FILE aggregates — bounded by
-    * file count, the same driver-sized collect contract as
-    * `ingest/StatsManifest`. */
+    * file count, a driver-sized collect, never a data-sized one. */
   def ensureFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
     val dir = Landing.fixtureDir(d, "jsonl_stats_table")
@@ -70,6 +69,56 @@ object JsonlStatsQueries extends QueryModule {
   def scanFrame(spark: SparkSession, d: String): DataFrame =
     spark.read.format("graft-jsonl-stats")
       .option("path", ensureFixture(spark, d)).load()
+
+  /** The one build-once connector fixture: under [[Landing.ensureBuilt]],
+    * `rows` land through `graft-jsonl-stats` (with `opts`, overwrite) as
+    * a fresh table at `fixtureDir(d, name)`, then `after` runs on the
+    * new table root — a sidecar stamp, DDL or maintenance CALL that is
+    * part of the build. Every such table sits under the
+    * [[ensureCatalog]] root, so `after` can address it by `name`. */
+  private def ensureTable(d: String, name: String, opts: Map[String, String] = Map.empty,
+                          after: String => Unit = _ => ())(rows: => DataFrame): String =
+    Landing.ensureBuilt(Landing.fixtureDir(d, name)) { out =>
+      Files.createDirectories(Paths.get(out))
+      rows.write.format("graft-jsonl-stats").option("path", out).options(opts)
+        .mode("overwrite").save()
+      after(out)
+    }
+
+  /** An `after` step for [[ensureTable]]: rewrite the table sidecar. */
+  private def stampMeta(f: JsonlStats.TableMeta => JsonlStats.TableMeta): String => Unit =
+    out => JsonlStats.writeTableMeta(out, f(JsonlStats.readTableMeta(out)))
+
+  /** The event feed range-partitioned on `value` into [[buckets]] files:
+    * tight, disjoint value bounds per file. */
+  private def valueRangedFeed(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, d)
+      .select($"event_id", $"user_id", $"event_type", $"value")
+      .repartitionByRange(buckets, $"value")
+  }
+
+  /** [lo, hi] of column `c` over the live manifest's per-file bounds —
+    * a metadata read; no data file is opened. Every entry must carry
+    * bounds for `c`, or the span would be a guess. */
+  private def manifestSpan(dir: String, c: String): (Double, Double) = {
+    val statsCol = JsonlStats.readTableMeta(dir).statsCol.getOrElse(JsonlStats.statsColumn)
+    val stats = JsonlStats.readStats(dir)
+    val bounds = stats.flatMap(s => JsonlStats.colBounds(s, c, statsCol))
+    require(bounds.nonEmpty && bounds.size == stats.size,
+      s"$dir: ${stats.size - bounds.size} of ${stats.size} manifest entries lack $c bounds")
+    (bounds.map(_._1).min, bounds.map(_._2).max)
+  }
+
+  /** The calendar day of an epoch-microsecond timestamp bound. */
+  private def microsDay(us: Double): java.time.LocalDate =
+    java.time.LocalDate.ofEpochDay(Math.floorDiv(us.toLong, 86400L * 1000000L))
+
+  /** `c`'s calendar day lies in [lo, hi], stated on the raw timestamp
+    * column as a half-open range, so the connector prunes files with it
+    * (a `to_date(c) BETWEEN` predicate never reaches the scan). */
+  private def dayRange(c: Column, lo: java.time.LocalDate, hi: java.time.LocalDate): Column =
+    c >= lit(lo.atStartOfDay()) && c < lit(hi.plusDays(1).atStartOfDay())
 
   /** q152: selective range aggregate THROUGH the connector — the filter
     * reaches `pushedFilters`, the manifest prunes non-intersecting
@@ -129,17 +178,11 @@ object JsonlStatsQueries extends QueryModule {
     * bounds and a user-cohort join can skip files. */
   def ensureUserKeyedFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_stats_by_user")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_stats_by_user", Map("statsColumn" -> "user_id")) {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .repartitionByRange(buckets, $"user_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "user_id")
-        .mode("overwrite").save()
     }
-    dir
   }
 
   /** The user-keyed connector frame, exposed for the runtime-filter spec. */
@@ -467,13 +510,10 @@ object JsonlStatsQueries extends QueryModule {
   def catalogCompact(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val cat = ensureCatalog(spark, d)
-    val frag = Landing.fixtureDir(d, "jsonl_fragmented")
-    Landing.ensureBuilt(frag) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_fragmented") {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .repartition(48)
-        .write.format("graft-jsonl-stats").option("path", out).mode("overwrite").save()
     }
     spark.sql(s"CALL $cat.compact('jsonl_fragmented', ${512L * 1024})")
     spark.sql(
@@ -482,6 +522,35 @@ object JsonlStatsQueries extends QueryModule {
          |FROM $cat.jsonl_fragmented
          |GROUP BY event_type
          |ORDER BY event_type""".stripMargin)
+  }
+
+  /** q97: compaction round trip on a KEYED layout. The event feed lands
+    * keyed on `days(event_date)` in four commits — up to four small
+    * files per day, the shape streaming micro-batches leave behind —
+    * and `CALL compact` bin-packs each day to one file inside the
+    * build (bins never cross keys). The query aggregates the compacted
+    * table; the oracle is the same aggregate over the source, so any
+    * row lost or duplicated by the rewrite breaks the hash. The
+    * manifest is re-checked on every run so the query cannot pass on
+    * a compaction that did nothing. */
+  def compactionRoundtrip(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    val name = "jsonl_events_by_day"
+    def slice(i: Int): DataFrame = Tables.events(spark, d)
+      .filter($"event_id" % 4 === i)
+      .select($"event_id", $"event_type", $"value", to_date($"ts").as("event_date"))
+    val dir = ensureTable(d, name, Map("partitionColumn" -> "days(event_date)"), after = out => {
+      (1 until 4).foreach(i =>
+        slice(i).write.format("graft-jsonl-stats").option("path", out).mode("append").save())
+      spark.sql(s"CALL ${ensureCatalog(spark, d)}.compact('$name', ${1L << 30})").collect()
+    })(slice(0))
+    val filesPerKey = JsonlStats.readStats(dir).groupBy(_.pkey).values.map(_.size)
+    require(filesPerKey.nonEmpty && filesPerKey.forall(_ == 1),
+      s"compaction left a multi-file key in $dir")
+    spark.read.format("graft-jsonl-stats").option("path", dir).load()
+      .groupBy($"event_date", $"event_type")
+      .agg(count(lit(1)).as("n_events"), msum($"value").as("total_value"))
+      .orderBy($"event_date", $"event_type")
   }
 
   /** q179 (r7): TIME TRAVEL — every manifest publish archives the
@@ -535,16 +604,11 @@ object JsonlStatsQueries extends QueryModule {
     * MIN/MAX on columns the table was never DECLARED to index. */
   def ensureMultiColFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_stats_multicol")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_stats_multicol") {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .repartitionByRange(buckets, $"event_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).mode("overwrite").save()
     }
-    dir
   }
 
   /** The multi-column-stats frame, exposed for plan/pruning specs. */
@@ -590,6 +654,60 @@ object JsonlStatsQueries extends QueryModule {
       .orderBy($"event_type")
   }
 
+  /** q130's table: lineitem with only the columns the query reads,
+    * range-clustered on `l_shipdate` into 16 files, so per-file
+    * ship-date bounds are near-disjoint and a date range admits ~its
+    * selectivity in files. On an unclustered layout every file would
+    * straddle the range and the manifest would (correctly) prune
+    * nothing: stats skipping composes with layout, it does not replace
+    * it. */
+  def ensureLineitemByShipdate(spark: SparkSession, d: String): String = {
+    import spark.implicits._
+    ensureTable(d, "jsonl_lineitem_by_shipdate", Map("statsColumn" -> "l_shipdate")) {
+      Tables.lineitem(spark, d)
+        .select($"l_shipdate", $"l_returnflag", $"l_quantity", $"l_extendedprice")
+        .repartitionByRange(16, $"l_shipdate")
+    }
+  }
+
+  /** q130's range: the middle third of the ship-date span, derived from
+    * the manifest's per-file bounds (min of mins, max of maxes — equal
+    * to the raw min/max because the manifest covers every row). Integer
+    * day arithmetic so the oracle mirrors it exactly. */
+  def shipdateMidThird(spark: SparkSession, d: String): (java.time.LocalDate, java.time.LocalDate) = {
+    val (mn, mx) = manifestSpan(ensureLineitemByShipdate(spark, d), "l_shipdate")
+    val (mnd, mxd) = (microsDay(mn), microsDay(mx))
+    val span = java.time.temporal.ChronoUnit.DAYS.between(mnd, mxd)
+    // 2*(span/3), NOT (2*span)/3 — they differ when span % 3 == 2, and
+    // the oracle's `2 * ((mxd - mnd) // 3)` must be mirrored exactly
+    (mnd.plusDays(span / 3), mnd.plusDays(2 * (span / 3)))
+  }
+
+  /** Lineitem rows shipped on a day in [lo, hi]: the manifest prunes the
+    * files whose ship-date bounds miss the range at planning time, and
+    * the residual filter re-checks the survivors' rows. */
+  def shipdateRead(spark: SparkSession, d: String,
+                   lo: java.time.LocalDate, hi: java.time.LocalDate): DataFrame =
+    spark.read.format("graft-jsonl-stats")
+      .option("path", ensureLineitemByShipdate(spark, d)).load()
+      .filter(dayRange(col("l_shipdate"), lo, hi))
+
+  /** q130: return-flag aggregate over the manifest-pruned middle third
+    * of the ship dates. The oracle has no manifest: it filters the raw
+    * table with the same derived range, so the manifest must be a pure
+    * access path — identical rows, fewer files (ManifestSpec counts
+    * them). */
+  def statsManifestScan(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    val (lo, hi) = shipdateMidThird(spark, d)
+    shipdateRead(spark, d, lo, hi)
+      .groupBy($"l_returnflag")
+      .agg(count(lit(1)).as("n_items"),
+        msum($"l_quantity").as("sum_qty"),
+        msum($"l_extendedprice").as("sum_price"))
+      .orderBy($"l_returnflag")
+  }
+
   /** The ISO-STRING-TIME fixture (r8): events written through the
     * connector with the event time as an ISO-8601 MICROSECOND string
     * (`yyyy-MM-dd'T'HH:mm:ss.SSSSSS` — injective, so string order ==
@@ -600,17 +718,12 @@ object JsonlStatsQueries extends QueryModule {
     * (`user_events_producer.py:82` ships ISO strings). */
   def ensureIsoStringFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_stats_isostr")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_stats_isostr") {
       Tables.events(spark, d)
         .select($"event_id", $"event_type", $"value",
           date_format($"ts", isoMicroFmt).as("ts_iso"))
         .repartitionByRange(buckets, $"ts_iso")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).mode("overwrite").save()
     }
-    dir
   }
 
   private[graft] val isoMicroFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
@@ -670,11 +783,11 @@ object JsonlStatsQueries extends QueryModule {
     * `CALL <cat>.zorder('<t>', 'user_id', 'value')` rewrites the table
     * clustered by the Morton interleave of the two columns, after which
     * the per-column manifest bounds ALONE prune a 2-D box predicate to
-    * ≈ the product of the selectivities — no z-cell arithmetic and no
-    * special read path, unlike the parquet z-order tier (q49), which
-    * needs a bounds artifact and an isin partition filter. Here the
-    * manifest is the index and two ordinary range predicates do the
-    * work (pruning fractions asserted in JsonlStatsSpec). Idempotent
+    * ≈ the product of the selectivities — no z-cell arithmetic, no
+    * bounds artifact and no special read path: the manifest is the
+    * index and two ordinary range predicates do the work (pruning
+    * fractions asserted in JsonlStatsSpec; q122 is the same shape over
+    * a (long, timestamp) pair). Idempotent
     * across reps: re-clustering never changes content, and the box
     * aggregate hash-matches the parquet oracle regardless of layout. */
   def catalogZOrder(spark: SparkSession, d: String): DataFrame = {
@@ -692,6 +805,59 @@ object JsonlStatsQueries extends QueryModule {
          |WHERE user_id <= $quarter AND value >= $threshold
          |GROUP BY event_type
          |ORDER BY event_type""".stripMargin)
+  }
+
+  /** q122's table: orders (the columns the box aggregate reads) written
+    * through the connector, then re-clustered inside the build by
+    * `CALL zorder` on (o_custkey, o_orderdate) into ~64 files. A
+    * z-clustered file has tight bounds on BOTH dimensions, so a 2-D box
+    * keeps ≈ the product of the two selectivities in files, where a
+    * table clustered on one dimension keeps ≈ that dimension's alone
+    * (file fractions measured in ZOrderSpec). */
+  def ensureOrdersZordered(spark: SparkSession, d: String): String = {
+    import spark.implicits._
+    val name = "jsonl_orders_zorder"
+    ensureTable(d, name, Map("statsColumn" -> "o_custkey"), after = out => {
+      val bytes = JsonlStats.readStats(out).map(s => Files.size(Paths.get(out, s.file))).sum
+      spark.sql(s"CALL ${ensureCatalog(spark, d)}.zorder('$name', 'o_custkey', " +
+        s"'o_orderdate', ${math.max(1L, (bytes + 63) / 64)})").collect()
+    }) {
+      Tables.orders(spark, d)
+        .select($"o_custkey", $"o_orderdate", $"o_orderpriority", $"o_totalprice")
+    }
+  }
+
+  /** q122's box: the first quarter of each dimension's span, derived
+    * from the manifest's per-file bounds and stated in RAW values, so
+    * the oracle needs no z machinery. */
+  def ordersBox(spark: SparkSession, d: String)
+      : (Long, Long, java.time.LocalDate, java.time.LocalDate) = {
+    val dir = ensureOrdersZordered(spark, d)
+    val (mnk, mxk) = manifestSpan(dir, "o_custkey")
+    val (mnu, mxu) = manifestSpan(dir, "o_orderdate")
+    val (mnd, mxd) = (microsDay(mnu), microsDay(mxu))
+    (mnk.toLong, mnk.toLong + (mxk.toLong - mnk.toLong) / 4,
+      mnd, mnd.plusDays(java.time.temporal.ChronoUnit.DAYS.between(mnd, mxd) / 4))
+  }
+
+  /** Orders inside an arbitrary box: two plain range predicates the
+    * manifest prunes with, re-checked row by row on the survivors. */
+  def ordersBoxRead(spark: SparkSession, d: String, klo: Long, khi: Long,
+                    dlo: java.time.LocalDate, dhi: java.time.LocalDate): DataFrame =
+    spark.read.format("graft-jsonl-stats")
+      .option("path", ensureOrdersZordered(spark, d)).load()
+      .filter(col("o_custkey").between(klo, khi) && dayRange(col("o_orderdate"), dlo, dhi))
+
+  /** q122: priority aggregate over the z-pruned box read. The oracle
+    * computes the same box on the raw table: identical rows through a
+    * far cheaper access path at scale. */
+  def zorderBoxScan(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    val (klo, khi, dlo, dhi) = ordersBox(spark, d)
+    ordersBoxRead(spark, d, klo, khi, dlo, dhi)
+      .groupBy($"o_orderpriority")
+      .agg(count(lit(1)).as("n_orders"), msum($"o_totalprice").as("revenue"))
+      .orderBy($"o_orderpriority")
   }
 
   /** q171: the V2 FUNCTION path (`FunctionCatalog` +
@@ -718,40 +884,15 @@ object JsonlStatsQueries extends QueryModule {
     * written fixture and each row-level query's own mutable copy
     * (mutations must not compound across queries, and each query must
     * be idempotent across bench reps on its own table). */
-  private def ensureMutableTable(spark: SparkSession, d: String, name: String): String = {
-    import spark.implicits._
-    val dir = Landing.fixtureDir(d, name)
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
-      Tables.events(spark, d)
-        .select($"event_id", $"user_id", $"event_type", $"value")
-        .repartitionByRange(buckets, $"value")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .mode("overwrite").save()
-    }
-    dir
-  }
+  private def ensureMutableTable(spark: SparkSession, d: String, name: String): String =
+    ensureTable(d, name)(valueRangedFeed(spark, d))
 
   /** The merge-on-read twin of [[ensureMutableTable]]: same value-ranged
     * layout, `deleteMode=merge-on-read` stamped into the table sidecar
     * so DELETE takes the deletion-vector path. */
-  private def ensureMorTable(spark: SparkSession, d: String, name: String): String = {
-    import spark.implicits._
-    val dir = Landing.fixtureDir(d, name)
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
-      Tables.events(spark, d)
-        .select($"event_id", $"user_id", $"event_type", $"value")
-        .repartitionByRange(buckets, $"value")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .mode("overwrite").save()
-      val meta = JsonlStats.readTableMeta(out)
-      JsonlStats.writeTableMeta(out, meta.statsCol.getOrElse(JsonlStats.statsColumn),
-        meta.partitionCol, meta.schema.getOrElse(JsonlStats.schema), meta.bloomCol,
-        deleteMode = Some("merge-on-read"))
-    }
-    dir
-  }
+  private def ensureMorTable(spark: SparkSession, d: String, name: String): String =
+    ensureTable(d, name, after = stampMeta(_.copy(deleteMode = Some("merge-on-read"))))(
+      valueRangedFeed(spark, d))
 
   /** q196: MERGE-ON-READ DELETE via position deletion vectors
     * ([[JsonlDeleteVectors]], `SupportsDelta` with rowId = (_file,
@@ -810,19 +951,12 @@ object JsonlStatsQueries extends QueryModule {
   def checkConstraintGate(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val cat = ensureCatalog(spark, d)
-    val dir = Landing.fixtureDir(d, "jsonl_ck_gate")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_ck_gate",
+        after = stampMeta(_.copy(constraints = Seq("positive_value" -> "value >= 0")))) {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .filter($"value" >= 0)
         .repartitionByRange(buckets, $"value")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .mode("overwrite").save()
-      val meta = JsonlStats.readTableMeta(out)
-      JsonlStats.writeTableMeta(out, meta.statsCol.getOrElse(JsonlStats.statsColumn),
-        meta.partitionCol, meta.schema.getOrElse(JsonlStats.schema), meta.bloomCol,
-        meta.deleteMode, constraints = Seq("positive_value" -> "value >= 0"))
     }
     val refused =
       try {
@@ -852,16 +986,9 @@ object JsonlStatsQueries extends QueryModule {
   def renamedColumnRead(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val cat = ensureCatalog(spark, d)
-    val dir = Landing.fixtureDir(d, "jsonl_renamed")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
-      Tables.events(spark, d)
-        .select($"event_id", $"user_id", $"event_type", $"value")
-        .repartitionByRange(buckets, $"value")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .mode("overwrite").save()
-      spark.sql(s"ALTER TABLE $cat.jsonl_renamed RENAME COLUMN user_id TO uid")
-    }
+    ensureTable(d, "jsonl_renamed",
+        after = _ => spark.sql(s"ALTER TABLE $cat.jsonl_renamed RENAME COLUMN user_id TO uid"))(
+      valueRangedFeed(spark, d))
     spark.sql(
       s"""SELECT event_type, count(*) AS n, min(uid) AS min_uid, max(uid) AS max_uid,
          |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
@@ -943,16 +1070,11 @@ object JsonlStatsQueries extends QueryModule {
     * attainability argument applied to counts). */
   def countColPushdown(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_nullable_value")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_nullable_value", Map("statsColumn" -> "event_id")) {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type",
           when($"event_type" === "error", lit(null)).otherwise($"value").as("value"))
         .repartitionByRange(buckets, $"event_id")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .option("statsColumn", "event_id")
-        .mode("overwrite").save()
     }
     spark.read.format("graft-jsonl-stats")
       .option("path", dir).option("statsColumn", "event_id").load()
@@ -1142,20 +1264,8 @@ object JsonlStatsQueries extends QueryModule {
 
   /** The bloom-indexed fixture: value-ranged layout (so user_id bounds
     * discriminate nothing) + per-file bloom sidecars over `user_id`. */
-  def ensureBloomFixture(spark: SparkSession, d: String): String = {
-    import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_bloom_events")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
-      Tables.events(spark, d)
-        .select($"event_id", $"user_id", $"event_type", $"value")
-        .repartitionByRange(buckets, $"value")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("bloomColumn", "user_id")
-        .mode("overwrite").save()
-    }
-    dir
-  }
+  def ensureBloomFixture(spark: SparkSession, d: String): String =
+    ensureTable(d, "jsonl_bloom_events", Map("bloomColumn" -> "user_id"))(valueRangedFeed(spark, d))
 
   /** q184 (r7): BLOOM FILE SKIPPING — point lookup on a column the
     * manifest's single [min, max] interval can't discriminate. The
@@ -1191,21 +1301,14 @@ object JsonlStatsQueries extends QueryModule {
     * bounds CANNOT (the predicate never mentions doc_id). */
   def ensureGramFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_gram_docs")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_gram_docs", Map("statsColumn" -> "doc_id", "gramColumn" -> "text")) {
       Tables.documents(spark, d)
         .select($"doc_id",
           when($"doc_id" < 25, concat($"text", lit(" xqzgramneedle")))
             .otherwise($"text").as("text"))
         .repartitionByRange(buckets, $"doc_id")
         .sortWithinPartitions($"doc_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "doc_id")
-        .option("gramColumn", "text")
-        .mode("overwrite").save()
     }
-    dir
   }
 
   /** q239 (r9): SUBSTRING GRAM-INDEX SCAN — `LIKE '%needle%'` file
@@ -1814,16 +1917,11 @@ object JsonlStatsQueries extends QueryModule {
     * time-series table shape) that makes TopN pushdown a point lookup. */
   private def ensureIdRangedFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_id_ranged")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_id_ranged") {
       Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .repartitionByRange(buckets, $"event_id")
-        .write.format("graft-jsonl-stats").option("path", out)
-        .mode("overwrite").save()
     }
-    dir
   }
 
   /** q264 (r9c): INDEXED CONTAMINATION AUDIT — the benchmark-
@@ -2352,9 +2450,7 @@ object JsonlStatsQueries extends QueryModule {
     * plan-asserted in JsonlStatsSpec; the oracle pins content. */
   def zoneMapScan(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_zonemap")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_zonemap") {
       val base = Tables.events(spark, d)
         .select($"event_id", $"user_id", $"event_type", $"value")
       // 16x the feed, globally value-sorted into ONE oversized file —
@@ -2362,7 +2458,6 @@ object JsonlStatsQueries extends QueryModule {
       Seq.fill(16)(base).reduce(_ unionAll _)
         .orderBy($"value", $"event_id")
         .coalesce(1)
-        .write.format("graft-jsonl-stats").option("path", out).mode("overwrite").save()
     }
     val t = spark.read.format("graft-jsonl-stats").option("path", dir)
       .option("splitBytes", (1L << 20).toString).load()
@@ -2486,18 +2581,12 @@ object JsonlStatsQueries extends QueryModule {
     * r10 data-model queries read. */
   def ensureEmbFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_embeddings")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_embeddings", Map("statsColumn" -> "vec_id")) {
       Tables.embeddings(spark, d)
         .select($"vec_id", $"embedding", ($"vec_id" % 2 === 0).as("is_even"))
         .repartitionByRange(4, $"vec_id")
         .sortWithinPartitions($"vec_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "vec_id")
-        .mode("overwrite").save()
     }
-    dir
   }
 
   private def embTable(spark: SparkSession, d: String): DataFrame =
@@ -2751,19 +2840,13 @@ object JsonlStatsQueries extends QueryModule {
     * prune files. */
   def ensureTemporalFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_events_temporal")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_events_temporal", Map("statsColumn" -> "event_id")) {
       Tables.events(spark, d)
         .select($"event_id", $"ts", to_date($"ts").as("day"),
           $"value".cast("decimal(18,6)").as("value_dec"))
         .repartitionByRange(8, $"ts")
         .sortWithinPartitions($"ts")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "event_id")
-        .mode("overwrite").save()
     }
-    dir
   }
 
   /** q277 (r11): TEMPORAL TYPES IN THE TABLE FORMAT — timestamps and
@@ -2798,18 +2881,12 @@ object JsonlStatsQueries extends QueryModule {
   def ensureCellFixture(spark: SparkSession, d: String): String = {
     import spark.implicits._
     import graft.ext.SimilarityMath.vecCellCol
-    val dir = Landing.fixtureDir(d, "jsonl_embeddings_cells")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    ensureTable(d, "jsonl_embeddings_cells", Map("statsColumn" -> "vec_id")) {
       Tables.embeddings(spark, d)
         .repartitionByRange(16, vecCellCol($"embedding"), $"vec_id")
         .sortWithinPartitions(vecCellCol($"embedding"), $"vec_id")
         .select($"vec_id", $"embedding")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "vec_id")
-        .mode("overwrite").save()
     }
-    dir
   }
 
   /** q278 (r11, predicate-derived since r12): VECTOR FILE STATISTICS —
@@ -2898,16 +2975,11 @@ object JsonlStatsQueries extends QueryModule {
     * table. */
   def inListPointLookups(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_inlist")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_inlist", Map("statsColumn" -> "event_id")) {
       Tables.events(spark, d)
         .select($"event_id", $"event_type", $"value")
         .repartitionByRange(8, $"event_id")
         .sortWithinPartitions($"event_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "event_id")
-        .mode("overwrite").save()
     }
     spark.read.format("graft-jsonl-stats").option("path", dir).load()
       .filter($"event_id".isin(7L, 421L, 867L, 5000000L))
@@ -2923,9 +2995,7 @@ object JsonlStatsQueries extends QueryModule {
     * ONCE at ingest, never again. */
   def mapColumnScan(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_events_props")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_events_props", Map("statsColumn" -> "event_id")) {
       Tables.events(spark, d)
         .select($"event_id", $"event_type",
           from_json($"props",
@@ -2934,9 +3004,6 @@ object JsonlStatsQueries extends QueryModule {
               org.apache.spark.sql.types.LongType)).as("props"))
         .repartitionByRange(8, $"event_id")
         .sortWithinPartitions($"event_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "event_id")
-        .mode("overwrite").save()
     }
     spark.read.format("graft-jsonl-stats").option("path", dir).load()
       .groupBy($"event_type")
@@ -3002,14 +3069,12 @@ object JsonlStatsQueries extends QueryModule {
     * twin is q278). */
   def normBandRadius(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_norm_docs")
     def vec = array(
       (($"doc_id" % 97).cast("float") / 8f),
       (($"doc_id" % 53).cast("float") / 8f),
       (($"doc_id" % 29).cast("float") / 8f),
       (($"doc_id" % 11).cast("float") / 8f))
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_norm_docs", Map("statsColumn" -> "doc_id")) {
       val nrm = sqrt(aggregate(transform(vec, x => x.cast("double") * x.cast("double")),
         lit(0.0), (a, v) => a + v))
       Tables.documents(spark, d)
@@ -3017,9 +3082,6 @@ object JsonlStatsQueries extends QueryModule {
         .repartitionByRange(8, nrm, $"doc_id")
         .sortWithinPartitions($"doc_id")
         .select($"doc_id", $"emb")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "doc_id")
-        .mode("overwrite").save()
     }
     // q = the doc_id = 1 vector = [1/8, 1/8, 1/8, 1/8]; ‖q‖ = 0.25,
     // r = 2 → band [0, 2.25]
@@ -3045,17 +3107,12 @@ object JsonlStatsQueries extends QueryModule {
     * aggregate from raw parquet. */
   def dailyLayoutScan(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_events_daily")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_events_daily",
+        Map("statsColumn" -> "event_id", "partitionColumn" -> "days(ts)")) {
       Tables.events(spark, d)
         .select($"event_id", $"ts", $"event_type", $"value")
         .repartitionByRange(4, $"ts")
         .sortWithinPartitions($"ts")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "event_id")
-        .option("partitionColumn", "days(ts)")
-        .mode("overwrite").save()
     }
     // no read-side option (r12): `days(ts)` is a STORED table property
     // — the plain path read resolves it from the sidecar, so layout
@@ -3085,17 +3142,12 @@ object JsonlStatsQueries extends QueryModule {
     * parquet. */
   def nestedLeafSlice(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_mm_bylang")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_mm_bylang", Map("statsColumn" -> "doc_id")) {
       Tables.documents(spark, d)
         .select($"doc_id",
           struct($"lang", struct($"n_chars", $"source").as("meta")).as("doc"))
         .repartitionByRange(8, $"doc.lang", $"doc_id")
         .sortWithinPartitions($"doc.lang", $"doc_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "doc_id")
-        .mode("overwrite").save()
     }
     spark.read.format("graft-jsonl-stats").option("path", dir).load()
       .filter($"doc.lang" === "de" && $"doc.meta.n_chars" >= 100)
@@ -3117,17 +3169,12 @@ object JsonlStatsQueries extends QueryModule {
     * parquet. */
   def monthlyLayoutScan(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_orders_monthly")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_orders_monthly",
+        Map("statsColumn" -> "o_orderkey", "partitionColumn" -> "months(o_orderdate)")) {
       Tables.orders(spark, d)
         .select($"o_orderkey", $"o_orderdate", $"o_orderpriority", $"o_totalprice")
         .repartitionByRange(4, $"o_orderdate")
         .sortWithinPartitions($"o_orderdate")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "o_orderkey")
-        .option("partitionColumn", "months(o_orderdate)")
-        .mode("overwrite").save()
     }
     val t = spark.read.format("graft-jsonl-stats").option("path", dir).load()
     t.createOrReplaceTempView("orders_monthly")
@@ -3153,17 +3200,12 @@ object JsonlStatsQueries extends QueryModule {
     * The oracle recomputes the slice from raw parquet. */
   def compositeLayoutScan(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "jsonl_events_day_bucket")
-    Landing.ensureBuilt(dir) { out =>
-      Files.createDirectories(Paths.get(out))
+    val dir = ensureTable(d, "jsonl_events_day_bucket",
+        Map("statsColumn" -> "event_id", "partitionColumn" -> "days(ts),bucket(8,user_id)")) {
       Tables.events(spark, d)
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .repartitionByRange(4, $"ts")
         .sortWithinPartitions($"ts", $"user_id")
-        .write.format("graft-jsonl-stats")
-        .option("path", out).option("statsColumn", "event_id")
-        .option("partitionColumn", "days(ts),bucket(8,user_id)")
-        .mode("overwrite").save()
     }
     val t = spark.read.format("graft-jsonl-stats").option("path", dir).load()
     t.createOrReplaceTempView("events_day_bucket")
@@ -4189,6 +4231,9 @@ object JsonlStatsQueries extends QueryModule {
   }
 
   val queries = Map[String, (SparkSession, String) => DataFrame](
+    "q97_compaction_roundtrip" -> compactionRoundtrip,
+    "q122_zorder_box_scan" -> zorderBoxScan,
+    "q130_stats_manifest_scan" -> statsManifestScan,
     "q152_dsv2_stats_scan" -> statsSkippingScan,
     "q159_dsv2_agg_pushdown" -> manifestAggregate,
     "q160_dsv2_write_roundtrip" -> writeRoundTrip,
@@ -4302,6 +4347,50 @@ object JsonlStatsQueries extends QueryModule {
   )
 
   val oracles = Map(
+    "q97_compaction_roundtrip" ->
+      """SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS event_date, event_type,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
+        |FROM events
+        |GROUP BY event_date, event_type
+        |ORDER BY event_date, event_type""".stripMargin,
+    "q122_zorder_box_scan" ->
+      """WITH b AS (
+        |  SELECT MIN(o_custkey) AS mnk, MAX(o_custkey) AS mxk,
+        |         MIN(CAST(o_orderdate AS DATE)) AS mnd,
+        |         MAX(CAST(o_orderdate AS DATE)) AS mxd
+        |  FROM orders
+        |), box AS (
+        |  SELECT mnk, mnk + (mxk - mnk) // 4 AS hik,
+        |         mnd, mnd + CAST((mxd - mnd) // 4 AS INT) AS hid
+        |  FROM b
+        |)
+        |SELECT o_orderpriority,
+        |       COUNT(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM orders, box
+        |WHERE o_custkey BETWEEN mnk AND hik
+        |  AND CAST(o_orderdate AS DATE) BETWEEN mnd AND hid
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin,
+    "q130_stats_manifest_scan" ->
+      """WITH b AS (
+        |  SELECT MIN(CAST(l_shipdate AS DATE)) AS mnd,
+        |         MAX(CAST(l_shipdate AS DATE)) AS mxd
+        |  FROM lineitem
+        |), rng AS (
+        |  SELECT mnd + CAST((mxd - mnd) // 3 AS INT) AS lo,
+        |         mnd + CAST(2 * ((mxd - mnd) // 3) AS INT) AS hi
+        |  FROM b
+        |)
+        |SELECT l_returnflag,
+        |       COUNT(*) AS n_items,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_price
+        |FROM lineitem, rng
+        |WHERE CAST(l_shipdate AS DATE) BETWEEN lo AND hi
+        |GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin,
     "q307_mv_over_view" ->
       """WITH src AS (
         |  SELECT event_type, value FROM events WHERE value >= 100.0)

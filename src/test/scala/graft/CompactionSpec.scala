@@ -1,66 +1,64 @@
 package graft
 
-import graft.ingest.{Compaction, Tables}
+import graft.ingest.{ColumnarFormats, Tables}
+import graft.sources.{GraftProcedures, JsonlStats}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Compaction must change the file layout and NOTHING else. */
 class CompactionSpec extends SparkSpec {
 
-  private def parquetFilesPerPartition(dir: String): Map[String, Int] =
-    Files.walk(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(f => f.getFileName.toString.endsWith(".parquet"))
-      .groupBy(_.getParent.getFileName.toString)
-      .map { case (p, fs) => p -> fs.length }
+  /** Data files per partition key, read from the manifest. */
+  private def filesPerKey(dir: String): Map[String, Int] =
+    JsonlStats.readStats(dir).groupBy(_.pkey.get).map { case (k, fs) => k -> fs.size }
 
   private def snapshot(dir: String): Seq[String] = {
     import spark.implicits._
-    spark.read.parquet(dir)
+    spark.read.format("graft-jsonl-stats").option("path", dir).load()
       .select($"event_id", $"event_type", $"value", $"event_date")
       .collect().map(_.toString).sorted.toSeq
   }
 
   test("compaction: one file per partition, rows identical, subset untouched") {
     val dir = Files.createTempDirectory("graft_compact").toString
-    graft.util.Fs.deleteRecursively(dir)
-    // fragment: 4 writer tasks per partition → several small files each
-    Tables.events(spark, sfDir)
-      .select(col("event_id"), col("event_type"), col("value"),
-        to_date(col("ts")).as("event_date"))
-      .repartition(4)
-      .write.partitionBy("event_date").parquet(dir)
+    // fragment: four commits keyed on the event day → several small
+    // files per key
+    (0 until 4).foreach { i =>
+      Tables.events(spark, sfDir)
+        .filter(col("event_id") % 4 === i)
+        .select(col("event_id"), col("event_type"), col("value"),
+          to_date(col("ts")).as("event_date"))
+        .write.format("graft-jsonl-stats").option("path", dir)
+        .option("partitionColumn", "days(event_date)")
+        .mode(if (i == 0) "overwrite" else "append").save()
+    }
     val before = snapshot(dir)
-    val fragged = parquetFilesPerPartition(dir)
+    val fragged = filesPerKey(dir)
     assert(fragged.values.exists(_ > 1), "fixture must be fragmented")
-    Compaction.compactPartitioned(spark, dir, "event_date")
-    val after = parquetFilesPerPartition(dir)
-    assert(after.values.forall(_ === 1), s"expected 1 file/partition, got $after")
+    // partial compaction: compact ONLY one key; every other manifest
+    // entry must survive byte-identical
+    val someDay = fragged.filter(_._2 > 1).keys.min
+    val others = JsonlStats.readStats(dir).filterNot(_.pkey.contains(someDay))
+      .map(JsonlStats.statsLine).sorted
+    GraftProcedures.compact(dir, 1L << 30, partition = Some(someDay))
+    assert(filesPerKey(dir)(someDay) === 1)
+    assert(JsonlStats.readStats(dir).filterNot(_.pkey.contains(someDay))
+      .map(JsonlStats.statsLine).sorted === others,
+      "compacting one key must not touch another key's entries")
     assert(snapshot(dir) === before, "compaction must not change content")
-    // partial compaction: re-fragment one partition, compact ONLY it
-    val someDay = after.keys.head.stripPrefix("event_date=")
-    // re-fragment from the SOURCE table (cannot overwrite a path while
-    // reading it — the same constraint the operator's staging solves)
-    Tables.events(spark, sfDir)
-      .select(col("event_id"), col("event_type"), col("value"),
-        to_date(col("ts")).as("event_date"))
-      .filter(col("event_date") === lit(someDay))
-      .repartition(3).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(dir)
-    assert(parquetFilesPerPartition(dir)(s"event_date=$someDay") === 3)
-    Compaction.compactPartitioned(spark, dir, "event_date",
-      onlyPartitions = Seq(java.sql.Date.valueOf(someDay)))
-    val finalCounts = parquetFilesPerPartition(dir)
-    assert(finalCounts(s"event_date=$someDay") === 1)
-    assert(finalCounts.values.forall(_ === 1))
-    assert(snapshot(dir) === before)
+    // the whole table: one file per key, content unchanged
+    GraftProcedures.compact(dir, 1L << 30)
+    val after = filesPerKey(dir)
+    assert(after.keySet === fragged.keySet && after.values.forall(_ === 1),
+      s"expected 1 file/key, got $after")
+    assert(snapshot(dir) === before, "compaction must not change content")
+    graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q157: coalesce bins conserve bytes and cut on the running offset") {
     val inv = Tables.documents(spark, sfDir)
       .groupBy(col("source"), col("lang")).agg(sum(col("n_chars")).as("bytes"))
-    val plan = Compaction.scanCoalescePlan(spark, sfDir)
+    val plan = ColumnarFormats.scanCoalescePlan(spark, sfDir)
     // conservation: binned bytes sum to the inventory total, groups to the
     // inventory count — nothing dropped, nothing double-binned
     val totalBytes = inv.agg(sum("bytes")).head.getLong(0)

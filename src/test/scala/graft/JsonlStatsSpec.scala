@@ -3307,6 +3307,77 @@ class JsonlStatsSpec extends SparkSpec {
     }
   }
 
+  test("zorder rewrite: a scoped re-cluster keeps bloom sidecars; DATE dimensions rank and prune") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.Filter
+    val ev = graft.ingest.Tables.events(spark, sfDir)
+      .select($"event_id", $"user_id", to_date($"ts").as("day"), $"value")
+    // keyed on two event_id buckets, bloom-indexed on user_id; two
+    // commits, so every key holds several files
+    val dir = Files.createTempDirectory("jsonl_zorder_bloom").toString
+    Seq(0, 1).foreach { i =>
+      ev.filter($"event_id" % 2 === i)
+        .write.format("graft-jsonl-stats").option("path", dir)
+        .option("partitionColumn", "bucket(2,event_id)").option("bloomColumn", "user_id")
+        .mode(if (i == 0) "overwrite" else "append").save()
+    }
+    def bloomed(fs: Seq[JsonlStats.FileStats]): Boolean =
+      fs.forall(s => Files.exists(Paths.get(dir, Bloom.sidecarName(s.file))))
+    def content(): Seq[String] =
+      spark.read.format("graft-jsonl-stats").option("path", dir).load()
+        .collect().map(_.toString).sorted.toSeq
+    val content0 = content()
+    val keys = JsonlStats.readStats(dir).flatMap(_.pkey).distinct.sorted
+    assert(keys.size === 2 && bloomed(JsonlStats.readStats(dir)))
+    // one key at a time, once by (long, double) and once by (long, DATE):
+    // the scope fans out, its fresh entries keep their bloom sidecars,
+    // every entry outside it survives byte-identical
+    Seq(keys(0) -> "value", keys(1) -> "day").foreach { case (key, colB) =>
+      val stats = JsonlStats.readStats(dir)
+      val others = stats.filterNot(_.pkey.contains(key)).map(JsonlStats.statsLine).sorted
+      val scopeBytes = stats.filter(_.pkey.contains(key))
+        .map(s => Files.size(Paths.get(dir, s.file))).sum
+      GraftProcedures.zorder(dir, "user_id", colB, math.max(512L, scopeBytes / 8), Some(key))
+      val after = JsonlStats.readStats(dir)
+      assert(after.filterNot(_.pkey.contains(key)).map(JsonlStats.statsLine).sorted === others,
+        s"zorder of $key touched an entry outside its scope")
+      val fresh = after.filter(_.pkey.contains(key))
+      assert(fresh.size >= 2, s"the $key scope did not fan out: ${fresh.size} file(s)")
+      assert(bloomed(fresh), s"the $key rewrite dropped its bloom sidecars")
+      assert(content() === content0, s"zorder of $key changed content")
+    }
+    // the moved sidecars index their own files: a bloom-probed point
+    // lookup (a wrong sidecar would skip a file holding the key) is exact
+    val probe = ev.agg(max($"user_id")).head().getLong(0)
+    val hits = spark.read.format("graft-jsonl-stats").option("path", dir).load()
+      .filter($"user_id" === probe)
+    assert(hits.count() === ev.filter($"user_id" === probe).count())
+    // the global rewrite ranks a DATE dimension by its epoch day, and
+    // the 2-D box then prunes from per-column bounds alone (q190's law)
+    val flat = Files.createTempDirectory("jsonl_zorder_date").toString
+    ev.write.format("graft-jsonl-stats").option("path", flat).mode("overwrite").save()
+    val flatBytes = JsonlStats.readStats(flat).map(s => Files.size(Paths.get(flat, s.file))).sum
+    val (_, nOut, n) = GraftProcedures.zorder(flat, "user_id", "day", math.max(512L, flatBytes / 16))
+    assert(n === ev.count() && nOut >= 8, s"want a multi-file z layout, got $nOut")
+    def kept(filters: Filter*): Int = {
+      val sb = new JsonlStatsScanBuilder(flat, JsonlStats.readTableMeta(flat).schema.get)
+      sb.pushFilters(filters.toArray)
+      sb.build().toBatch.planInputPartitions().length
+    }
+    val b = ev.agg(max($"user_id"), min($"day"), max($"day")).head()
+    val (mnDay, mxDay) = (b.getDate(1).toLocalDate, b.getDate(2).toLocalDate)
+    val uCut = LessThanOrEqual("user_id", Long.box(b.getLong(0) / 4))
+    val dCut = LessThanOrEqual("day",
+      mnDay.plusDays(java.time.temporal.ChronoUnit.DAYS.between(mnDay, mxDay) / 4))
+    val (total, uKept, dKept, boxKept) = (kept(), kept(uCut), kept(dCut), kept(uCut, dCut))
+    assert(uKept < total && dKept < total,
+      s"each dimension should prune on the z layout ($uKept, $dKept of $total)")
+    assert(boxKept <= math.min(uKept, dKept) && boxKept < total / 2,
+      s"2-D box should prune most files, kept $boxKept/$total")
+    graft.util.Fs.deleteRecursively(dir)
+    graft.util.Fs.deleteRecursively(flat)
+  }
+
   test("checkpoint-aligned splits: DV'd and _pos reads fan out with exact positions at every boundary class (r8)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("jsonl_ckpt").toString
