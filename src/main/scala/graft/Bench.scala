@@ -149,9 +149,9 @@ object Bench {
     // A/B isolation knob (r13, judge #8): SPARK_GRAFT_NO_EXTENSIONS=1
     // builds the session WITHOUT GraftExtensions, so a per-query drift
     // can be attributed to (or cleared of) the injected rules. Queries
-    // that NEED the extensions (views, MVs, catalog functions) fail
-    // loudly under it — use with SPARK_GRAFT_ONLY on extension-free
-    // queries.
+    // that NEED the extensions (views, MVs, catalog functions, the
+    // top-k operator) fail loudly under it — use with SPARK_GRAFT_ONLY
+    // on extension-free queries.
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -62,7 +62,6 @@ object SparkEntry {
     streaming.MicroBatch,
     streaming.StreamNearDup,
     plans.TopKQueries,
-    plans.MvQueries,
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

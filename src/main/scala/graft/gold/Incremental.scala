@@ -362,208 +362,10 @@ object Incremental extends QueryModule {
       .orderBy($"event_date")
   }
 
-  /** q201: INCREMENTAL VIEW MAINTENANCE for a JOIN view — the delta-join
-    * algebra (Blakeley 1986; the engine's aggregate tier already
-    * maintains grouped views via ledgered partials, q96/q141; this is
-    * the JOIN half every IVM system needs):
-    *
-    *   Δ(A ⋈ B) = ΔA ⋈ B₀  ∪  A₀ ⋈ ΔB  ∪  ΔA ⋈ ΔB
-    *
-    * exact for insert-only deltas. The maintained view is per-nation
-    * order revenue (orders ⋈ customer); the base snapshot's join is a
-    * STORED artifact (parquet fixture — the materialized view), and a
-    * refresh touches only the three delta-sized joins: with a daily
-    * delta at 0.1% of a 100-TB base, ΔA⋈B₀ broadcast-joins the delta
-    * against the dimension and A₀⋈ΔB is delta-keyed — the refresh
-    * costs O(‖Δ‖), never a re-join of the base (the full recompute the
-    * oracle runs IS the contrast). The deltas here are deterministic
-    * key-residue slices (orderkey%10=7, custkey%10=3), so the
-    * decomposition exercises all three terms including ΔA⋈ΔB.
-    * Equality with the monolithic join is the oracle; term-disjointness
-    * and delta-only-input accounting ride in IncrementalSpec. */
-  def joinIvm(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val o = Tables.orders(spark, d)
-      .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-    val c = Tables.customer(spark, d)
-      .select($"c_custkey", $"c_nationkey")
-    val oBase = o.filter($"o_orderkey" % 10 =!= 7)
-    val oDelta = o.filter($"o_orderkey" % 10 === 7)
-    val cBase = c.filter($"c_custkey" % 10 =!= 3)
-    val cDelta = c.filter($"c_custkey" % 10 === 3)
-    // the materialized base view: joined ONCE, stored, never re-joined
-    val baseView = Landing.ensureParquetFixture(
-      oBase.join(cBase, $"o_custkey" === $"c_custkey")
-        .select($"c_nationkey", $"o_totalprice"),
-      d, "ivm_join_base")
-    val incr = Seq(
-      oDelta.join(cBase, $"o_custkey" === $"c_custkey"),
-      oBase.join(cDelta, $"o_custkey" === $"c_custkey"),
-      oDelta.join(cDelta, $"o_custkey" === $"c_custkey"))
-      .map(_.select($"c_nationkey", $"o_totalprice"))
-      .reduce(_ unionByName _)
-    baseView.unionByName(incr)
-      .groupBy($"c_nationkey")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.util.Det.msum($"o_totalprice").as("revenue"))
-      .orderBy($"c_nationkey")
-  }
-
-  /** Build the two versioned connector tables the CDF→IVM composition
-    * (q229) reads: `ivm_cdf_orders` / `ivm_cdf_customer`, each with the
-    * BASE residue slice as version 1 and the delta slice appended as
-    * version 2 (the append archives v1 into `_history`, so both
-    * generations stay addressable). The slices mirror q201's
-    * deterministic key residues, so all three delta-join terms fire. */
-  private[graft] def ensureCdfIvmTables(spark: SparkSession, d: String): (String, String) = {
-    import spark.implicits._
-    val oDir = Landing.fixtureDir(d, "ivm_cdf_orders")
-    Landing.ensureBuilt(oDir) { out =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      val o = Tables.orders(spark, d)
-        .select($"o_orderkey".cast("long").as("o_orderkey"),
-          $"o_custkey".cast("long").as("o_custkey"), $"o_totalprice")
-      o.filter($"o_orderkey" % 10 =!= 7)
-        .write.format("graft-jsonl-stats").option("path", out)
-        .option("statsColumn", "o_orderkey").mode("overwrite").save()
-      o.filter($"o_orderkey" % 10 === 7)
-        .write.format("graft-jsonl-stats").option("path", out).mode("append").save()
-    }
-    val cDir = Landing.fixtureDir(d, "ivm_cdf_customer")
-    Landing.ensureBuilt(cDir) { out =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      val c = Tables.customer(spark, d)
-        .select($"c_custkey".cast("long").as("c_custkey"),
-          $"c_nationkey".cast("long").as("c_nationkey"))
-      c.filter($"c_custkey" % 10 =!= 3)
-        .write.format("graft-jsonl-stats").option("path", out)
-        .option("statsColumn", "c_custkey").mode("overwrite").save()
-      c.filter($"c_custkey" % 10 === 3)
-        .write.format("graft-jsonl-stats").option("path", out).mode("append").save()
-    }
-    (oDir, cDir)
-  }
-
-  /** q229 (r8): the TABLE-FORMAT tier FEEDING the IVM tier — q201's
-    * delta-join refresh driven end-to-end by q181's change feed. The
-    * deltas are not hand-built frames: each base table is a versioned
-    * connector table (v1 = base slice, v2 = base + appended delta) and
-    * ΔA/ΔB arrive as `ChangeFeed.tableChanges(v1→v2)` insert images,
-    * while A₀/B₀ read the ARCHIVED v1 manifests through the same
-    * connector. The refresh therefore costs what the CDF costs —
-    * manifest arithmetic plus a scan of exactly the files that entered
-    * the manifest (IncrementalSpec pins the only-changed-files law) —
-    * composed with the O(‖Δ‖) delta-join algebra. The oracle is the
-    * monolithic recompute, so "CDF-sourced refresh ≡ full re-join"
-    * is re-proven every round. */
-  def cdfJoinIvm(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val (oDir, cDir) = ensureCdfIvmTables(spark, d)
-    def readV1(root: String): DataFrame = spark.read.format("graft-jsonl-stats")
-      .option("path", root).option("manifest", s"${graft.sources.JsonlStats.HistoryDir}/v1.jsonl")
-      .load()
-    val oBase = readV1(oDir)
-    val cBase = readV1(cDir)
-    val oDelta = graft.sources.ChangeFeed.tableChanges(spark, oDir, 1, 2, Seq("o_orderkey"))
-      .filter($"change_type" === "insert")
-      .select($"o_orderkey", $"after_o_custkey".as("o_custkey"),
-        $"after_o_totalprice".as("o_totalprice"))
-    val cDelta = graft.sources.ChangeFeed.tableChanges(spark, cDir, 1, 2, Seq("c_custkey"))
-      .filter($"change_type" === "insert")
-      .select($"c_custkey", $"after_c_nationkey".as("c_nationkey"))
-    // the materialized v1⋈v1 view: joined once, stored, never re-joined
-    val baseView = Landing.ensureParquetFixture(
-      oBase.join(cBase, $"o_custkey" === $"c_custkey")
-        .select($"c_nationkey", $"o_totalprice"),
-      d, "ivm_cdf_join_base")
-    val incr = Seq(
-      oDelta.join(cBase, $"o_custkey" === $"c_custkey"),
-      oBase.join(cDelta, $"o_custkey" === $"c_custkey"),
-      oDelta.join(cDelta, $"o_custkey" === $"c_custkey"))
-      .map(_.select($"c_nationkey", $"o_totalprice"))
-      .reduce(_ unionByName _)
-    baseView.unionByName(incr)
-      .groupBy($"c_nationkey")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.util.Det.msum($"o_totalprice").as("revenue"))
-      .orderBy($"c_nationkey")
-  }
-
-  /** q235 (r8): CONTINUOUS IVM — the q229 composition made a RUNNING
-    * process: the fact table's STREAMING change feed
-    * ([[graft.sources.JsonlCdfStream]], versions as offsets) drives
-    * the delta-join refresh per micro-batch instead of per manual
-    * version pair. The materialized view is a parquet artifact joined
-    * ONCE from the v1 base; each checkpointed drain reads exactly the
-    * files that entered the manifest since the last offset, joins the
-    * insert images against the broadcast dim, and APPENDS the result
-    * to the view — Δ(A⋈B) = ΔA⋈B for an append-only fact and static
-    * dim, the stream-static enrichment arm of the Blakeley algebra.
-    * Restart-safe by construction (version offsets in the checkpoint;
-    * archived manifests immutable), and the registered read aggregates
-    * the VIEW, so the oracle's monolithic re-join pins "continuously
-    * maintained ≡ recomputed" every run. At 100 TB the view never
-    * re-joins its base: each refresh costs the delta's files plus a
-    * broadcast, on the stream's own cadence. */
-  def streamingJoinIvm(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    val oDir = Landing.fixtureDir(d, "ivm_stream_orders")
-    val mv = Landing.fixtureDir(d, "ivm_stream_mv")
-    val ckpt = Landing.fixtureDir(d, "ivm_stream_ckpt")
-    Seq(oDir, mv, ckpt).foreach(graft.util.Fs.deleteRecursively)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(oDir))
-    val o = Tables.orders(spark, d)
-      .select($"o_orderkey".cast("long").as("o_orderkey"),
-        $"o_custkey".cast("long").as("o_custkey"), $"o_totalprice")
-    val cust = Tables.customer(spark, d)
-      .select($"c_custkey".cast("long").as("c_custkey"),
-        $"c_nationkey".cast("long").as("c_nationkey"))
-    // v1 = the base slice; the view is joined ONCE from it
-    o.filter($"o_orderkey" % 3 === 0)
-      .write.format("graft-jsonl-stats").option("path", oDir)
-      .option("statsColumn", "o_orderkey").mode("overwrite").save()
-    spark.read.format("graft-jsonl-stats").option("path", oDir).load()
-      .join(broadcast(cust), $"o_custkey" === $"c_custkey")
-      .select($"c_nationkey", $"o_totalprice")
-      .write.mode("overwrite").parquet(mv)
-    def drain(): Unit = {
-      val q = spark.readStream.format("graft-jsonl-stats")
-        .option("path", oDir).option("readChangeFeed", "true")
-        .option("startingVersion", "2").load()
-        .writeStream
-        .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => {
-          batch.filter(col(graft.sources.JsonlCdfStream.ChangeTypeCol) === "insert")
-            .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-            .select(col("c_nationkey"), col("o_totalprice"))
-            .write.mode("append").parquet(mv)
-          ()
-        })
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // two delta generations arrive on the stream's cadence
-    o.filter($"o_orderkey" % 3 === 1)
-      .write.format("graft-jsonl-stats").option("path", oDir).mode("append").save()
-    drain()
-    o.filter($"o_orderkey" % 3 === 2)
-      .write.format("graft-jsonl-stats").option("path", oDir).mode("append").save()
-    drain()
-    spark.read.parquet(mv)
-      .groupBy($"c_nationkey")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.util.Det.msum($"o_totalprice").as("revenue"))
-      .orderBy($"c_nationkey")
-  }
-
   val queries = Map[String, (SparkSession, String) => DataFrame](
     "q96_incremental_gold" -> incrementalGold,
     "q126_gold_time_travel" -> goldTimeTravel,
     "q141_multi_table_snapshot" -> multiTableSnapshot,
-    "q201_join_ivm" -> joinIvm,
-    "q229_cdf_join_ivm" -> cdfJoinIvm,
-    "q235_streaming_ivm" -> streamingJoinIvm,
   )
 
   val oracles = Map(
@@ -600,28 +402,5 @@ object Incremental extends QueryModule {
         |  n1 = n2 AS consistent, revenue, n_users
         |FROM t JOIN u ON t.d = u.d
         |ORDER BY event_date""".stripMargin,
-    // the monolithic recompute the incremental refresh must equal
-    "q201_join_ivm" ->
-      """SELECT c_nationkey, count(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-    // same monolithic recompute: the CDF-sourced refresh must equal the
-    // full re-join (nationkey cast mirrors the connector's long schema)
-    "q229_cdf_join_ivm" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, count(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    // q235: the continuously-maintained view must equal the monolithic
-    // re-join over every generation the stream delivered
-    "q235_streaming_ivm" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, count(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
   )
 }

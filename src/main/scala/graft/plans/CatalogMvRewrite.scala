@@ -6,17 +6,17 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.{DateType, DecimalType, LongType, TimestampType}
 
 import java.nio.file.{Files, Path, Paths}
 
 /** TRANSPARENT rewrite of raw-table aggregates onto covering CATALOG
-  * materialized views (r13) — the missing half that unifies the two MV
-  * stories. [[MvRewrite]] proves the Oracle/Calcite aggregate-rewrite
-  * posture on ONE registered parquet layout; the catalog MVs (q291)
-  * were read-through-the-name only. This rule generalizes the same
-  * soundness checklist over the [[GraftViews]] sidecar metadata, so
+  * materialized views (r13) — the Oracle/Calcite aggregate-rewrite
+  * posture over the [[GraftViews]] sidecar metadata (catalog MVs are
+  * otherwise read through their name, q291), and the engine's only MV
+  * rewrite (q210, q228, q294, q297, q300, q301). So
   * `SELECT event_type, count(*) FROM raw GROUP BY event_type` plans the
   * MV backing table whenever a FRESH covering MV exists — the query
   * author never learns the MV's name.
@@ -53,9 +53,11 @@ import java.nio.file.{Files, Path, Paths}
   *     every MV conjunct appears semantically among the query's
   *     conjuncts — the "last-90-days" MV answers its own window and
   *     any conjunctive strengthening of it;
-  *   - whatever query conjuncts remain reference only BARE-ATTRIBUTE
-  *     grain columns, and are pushed onto the backing scan (where the
-  *     connector's file pruning applies to the much smaller table).
+  *   - whatever query conjuncts remain are functions of the grain
+  *     expressions (a bare column, a derived grain like `to_date(ts)`,
+  *     or a midnight cut of the timestamp under a date grain), and are
+  *     pushed onto the backing scan (where the connector's file pruning
+  *     applies to the much smaller table).
   *
   * Freshness is probed at REWRITE time: a source commit racing the
   * query flips later plans back to the raw scan; the in-flight plan
@@ -410,18 +412,38 @@ class CatalogMvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         grainOf(inline(a)).map(m => Alias(m, a.name)(a.exprId, a.qualifier))
       case _ => None
     })
-    // a riding predicate must be a function of BARE-ATTRIBUTE grains —
-    // it then keeps/drops whole groups and commutes with the merge;
-    // pushed onto the backing scan it prunes the small table's files
-    val attrGrains: Map[ExprId, Attribute] = grains.collect {
-      case (o, a: AttributeReference) => a.exprId -> mvAttr(o.name)
-    }.collect { case (id, Some(a)) => id -> a }.toMap
+    // a riding predicate must be a function of the GRAINS — it then
+    // keeps/drops whole groups and commutes with the merge; pushed onto
+    // the backing scan it prunes the small table's files. Any grain
+    // expression (a bare attribute or a derived one like `to_date(ts)`)
+    // maps to its backing column. For a DATE grain of a timestamp
+    // column, UnwrapCastInBinaryComparison (which runs before this rule
+    // in the same batch) has already turned `to_date(ts) >= D` into
+    // `ts >= D 00:00`: exactly the midnight-literal comparisons
+    // `ts >= M` / `ts < M` are functions of the day and map onto the
+    // date column. A sub-day cut or a measure predicate keeps a raw
+    // reference and declines.
+    val zone = conf.sessionLocalTimeZone
+    def dayGrain(ts: Expression): Option[Attribute] =
+      if (ts.dataType == TimestampType) grainOf(Cast(ts, DateType, Some(zone))) else None
+    def dayCut(ts: Expression, m: Expression): Option[(Attribute, Literal)] = m match {
+      case Literal(us: java.lang.Long, TimestampType) =>
+        val t = DateTimeUtils.microsToInstant(us).atZone(java.time.ZoneId.of(zone))
+        if (t.toLocalTime != java.time.LocalTime.MIDNIGHT) None
+        else dayGrain(ts).map(_ -> Literal(t.toLocalDate.toEpochDay.toInt, DateType))
+      case _ => None
+    }
+    def translate(e: Expression): Option[Expression] = grainOf(e).orElse(e match {
+      case GreaterThanOrEqual(ts, m) => dayCut(ts, m).map { case (d, l) => GreaterThanOrEqual(d, l) }
+      case LessThan(ts, m) => dayCut(ts, m).map { case (d, l) => LessThan(d, l) }
+      case LessThanOrEqual(m, ts) => dayCut(ts, m).map { case (d, l) => LessThanOrEqual(l, d) }
+      case GreaterThan(m, ts) => dayCut(ts, m).map { case (d, l) => GreaterThan(l, d) }
+      case _ => None
+    })
     val newCond: Option[Option[Expression]] = residual match {
       case None => Some(None)
       case Some(cnd) if cnd.deterministic =>
-        val t = cnd.transformUp {
-          case a: Attribute if attrGrains.contains(a.exprId) => attrGrains(a.exprId)
-        }
+        val t = cnd.transformDown(Function.unlift(translate))
         if (t.references.subsetOf(mvPlan.outputSet)) Some(Some(t)) else None
       case _ => None
     }

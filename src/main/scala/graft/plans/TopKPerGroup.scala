@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descendi
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Whole-operator extension (SURVEY.md §7.3 tier (c)): per-group top-k as
   * a first-class physical operator — `TakeOrderedAndProject`, but keyed.
@@ -32,10 +32,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Planning: `TopKPerGroup` (logical) is planned by
   * [[TopKPerGroupStrategy]] into final-over-partial [[TopKPerGroupExec]];
   * the final's `ClusteredDistribution` makes EnsureRequirements insert
-  * the hash exchange on the group key. Registered either via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` or
-  * programmatically by [[GraftOps.ensureStrategy]]
-  * (`spark.experimental.extraStrategies` — public API).
+  * the hash exchange on the group key. Registered by
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, which every
+  * session the engine builds installs; a session without it cannot
+  * plan the node.
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],
@@ -112,22 +112,12 @@ object TopKPerGroupStrategy extends SparkStrategy {
 /** User-facing entry points for the custom operator. */
 object GraftOps {
 
-  /** Idempotently add the planner strategy to an existing session
-    * (`experimental.extraStrategies` is the public extension point for
-    * sessions not configured with `spark.sql.extensions`). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.exists(_ eq TopKPerGroupStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKPerGroupStrategy
-  }
-
   /** Top-k rows per group of `df`, ordered by `sort` (column name →
     * descending?). Ties must be broken by the sort spec itself (give a
     * unique tiebreak column) for deterministic output. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
                    sort: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val analyzed = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n).getOrElse(

@@ -49,16 +49,10 @@ object TopKQueries extends QueryModule {
     * check proves the rewrite is semantics-preserving end-to-end;
     * TopKSpec proves the substitution actually happened in the plan. */
   def topEventsViaRewrite(spark: SparkSession, d: String): DataFrame = {
-    // a child session scopes the rule: same SparkContext and tables, but
-    // sibling queries sharing the caller's session keep their own plans
-    // (a cluster deployment would instead set spark.sql.extensions =
-    // graft.functions.GraftExtensions and have it everywhere)
-    val s = spark.newSession()
-    import s.implicits._
-    WindowTopKRewriteOps.ensureRule(s)
+    import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"value".desc, $"event_id")
-    Tables.events(s, d)
+    Tables.events(spark, d)
       .select($"user_id", $"event_id", $"event_type", $"value")
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= 3)

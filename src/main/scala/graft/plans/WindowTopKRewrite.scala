@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -40,10 +39,8 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Like `row_number` itself, output under an order with ties is
   * tie-nondeterministic; the rewrite neither adds nor removes that
-  * caveat. Registered via `GraftExtensions` (injectOptimizerRule) or
-  * programmatically through [[GraftOps.ensureRule]]
-  * (`spark.experimental.extraOptimizations` — public API, runs after the
-  * main optimizer batches on both the initial plan and AQE re-plans).
+  * caveat. Registered via `GraftExtensions` (injectOptimizerRule, with
+  * the [[TopKPerGroupStrategy]] that plans its output).
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] {
 
@@ -88,16 +85,5 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
           Project(projList, TopKPerGroup(part, ord, k, base))
         case _ => p
       }
-  }
-}
-
-/** Programmatic registration for sessions not configured with
-  * `spark.sql.extensions`. */
-object WindowTopKRewriteOps {
-  def ensureRule(spark: SparkSession): Unit = {
-    GraftOps.ensureStrategy(spark) // the rewrite needs the planner strategy
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.exists(_ eq WindowTopKRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ WindowTopKRewrite
   }
 }

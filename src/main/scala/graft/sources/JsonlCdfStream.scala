@@ -17,9 +17,10 @@ import scala.jdk.CollectionConverters._
   * micro-batch emits the row-level changes the commits in
   * (startVersion, endVersion] made, with the Delta CDF column shape
   * (the table's columns carrying the row image + `_change_type`).
-  * This is the leg that turns the CDF→IVM composition (q229)
-  * continuous: a `readStream` of changes drives the delta-join refresh
-  * per micro-batch instead of per manual call.
+  * It is the trigger of continuous MV refresh
+  * ([[graft.streaming.MvAutoRefresh]], q235 and q306): a `readStream`
+  * of changes drives `refresh_materialized_view` per micro-batch
+  * instead of per manual call.
   *
   * Exactness without a join: the batch CDF cancels copy-on-write
   * re-emissions by image comparison — a DataFrame-level join a

@@ -2314,9 +2314,10 @@ object JsonlStatsQueries extends QueryModule {
     * and aggregates the accumulated change rows; the oracle recomputes
     * the same inserts (the whole feed) and deletes (the masked slice)
     * from parquet, so hash equality pins BOTH legs' exactness and the
-    * exactly-once version offsets. This is the leg that turns the
-    * CDF→IVM composition (q229) continuous: at 100 TB the per-batch
-    * read is the delta's files, never the table. */
+    * exactly-once version offsets. It is also the trigger
+    * [[graft.streaming.MvAutoRefresh]] refreshes catalog MVs from (q235,
+    * q306): at 100 TB the per-batch read is the delta's files, never
+    * the table. */
   def cdfStreamDrain(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val cat = ensureCatalog(spark, d)
@@ -3442,11 +3443,62 @@ object JsonlStatsQueries extends QueryModule {
       .orderBy(col("phase"), col("event_type"))
   }
 
+  /** The raw event feed (ts, event_type, value) as a graft table, with
+    * the catalog MV `mv_rw_day_type` at (day, type) grain — `count(*)`
+    * and the decimal sum — created in the build. q210 and q228
+    * aggregate the RAW table; [[graft.plans.CatalogMvRewrite]] routes
+    * them onto the MV's backing while it is fresh. */
+  private[graft] def mvRewriteEvents(spark: SparkSession, d: String): DataFrame = {
+    val cat = ensureCatalog(spark, d)
+    ensureTable(d, "mvrw_events", after = _ => spark.sql(
+      s"CALL $cat.create_materialized_view('mv_rw_day_type', " +
+        "'SELECT to_date(ts) AS event_date, event_type, count(*) AS n_events, " +
+        "SUM(CAST(value AS DECIMAL(18,6))) AS total_dec " +
+        s"FROM $cat.mvrw_events GROUP BY to_date(ts), event_type', or_replace => true)")) {
+      Tables.events(spark, d).select(col("ts"), col("event_type"), col("value"))
+    }
+    spark.table(s"$cat.mvrw_events")
+  }
+
+  /** q210: the dashboard aggregate WRITTEN AGAINST THE RAW FEED — per
+    * event_type counts and revenue — transparently answered from the
+    * (day × type) materialized view: the query grain is coarser than
+    * the MV's, so the rewrite re-aggregates the backing, preserving
+    * output attribute ids so nothing upstream notices. The oracle
+    * recomputes from the raw parquet — rewrite soundness IS the check,
+    * re-proven every round. Plan substitution (only the `_mv_` backing
+    * scanned) and the declining shapes (countDistinct, a measure
+    * filter, a global aggregate) are pinned in PlanShapeSpec. */
+  def mvRewriteAggregate(spark: SparkSession, d: String): DataFrame =
+    mvRewriteEvents(spark, d).groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"), msum(col("value")).as("revenue"))
+      .orderBy(col("event_type"))
+
+  /** q228 (r8): the REAL dashboard hit pattern — a date-range +
+    * type-exclusion filter over the raw feed, grouped by day. The
+    * filter is a function of the MV's grains only, so it commutes with
+    * the MV's merge: the rewrite substitutes the backing scan AND
+    * carries the translated predicate onto it (the date range — which
+    * reaches the raw plan as midnight cuts of `ts` — over the backing's
+    * date column, the exclusion over `event_type`), so at 100 TB a
+    * raw-feed dashboard query reads a few day-sized MV files instead of
+    * the fact table. A sub-day `ts` cut or a `value` predicate still
+    * declines — both arms pinned in PlanShapeSpec; the oracle
+    * recomputes from raw parquet. */
+  def mvRewriteGrainFiltered(spark: SparkSession, d: String): DataFrame = {
+    val day = to_date(col("ts"))
+    mvRewriteEvents(spark, d)
+      .filter(day >= lit("2024-01-08") && day <= lit("2024-01-21") &&
+        col("event_type") =!= "view")
+      .groupBy(day.as("event_date"))
+      .agg(count(lit(1)).as("n_events"), msum(col("value")).as("revenue"))
+      .orderBy(col("event_date"))
+  }
+
   /** q294 (r13): TRANSPARENT aggregate rewrite onto a covering catalog
-    * MV ([[graft.plans.CatalogMvRewrite]]) — the half that unifies the
-    * two MV stories: q210/q228 prove the rewrite posture on one
-    * registered parquet layout, q291 gave catalog MVs read-through-the-
-    * name; this query writes a dashboard aggregate AGAINST THE RAW
+    * MV ([[graft.plans.CatalogMvRewrite]]) — q291 gave catalog MVs
+    * read-through-the-name; this query (like q210/q228 on a build-once
+    * fixture) writes a dashboard aggregate AGAINST THE RAW
     * TABLE (with a grain predicate riding) and the optimizer routes it
     * to the MV's backing table because a FRESH covering MV exists —
     * grain covered, measures derivable from the hidden graft_ivm_*
@@ -3673,6 +3725,89 @@ object JsonlStatsQueries extends QueryModule {
       .unionAll(spark.sql(
         s"SELECT 'rows' AS phase, event_type, mn, mx, n FROM $cat.mv_minmax"))
       .orderBy(col("phase"), col("event_type"))
+  }
+
+  /** Orders and customer with the connector's 64-bit keys (it stores
+    * no 32-bit ints). */
+  private def ordersAndCustomer(spark: SparkSession, d: String): (DataFrame, DataFrame) = (
+    Tables.orders(spark, d).select(col("o_orderkey").cast("long").as("o_orderkey"),
+      col("o_custkey").cast("long").as("o_custkey"), col("o_totalprice")),
+    Tables.customer(spark, d).select(col("c_custkey").cast("long").as("c_custkey"),
+      col("c_nationkey").cast("long").as("c_nationkey")))
+
+  /** The per-nation order revenue body over `orders ⋈ customer`. */
+  private def nationRevenueBody(cat: String, orders: String, customer: String): String =
+    "SELECT c_nationkey, count(*) AS n_orders, " +
+      "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue " +
+      s"FROM $cat.$orders JOIN $cat.$customer ON o_custkey = c_custkey GROUP BY c_nationkey"
+
+  /** The q201/q229 build: `<p>_orders` and `<p>_customer` hold the
+    * BASE key-residue slices (orderkey%10≠7, custkey%10≠3) as version
+    * 1, the join MV `mv_<p>` is created over them, and then the delta
+    * slices land — one `refresh_materialized_view` per window, a window
+    * being the tables whose delta it covers. The residues make every
+    * delta-join term non-empty, the cross term ΔA⋈ΔB included. The
+    * build throws unless every refresh says `incremental`. Returns
+    * (catalog, orders root, customer root). */
+  private[graft] def ensureJoinMv(spark: SparkSession, d: String, p: String,
+                                  windows: Seq[Seq[String]]): (String, String, String) = {
+    val cat = ensureCatalog(spark, d)
+    val (o, c) = ordersAndCustomer(spark, d)
+    val (oName, cName) = (s"${p}_orders", s"${p}_customer")
+    val delta = Map(oName -> o.filter(col("o_orderkey") % 10 === 7),
+      cName -> c.filter(col("c_custkey") % 10 === 3))
+    val cDir = Landing.fixtureDir(d, cName)
+    val oDir = ensureTable(d, oName, Map("statsColumn" -> "o_orderkey"), after = _ => {
+      // this build appends to the customer table: rebuild it from v1
+      graft.util.Fs.deleteRecursively(cDir)
+      ensureTable(d, cName, Map("statsColumn" -> "c_custkey"))(
+        c.filter(col("c_custkey") % 10 =!= 3))
+      spark.sql(s"CALL $cat.create_materialized_view('mv_$p', " +
+        s"'${nationRevenueBody(cat, oName, cName)}', or_replace => true)")
+      windows.foreach { w =>
+        w.foreach(t => delta(t).write.format("graft-jsonl-stats")
+          .option("path", Landing.fixtureDir(d, t)).mode("append").save())
+        val mode = spark.sql(s"CALL $cat.refresh_materialized_view('mv_$p')")
+          .collect().head.getString(2)
+        require(mode == "incremental",
+          s"mv_$p: the refresh of window ${w.mkString(" + ")} said '$mode'")
+      }
+    })(o.filter(col("o_orderkey") % 10 =!= 7))
+    (cat, oDir, cDir)
+  }
+
+  /** q201: INCREMENTAL VIEW MAINTENANCE for a JOIN view — the delta-join
+    * algebra (Blakeley 1986)
+    *
+    *   Δ(A ⋈ B) = ΔA ⋈ B₀  ∪  A₀ ⋈ ΔB  ∪  ΔA ⋈ ΔB
+    *
+    * served by the catalog-MV tier: BOTH deltas land in one window and
+    * ONE refresh consumes them — the two-mover telescoping (ΔA⋈B_head
+    * + A_recorded⋈ΔB, see q299) covers the cross term. The registered
+    * read is the MV; the oracle is the monolithic recompute, so
+    * "incrementally maintained ≡ re-joined" is re-proven every round
+    * (c_nationkey back at the oracle's INT). */
+  def joinIvm(spark: SparkSession, d: String): DataFrame = {
+    val (cat, _, _) = ensureJoinMv(spark, d, "jmv", Seq(Seq("jmv_orders", "jmv_customer")))
+    spark.table(s"$cat.mv_jmv")
+      .select(col("c_nationkey").cast("int").as("c_nationkey"), col("n_orders"), col("revenue"))
+      .orderBy(col("c_nationkey"))
+  }
+
+  /** q229 (r8): the TABLE-FORMAT tier FEEDING the IVM tier — q201's
+    * join MV with the deltas arriving as separate commits: a fact
+    * window (orders v1→v2) and then a dim window (customer v1→v2), each
+    * refreshed incrementally from the change feed of its window — a
+    * scan of exactly the files that entered the manifest
+    * (IncrementalSpec pins the only-changed-files law on both tables).
+    * The oracle is the monolithic recompute with the connector's BIGINT
+    * nation key, so "CDF-sourced refresh ≡ full re-join" is re-proven
+    * every round. */
+  def cdfJoinIvm(spark: SparkSession, d: String): DataFrame = {
+    val (cat, _, _) = ensureJoinMv(spark, d, "jcdf", Seq(Seq("jcdf_orders"), Seq("jcdf_customer")))
+    spark.table(s"$cat.mv_jcdf")
+      .select(col("c_nationkey"), col("n_orders"), col("revenue"))
+      .orderBy(col("c_nationkey"))
   }
 
   /** q299 (r14): JOIN-AWARE incremental MV refresh — the Phase-2
@@ -3929,8 +4064,41 @@ object JsonlStatsQueries extends QueryModule {
       .orderBy(col("phase"), col("event_type"))
   }
 
-  /** q306 (r15): CONTINUOUS MV refresh — the CDF→IVM composition
-    * (q235) lands on CATALOG MVs: [[graft.streaming.MvAutoRefresh]]
+  /** q235 (r8): CONTINUOUS IVM of a JOIN view — q229's composition
+    * made a RUNNING process: per run, a fresh orders table (v1 = the
+    * orderkey%3=0 slice) and the per-nation join MV over it and a
+    * static customer dim; two delta generations arrive, and after each
+    * an AvailableNow drain of [[graft.streaming.MvAutoRefresh]] (the
+    * orders change feed, versions as offsets) refreshes the MV —
+    * Δ(A⋈B) = ΔA⋈B for an append-only fact and a static dim. The read
+    * is the MV, so the oracle's monolithic re-join pins "continuously
+    * maintained ≡ recomputed" every run. */
+  def streamingJoinIvm(spark: SparkSession, d: String): DataFrame = {
+    val cat = ensureCatalog(spark, d)
+    val (o, c) = ordersAndCustomer(spark, d)
+    ensureTable(d, "jstream_customer", Map("statsColumn" -> "c_custkey"))(c)
+    val dir = Landing.fixtureDir(d, "jstream_orders")
+    val ckpt = Landing.fixtureDir(d, "jstream_ckpt")
+    Seq(dir, ckpt).foreach(graft.util.Fs.deleteRecursively)
+    Files.createDirectories(Paths.get(dir))
+    def land(g: Int, mode: String): Unit = o.filter(col("o_orderkey") % 3 === g)
+      .write.format("graft-jsonl-stats").option("path", dir)
+      .option("statsColumn", "o_orderkey").mode(mode).save()
+    land(0, "overwrite")
+    spark.sql(s"DROP VIEW IF EXISTS $cat.mv_jstream")
+    spark.sql(s"CALL $cat.create_materialized_view('mv_jstream', " +
+      s"'${nationRevenueBody(cat, "jstream_orders", "jstream_customer")}', or_replace => true)")
+    Seq(1, 2).foreach { g =>
+      land(g, "append")
+      graft.streaming.MvAutoRefresh.start(spark, cat, "mv_jstream", dir, ckpt).awaitTermination()
+    }
+    spark.table(s"$cat.mv_jstream")
+      .select(col("c_nationkey"), col("n_orders"), col("revenue"))
+      .orderBy(col("c_nationkey"))
+  }
+
+  /** q306 (r15): CONTINUOUS MV refresh — the change feed drives the
+    * catalog-MV refresh (q235 does it for a join MV): [[graft.streaming.MvAutoRefresh]]
     * reads the source's streaming change feed and CALLs the one-code-
     * path refresh per micro-batch under the per-view lock. The stream
     * is only a TRIGGER — exactly-once comes from the refresh's version
@@ -4330,11 +4498,15 @@ object JsonlStatsQueries extends QueryModule {
     "q291_materialized_view" -> materializedViewLifecycle,
     "q292_dynamic_overwrite" -> dynamicPartitionOverwrite,
     "q293_incremental_mv_refresh" -> incrementalMvRefresh,
+    "q210_mv_rewrite" -> mvRewriteAggregate,
+    "q228_mv_rewrite_grain_filter" -> mvRewriteGrainFiltered,
     "q294_transparent_mv_rewrite" -> transparentMvRewrite,
     "q295_map_key_slice" -> mapKeySlice,
     "q296_sampled_view" -> sampledViewScan,
     "q297_coarser_grain_rewrite" -> coarserGrainMvRewrite,
     "q298_minmax_mv_refresh" -> minMaxMvRefresh,
+    "q201_join_ivm" -> joinIvm,
+    "q229_cdf_join_ivm" -> cdfJoinIvm,
     "q299_join_mv_refresh" -> joinMvRefresh,
     "q300_avg_mv" -> avgMvRefreshAndRoute,
     "q301_filtered_mv_rewrite" -> filteredMvRewrite,
@@ -4342,6 +4514,7 @@ object JsonlStatsQueries extends QueryModule {
     "q303_distinct_mv_refresh" -> distinctMvRefresh,
     "q304_leftouter_mv_refresh" -> leftOuterMvRefresh,
     "q305_having_mv_refresh" -> havingMvRefresh,
+    "q235_streaming_ivm" -> streamingJoinIvm,
     "q306_continuous_mv_refresh" -> continuousMvRefresh,
     "q307_mv_over_view" -> mvOverViewRefresh,
   )
@@ -4404,6 +4577,14 @@ object JsonlStatsQueries extends QueryModule {
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv
         |FROM src GROUP BY event_type
         |ORDER BY phase, event_type""".stripMargin,
+    // q235: the continuously-maintained view must equal the monolithic
+    // re-join over every generation the stream delivered
+    "q235_streaming_ivm" ->
+      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, count(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1
+        |ORDER BY 1""".stripMargin,
     "q306_continuous_mv_refresh" ->
       """WITH src AS (
         |  SELECT event_type, value FROM events
@@ -4839,6 +5020,21 @@ object JsonlStatsQueries extends QueryModule {
         |FROM events WHERE event_type <> 'view' AND event_type <> 'error'
         |GROUP BY event_type
         |ORDER BY phase, event_type""".stripMargin,
+    // the monolithic recompute the incremental refresh must equal
+    "q201_join_ivm" ->
+      """SELECT c_nationkey, count(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_nationkey
+        |ORDER BY c_nationkey""".stripMargin,
+    // same monolithic recompute: the CDF-sourced refresh must equal the
+    // full re-join (nationkey cast mirrors the connector's long schema)
+    "q229_cdf_join_ivm" ->
+      """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, count(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1
+        |ORDER BY 1""".stripMargin,
     "q299_join_mv_refresh" ->
       """WITH fact AS (
         |  SELECT event_id, user_id, value FROM events
@@ -4910,6 +5106,21 @@ object JsonlStatsQueries extends QueryModule {
         |  CAST(sum(event_id) AS BIGINT) AS eid_sum
         |FROM src GROUP BY shard
         |ORDER BY phase, shard""".stripMargin,
+    "q210_mv_rewrite" ->
+      """SELECT event_type, count(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM events
+        |GROUP BY event_type
+        |ORDER BY event_type""".stripMargin,
+    "q228_mv_rewrite_grain_filter" ->
+      """SELECT CAST(ts AS DATE) AS event_date, count(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM events
+        |WHERE CAST(ts AS DATE) >= DATE '2024-01-08'
+        |  AND CAST(ts AS DATE) <= DATE '2024-01-21'
+        |  AND event_type <> 'view'
+        |GROUP BY 1
+        |ORDER BY 1""".stripMargin,
     "q294_transparent_mv_rewrite" ->
       """WITH src AS (
         |  SELECT event_type, value FROM events

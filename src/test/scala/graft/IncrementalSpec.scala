@@ -253,6 +253,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("q201 join IVM: the four delta-algebra terms partition the full join exactly") {
     import spark.implicits._
+    import graft.sources.{GraftViews, JsonlStats, JsonlStatsQueries}
     val o = graft.ingest.Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
     val c = graft.ingest.Tables.customer(spark, sfDir)
@@ -275,23 +276,37 @@ class IncrementalSpec extends SparkSpec {
     val union = terms.map(_.select($"o_orderkey", $"c_custkey")).reduce(_ unionByName _)
     assert(union.exceptAll(full.select($"o_orderkey", $"c_custkey")).isEmpty &&
       full.select($"o_orderkey", $"c_custkey").exceptAll(union).isEmpty)
-    // each incremental term is delta-sized: strictly smaller than the
-    // base-base term (the refresh never re-joins the base)
-    assert(counts.tail.forall(_ < counts.head),
+    // each incremental term is delta-sized and non-empty: the fixture's
+    // residues exercise every term, the cross term included
+    assert(counts.tail.forall(n => n > 0 && n < counts.head),
       s"incremental terms must be delta-sized: $counts")
-    // and the registered query equals the monolithic aggregate
-    val ivm = graft.gold.Incremental.joinIvm(spark, sfDir)
+    // force the build: its one refresh must say 'incremental' (the build
+    // throws otherwise) with BOTH sides moved in that window
+    Seq("jmv_orders", "jmv_customer").foreach(t =>
+      graft.util.Fs.deleteRecursively(graft.ingest.Landing.fixtureDir(sfDir, t)))
+    val ivm = SparkEntry.queries("q201_join_ivm")(spark, sfDir)
+    val (_, oDir, cDir) = JsonlStatsQueries.ensureJoinMv(spark, sfDir, "jmv",
+      Seq(Seq("jmv_orders", "jmv_customer")))
+    assert(JsonlStats.currentVersion(oDir) === 2 && JsonlStats.currentVersion(cDir) === 2,
+      "both sides must have moved past the recorded v1")
+    val root = java.nio.file.Paths.get(oDir).getParent
+    val mv = GraftViews.read(root, "mv_jmv").get
+    assert(GraftViews.mvFresh(root.toString, mv), "the one refresh must have consumed both windows")
+    // the registered read equals the monolithic aggregate
     val mono = full.groupBy($"c_nationkey")
       .agg(count(lit(1)).as("n_orders"),
         graft.util.Det.msum($"o_totalprice").as("revenue"))
       .orderBy($"c_nationkey")
-    assert(ivm.exceptAll(mono).isEmpty && mono.exceptAll(ivm).isEmpty)
+    assert(ivm.schema === mono.schema)
+    assert(ivm.collect().toSeq === mono.collect().toSeq)
   }
 
   test("q229 CDF->IVM: deltas are change-feed rows and the refresh reads only changed files (r8)") {
     import spark.implicits._
     import graft.sources.{ChangeFeed, JsonlStats}
-    val (oDir, cDir) = graft.gold.Incremental.ensureCdfIvmTables(spark, sfDir)
+    val got = SparkEntry.queries("q229_cdf_join_ivm")(spark, sfDir)
+    val (_, oDir, cDir) = graft.sources.JsonlStatsQueries.ensureJoinMv(spark, sfDir, "jcdf",
+      Seq(Seq("jcdf_orders"), Seq("jcdf_customer")))
     // the file-level law: v2 strictly extends v1 (append-only delta),
     // and the CDF's derived manifests name EXACTLY the difference -
     // nothing removed, nothing re-imaged
@@ -314,8 +329,7 @@ class IncrementalSpec extends SparkSpec {
     // every CDF row is an insert image (no DV/update noise in this feed)
     val oCdf = ChangeFeed.tableChanges(spark, oDir, 1, 2, Seq("o_orderkey"))
     assert(oCdf.filter($"change_type" =!= "insert").isEmpty)
-    // end to end: the CDF-driven refresh equals the monolithic recompute
-    val got = graft.gold.Incremental.cdfJoinIvm(spark, sfDir)
+    // end to end: the CDF-driven refreshes equal the monolithic recompute
     val o = graft.ingest.Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
     val c = graft.ingest.Tables.customer(spark, sfDir)

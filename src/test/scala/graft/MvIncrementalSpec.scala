@@ -637,6 +637,17 @@ class MvIncrementalSpec extends SparkSpec {
     drain()
     assert(refreshMode("mv_cj") === "noop")
     assert(mvRows("mv_cj") === direct(body))
+    // one trigger stream on the FACT alone (a static dim, q235's
+    // shape): each generation's drain leaves a manual refresh nothing
+    val factCkpt = java.nio.file.Files.createTempDirectory("mvinc_cjf_ckpt").toString
+    Seq("(2, 1.5)", "(1, 8.0), (9, 0.5)").foreach { rows =>
+      spark.sql(s"INSERT INTO mvinc.cjf VALUES $rows")
+      graft.streaming.MvAutoRefresh.start(spark, "mvinc", "mv_cj",
+        java.nio.file.Paths.get(root, "cjf").toString, factCkpt).awaitTermination()
+      assert(refreshMode("mv_cj") === "noop", s"the drain of $rows left work behind")
+      assert(mvRows("mv_cj") === direct(body))
+    }
+    graft.util.Fs.deleteRecursively(factCkpt)
   }
 
   test("pinnedScan freezes a version: a commit racing the refresh cannot " +

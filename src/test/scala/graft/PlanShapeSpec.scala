@@ -204,105 +204,116 @@ class PlanShapeSpec extends SparkSpec {
       s"no exchange reuse in the diamond plan:\n$plan")
   }
 
+  /** The graft scans an executed plan ran: (table root, scan description). */
+  private def graftScans(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] = {
+    df.collect()
+    nodes(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.executedPlan)
+      .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.description() }
+      .filter(_.startsWith("graft-jsonl-stats root="))
+      .map(d => (d.stripPrefix("graft-jsonl-stats root=").takeWhile(_ != ','), d))
+  }
+
+  /** Every scan reads the q210/q228 MV backing — none the raw table. */
+  private def mvRouted(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val roots = graftScans(df).map(_._1)
+    roots.nonEmpty && roots.forall(_.endsWith("_mv_mv_rw_day_type"))
+  }
+
+  private def onRawTable(df: org.apache.spark.sql.DataFrame): Boolean =
+    graftScans(df).map(_._1).exists(_.endsWith("mvrw_events"))
+
   test("q210: MV rewrite substitutes the materialized view; unsupported shapes decline") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
-    def scannedPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.map(_.toUri.getPath)
-      }.flatten
-    val mvDir = graft.plans.MvQueries.mvPath(sfDir)
-    val rawDir = graft.plans.MvQueries.rawPath(sfDir)
-    // the registered query reads ONLY the MV — the raw feed never scans
+    import graft.util.Det.msum
+    // the registered query scans ONLY the MV backing — the raw feed never
     val q = SparkEntry.queries("q210_mv_rewrite")(spark, sfDir)
-    val paths = scannedPaths(q)
-    assert(paths.contains(mvDir) && !paths.contains(rawDir),
-      s"MV rewrite did not substitute: scanned $paths")
-    // value identity: rule off must produce the identical rows
-    val withRule = q.collect().toSeq
-    graft.plans.MvRewrite.clear()
-    try {
-      val qOff = SparkEntry.queries("q210_mv_rewrite")(spark, sfDir)
-      // ensureMv re-registers inside the query builder; clear again and
-      // rebuild the plan WITHOUT the registration to get the raw plan
-      graft.plans.MvRewrite.clear()
-      val raw = spark.read.parquet(rawDir)
-      val off = raw.groupBy($"event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum($"value".cast(DecimalType(18, 6))).cast("double").as("revenue"))
-        .orderBy($"event_type")
-      assert(scannedPaths(off).contains(rawDir))
-      assert(off.collect().toSeq === withRule, "rewrite changed results")
-      // negative shapes stay on the raw feed even when registered
-      graft.plans.MvRewrite.register(rawDir, mvDir)
-      val distinctQ = raw.groupBy($"event_type").agg(countDistinct($"value").as("u"))
-      assert(scannedPaths(distinctQ).contains(rawDir),
-        "countDistinct is not covered by the MV grain and must not rewrite")
-      val filtered = raw.filter($"value" > 100).groupBy($"event_type")
-        .agg(count(lit(1)).as("n"))
-      assert(scannedPaths(filtered).contains(rawDir),
-        "a filtered aggregate must not rewrite (the MV already merged those rows)")
-      val global = raw.agg(count(lit(1)).as("n"))
-      assert(scannedPaths(global).contains(rawDir),
-        "a global aggregate must not rewrite (empty-input count-vs-null)")
-    } finally graft.plans.MvRewrite.clear()
+    assert(mvRouted(q), s"MV rewrite did not substitute: scanned ${graftScans(q)}")
+    // value identity: the same aggregate recomputed from the raw parquet
+    val recomputed = graft.ingest.Tables.events(spark, sfDir).groupBy($"event_type")
+      .agg(count(lit(1)).as("n_events"), msum($"value").as("revenue"))
+      .orderBy($"event_type")
+    assert(q.collect().toSeq === recomputed.collect().toSeq, "rewrite changed results")
+    // negative shapes stay on the raw table while the MV is fresh
+    val raw = graft.sources.JsonlStatsQueries.mvRewriteEvents(spark, sfDir)
+    val distinctQ = raw.groupBy($"event_type").agg(countDistinct($"value").as("u"))
+    assert(onRawTable(distinctQ) && !mvRouted(distinctQ),
+      "countDistinct is not covered by the MV grain and must not rewrite")
+    val filtered = raw.filter($"value" > 100).groupBy($"event_type")
+      .agg(count(lit(1)).as("n"))
+    assert(onRawTable(filtered) && !mvRouted(filtered),
+      "a measure-filtered aggregate must not rewrite (the MV already merged those rows)")
+    val global = raw.agg(count(lit(1)).as("n"))
+    assert(onRawTable(global) && !mvRouted(global),
+      "a global aggregate must not rewrite (empty-input count-vs-null)")
   }
 
   test("q228: grain-column filters commute into the MV scan; non-grain filters veto (r8)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
-    def scannedPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.map(_.toUri.getPath)
-      }.flatten
-    val mvDir = graft.plans.MvQueries.mvPath(sfDir)
-    val rawDir = graft.plans.MvQueries.rawPath(sfDir)
-    // the registered filtered dashboard query reads ONLY the MV
+    import graft.util.Det.msum
+    // the registered filtered dashboard query reads ONLY the MV backing
     val q = SparkEntry.queries("q228_mv_rewrite_grain_filter")(spark, sfDir)
-    try {
-      assert(scannedPaths(q).contains(mvDir) && !scannedPaths(q).contains(rawDir),
-        s"grain-filtered aggregate did not rewrite: scanned ${scannedPaths(q)}")
-      // and the translated predicate reaches the MV's parquet scan as a
-      // pushed filter (date range + type exclusion — file skipping at
-      // the MV, not a post-scan residual-only filter)
-      q.collect()
-      val pushed = q.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-        .queryExecution.executedPlan.toString
-      assert(pushed.contains("PushedFilters") &&
-        pushed.contains("event_date") && pushed.contains("event_type"),
-        s"translated grain filter did not reach the MV scan:\n$pushed")
-      val raw = spark.read.parquet(rawDir)
-      // a raw-timestamp cut FINER than the MV grain must veto: the MV
-      // already merged rows within each day
-      val fineCut = raw.filter($"ts" >= lit("2024-01-08 12:00:00").cast("timestamp"))
-        .groupBy($"event_type").agg(count(lit(1)).as("n"))
-      assert(scannedPaths(fineCut).contains(rawDir),
-        "a sub-day timestamp cut is not grain-functional and must not rewrite")
-      // a non-grain measure predicate still vetoes (r7 arm, re-pinned
-      // under the filter-accepting matcher)
-      val measureCut = raw.filter($"value" > 100)
-        .groupBy($"event_type").agg(count(lit(1)).as("n"))
-      assert(scannedPaths(measureCut).contains(rawDir),
-        "a measure-column filter must not rewrite")
-      // value identity: rule off ≡ rule on for the grain-filtered shape
-      val withRule = q.collect().toSeq
-      graft.plans.MvRewrite.clear()
-      val off = raw
-        .filter(to_date($"ts") >= lit("2024-01-08") && to_date($"ts") <= lit("2024-01-21") &&
-          $"event_type" =!= "view")
-        .groupBy(to_date($"ts").as("event_date"))
-        .agg(count(lit(1)).as("n_events"),
-          sum($"value".cast(DecimalType(18, 6))).cast("double").as("revenue"))
-        .orderBy($"event_date")
-      assert(scannedPaths(off).contains(rawDir))
-      assert(off.collect().toSeq === withRule, "grain-filter rewrite changed results")
-    } finally graft.plans.MvRewrite.clear()
+    assert(mvRouted(q), s"grain-filtered aggregate did not rewrite: scanned ${graftScans(q)}")
+    // the date range reaches the backing scan's pushed (file-skipping)
+    // filters as a range on its date column; the type exclusion — no
+    // skipping predicate for the connector — rides in the Filter over
+    // that scan (`event_date` exists only in the backing)
+    val desc = graftScans(q).map(_._2).mkString("\n")
+    assert(desc.contains("GreaterThanOrEqual(event_date,2024-01-08)") &&
+      desc.contains("LessThan(event_date,2024-01-22)"),
+      s"translated date range did not reach the MV scan:\n$desc")
+    val filters = nodes(q.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.executedPlan)
+      .collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql }
+    assert(filters.exists(c => c.contains("event_type") && c.contains("view") &&
+      c.contains("event_date")), s"grain filter not carried onto the MV scan: $filters")
+    val raw = graft.sources.JsonlStatsQueries.mvRewriteEvents(spark, sfDir)
+    // the literal-first spelling of the same day range routes too
+    val flipped = raw.filter(lit("2024-01-08") <= to_date($"ts") && lit("2024-01-21") >= to_date($"ts"))
+      .groupBy($"event_type").agg(count(lit(1)).as("n"))
+    assert(mvRouted(flipped), s"literal-first day range did not rewrite: ${graftScans(flipped)}")
+    // a raw-timestamp cut FINER than the MV grain must veto: the MV
+    // already merged rows within each day
+    val fineCut = raw.filter($"ts" >= lit("2024-01-08 12:00:00").cast("timestamp"))
+      .groupBy($"event_type").agg(count(lit(1)).as("n"))
+    assert(onRawTable(fineCut) && !mvRouted(fineCut),
+      "a sub-day timestamp cut is not grain-functional and must not rewrite")
+    // a non-grain measure predicate still vetoes
+    val measureCut = raw.filter($"value" > 100)
+      .groupBy($"event_type").agg(count(lit(1)).as("n"))
+    assert(onRawTable(measureCut) && !mvRouted(measureCut),
+      "a measure-column filter must not rewrite")
+    // value identity: the same aggregate recomputed from the raw parquet
+    val day = to_date($"ts")
+    val recomputed = graft.ingest.Tables.events(spark, sfDir)
+      .filter(day >= lit("2024-01-08") && day <= lit("2024-01-21") && $"event_type" =!= "view")
+      .groupBy(day.as("event_date"))
+      .agg(count(lit(1)).as("n_events"), msum($"value").as("revenue"))
+      .orderBy($"event_date")
+    assert(q.collect().toSeq === recomputed.collect().toSeq, "grain-filter rewrite changed results")
+  }
+
+  test("session hygiene: q73, q158, q210 and q228 install no session rule or " +
+    "strategy, and an unrelated aggregate plans the same before and after them") {
+    import org.apache.spark.sql.functions._
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    def unrelated = graft.ingest.Tables.customer(spark, sfDir)
+      .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"), sum(col("c_acctbal")).as("bal"))
+    def plan = unrelated.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.optimizedPlan.canonicalized
+    val before = plan
+    val rows = unrelated.collect().toSeq
+    Seq("q73_topk_native", "q158_topk_rewrite", "q210_mv_rewrite",
+      "q228_mv_rewrite_grain_filter").foreach { n =>
+      assert(SparkEntry.queries(n)(spark, sfDir).collect().nonEmpty, n)
+    }
+    assert(exp.extraOptimizations.isEmpty, s"session rules installed: ${exp.extraOptimizations}")
+    assert(exp.extraStrategies.isEmpty, s"session strategies installed: ${exp.extraStrategies}")
+    assert(plan == before, "a query changed how the session plans an unrelated aggregate")
+    assert(unrelated.collect().toSeq === rows)
   }
 
   test("q165 SQL UDFs are inlined: no eval barrier, plan stays in whole-stage codegen") {

@@ -77,10 +77,8 @@ class TopKSpec extends SparkSpec {
   }
 
   test("q158: the optimizer rule rewrites the window idiom into the heap operator") {
-    val s = spark.newSession()
-    import s.implicits._
-    graft.plans.WindowTopKRewriteOps.ensureRule(s)
-    val parts = Tables.part(s, sfDir)
+    import spark.implicits._
+    val parts = Tables.part(spark, sfDir)
       .select($"p_brand", $"p_partkey", $"p_retailprice")
     val w = Window.partitionBy($"p_brand").orderBy($"p_retailprice".desc, $"p_partkey")
     val idiom = parts.withColumn("rnk", row_number().over(w))
@@ -102,13 +100,12 @@ class TopKSpec extends SparkSpec {
     assert(nodes.collect { case t: TopKPerGroupExec => t }.map(_.partial).sorted
       === Seq(false, true))
     assert(!nodes.exists(_.nodeName.toLowerCase.contains("sort")))
-    // and it is semantics-preserving: same rows as the un-rewritten idiom
-    // on the rule-free sibling session
-    val plain = Tables.part(spark, sfDir)
-      .select(col("p_brand"), col("p_partkey"), col("p_retailprice"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("p_brand")).orderBy(col("p_retailprice").desc, col("p_partkey"))))
-      .filter(col("rnk") <= 3).drop("rnk")
+    // and it is semantics-preserving: same rows as the un-rewritten
+    // window plan — rank() declines the rewrite and, under this total
+    // order (p_partkey breaks ties), ranks exactly as row_number()
+    val plain = parts.withColumn("rnk", rank().over(w)).filter($"rnk" <= 3).drop("rnk")
+    assert(plain.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.optimizedPlan.collect { case t: graft.plans.TopKPerGroup => t }.isEmpty)
     assert(idiom.exceptAll(plain).isEmpty && plain.exceptAll(idiom).isEmpty)
   }
 
@@ -117,10 +114,8 @@ class TopKSpec extends SparkSpec {
     // ranked subquery with the rank filtered and dropped outside —
     // which optimizes to the exact Filter-over-Window shape the rule
     // matches, so SQL users get the heap operator too
-    val s = spark.newSession()
-    graft.plans.WindowTopKRewriteOps.ensureRule(s)
-    Tables.part(s, sfDir).createOrReplaceTempView("part_v")
-    val df = s.sql(
+    Tables.part(spark, sfDir).createOrReplaceTempView("part_v")
+    val df = spark.sql(
       """SELECT p_brand, p_partkey, p_retailprice FROM (
         |  SELECT *, ROW_NUMBER() OVER (
         |    PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rnk
@@ -134,10 +129,8 @@ class TopKSpec extends SparkSpec {
   }
 
   test("the rewrite declines unsafe shapes: rank(), surviving rank column, k <= 0") {
-    val s = spark.newSession()
-    import s.implicits._
-    graft.plans.WindowTopKRewriteOps.ensureRule(s)
-    val parts = Tables.part(s, sfDir).select($"p_brand", $"p_partkey", $"p_retailprice")
+    import spark.implicits._
+    val parts = Tables.part(spark, sfDir).select($"p_brand", $"p_partkey", $"p_retailprice")
     val w = Window.partitionBy($"p_brand").orderBy($"p_retailprice".desc, $"p_partkey")
     def rewritten(df: org.apache.spark.sql.DataFrame): Boolean =
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
