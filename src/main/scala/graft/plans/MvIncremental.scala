@@ -75,16 +75,18 @@ object MvIncremental {
 
   private def auxName(j: Int) = s"graft_ivm_a$j"
   private def nnName(j: Int) = s"graft_ivm_c$j"
+  private def repairedName(j: Int) = s"graft_ivm_r$j"
   private def placeholder(j: Int) = s"GRAFT_IVM_P$j"
 
   sealed trait SlotKind
   case object SumSlot extends SlotKind
   case object CountSlot extends SlotKind
-  /** MIN/MAX (r13b): exact under ANY merge (comparisons, no
-    * arithmetic), but a DELETION can retract the stored extremum — so
-    * these slots are INSERT-ONLY-maintainable: the refresh takes the
-    * delta path only when the window removed no file identity
-    * ([[graft.sources.ChangeFeed.windowInsertOnly]]), else RTAS. */
+  /** MIN/MAX (r13b): exact under ANY merge over an insert-only window
+    * ([[graft.sources.ChangeFeed.windowInsertOnly]]) — comparisons, no
+    * arithmetic. A DELETION can retract the stored extremum, so a
+    * deleting window REPAIRS instead (r14): the delta carries each
+    * affected group's extremum recomputed from source
+    * ([[Slot.repaired]]), which the merge takes verbatim. */
   case object MinSlot extends SlotKind
   case object MaxSlot extends SlotKind
   /** COUNT(DISTINCT x) (r15): not distributive over the signed delta —
@@ -124,6 +126,9 @@ object MvIncremental {
                   deltaSql: String, nnDeltaSql: Option[String], typeSql: String) {
     def aux: String = auxName(j)
     def nn: String = nnName(j)
+    /** MIN/MAX only: the delta column holding the group's extremum
+      * recomputed from source under a deleting window. */
+    def repaired: String = repairedName(j)
     /** The aggregate function's input expressions, resolved against the
       * body's relation — [[CatalogMvRewrite]] rebases these by name onto
       * a query's relation to prove measure coverage. */
@@ -364,10 +369,10 @@ object MvIncremental {
             deltaSql = s"CAST(SUM(CASE WHEN $conds THEN _sign ELSE 0 END) AS BIGINT)",
             nnDeltaSql = None, typeSql = LongType.sql)
           Some(j)
-        // MIN/MAX: exact for every orderable type (comparisons only),
-        // gated to insert-only windows by the caller. The delta ignores
-        // _sign — a MIN over inserted rows IS the window's contribution
-        // (deletions force RTAS before this SQL ever runs).
+        // MIN/MAX: exact for every orderable type (comparisons only).
+        // The delta ignores _sign — over an insert-only window a MIN of
+        // the inserted rows IS the window's contribution; a deleting
+        // window merges the repaired extremum instead ([[mergeSql]]).
         case m: Min if !hasMap(ae.dataType) =>
           val j = slots.size
           slots += Slot(j, MinSlot, ae,
@@ -903,8 +908,10 @@ object MvIncremental {
 
   /** Merged raw state for slot `s`, as SQL over MERGE aliases b/d. A
     * SUM whose surviving non-null count is zero is NULL (SQL sum
-    * semantics the raw addition cannot express); counts add. */
-  private def mergedSql(s: Slot): String = s.kind match {
+    * semantics the raw addition cannot express); counts add. Under a
+    * `repaired` (deleting) window a MIN/MAX slot takes the delta's
+    * recomputed extremum: no merge of extrema can express a retraction. */
+  private def mergedSql(s: Slot, repaired: Boolean): String = s.kind match {
     case SumSlot =>
       s"CASE WHEN (b.${q(s.nn)} + d.${q(s.nn)}) = 0 THEN CAST(NULL AS ${s.typeSql}) " +
         s"ELSE CAST(coalesce(b.${q(s.aux)}, 0) + coalesce(d.${q(s.aux)}, 0) AS ${s.typeSql}) END"
@@ -913,6 +920,7 @@ object MvIncremental {
     // liveness state — the backing's count just shifts by it
     case DistinctSlot =>
       s"CAST(coalesce(b.${q(s.aux)}, 0) + coalesce(d.${q(s.aux)}, 0) AS BIGINT)"
+    case MinSlot | MaxSlot if repaired => s"d.${q(s.repaired)}"
     // Spark's least/greatest SKIP nulls (both-null gives NULL) —
     // exactly SQL's MIN/MAX-ignore-nulls merge, no counters needed
     case MinSlot => s"least(b.${q(s.aux)}, d.${q(s.aux)})"
@@ -921,43 +929,19 @@ object MvIncremental {
 
   /** Slot value for a group new to the backing: the delta IS the state
     * (only net-positive groups can be new — their rows were inserted
-    * inside the window). */
-  private def insertSql(s: Slot): String = s"d.${q(s.aux)}"
+    * inside the window). Not so for a MIN/MAX under a `repaired`
+    * window: rows cancelling across telescoped self-join terms can
+    * leave a raw delta extremum no live row holds, so a new group
+    * takes the recomputed one too. */
+  private def insertSql(s: Slot, repaired: Boolean): String = s.kind match {
+    case MinSlot | MaxSlot if repaired => s"d.${q(s.repaired)}"
+    case _ => s"d.${q(s.aux)}"
+  }
 
   /** Do any visible outputs or slots need the group-scoped repair pass
     * under a deleting window? Exactly the MIN/MAX slots. */
   def minMaxSlots(shape: Shape): Seq[Slot] =
     shape.slots.filter(s => s.kind == MinSlot || s.kind == MaxSlot)
-
-  /** Group-scoped MIN/MAX repair (r14): under a DELETING window the
-    * signed merge cannot derive extrema (a deletion can retract the
-    * stored one), so the refresh recomputes MIN/MAX for exactly the
-    * AFFECTED groups (the delta's groups) from the live source and
-    * overwrites those columns with this second MERGE — matched-only
-    * (groups the first merge deleted are gone; extra superset rows in
-    * the repair view touch nothing). SUM/COUNT state is already final
-    * in `b` after the first merge, so mixed templates re-fill from
-    * `b`'s state for those slots and `r`'s truth for the extrema. */
-  def repairMergeSql(shape: Shape, backingFqn: String, repairView: String): String = {
-    val mm = minMaxSlots(shape).map(_.j).toSet
-    val on = shape.groupOuts.map(o => s"b.${q(o.name)} <=> r.${q(o.name)}")
-      .mkString(" AND ")
-    def bySlot(s: Slot): String = s.kind match {
-      case MinSlot | MaxSlot => s"r.${q(s.aux)}"
-      // post-merge b.aux is the FINAL state (the first merge already
-      // wrote the NULL-when-empty case into it)
-      case SumSlot => s"CAST(b.${q(s.aux)} AS ${s.typeSql})"
-      case CountSlot | DistinctSlot => s"b.${q(s.aux)}"
-    }
-    val sets =
-      minMaxSlots(shape).map(s => s"${q(s.aux)} = r.${q(s.aux)}") ++
-        shape.outs.filter(o => !o.isGroup && o.slotIdxs.exists(mm.contains))
-          .map(o => s"${q(o.name)} = ${fillTemplate(o.template.get, shape, bySlot)}")
-    s"""MERGE INTO $backingFqn b
-       |USING $repairView r
-       |ON $on
-       |WHEN MATCHED THEN UPDATE SET ${sets.mkString(",\n  ")}""".stripMargin
-  }
 
   private def fillTemplate(template: String, shape: Shape, bySlot: Slot => String): String =
     // descending index so P10 never matches inside a P1 replacement
@@ -970,26 +954,34 @@ object MvIncremental {
     * net liveness reaches zero is DELETED; matched groups re-derive
     * every visible aggregate column from the MERGED raw state (so the
     * stored value is bit-identical to a recompute); new groups insert
-    * the delta state directly. */
-  def mergeSql(shape: Shape, backingFqn: String, deltaView: String): String = {
+    * the delta state directly. `repaired` (r14, a deleting window over
+    * MIN/MAX slots): the delta view also carries each slot's
+    * [[Slot.repaired]] extremum, recomputed from source for the
+    * affected groups, and both branches take it — one write of the
+    * backing per refresh. */
+  def mergeSql(shape: Shape, backingFqn: String, deltaView: String,
+               repaired: Boolean): String = {
     val on = shape.groupOuts.map(o => s"b.${q(o.name)} <=> d.${q(o.name)}")
       .mkString(" AND ")
     val onClause = if (on.nonEmpty) on else "true"
     val updateSets =
       (s"${q(LivenessCol)} = b.${q(LivenessCol)} + d.${q(LivenessCol)}" +:
         shape.slots.flatMap { s =>
-          s"${q(s.aux)} = ${mergedSql(s)}" +:
+          s"${q(s.aux)} = ${mergedSql(s, repaired)}" +:
             (if (s.kind == SumSlot) Seq(s"${q(s.nn)} = b.${q(s.nn)} + d.${q(s.nn)}") else Nil)
         }) ++
         shape.outs.filterNot(_.isGroup).map(o =>
-          s"${q(o.name)} = ${fillTemplate(o.template.get, shape, mergedSql)}")
+          s"${q(o.name)} = ${fillTemplate(o.template.get, shape, mergedSql(_, repaired))}")
     val insertCols =
       shape.outs.map(o => q(o.name)) ++ shape.auxCols.map(q)
+    // the aux values in auxCols order: liveness, then each slot's raw
+    // state (and a SUM's non-null count)
     val insertVals =
       shape.outs.map {
         case o if o.isGroup => s"d.${q(o.name)}"
-        case o => fillTemplate(o.template.get, shape, insertSql)
-      } ++ shape.auxCols.map(c => s"d.${q(c)}")
+        case o => fillTemplate(o.template.get, shape, insertSql(_, repaired))
+      } ++ (s"d.${q(LivenessCol)}" +: shape.slots.flatMap(s =>
+        insertSql(s, repaired) +: (if (s.kind == SumSlot) Seq(s"d.${q(s.nn)}") else Nil)))
     // the NOT MATCHED guard: a group inserted AND fully deleted inside
     // one window nets liveness 0 — inserting it would fabricate a
     // phantom group the recompute does not have

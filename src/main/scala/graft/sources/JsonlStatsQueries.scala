@@ -3691,10 +3691,10 @@ object JsonlStatsQueries extends QueryModule {
     * deletion can RETRACT a stored extremum, which no merge of extrema
     * can express. r13 rebuilt on any removed file identity; r14
     * repairs GROUP-SCOPED instead: sums/counts/liveness still merge
-    * from the signed delta, then the MIN/MAX columns of exactly the
-    * AFFECTED groups (the delta's groups) recompute from the live
-    * source — a grain-predicate scan the connector prunes — via a
-    * second matched-only MERGE inside the same pending bracket. This
+    * from the signed delta, while the MIN/MAX columns of exactly the
+    * AFFECTED groups (the delta's groups) recompute from the source
+    * at head — a grain-predicate scan the connector prunes — and ride
+    * into the same maintenance MERGE as extra delta columns. This
     * lifecycle pins BOTH modes in the ORACLE: an append window
     * refreshes 'incremental', a row-level DELETE window refreshes
     * 'incremental-repair', and the final rows must equal DuckDB's

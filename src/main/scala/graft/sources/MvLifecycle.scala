@@ -30,6 +30,11 @@ import java.nio.file.{Files, Path, Paths}
   * the cheaper plan. */
 object MvLifecycle {
 
+  /** Affected-group count up to which a deleting window's MIN/MAX
+    * repair restricts its source read by a driver IN-list per grain
+    * column; past it, by a semi-join against the delta's groups. */
+  private[graft] val RepairMaxGroups = 10000
+
   class MvDdlUnbound(catName: String, root: String, verb: String) extends UnboundProcedure {
     override def name(): String = verb
     override def description(): String = verb match {
@@ -550,13 +555,13 @@ object MvLifecycle {
       // insert only ever extends an extremum); a DELETING window can
       // retract one, which no merge of extrema can express — r14
       // repairs GROUP-SCOPED instead of rebuilding: the SUM/COUNT/
-      // liveness legs still merge from the signed delta, then the
+      // liveness legs still merge from the signed delta, while the
       // MIN/MAX columns of exactly the AFFECTED groups (the delta's
-      // groups) recompute from the live source — a grain-predicate
-      // scan the connector prunes — via a second, matched-only MERGE.
-      // Cost ∝ affected groups' rows, never the source. A comp-mover
-      // window needs the repair regardless of its own insert-onlyness
-      // (its flip rows retract).
+      // groups) recompute from the source at head — a grain-predicate
+      // scan the connector prunes — and ride the same MERGE as extra
+      // delta columns. Cost ∝ affected groups' rows, never the
+      // source. A comp-mover window needs the repair regardless of
+      // its own insert-onlyness (its flip rows retract).
       val needsRepair = shape.needsInsertOnly && (compMover || ms.exists(m =>
         !ChangeFeed.windowInsertOnly(m.root, m.fromV, m.toV)))
       // signed delta + the delta aggregate, ANALYZED before anything
@@ -568,7 +573,6 @@ object MvLifecycle {
       val viewTag = math.abs(backingFqn.hashCode)
       val signedView = s"graft_ivm_signed_$viewTag"
       val deltaView = s"graft_ivm_delta_$viewTag"
-      val repairView = s"graft_ivm_repair_$viewTag"
       val auxDeltaViews = shape.distinctSlots.map(s =>
         s.j -> s"graft_ivm_dvals_${viewTag}_${s.j}").toMap
       val auxReadViews = shape.distinctSlots.map(s =>
@@ -681,27 +685,13 @@ object MvLifecycle {
       // read it (delta-sized state, spills if ever large)
       delta.persist(StorageLevel.MEMORY_AND_DISK)
       persistedDeltas += delta
-      delta.createOrReplaceTempView(deltaView)
-      // analyze WITHOUT executing (spark.sql would run the command
-      // eagerly): unresolvable merges decline here, before any state
-      def assertAnalyzed(sql: String): Unit = spark.sessionState.executePlan(
-        spark.sessionState.sqlParser.parsePlan(sql)).assertAnalyzed()
-      val merge = MvIncremental.mergeSql(shape, backingFqn, deltaView)
-      assertAnalyzed(merge)
-      // liveness-table merges (r15), one per DISTINCT slot — analyzed
-      // up front like everything else, EXECUTED after the main merge
-      // (whose delta leg must read the PRE-merge liveness state)
-      val auxMerges = shape.distinctSlots.map(s => MvIncremental.auxMergeSql(shape,
-        quoted(catName +: (ident.namespace().toSeq :+ auxNameByJ(s.j))), auxDeltaViews(s.j)))
-      auxMerges.foreach(assertAnalyzed)
-      // group-scoped MIN/MAX repair plan, built and analyzed BEFORE
-      // any state moves. Two restriction strategies by affected-group
-      // cardinality (r15 — the cap no longer forces RTAS):
-      //   - up to `spark.graft.mv.repairMaxGroups` (10k): a driver
-      //     IN-list per grain column, which the connector's file
-      //     pruning understands (a per-column list is a SUPERSET of
-      //     the affected tuples — the matched-only repair merge
-      //     ignores the extras).
+      // group-scoped MIN/MAX repair, built BEFORE any state moves.
+      // Two restriction strategies by affected-group cardinality (r15
+      // — the cap no longer forces RTAS):
+      //   - up to RepairMaxGroups: a driver IN-list per grain column,
+      //     which the connector's file pruning understands (a
+      //     per-column list is a SUPERSET of the affected tuples — the
+      //     left join onto the delta drops the extras).
       //   - past the cap: a LEFT-SEMI join of the pinned source
       //     against the delta's distinct groups — unbounded group
       //     count, no driver materialization. No broadcast HINT
@@ -709,15 +699,13 @@ object MvLifecycle {
       //     the group set can be huge, and a hint ignores
       //     autoBroadcastJoinThreshold — the planner picks broadcast
       //     when the build side is actually small, shuffles otherwise.
-      // Either way the repair rows land in a private parquet spool
-      // the MERGE reads back — never the driver (ADVICE r15 task 9;
-      // also: a temp view over a resolved catalog relation trips
-      // Spark 4.1's MERGE analysis, a parquet relation doesn't).
-      val repairMerge: Option[String] = if (!needsRepair) None else {
-        val maxGroups = spark.conf.getOption("spark.graft.mv.repairMaxGroups")
-          .map(_.toInt).getOrElse(10000)
+      // Either way the repaired extrema land in a private parquet
+      // spool (never the driver — ADVICE r15 task 9), which left-joins
+      // onto the delta null-safe on the group keys: the one MERGE
+      // reads each affected group's extremum from there.
+      val repairedDelta: Option[DataFrame] = if (!needsRepair) None else {
         val affected = delta.select(gNames.map(n => col(s"`$n`")): _*)
-          .distinct().limit(maxGroups + 1).collect()
+          .distinct().limit(RepairMaxGroups + 1).collect()
         if (affected.isEmpty) None
         else {
           // the repair reads the source at the recorded HEAD versions
@@ -728,10 +716,11 @@ object MvLifecycle {
             .map(j => j -> pinnedAt(leafRoots(j), headVerByRoot(leafRoots(j)))).toMap
           val src = Bridge.ofRows(
             spark, MvIncremental.pinnedChild(shape, pinnedAll).getOrElse(return None))
-          val mmAggs = MvIncremental.minMaxSlots(shape).map(s => expr(s.deltaSql).as(s.aux))
+          val mm = MvIncremental.minMaxSlots(shape)
+          val mmAggs = mm.map(s => expr(s.deltaSql).as(s.repaired))
           val grainExprs = shape.groupOuts.map(o => expr(o.groupSql.get))
           val restricted =
-            if (affected.length <= maxGroups) {
+            if (affected.length <= RepairMaxGroups) {
               val conds = grainExprs.zipWithIndex.map { case (e, i) =>
                 val vals = affected.map(_.get(i)).toSeq
                 val nonNull = vals.filter(_ != null).distinct
@@ -755,17 +744,26 @@ object MvLifecycle {
           restricted.groupBy(shape.groupOuts.map(o => expr(o.groupSql.get).as(o.name)): _*)
             .agg(mmAggs.head, mmAggs.tail: _*)
             .write.mode("overwrite").parquet(tmp.toString)
-          spark.read.parquet(tmp.toString).createOrReplaceTempView(repairView)
-          val sql = MvIncremental.repairMergeSql(shape, backingFqn, repairView)
-          assertAnalyzed(sql)
-          Some(sql)
+          val on = gNames.map(n => col(s"d.`$n`") <=> col(s"r.`$n`")).reduce(_ && _)
+          Some(delta.as("d").join(spark.read.parquet(tmp.toString).as("r"), on, "left")
+            .select(col("d.*") +: mm.map(s => col(s"r.`${s.repaired}`")): _*))
         }
       }
+      repairedDelta.getOrElse(delta).createOrReplaceTempView(deltaView)
+      // analyze WITHOUT executing (spark.sql would run the command
+      // eagerly): unresolvable merges decline here, before any state
+      def assertAnalyzed(sql: String): Unit = spark.sessionState.executePlan(
+        spark.sessionState.sqlParser.parsePlan(sql)).assertAnalyzed()
+      val merge = MvIncremental.mergeSql(shape, backingFqn, deltaView, repairedDelta.isDefined)
+      assertAnalyzed(merge)
+      // liveness-table merges (r15), one per DISTINCT slot — analyzed
+      // up front like everything else
+      val auxMerges = shape.distinctSlots.map(s => MvIncremental.auxMergeSql(shape,
+        quoted(catName +: (ident.namespace().toSeq :+ auxNameByJ(s.j))), auxDeltaViews(s.j)))
+      auxMerges.foreach(assertAnalyzed)
       // pending bracket: marker down, the MERGE(s), marker up with
       // the new versions. A crash inside the bracket leaves the
-      // marker standing — reads stay on the body path, repair is RTAS
-      // (the bracket covers the gap BETWEEN the two merges too: a
-      // half-repaired backing is never served).
+      // marker standing — reads stay on the body path, repair is RTAS.
       GraftViews.write(nsDir, d.copy(properties = d.properties +
         (GraftViews.MvPendingProp ->
           ms.map(m => s"${m.fromV}->${m.toV}").mkString(","))), replace = true)
@@ -803,9 +801,9 @@ object MvLifecycle {
       graft.util.Confs.withConfs(spark, Option.when(elideGroupFilter)(
           "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled" -> "false").toSeq: _*) {
         try {
-          // main MERGE (+ its dependent repair) and the liveness
-          // MERGEs run CONCURRENTLY (r17, guide §2.6 / VERDICT r16
-          // #1 "fuse aux/liveness MERGEs where ordering allows").
+          // main MERGE and the liveness MERGEs run CONCURRENTLY
+          // (r17, guide §2.6 / VERDICT r16 #1 "fuse aux/liveness
+          // MERGEs where ordering allows").
           // Ordering is free to drop because (a) the delta's
           // distinct leg reads the liveness state through the
           // version-PINNED snapshot above — the liveness commit
@@ -814,12 +812,8 @@ object MvLifecycle {
           // behind its own atomic manifest swap; (c) both run inside
           // the same pending bracket, so a failure of either leaves
           // the marker standing exactly as a sequential run would.
-          // The repair MERGE stays ordered after the main MERGE (it
-          // reads post-merge backing state by design).
-          runConcurrently(spark, (() => {
-            spark.sql(merge)
-            repairMerge.foreach(spark.sql(_))
-          }) +: Option.when(auxMerges.nonEmpty)(() => auxMerges.foreach(spark.sql(_))).toSeq)
+          runConcurrently(spark, (() => { spark.sql(merge); () }) +:
+            Option.when(auxMerges.nonEmpty)(() => auxMerges.foreach(spark.sql(_))).toSeq)
           GraftViews.write(nsDir, d.copy(properties = d.properties +
             (GraftViews.MvSourcesProp -> GraftViews.mvSourcesEncode(head))
             - GraftViews.MvPendingProp), replace = true)
@@ -827,7 +821,7 @@ object MvLifecycle {
         } catch {
           case _: Exception =>
             // once spark.sql(merge) has been INVOKED, a failure cannot
-            // prove the first MERGE did not commit (the repair merge,
+            // prove the main MERGE did not commit (a liveness merge,
             // or the version re-record, may be what failed) — so the
             // marker STAYS STANDING (ADVICE r14): reads keep taking the
             // correct body path, and whichever refresh completes next
@@ -846,7 +840,7 @@ object MvLifecycle {
         // sweeps the derived _cdf manifests: the signed window pair
         // per mover plus every version-pin snapshot. Nothing else
         // (vacuum included) would ever sweep them (ADVICE r13/r14).
-        (termViews ++ Seq(signedView, deltaView, repairView) ++ auxDeltaViews.values ++
+        (termViews ++ Seq(signedView, deltaView) ++ auxDeltaViews.values ++
           auxReadViews.values).foreach(spark.catalog.dropTempView)
         ms.foreach(m => ChangeFeed.signedManifests(m.root, m.fromV, m.toV, nonce)
           .foreach(Files.deleteIfExists))

@@ -268,6 +268,24 @@ class MvIncrementalSpec extends SparkSpec {
     spark.sql("DELETE FROM mvinc.pairs WHERE id = 2")
     assert(refreshMode("mv_pairs") === "incremental")
     assert(mvRows("mv_pairs") === direct(body))
+    // MIN/MAX over a self-join: a group NEW to the backing can carry a
+    // wrong raw delta extremum. Inserting y and deleting x in one
+    // window, y's rows in the two terms are (y, 100, +1) from
+    // Δp⋈q₀, and (y, 5, +1), (y, 100, -1) from p₁⋈Δq — the 100s
+    // cancel in the signed sums, but the raw MAX is still 100. The
+    // inserted row must take the repaired extremum (5).
+    spark.sql("DROP TABLE IF EXISTS mvinc.selfmm")
+    Seq(("x", 1L, 100L)).toDF("k", "j", "v").createOrReplaceTempView("mvinc_selfmm_seed")
+    spark.sql("CREATE TABLE mvinc.selfmm AS SELECT * FROM mvinc_selfmm_seed")
+    val mmBody = "SELECT k, min(v2) AS mn, max(v2) AS mx, count(*) AS n " +
+      "FROM mvinc.selfmm p JOIN (SELECT j AS j2, v AS v2 FROM mvinc.selfmm) q " +
+      "ON p.j = q.j2 GROUP BY k"
+    spark.sql(s"CALL mvinc.create_materialized_view('mv_selfmm', '$mmBody', " +
+      "or_replace => true)")
+    spark.sql("INSERT INTO mvinc.selfmm VALUES ('y', 1, 5)")
+    spark.sql("DELETE FROM mvinc.selfmm WHERE k = 'x'")
+    assert(refreshMode("mv_selfmm") === "incremental-repair")
+    assert(mvRows("mv_selfmm") === direct(mmBody))
   }
 
   test("join-shape declines stay loud: ambiguous output names, outer " +
@@ -675,17 +693,24 @@ class MvIncrementalSpec extends SparkSpec {
     "still drops every graft_ivm_* temp view and sweeps every derived " +
     "_cdf manifest — signed pairs and version pins alike (ADVICE r14/r15)") {
     cat
+    // two rows per group, more groups than twice the cap: each window
+    // below touches more groups than the IN-list restriction takes, so
+    // the repair restricts by the SEMI-JOIN (r15) and stays incremental
+    val groups = 2L * (graft.sources.MvLifecycle.RepairMaxGroups + 2)
     spark.sql("DROP TABLE IF EXISTS mvinc.capsrc")
-    Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v").createOrReplaceTempView("mvinc_cap_seed")
+    spark.range(2 * groups).selectExpr("id DIV 2 AS k", "id AS v")
+      .createOrReplaceTempView("mvinc_cap_seed")
     spark.sql("CREATE TABLE mvinc.capsrc AS SELECT * FROM mvinc_cap_seed")
-    val body = "SELECT k, min(v) AS mn, count(*) AS n FROM mvinc.capsrc GROUP BY k"
+    val body = "SELECT k, min(v) AS mn, max(v) AS mx, count(*) AS n " +
+      "FROM mvinc.capsrc GROUP BY k"
     spark.sql(s"CALL mvinc.create_materialized_view('mv_cap', '$body', or_replace => true)")
-    // a deleting window + cap 0 exercises the SEMI-JOIN restriction
-    // (r15): the repair stays incremental past any group cardinality
-    spark.sql("DELETE FROM mvinc.capsrc WHERE k = 'a'")
-    spark.conf.set("spark.graft.mv.repairMaxGroups", "0")
-    try assert(refreshMode("mv_cap") === "incremental-repair")
-    finally spark.conf.unset("spark.graft.mv.repairMaxGroups")
+    // a deleting window past the cap: half the groups die
+    spark.sql("DELETE FROM mvinc.capsrc WHERE k % 2 = 0")
+    assert(refreshMode("mv_cap") === "incremental-repair")
+    assert(mvRows("mv_cap") === direct(body))
+    // and one that retracts every surviving group's MIN
+    spark.sql("DELETE FROM mvinc.capsrc WHERE v % 2 = 0")
+    assert(refreshMode("mv_cap") === "incremental-repair")
     assert(mvRows("mv_cap") === direct(body))
     val leaked = spark.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name.startsWith("graft_ivm_")).map(_.name).toSeq
@@ -723,7 +748,12 @@ class MvIncrementalSpec extends SparkSpec {
     // insert-only, so the refresh repairs the AFFECTED groups' extrema
     // from source (and says so) — sums/counts still merge signed
     spark.sql("DELETE FROM mvinc.src7 WHERE v = 1.0")
+    // the repaired extrema ride the one maintenance MERGE: the backing
+    // takes exactly one commit
+    val backing = java.nio.file.Paths.get(root, "_mv_mv7").toString
+    val v0 = graft.sources.JsonlStats.currentVersion(backing)
     assert(refreshMode("mv7") === "incremental-repair")
+    assert(graft.sources.JsonlStats.currentVersion(backing) === v0 + 1)
     assert(mvRows("mv7") === direct(body))
     val a = mvRows("mv7").find(_.getString(0) == "a").get
     assert(a.getDouble(1) === 4.0, s"retracted MIN must re-derive from source: $a")
@@ -734,16 +764,8 @@ class MvIncrementalSpec extends SparkSpec {
     assert(mvRows("mv7") === direct(body))
     val b = mvRows("mv7").find(_.getString(0) == "b").get
     assert(b.isNullAt(1) && b.isNullAt(2) && b.getLong(3) === 1L, b.toString)
-    // a deleting window past the affected-group cap no longer declines
-    // (r15): the restriction switches from the driver IN-list to a
-    // broadcast semi-join of the pinned source against the delta's
-    // groups, and the repair STAYS incremental
-    spark.conf.set("spark.graft.mv.repairMaxGroups", "0")
-    try {
-      spark.sql("DELETE FROM mvinc.src7 WHERE v = 4.0")
-      assert(refreshMode("mv7") === "incremental-repair")
-      assert(mvRows("mv7") === direct(body))
-    } finally spark.conf.unset("spark.graft.mv.repairMaxGroups")
+    // (a deleting window past the affected-group cap: see the
+    // past-the-cap repair path test)
     // and the NEXT pure-append window is incremental again
     spark.sql("INSERT INTO mvinc.src7 VALUES ('c', -2.0)")
     assert(refreshMode("mv7") === "incremental")

@@ -316,6 +316,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(unrelated.collect().toSeq === rows)
   }
 
+  test("session hygiene: no engine code reads a spark.graft.* conf key — " +
+    "engine behaviour is not tuned by hidden session options") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(main), s"no source tree at ${main.toAbsolutePath}")
+    val key = "\"spark\\.graft\\.".r
+    val walk = java.nio.file.Files.walk(main)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if key.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+      finally walk.close()
+    assert(hits.isEmpty, s"spark.graft.* conf keys read under src/main:\n${hits.mkString("\n")}")
+  }
+
   test("q165 SQL UDFs are inlined: no eval barrier, plan stays in whole-stage codegen") {
     val df = graft.analytics.SqlSurface.sqlUdfTiers(spark, sfDir)
     df.collect()
