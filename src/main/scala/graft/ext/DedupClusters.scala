@@ -4,7 +4,6 @@ import graft.QueryModule
 import graft.ingest.{Landing, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** Dedup cluster resolution (SURVEY §2.12 [ext]) — the step after pair
   * finding that every dedup pipeline needs and pair lists alone can't
@@ -99,14 +98,11 @@ object DedupClusters extends QueryModule {
     * composite curation pipeline (q108). */
   private[graft] def ccLabels(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "dedup_cc_labels")
-    val marker = Paths.get(dir + "__cc_ok")
-    if (!Files.exists(marker)) {
+    val dir = Landing.ensureBuilt(Landing.fixtureDir(d, "dedup_cc_labels")) { out =>
       val labels = connectedComponents(
         Dedup.ngramJaccardPairs(spark, d).select($"d1", $"d2"))
-      labels.write.mode("overwrite").parquet(dir)
+      labels.write.mode("overwrite").parquet(out)
       labels.unpersist()
-      Files.write(marker, Array.emptyByteArray)
     }
     spark.read.parquet(dir)
   }

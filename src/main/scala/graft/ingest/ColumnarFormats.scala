@@ -4,7 +4,6 @@ import graft.QueryModule
 import graft.util.Det.msum
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** ORC as a second columnar interchange format (SURVEY §2.1 breadth
   * beyond the reference's JSON/CSV/parquet): some warehouse estates are
@@ -30,14 +29,10 @@ object ColumnarFormats extends QueryModule {
   /** q103: parquet → lang-partitioned ORC → read-back aggregate. */
   def orcRoundtrip(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "documents_orc")
-    val marker = Paths.get(dir + "__orc_ok")
-    if (!Files.exists(marker)) {
-      graft.util.Fs.deleteRecursively(dir)
+    val dir = Landing.ensureBuilt(Landing.fixtureDir(d, "documents_orc")) { out =>
       Tables.documents(spark, d)
         .repartition(col("lang")) // one writer task per partition value
-        .write.partitionBy("lang").orc(dir)
-      Files.write(marker, Array.emptyByteArray)
+        .write.partitionBy("lang").orc(out)
     }
     spark.read.orc(dir)
       .groupBy($"lang", $"source")

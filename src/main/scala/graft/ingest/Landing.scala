@@ -89,21 +89,15 @@ object Landing {
     Paths.get(sys.props("user.dir"), "target", "fixtures", key, name).toString
   }
 
-  /** Write a DataFrame as JSONL (the landing-zone wire format) if the
-    * marker is absent — idempotent per (sf, name) so repeated Verify/Bench
-    * runs reuse one deterministic fixture. */
+  /** Write a DataFrame as JSONL (the landing-zone wire format), built
+    * once per (sf, name) so repeated Verify/Bench runs reuse one
+    * deterministic fixture. */
   def ensureJsonlFixture(df: DataFrame, sfDir: String, name: String,
-                         partitionCols: Seq[String] = Nil): String = {
-    val dir = fixtureDir(sfDir, name)
-    val marker = Paths.get(dir, "_FIXTURE_OK")
-    if (!Files.exists(marker)) {
+                         partitionCols: Seq[String] = Nil): String =
+    ensureBuilt(fixtureDir(sfDir, name)) { dir =>
       val w = df.write.mode(SaveMode.Overwrite)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).json(dir)
-      Files.write(marker, Array.emptyByteArray,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
-    dir
-  }
 
   /** Checkpoint an intermediate DataFrame to a parquet fixture (written
     * once per (sf, name), then read back). This is the scale-correct
@@ -123,7 +117,8 @@ object Landing {
     * markers, and a wiped dir beside a stale sibling marker would
     * silently serve a missing table): marker INSIDE the directory, so
     * wiping the directory always forces a rebuild. Spark readers
-    * ignore underscore-prefixed files. */
+    * ignore underscore-prefixed files. A PlanShapeSpec source scan
+    * keeps the marker literal out of every other file. */
   def ensureBuilt(dir: String)(build: String => Unit): String = {
     val marker = Paths.get(dir, "_FIXTURE_OK")
     if (!Files.exists(marker)) {

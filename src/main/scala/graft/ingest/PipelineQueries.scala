@@ -75,12 +75,9 @@ object PipelineQueries extends QueryModule {
     // results to be persisted before the corrupt-record column can be
     // queried (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
     // the medallion bronze table is exactly that materialization.
-    val bronze = Landing.fixtureDir(d, "bronze_events")
-    val bronzeMarker = java.nio.file.Paths.get(bronze, "_FIXTURE_OK")
-    if (!java.nio.file.Files.exists(bronzeMarker)) {
+    val bronze = Landing.ensureBuilt(Landing.fixtureDir(d, "bronze_events")) { out =>
       Landing.readWithLineage(spark, dir, schema, basePath = Some(dir))
-        .write.mode("overwrite").parquet(bronze)
-      java.nio.file.Files.write(bronzeMarker, Array.emptyByteArray)
+        .write.mode("overwrite").parquet(out)
     }
     spark.read.parquet(bronze)
       .groupBy($"event_type")
@@ -113,11 +110,8 @@ object PipelineQueries extends QueryModule {
     * → aggregate. The read-back plan scans only `o_orderstatus=F`. */
   def partitionedWriteRoundtrip(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = Landing.fixtureDir(d, "orders_by_status")
-    val marker = java.nio.file.Paths.get(dir, "_FIXTURE_OK")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sinks.partitionedParquet(Tables.orders(spark, d), dir, Seq("o_orderstatus"))
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
+    val dir = Landing.ensureBuilt(Landing.fixtureDir(d, "orders_by_status")) { out =>
+      Sinks.partitionedParquet(Tables.orders(spark, d), out, Seq("o_orderstatus"))
     }
     spark.read.option("basePath", dir).parquet(dir)
       .filter($"o_orderstatus" === "F")

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.ingest.Landing
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
@@ -21,9 +22,7 @@ object EtlFloorBench {
   private val nTx = 10000
   private val nFiles = 10
 
-  private def writeFixture(dir: String): Unit = {
-    val marker = Paths.get(dir, "_FIXTURE_OK")
-    if (Files.exists(marker)) return
+  private def writeFixture(landing: String): Unit = Landing.ensureBuilt(landing) { dir =>
     Files.createDirectories(Paths.get(dir))
     val rnd = new scala.util.Random(42)
     val eventTypes = Array("login", "page_view", "click", "search", "add_to_cart")
@@ -52,7 +51,6 @@ object EtlFloorBench {
       Files.writeString(Paths.get(dir, s"transaction_events_batch_$f.json"), tb.toString,
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
-    Files.write(marker, Array.emptyByteArray, StandardOpenOption.CREATE)
   }
 
   def main(args: Array[String]): Unit = {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** MERGE / keyed upsert silver refresh — the reference warehouse DAG's
   * `merge_silver_user_events` step (dag_streamflow_warehouse.py:118-126,
@@ -176,17 +176,8 @@ object MergeUpsert extends QueryModule {
   /** q88: MERGE with the DELETE arm — tombstoned keys leave the table,
     * corrected keys update, new versions win. Idempotent like q83. */
   def mergeDelete(spark: SparkSession, d: String): DataFrame = {
-    val silverDir = Landing.fixtureDir(d, "silver_merge_del")
-    val marker = Paths.get(silverDir + "__init_ok")
-    // orphan marker (table wiped, sibling marker survived a partial
-    // cleanup — review r5): without this, merge() would rebuild the
-    // table from the delta alone
-    if (!Files.isDirectory(Paths.get(silverDir))) Files.deleteIfExists(marker)
-    if (!Files.exists(marker)) {
-      graft.util.Fs.deleteRecursively(silverDir)
-      merge(silverDir, baseEventsDel(spark, d), Seq("event_id"), "load_seq", "event_date")
-      Files.write(marker, Array.emptyByteArray,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val silverDir = Landing.ensureBuilt(Landing.fixtureDir(d, "silver_merge_del")) { out =>
+      merge(out, baseEventsDel(spark, d), Seq("event_id"), "load_seq", "event_date")
     }
     merge(silverDir, deltaEventsDel(spark, d), Seq("event_id"), "load_seq", "event_date")
     refreshedSummary(spark, silverDir, tombstoneCol = Some("deleted"))
@@ -207,15 +198,8 @@ object MergeUpsert extends QueryModule {
     * invocation re-applies the SAME delta — idempotence is what keeps
     * the Verify/Bench re-runs deterministic. */
   def mergeUpsert(spark: SparkSession, d: String): DataFrame = {
-    val silverDir = Landing.fixtureDir(d, "silver_merge_events")
-    val marker = Paths.get(silverDir + "__init_ok")
-    // orphan marker heal — see mergeDelete
-    if (!Files.isDirectory(Paths.get(silverDir))) Files.deleteIfExists(marker)
-    if (!Files.exists(marker)) {
-      graft.util.Fs.deleteRecursively(silverDir)
-      merge(silverDir, baseEvents(spark, d), Seq("event_id"), "load_seq", "event_date")
-      Files.write(marker, Array.emptyByteArray,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val silverDir = Landing.ensureBuilt(Landing.fixtureDir(d, "silver_merge_events")) { out =>
+      merge(out, baseEvents(spark, d), Seq("event_id"), "load_seq", "event_date")
     }
     merge(silverDir, deltaEvents(spark, d), Seq("event_id"), "load_seq", "event_date")
     refreshedSummary(spark, silverDir)

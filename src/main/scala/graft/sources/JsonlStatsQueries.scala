@@ -412,15 +412,18 @@ object JsonlStatsQueries extends QueryModule {
   }
 
   /** Register a [[GraftCatalog]] for this corpus' fixture root and
-    * return its name. One catalog per root (the name encodes the root):
-    * Spark caches catalog instances per session, so reconfiguring one
-    * name for a different directory would silently keep serving the
-    * old root. */
-  def ensureCatalog(spark: SparkSession, d: String): String = {
-    val parent = Paths.get(ensureFixture(spark, d)).getParent.toString
-    val cat = "graft_" + java.lang.Integer.toHexString(parent.hashCode)
+    * return its name. */
+  def ensureCatalog(spark: SparkSession, d: String): String =
+    catalogAt(spark, Paths.get(ensureFixture(spark, d)).getParent.toString)
+
+  /** Register a [[GraftCatalog]] rooted at `root` and return its name.
+    * One catalog per root (the name encodes the root): Spark caches
+    * catalog instances per session, so reconfiguring one name for a
+    * different directory would silently keep serving the old root. */
+  private[graft] def catalogAt(spark: SparkSession, root: String): String = {
+    val cat = "graft_" + java.lang.Integer.toHexString(root.hashCode)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", parent)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
     cat
   }
 
@@ -580,6 +583,28 @@ object JsonlStatsQueries extends QueryModule {
          |FROM $cat.jsonl_versioned VERSION AS OF 1
          |GROUP BY event_type
          |ORDER BY event_type""".stripMargin)
+  }
+
+  /** q126: TIME TRAVEL on a gold rollup — q179's law on the gold grain
+    * of [[graft.gold.Incremental.toGoldGrain]]. The "hist" backfill
+    * (day-of-month > 7) is the table's first commit, the day ≤ 7
+    * increment its second, and the query reads `VERSION AS OF 1`: the
+    * table as it stood before the increment. The oracle recomputes that
+    * snapshot from the raw events, so the snapshot semantics, not a
+    * filter, are what hash-match. */
+  def goldTimeTravel(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    val cat = ensureCatalog(spark, d)
+    val ev = Tables.events(spark, d)
+    ensureTable(d, "jsonl_gold_daily", after = out =>
+      graft.gold.Incremental.toGoldGrain(ev.filter(dayofmonth($"ts") <= 7))
+        .write.format("graft-jsonl-stats").option("path", out).mode("append").save()
+    )(graft.gold.Incremental.toGoldGrain(ev.filter(dayofmonth($"ts") > 7)))
+    spark.sql(
+      s"""SELECT event_date, event_type, n_events,
+         |  CAST(total_dec AS DOUBLE) AS total_value
+         |FROM $cat.jsonl_gold_daily VERSION AS OF 1
+         |ORDER BY event_date, event_type""".stripMargin)
   }
 
   /** q176 (r7): MIN/MAX aggregate pushdown on a LONG stats column — the
@@ -2966,6 +2991,50 @@ object JsonlStatsQueries extends QueryModule {
          |ORDER BY a.event_type""".stripMargin)
   }
 
+  /** q141: CONSISTENT TWO-TABLE SNAPSHOT — two gold rollups of one
+    * feed, per type ([[graft.gold.Incremental.toGoldGrain]]) and per
+    * (event_date, user_id), in one build-once directory that is their
+    * own catalog root (so the pair's transaction marker lives with the
+    * pair). Both start with the "hist" slice (day-of-month > 7) at v1;
+    * the day ≤ 7 "b1" slice stages on a `load` branch of each and lands
+    * through ONE `fast_forward_pair` (q279's warehouse transaction), so
+    * no catalog reader sees one rollup at b1 and the other at hist. The
+    * query joins both heads per day; `consistent` asserts the two
+    * rollups account for the same events, and the oracle recomputes
+    * both from the raw feed, so it must hold on every day
+    * (IncrementalSpec pins the torn-pair arms). */
+  def multiTableSnapshot(spark: SparkSession, d: String): DataFrame = {
+    import spark.implicits._
+    val ev = Tables.events(spark, d)
+    val rollups = Seq[(String, DataFrame => DataFrame)](
+      "bytype" -> graft.gold.Incremental.toGoldGrain,
+      "byuser" -> (_.groupBy(to_date($"ts").as("event_date"), $"user_id")
+        .agg(count(lit(1)).as("n_events"))))
+    val root = Landing.ensureBuilt(Landing.fixtureDir(d, "jsonl_gold_pair")) { out =>
+      val cat = catalogAt(spark, out)
+      rollups.foreach { case (t, grain) =>
+        Files.createDirectories(Paths.get(out, t))
+        grain(ev.filter(dayofmonth($"ts") > 7)).write.format("graft-jsonl-stats")
+          .option("path", s"$out/$t").mode("overwrite").save()
+        spark.sql(s"CALL $cat.create_branch('$t', 'load')")
+        grain(ev.filter(dayofmonth($"ts") <= 7)).writeTo(s"$cat.$t.branch_load").append()
+      }
+      spark.sql(s"CALL $cat.fast_forward_pair('bytype', 'load', 'byuser', 'load')")
+    }
+    val cat = catalogAt(spark, root)
+    val byType = spark.table(s"$cat.bytype").groupBy($"event_date")
+      .agg(sum($"n_events").as("n_events_types"),
+        sum($"total_dec").cast("double").as("revenue"))
+    val byUser = spark.table(s"$cat.byuser").groupBy($"event_date")
+      .agg(sum($"n_events").as("n_events_users"),
+        countDistinct($"user_id").as("n_users"))
+    byType.join(byUser, "event_date")
+      .select($"event_date", $"n_events_types", $"n_events_users",
+        ($"n_events_types" === $"n_events_users").as("consistent"),
+        $"revenue", $"n_users")
+      .orderBy($"event_date")
+  }
+
   /** q280 (r11): IN-LIST FILE PRUNING — the point-lookup UNION every
     * dimension filter ships (`WHERE k IN (...)`) prunes files at
     * planning: a file survives only if SOME listed value sits in its
@@ -4419,6 +4488,7 @@ object JsonlStatsQueries extends QueryModule {
     "q177_catalog_ctas_partitioned" -> catalogCtasPartitioned,
     "q178_catalog_compact" -> catalogCompact,
     "q179_time_travel" -> timeTravel,
+    "q126_gold_time_travel" -> goldTimeTravel,
     "q180_vacuum" -> vacuumTable,
     "q181_change_feed" -> changeFeed,
     "q182_replace_where" -> replaceWhere,
@@ -4484,6 +4554,7 @@ object JsonlStatsQueries extends QueryModule {
     "q277_temporal_window_scan" -> temporalWindowScan,
     "q278_connector_cell_probe" -> connectorCellProbe,
     "q279_atomic_pair_publish" -> atomicPairPublish,
+    "q141_multi_table_snapshot" -> multiTableSnapshot,
     "q280_inlist_point_lookups" -> inListPointLookups,
     "q281_map_column_scan" -> mapColumnScan,
     "q282_multimodal_corpus" -> multimodalCorpus,
@@ -4784,6 +4855,14 @@ object JsonlStatsQueries extends QueryModule {
         |WHERE event_type <> 'click'
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin,
+    "q126_gold_time_travel" ->
+      """SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS event_date, event_type,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
+        |FROM events
+        |WHERE date_part('day', CAST(ts AS TIMESTAMP)) > 7
+        |GROUP BY event_date, event_type
+        |ORDER BY event_date, event_type""".stripMargin,
     "q178_catalog_compact" ->
       """SELECT event_type, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
@@ -5246,6 +5325,22 @@ object JsonlStatsQueries extends QueryModule {
         |SELECT event_type, CAST(n AS BIGINT) AS n, value_sum,
         |  CAST(n AS BIGINT) AS fact_n, value_sum AS fact_sum
         |FROM agg ORDER BY event_type""".stripMargin,
+    "q141_multi_table_snapshot" ->
+      """WITH e AS (
+        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, event_type, user_id, value
+        |  FROM events
+        |), t AS (
+        |  SELECT d, COUNT(*) AS n1,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |  FROM e GROUP BY d
+        |), u AS (
+        |  SELECT d, COUNT(*) AS n2, COUNT(DISTINCT user_id) AS n_users
+        |  FROM e GROUP BY d
+        |)
+        |SELECT t.d AS event_date, n1 AS n_events_types, n2 AS n_events_users,
+        |  n1 = n2 AS consistent, revenue, n_users
+        |FROM t JOIN u ON t.d = u.d
+        |ORDER BY event_date""".stripMargin,
     "q278_connector_cell_probe" ->
       s"""WITH ${graft.ext.SimilarityMath.normsCte},
          |cells AS (

@@ -112,6 +112,11 @@ class CurationSpec extends SparkSpec {
     // partition column survives with full cardinality
     assert(agg.select("lang").distinct().count() ===
       src.select("lang").distinct().count())
+    // a wiped fixture directory rebuilds: its build-once marker lives
+    // inside it, so no surviving marker can point at a missing table
+    val first = agg.collect().toSeq
+    graft.util.Fs.deleteRecursively(graft.ingest.Landing.fixtureDir(sfDir, "documents_orc"))
+    assert(graft.ingest.ColumnarFormats.orcRoundtrip(spark, sfDir).collect().toSeq === first)
   }
 
   test("q145: span-dedup laws — kept == distinct spans; untouched docs reassemble verbatim") {

@@ -76,5 +76,9 @@ class DedupClustersSpec extends SparkSpec {
     val labelMap = DedupClusters.ccLabels(spark, sfDir)
     assert(labelMap.select("node").distinct().count() === labelMap.count())
     assert(labelMap.count() === pairedDocs.count())
+    // a wiped label fixture rebuilds (marker inside the directory)
+    val first = DedupClusters.dedupClusters(spark, sfDir).collect().toSeq
+    graft.util.Fs.deleteRecursively(graft.ingest.Landing.fixtureDir(sfDir, "dedup_cc_labels"))
+    assert(DedupClusters.dedupClusters(spark, sfDir).collect().toSeq === first)
   }
 }

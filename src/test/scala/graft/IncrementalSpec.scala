@@ -1,9 +1,9 @@
 package graft
 
 import graft.gold.Incremental
-import graft.ingest.Tables
+import graft.ingest.{Landing, Tables}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The batch ledger is what makes additive refresh exactly-once; prove
   * both directions. */
@@ -123,132 +123,48 @@ class IncrementalSpec extends SparkSpec {
     assert(publishedTotal() === 2 * once)
   }
 
-  test("ledgered fold: reads identical across fold + vacuum; folded-batch replay stays a no-op") {
-    import spark.implicits._
-    val gold = {
-      val t = Files.createTempDirectory("graft_gold_fold").toString
-      graft.util.Fs.deleteRecursively(t); t
-    }
-    val ev = Tables.events(spark, sfDir)
-    val d1 = Incremental.toGoldGrain(ev.filter(dayofmonth(col("ts")) <= 7))
-    val d2 = Incremental.toGoldGrain(ev.filter(dayofmonth(col("ts")) === 8))
-    def read(): Seq[org.apache.spark.sql.Row] = {
-      val eff = Incremental.effectiveBatches(gold)
-      spark.read.parquet(gold)
-        .filter($"batch_id".isin(eff: _*))
-        .groupBy($"event_date", $"event_type")
-        .agg(sum($"n_events").as("n_events"), sum($"total_dec").as("total_dec"))
-        .orderBy($"event_date", $"event_type").collect().toSeq
-    }
-    Incremental.refreshAdditive(gold, d1, "b1")
-    Incremental.refreshAdditive(gold, d2, "b2")
-    val before = read()
-    // fold the two published batches into one generation
-    Incremental.foldPublished(spark, gold, "fold-1")
-    assert(Incremental.appliedBatches(gold).toSet === Set("b1", "b2", "fold-1"))
-    assert(Incremental.effectiveBatches(gold) === Seq("fold-1"),
-      "fold must retire its inputs from the effective frontier")
-    assert(read() === before, "read changed across the fold")
-    // replay of the FOLDED batch: its own marker is still on disk, so
-    // the upstream redelivery hits the fast path and nothing changes
-    Incremental.refreshAdditive(gold, d1, "b1")
-    assert(read() === before, "replay of a folded batch was not a no-op")
-    // fold replay is itself a no-op
-    Incremental.foldPublished(spark, gold, "fold-1")
-    assert(read() === before)
-    // vacuum removes the retired leaves; the read resolves identically
-    Incremental.vacuumRetired(gold)
-    assert(read() === before, "read changed after vacuuming retired leaves")
-    assert(spark.read.parquet(gold).select($"batch_id").distinct()
-      .collect().map(_.getString(0)).toSet === Set("fold-1"),
-      "vacuum left retired batch directories behind")
-    // a NEW batch after the fold adds on top of the folded generation
-    Incremental.refreshAdditive(gold, d2, "b3")
-    val withB3 = read()
-    assert(withB3.map(_.getAs[Long]("n_events")).sum ===
-      before.map(_.getAs[Long]("n_events")).sum +
-        d2.agg(sum($"n_events")).head.getLong(0))
-    // and a SECOND fold folds the fold + the new batch; reads still fixed
-    Incremental.foldPublished(spark, gold, "fold-2")
-    assert(Incremental.effectiveBatches(gold) === Seq("fold-2"),
-      "fold-of-fold must retire both fold-1 and b3")
-    assert(read() === withB3, "read changed across the second fold")
-  }
-
-  test("torn fold data phase is invisible; fold replay converges") {
-    import spark.implicits._
-    val gold = {
-      val t = Files.createTempDirectory("graft_gold_foldtear").toString
-      graft.util.Fs.deleteRecursively(t); t
-    }
-    val ev = Tables.events(spark, sfDir)
-    val d1 = Incremental.toGoldGrain(ev.filter(dayofmonth(col("ts")) <= 7))
-    def read(): Seq[org.apache.spark.sql.Row] = {
-      val eff = Incremental.effectiveBatches(gold)
-      spark.read.parquet(gold)
-        .filter($"batch_id".isin(eff: _*))
-        .groupBy($"event_date", $"event_type")
-        .agg(sum($"n_events").as("n_events"))
-        .orderBy($"event_date", $"event_type").collect().toSeq
-    }
-    Incremental.refreshAdditive(gold, d1, "b1")
-    val before = read()
-    // simulate the crash window: the fold's DATA phase lands (its leaves
-    // exist) but the marker never does — readers must not see the fold,
-    // and b1 stays effective
-    val folded = spark.read.parquet(gold).filter($"batch_id" === "b1")
-      .groupBy($"event_date", $"event_type")
-      .agg(sum($"n_events").as("n_events"),
-        sum($"total_dec").cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("total_dec"))
-    Incremental.writePartials(gold, folded, "fold-1")
-    assert(Incremental.effectiveBatches(gold) === Seq("b1"),
-      "an unpublished fold leaked into the frontier")
-    assert(read() === before, "a torn fold changed the read")
-    // restart replays the fold: data phase rewrites its own leaves in
-    // full, the marker lands atomically, frontier flips to the fold
-    Incremental.foldPublished(spark, gold, "fold-1")
-    assert(Incremental.effectiveBatches(gold) === Seq("fold-1"))
-    assert(read() === before, "fold replay did not converge")
-  }
-
   test("cross-table txn: a torn pair write is invisible in BOTH tables; replay completes atomically") {
     import spark.implicits._
-    val (a, b) = Incremental.ensureGoldPair(spark, sfDir)
-    // read at the current frontier WITHOUT the ensure: ensureGoldPair's
-    // self-heal would wipe the extra transaction this test publishes
-    def snapshot() = Incremental.readPair(spark, a, b).collect().toSeq
+    import graft.sources.{JsonlStatsQueries, Refs}
+    // q141's pair: two connector rollups published together by
+    // fast_forward_pair, in a build-once directory that is their own
+    // catalog root
+    def snapshot() = SparkEntry.queries("q141_multi_table_snapshot")(spark, sfDir).collect().toSeq
     val before = snapshot()
-    // every published day must satisfy the pair invariant
-    assert(before.forall(_.getAs[Boolean]("consistent")),
+    assert(before.nonEmpty && before.forall(_.getAs[Boolean]("consistent")),
       "published snapshot violates the cross-table invariant")
-    // torn transaction: batch b2's data lands in table A only — no
-    // marker, table B untouched (the crash window between the phases).
-    // try/finally: a failed assertion must not strand the b2 residue —
-    // ensureGoldPair would heal it anyway (any txn outside {hist, b1}
-    // triggers a rebuild), but the spec cleans up after itself.
+    val root = Landing.fixtureDir(sfDir, "jsonl_gold_pair")
+    val cat = JsonlStatsQueries.catalogAt(spark, root)
+    val b2 = Tables.events(spark, sfDir).filter(dayofmonth($"ts") === 8)
+    // try/finally: wiping the pair's root takes its b2 branches, rows
+    // and any stranded marker with it; the next q141 run rebuilds
     try {
-      val b2 = Incremental.toGoldGrain(
-        Tables.events(spark, sfDir).filter(dayofmonth(col("ts")) === 8))
-      Incremental.writePartials(a, b2, "b2")
-      assert(Incremental.appliedTxns(a) === Seq("b1", "hist"))
+      // torn transaction: b2 stages on the per-type rollup's branch
+      // only and is never published
+      spark.sql(s"CALL $cat.create_branch('bytype', 'b2')")
+      Incremental.toGoldGrain(b2).writeTo(s"$cat.bytype.branch_b2").append()
       assert(snapshot() === before,
         "a torn cross-table transaction leaked into the consistent read")
-      // replay runs BOTH data phases (A's idempotent rewrite, B's first
-      // write) and publishes; the new frontier is consistent again
-      Incremental.refreshPair(a, b,
-        Tables.events(spark, sfDir).filter(dayofmonth(col("ts")) === 8), "b2")
+      // crash mid-publish: both legs staged, leg 1 fast-forwarded, the
+      // marker written, then the publisher died before leg 2
+      spark.sql(s"CALL $cat.create_branch('byuser', 'b2')")
+      b2.groupBy(to_date($"ts").as("event_date"), $"user_id").agg(count(lit(1)).as("n_events"))
+        .writeTo(s"$cat.byuser.branch_b2").append()
+      val legs = Seq("bytype", "byuser").map { t =>
+        val fork = Refs.readRef(s"$root/$t", Refs.branchManifest("b2")).baseHash.get
+        s"""{"table":"$t","branch":"b2","fork_hash":"$fork"}"""
+      }
+      spark.sql(s"CALL $cat.fast_forward('bytype', 'b2')")
+      val marker = Paths.get(root, Refs.Wtxn.Marker)
+      Files.write(marker, java.util.List.of(legs.mkString("""{"id":"torn-pair","legs":[""", ",", "]}")))
+      // the next catalog access rolls leg 2 forward before serving
       val after = snapshot()
-      assert(Incremental.appliedTxns(a) === Seq("b1", "b2", "hist"))
+      assert(!Files.exists(marker), "recovery settles the marker")
       assert(after.forall(_.getAs[Boolean]("consistent")))
       assert(after.map(_.getAs[Long]("n_events_types")).sum >
         before.map(_.getAs[Long]("n_events_types")).sum,
         "the completed transaction added no rows")
-    } finally {
-      // remove b2 so the fixture stays two-batch for q141 runs
-      graft.util.Fs.deleteRecursively(a); graft.util.Fs.deleteRecursively(b)
-      Seq("hist", "b1", "b2").foreach(t =>
-        Files.deleteIfExists(java.nio.file.Paths.get(a + s"__txn_$t")))
-    }
+    } finally graft.util.Fs.deleteRecursively(root)
   }
 
   test("q201 join IVM: the four delta-algebra terms partition the full join exactly") {

@@ -316,21 +316,36 @@ class PlanShapeSpec extends SparkSpec {
     assert(unrelated.collect().toSeq === rows)
   }
 
-  test("session hygiene: no engine code reads a spark.graft.* conf key — " +
-    "engine behaviour is not tuned by hidden session options") {
+  /** `file:line: text` for every line under src/main/scala that `hit`
+    * flags — the source-scan guards below share it. */
+  private def mainSourceHits(hit: (java.nio.file.Path, String) => Boolean): List[String] = {
     import scala.jdk.CollectionConverters._
     val main = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(main), s"no source tree at ${main.toAbsolutePath}")
-    val key = "\"spark\\.graft\\.".r
     val walk = java.nio.file.Files.walk(main)
-    val hits =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
-        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if key.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
-        }
-      }.toList
-      finally walk.close()
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if hit(f, line) => s"$f:${i + 1}: ${line.trim}"
+      }
+    }.toList
+    finally walk.close()
+  }
+
+  test("session hygiene: no engine code reads a spark.graft.* conf key — " +
+    "engine behaviour is not tuned by hidden session options") {
+    val key = "\"spark\\.graft\\.".r
+    val hits = mainSourceHits((_, line) => key.findFirstIn(line).isDefined)
     assert(hits.isEmpty, s"spark.graft.* conf keys read under src/main:\n${hits.mkString("\n")}")
+  }
+
+  test("build-once fixtures: one marker convention — no _FIXTURE_OK outside Landing, " +
+    "no sibling __<word>_ok markers") {
+    val sibling = "\"__\\w+_ok\"".r
+    val hits = mainSourceHits((f, line) =>
+      (line.contains("_FIXTURE_OK") && f.getFileName.toString != "Landing.scala") ||
+        sibling.findFirstIn(line).isDefined)
+    assert(hits.isEmpty,
+      s"hand-rolled build-once markers (use Landing.ensureBuilt):\n${hits.mkString("\n")}")
   }
 
   test("q165 SQL UDFs are inlined: no eval barrier, plan stays in whole-stage codegen") {
