@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Modules in SURVEY.md §2 inventory order. */
+  /** Modules in SURVEY.md §2 inventory order, the graft-jsonl-stats
+    * connector's five capability modules in its place. The order never
+    * reaches a result: names are unique (checked in [[queries]]). */
   private def modules: Seq[QueryModule] = Seq(
     gold.Aggregates,
     gold.Dims,
@@ -43,7 +45,11 @@ object SparkEntry {
     ingest.PipelineQueries,
     ingest.ColumnarFormats,
     ingest.DynamicPruning,
-    sources.JsonlStatsQueries,
+    sources.JsonlLayoutQueries,
+    sources.JsonlDmlQueries,
+    sources.JsonlVersionQueries,
+    sources.JsonlMvQueries,
+    sources.JsonlNestedQueries,
     silver.ReferenceEtl,
     analytics.Scalars,
     analytics.Sessions,

@@ -117,19 +117,10 @@ object DedupMinHash extends QueryModule {
   def incrementalNearDup(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val sigs = signatures(spark, d)
-    // SPARK_GRAFT_DELTA_MOD is the SCALING.md fixed-delta protocol's
-    // measurement knob: the registered query and its oracle always use
-    // mod 10; the protocol raises the modulus as the corpus grows so
-    // |delta| stays constant while the base index scales. A non-default
-    // modulus gets its own fixture name — a base index built for one
-    // modulus must never serve another.
-    val mod = sys.env.getOrElse("SPARK_GRAFT_DELTA_MOD", "10").toInt
-    val deltaOf = (c: Column) => c % mod === 0
-    val idxName =
-      if (mod == 10) "minhash_band_index_base" else s"minhash_band_index_base_m$mod"
+    val deltaOf = (c: Column) => c % 10 === 0
     // persisted production artifact: the settled corpus's band index
     val baseIndex = Landing.ensureParquetFixture(
-      bandsOf(sigs.filter(!deltaOf($"doc_id"))), d, idxName)
+      bandsOf(sigs.filter(!deltaOf($"doc_id"))), d, "minhash_band_index_base")
     // arriving batch: bands computed fresh, cost ∝ |delta|
     val deltaBands = bandsOf(sigs.filter(deltaOf($"doc_id")))
     val probe = baseIndex.unionByName(deltaBands)

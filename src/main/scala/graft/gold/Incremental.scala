@@ -49,7 +49,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *
   * This ledger is the parquet medallion's; versioned reads and
   * multi-table publishes of gold rollups run on the graft-jsonl-stats
-  * connector (q126 and q141 in [[graft.sources.JsonlStatsQueries]]).
+  * connector (q126 and q141 in [[graft.sources.JsonlVersionQueries]]).
   */
 object Incremental extends QueryModule {
 

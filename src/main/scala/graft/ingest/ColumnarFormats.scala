@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Two plain-parquet layout queries live here too: q125 (sort within
   * files before writing) and q157 (scan-coalesce bin planning). File
   * skipping, compaction and z-order belong to the graft-jsonl-stats
-  * connector (q97, q122, q130 in [[graft.sources.JsonlStatsQueries]]).
+  * connector (q97, q122, q130 in [[graft.sources.JsonlLayoutQueries]]).
   */
 object ColumnarFormats extends QueryModule {
 

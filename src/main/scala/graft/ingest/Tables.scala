@@ -50,18 +50,16 @@ object Tables {
     * So: floor of 8 (the measured small-table optimum — enough fan-out
     * for compute-dense rows like embeddings' 64-dim dots), growing one
     * split per 4 MB toward full parallelism for genuinely large tables
-    * (the regime where scan bytes, not task overhead, dominate).
-    * SPARK_GRAFT_SPLITS overrides for measurement sweeps. */
-  private def splitCount(spark: SparkSession, d: String, name: String): Int =
-    sys.env.get("SPARK_GRAFT_SPLITS").map(_.toInt).getOrElse {
-      val cores = spark.sparkContext.defaultParallelism
-      val bytes = graft.util.Fs.walkClosed(
-          java.nio.file.Paths.get(s"$d/$name.parquet"))
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
-      val byBytes = (bytes / (4L << 20)).toInt + 1
-      math.min(cores, math.max(math.min(8, cores), byBytes))
-    }
+    * (the regime where scan bytes, not task overhead, dominate). */
+  private def splitCount(spark: SparkSession, d: String, name: String): Int = {
+    val cores = spark.sparkContext.defaultParallelism
+    val bytes = graft.util.Fs.walkClosed(
+        java.nio.file.Paths.get(s"$d/$name.parquet"))
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(java.nio.file.Files.size).sum
+    val byBytes = (bytes / (4L << 20)).toInt + 1
+    math.min(cores, math.max(math.min(8, cores), byBytes))
+  }
 
   private def splitTable(spark: SparkSession, d: String, name: String): DataFrame = {
     val n = splitCount(spark, d, name)

@@ -1299,6 +1299,10 @@ object JsonlStats {
     // throw immediately and are not retried here.
     val mapper = new ObjectMapper()
     val current = Paths.get(root, "_stats.jsonl")
+    // the query id names this commit's temp files: a branch recovery's id
+    // carries its leg's table, and a namespaced `ns/t` would name a
+    // missing directory
+    val tag = queryId.replaceAll("[^A-Za-z0-9._-]", "_")
     val ownApps = ownTxns.map(l => mapper.readTree(l).get("txn").asText()).toSet
     // leases this committer already timed out on: a dead owner's slot is
     // honored at most once, or a crashed winner would stall every
@@ -1319,7 +1323,7 @@ object JsonlStats {
         val (stamped, next) = stampRowIds(ents, mapper, base0, version = 1L)
         val pub = stamped.sorted ++
           (if (next > 0L) Seq(counterLine(next)) else Nil) ++ ownTxns
-        if (casPublish(current, pub, s"$queryId-$attempt"))
+        if (casPublish(current, pub, s"$tag-$attempt"))
           return 0
         // lost the creation race — retry against the winner's table
       } else {
@@ -1389,7 +1393,7 @@ object JsonlStats {
             // loop: recompute the version against the settled chain
           } else {
           val slot = hist.resolve(s"v$k.jsonl")
-          if (!casPublish(slot, liveBytes, s"$queryId-$attempt")) {
+          if (!casPublish(slot, liveBytes, s"$tag-$attempt")) {
             // someone reserved v{k}: wait for their swap to land, then retry
             awaitSupersede(root, slot, spinMs)
           } else {
@@ -1417,7 +1421,7 @@ object JsonlStats {
             val keptTxns = baseTxns.filter(l => !ownApps.contains(mapper.readTree(l).get("txn").asText()))
             val all = stamped.sorted ++
               (if (next > 0L) Seq(counterLine(next)) else Nil) ++ ownTxns ++ keptTxns
-            val tmp = Paths.get(root, s"_stats.jsonl.tmp-$queryId")
+            val tmp = Paths.get(root, s"_stats.jsonl.tmp-$tag")
             Files.write(tmp, all.asJava,
               StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
             // Second CAS-style check (r8 advice): if a waiter expired

@@ -125,7 +125,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("cross-table txn: a torn pair write is invisible in BOTH tables; replay completes atomically") {
     import spark.implicits._
-    import graft.sources.{JsonlStatsQueries, Refs}
+    import graft.sources.{JsonlFixtures, Refs}
     // q141's pair: two connector rollups published together by
     // fast_forward_pair, in a build-once directory that is their own
     // catalog root
@@ -134,7 +134,7 @@ class IncrementalSpec extends SparkSpec {
     assert(before.nonEmpty && before.forall(_.getAs[Boolean]("consistent")),
       "published snapshot violates the cross-table invariant")
     val root = Landing.fixtureDir(sfDir, "jsonl_gold_pair")
-    val cat = JsonlStatsQueries.catalogAt(spark, root)
+    val cat = JsonlFixtures.catalogAt(spark, root)
     val b2 = Tables.events(spark, sfDir).filter(dayofmonth($"ts") === 8)
     // try/finally: wiping the pair's root takes its b2 branches, rows
     // and any stranded marker with it; the next q141 run rebuilds
@@ -169,7 +169,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("q201 join IVM: the four delta-algebra terms partition the full join exactly") {
     import spark.implicits._
-    import graft.sources.{GraftViews, JsonlStats, JsonlStatsQueries}
+    import graft.sources.{GraftViews, JsonlFixtures, JsonlStats}
     val o = graft.ingest.Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
     val c = graft.ingest.Tables.customer(spark, sfDir)
@@ -201,7 +201,7 @@ class IncrementalSpec extends SparkSpec {
     Seq("jmv_orders", "jmv_customer").foreach(t =>
       graft.util.Fs.deleteRecursively(graft.ingest.Landing.fixtureDir(sfDir, t)))
     val ivm = SparkEntry.queries("q201_join_ivm")(spark, sfDir)
-    val (_, oDir, cDir) = JsonlStatsQueries.ensureJoinMv(spark, sfDir, "jmv",
+    val (_, oDir, cDir) = JsonlFixtures.ensureJoinMv(spark, sfDir, "jmv",
       Seq(Seq("jmv_orders", "jmv_customer")))
     assert(JsonlStats.currentVersion(oDir) === 2 && JsonlStats.currentVersion(cDir) === 2,
       "both sides must have moved past the recorded v1")
@@ -221,7 +221,7 @@ class IncrementalSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{ChangeFeed, JsonlStats}
     val got = SparkEntry.queries("q229_cdf_join_ivm")(spark, sfDir)
-    val (_, oDir, cDir) = graft.sources.JsonlStatsQueries.ensureJoinMv(spark, sfDir, "jcdf",
+    val (_, oDir, cDir) = graft.sources.JsonlFixtures.ensureJoinMv(spark, sfDir, "jcdf",
       Seq(Seq("jcdf_orders"), Seq("jcdf_customer")))
     // the file-level law: v2 strictly extends v1 (append-only delta),
     // and the CDF's derived manifests name EXACTLY the difference -

@@ -13,11 +13,11 @@ import scala.jdk.CollectionConverters._
 /** Laws of the graft-jsonl-stats DSv2 connector (q152). */
 class JsonlStatsSpec extends SparkSpec {
 
-  private def fixture: String = JsonlStatsQueries.ensureFixture(spark, sfDir)
+  private def fixture: String = JsonlFixtures.ensureFixture(spark, sfDir)
 
   test("connector is a pure access path: full scan ≡ the parquet events feed") {
     import spark.implicits._
-    val viaConnector = JsonlStatsQueries.scanFrame(spark, sfDir)
+    val viaConnector = JsonlFixtures.scanFrame(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
     val viaParquet = graft.ingest.Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
@@ -267,7 +267,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("pushdown reaches the executed plan: pruned columns and pushed filters") {
     import spark.implicits._
-    val agg = JsonlStatsQueries.scanFrame(spark, sfDir)
+    val agg = JsonlFixtures.scanFrame(spark, sfDir)
       .filter($"value" >= 300.0)
       .groupBy($"event_type").agg(count(lit(1)).as("n"))
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -295,7 +295,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q159: aggregate pushdown answers count/min/max from the manifest alone") {
     import spark.implicits._
-    val agg = JsonlStatsQueries.manifestAggregate(spark, sfDir)
+    val agg = JsonlLayoutQueries.manifestAggregate(spark, sfDir)
     // the plan substituted the manifest-agg scan
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
@@ -448,7 +448,7 @@ class JsonlStatsSpec extends SparkSpec {
 
     // unit level: an IN runtime filter on the stats column shrinks the
     // planned file set; junk is ignored, never guessed at
-    val root = JsonlStatsQueries.ensureUserKeyedFixture(spark, sfDir)
+    val root = JsonlFixtures.ensureUserKeyedFixture(spark, sfDir)
     val total = JsonlStats.readStats(root).size
     assert(total >= 4, "user-keyed fixture must have multiple files")
     def freshScan() = new JsonlStatsScanBuilder(root, JsonlStats.schema, "user_id")
@@ -470,7 +470,7 @@ class JsonlStatsSpec extends SparkSpec {
     // end to end: the cohort join hands the scan its key set at
     // execution time; the executed scan carries the runtime filter and
     // reads a strict subset of the manifest
-    val q = JsonlStatsQueries.runtimeFilteredJoin(spark, sfDir)
+    val q = JsonlLayoutQueries.runtimeFilteredJoin(spark, sfDir)
     val got = q.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
@@ -504,7 +504,7 @@ class JsonlStatsSpec extends SparkSpec {
   test("q167: metadata columns carry provenance, cost nothing unqueried") {
     import spark.implicits._
     val root = fixture
-    val frame = JsonlStatsQueries.scanFrame(spark, sfDir)
+    val frame = JsonlFixtures.scanFrame(spark, sfDir)
     // unqueried: metadata columns never appear in the schema
     assert(!frame.schema.fieldNames.contains("_file")
       && !frame.schema.fieldNames.contains("_pos"))
@@ -526,7 +526,7 @@ class JsonlStatsSpec extends SparkSpec {
         s"provenance mismatch for ${s.file}")
     }
     // the registered audit reduces the same facts to its flag
-    val audit = JsonlStatsQueries.metadataLineage(spark, sfDir).head()
+    val audit = JsonlLayoutQueries.metadataLineage(spark, sfDir).head()
     assert(audit.getBoolean(0), "per-file counts must match the manifest")
     assert(audit.getLong(1) === stats.map(_.rows).sum)
   }
@@ -534,7 +534,7 @@ class JsonlStatsSpec extends SparkSpec {
   test("q169: storage-partitioned join runs with zero exchanges") {
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val df = JsonlStatsQueries.storagePartitionedJoin(spark, sfDir)
+    val df = JsonlLayoutQueries.storagePartitionedJoin(spark, sfDir)
     val got = df.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
@@ -582,10 +582,10 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q170/q171: catalog plugin — identifier resolution, read-only contract, codegen'd V2 function") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     // identifier path and format() path meet at the same table
     val viaCatalog = spark.sql(s"SELECT event_id, user_id, event_type, value FROM $cat.jsonl_stats_table")
-    val viaFormat = JsonlStatsQueries.scanFrame(spark, sfDir)
+    val viaFormat = JsonlFixtures.scanFrame(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
     assert(viaCatalog.exceptAll(viaFormat).isEmpty && viaFormat.exceptAll(viaCatalog).isEmpty)
     // SHOW TABLES sees every manifest-bearing directory
@@ -600,7 +600,7 @@ class JsonlStatsSpec extends SparkSpec {
     // column via _table.json — the user-keyed table's bounds describe
     // user_id, and pruning a value-range filter against them would
     // silently drop matching rows
-    JsonlStatsQueries.ensureUserKeyedFixture(spark, sfDir)
+    JsonlFixtures.ensureUserKeyedFixture(spark, sfDir)
     val viaUserTable = spark.sql(
       s"SELECT count(*) AS n FROM $cat.jsonl_stats_by_user WHERE value >= 300.0")
       .head().getLong(0)
@@ -610,7 +610,7 @@ class JsonlStatsSpec extends SparkSpec {
       "catalog resolved the user-keyed table with the wrong stats column")
     // the V2 scalar function binds through the magic method: the plan
     // carries a typed Invoke of the bound function, never a ScalaUDF
-    val fn = JsonlStatsQueries.catalogFunction(spark, sfDir)
+    val fn = JsonlLayoutQueries.catalogFunction(spark, sfDir)
     fn.collect()
     val text = fn.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.executedPlan.toString
@@ -703,8 +703,8 @@ class JsonlStatsSpec extends SparkSpec {
     // key-grouped layouts: the rewrite RE-KEYS its replacement files
     // (r7 — the keyed write path replaced the r6 refusal), so a
     // mutation preserves the SPJ layout contract
-    JsonlStatsQueries.ensureTypeKeyedFact(spark, sfDir)
-    val cat2 = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    JsonlFixtures.ensureTypeKeyedFact(spark, sfDir)
+    val cat2 = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat2.rl_keyed")
     spark.sql(
       s"""CREATE TABLE $cat2.rl_keyed PARTITIONED BY (event_type) AS
@@ -818,7 +818,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("composite layout DML: COW rewrites re-derive day|bucket pkeys (r12)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.cdml_spec")
     graft.ingest.Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"value")
@@ -859,7 +859,7 @@ class JsonlStatsSpec extends SparkSpec {
   }
 
   test("namespaces: directories under the warehouse root, full SQL verb surface (r12)") {
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP NAMESPACE IF EXISTS $cat.rawzone CASCADE")
     spark.sql(s"CREATE NAMESPACE $cat.rawzone COMMENT 'landing zone'")
     assert(spark.sql(s"SHOW NAMESPACES IN $cat").collect()
@@ -894,7 +894,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("scoped zorder: one partition re-clusters, every other entry byte-identical (r12)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.zscope_spec")
     graft.ingest.Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"value")
@@ -974,7 +974,7 @@ class JsonlStatsSpec extends SparkSpec {
   }
 
   test("ALTER COLUMN safe type promotions: metadata-only, exact re-read; unsafe refuse (r12)") {
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.promo_spec")
     spark.sql(
       s"""CREATE TABLE $cat.promo_spec USING `graft-jsonl-stats`
@@ -1021,7 +1021,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("ALTER TABLE SET/UNSET TBLPROPERTIES routes known properties; unknown refuse (r12)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.props_spec")
     spark.sql(
       s"""CREATE TABLE $cat.props_spec AS
@@ -1098,7 +1098,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q203: CHECK constraints — violating writes fail before the commit; DDL round-trips (r7c)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ck_spec")
     spark.sql(
       s"""CREATE TABLE $cat.ck_spec AS
@@ -1140,7 +1140,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q204: RENAME COLUMN is metadata-only column mapping; old and new files coexist (r7c)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ren_spec")
     spark.sql(
       s"""CREATE TABLE $cat.ren_spec AS
@@ -1197,7 +1197,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("renamed columns keep their physical JSON key reserved; streaming reads translate the mapping (r8)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ren_guard")
     spark.sql(
       s"""CREATE TABLE $cat.ren_guard AS
@@ -1344,7 +1344,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("column mapping composes with merge-on-read DELETE: a renamed predicate drives DVs on physical bytes (r7c)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ren_mor")
     spark.sql(
       s"""CREATE TABLE $cat.ren_mor AS
@@ -1498,7 +1498,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q175: catalog CTAS stages on the manifest commit point; DDL contract holds (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.ctas_spec")
     // CTAS round-trips content through stage → write commit → catalog read
     spark.sql(
@@ -1553,8 +1553,8 @@ class JsonlStatsSpec extends SparkSpec {
   test("q177: PARTITIONED BY CTAS writes a real key-grouped layout (r7)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
-    val df = JsonlStatsQueries.catalogCtasPartitioned(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
+    val df = JsonlLayoutQueries.catalogCtasPartitioned(spark, sfDir)
     val got = df.collect()
     // the CTAS'd table's manifest: every file carries a pkey, one key
     // per file, and the sidecar names the partition column
@@ -1601,7 +1601,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q176: MIN/MAX pushdown serves a LONG stats column from the manifest (r7)") {
     import spark.implicits._
-    val agg = JsonlStatsQueries.manifestAggregateLong(spark, sfDir)
+    val agg = JsonlLayoutQueries.manifestAggregateLong(spark, sfDir)
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
@@ -1672,7 +1672,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("scoped compaction: partition => compacts one pkey, the rest byte-untouched (r9c)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.compact_scoped")
     spark.sql(
@@ -1702,7 +1702,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q178: CALL compact bin-packs files, keeps bounds exact and keys separate (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     // unkeyed: a fragmented copy of the feed
     spark.sql(s"DROP TABLE IF EXISTS $cat.compact_spec")
@@ -1749,7 +1749,7 @@ class JsonlStatsSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $cat.compact_spec")
 
     // keyed: compaction bins never cross pkeys, so the SPJ layout holds
-    JsonlStatsQueries.ensureTypeKeyedFact(spark, sfDir)
+    JsonlFixtures.ensureTypeKeyedFact(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.compact_keyed")
     spark.sql(
       s"""CREATE TABLE $cat.compact_keyed PARTITIONED BY (event_type) AS
@@ -1772,7 +1772,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("ALTER TABLE ADD COLUMN is sound metadata-only evolution (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE IF EXISTS $cat.evolve_spec")
     spark.sql(
       s"""CREATE TABLE $cat.evolve_spec AS
@@ -1809,9 +1809,9 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q179: VERSION/TIMESTAMP AS OF resolve archived generations; GC fails loudly (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     // drives the fixture build (2 publishes) and pins generation-1 reads
-    val gen1 = JsonlStatsQueries.timeTravel(spark, sfDir).collect()
+    val gen1 = JsonlVersionQueries.timeTravel(spark, sfDir).collect()
     val ev = graft.ingest.Tables.events(spark, sfDir)
     val expect1 = ev.filter($"event_type" =!= "click")
       .groupBy($"event_type")
@@ -1885,8 +1885,8 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("CALL history lists generations with supersede instants (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
-    JsonlStatsQueries.timeTravel(spark, sfDir).collect() // 2-generation fixture
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
+    JsonlVersionQueries.timeTravel(spark, sfDir).collect() // 2-generation fixture
     val h = spark.sql(s"CALL $cat.history('jsonl_versioned')")
       .orderBy($"version").collect()
     assert(h.length >= 2)
@@ -1903,7 +1903,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q180: CALL vacuum — retention arithmetic, shared-file safety, orphan grace (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.vac_spec")
     // append-only history: every generation's files are still
@@ -2003,8 +2003,8 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q182: replaceWhere drops whole partitions by metadata; straddlers refuse (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
-    JsonlStatsQueries.ensureTypeKeyedFact(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
+    JsonlFixtures.ensureTypeKeyedFact(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.rw_spec")
     spark.sql(
@@ -2063,7 +2063,7 @@ class JsonlStatsSpec extends SparkSpec {
       .count(Bloom.mightContain(words, mBits, _))
     assert(falsePos < 200, s"FPP too high: $falsePos/10000 (sized for ~0.3%)")
     // the connector path: value-ranged fixture with user_id blooms
-    val dir = JsonlStatsQueries.ensureBloomFixture(spark, sfDir)
+    val dir = JsonlFixtures.ensureBloomFixture(spark, sfDir)
     val stats = JsonlStats.readStats(dir)
     stats.foreach { s =>
       assert(Files.exists(Bloom.sidecarOf(java.nio.file.Paths.get(dir, s.file))),
@@ -2134,7 +2134,7 @@ class JsonlStatsSpec extends SparkSpec {
     assert(PartitionTransforms.parse("event_type")
       === PartitionTransforms.Identity("event_type"))
 
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(
       s"""CREATE OR REPLACE TABLE $cat.jsonl_hidden_bucket
@@ -2259,7 +2259,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q242: bucket-transform SPJ — zero exchange under the join (r9)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val df = JsonlStatsQueries.hiddenBucketSpj(spark, sfDir)
+    val df = JsonlLayoutQueries.hiddenBucketSpj(spark, sfDir)
     df.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
@@ -2282,7 +2282,7 @@ class JsonlStatsSpec extends SparkSpec {
       assert(kg.isInstanceOf[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning],
         "both SPJ sides must report key-grouped layouts")
     }
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     spark.sql(s"DROP TABLE $cat.jsonl_spj_fact")
     spark.sql(s"DROP TABLE $cat.jsonl_spj_dim")
   }
@@ -2329,7 +2329,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("grouped pushdown declines stale pkeys after evolution; gram index survives rename+rewrite (r9 review)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     // 1. a table whose files carry BUCKET pkeys, evolved to an IDENTITY
     // spec on event_type: grouped aggregate pushdown must decline (the
@@ -2385,7 +2385,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q246: streaming epochs route through the bucket transform; stamps alone prune path reads (r9)") {
     import spark.implicits._
-    val df = JsonlStatsQueries.streamingHiddenBucket(spark, sfDir)
+    val df = JsonlDmlQueries.streamingHiddenBucket(spark, sfDir)
     df.collect() // drives the drain + read
     val sink = graft.ingest.Landing.fixtureDir(sfDir, "jsonl_stream_bucket")
     val stats = JsonlStats.readStats(sink)
@@ -2422,8 +2422,8 @@ class JsonlStatsSpec extends SparkSpec {
   test("q244: mismatched bucket counts join shuffle-free (reducible bucket function) (r9)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
-    val df = JsonlStatsQueries.hiddenBucketReducedSpj(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
+    val df = JsonlLayoutQueries.hiddenBucketReducedSpj(spark, sfDir)
     val got = df.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
@@ -2451,7 +2451,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q245: history compaction — reverse deltas reconstruct exactly, shrink, survive vacuum (r9)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     // a fresh 12-commit history under this spec's own table name
     spark.sql(s"DROP TABLE IF EXISTS $cat.jsonl_histc")
@@ -2543,7 +2543,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q243: partition evolution — per-file specs, mixed-layout pruning, lazy migration (r9)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(
       s"""CREATE OR REPLACE TABLE $cat.jsonl_evolve_t
@@ -2710,7 +2710,7 @@ class JsonlStatsSpec extends SparkSpec {
       "false negative after spill")
 
     // connector path: writer-maintained sidecars on the q239 fixture
-    val dir = JsonlStatsQueries.ensureGramFixture(spark, sfDir)
+    val dir = JsonlFixtures.ensureGramFixture(spark, sfDir)
     val stats = JsonlStats.readStats(dir)
     assert(stats.size >= 4, s"fixture should be multi-file, got ${stats.size}")
     stats.foreach(st => assert(
@@ -2740,7 +2740,7 @@ class JsonlStatsSpec extends SparkSpec {
       "conjunctive needles must prune with ANDed gram sets")
 
     // backfill procedure: an unindexed table gains sidecars + contract
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.gram_docs")
     graft.ingest.Tables.documents(spark, sfDir)
@@ -2780,7 +2780,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q239: maintenance regenerates gram sidecars (rewrite_deletes) (r9)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.gram_mor")
     graft.ingest.Tables.documents(spark, sfDir)
@@ -2814,7 +2814,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q185: clone is zero-copy, and the tables diverge without interference (r7)") {
     import spark.implicits._
-    val cat = JsonlStatsQueries.ensureCatalog(spark, sfDir)
+    val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     val root = Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"))
     spark.sql(s"DROP TABLE IF EXISTS $cat.clone_src")
     spark.sql(s"DROP TABLE IF EXISTS $cat.clone_dst")
@@ -2851,7 +2851,7 @@ class JsonlStatsSpec extends SparkSpec {
   }
 
   test("connector custom metrics: bloom skips and bytes read per task (r7)") {
-    val dir = JsonlStatsQueries.ensureBloomFixture(spark, sfDir)
+    val dir = JsonlFixtures.ensureBloomFixture(spark, sfDir)
     val scan = new JsonlStatsScanBuilder(dir, JsonlStats.schema).build()
       .asInstanceOf[JsonlStatsScan]
     assert(scan.supportedCustomMetrics().map(_.name()).toSet
@@ -2913,7 +2913,7 @@ class JsonlStatsSpec extends SparkSpec {
 
   test("q188/q189: multi-column stats serve pruning and MIN/MAX on undeclared columns (r7b)") {
     import spark.implicits._
-    val root = JsonlStatsQueries.ensureMultiColFixture(spark, sfDir)
+    val root = JsonlFixtures.ensureMultiColFixture(spark, sfDir)
     val stats = JsonlStats.readStats(root)
     assert(stats.size >= 8, "fixture must fan out across id-range files")
     // 1. writer truth: each manifest entry's per-column bounds equal the
@@ -2921,7 +2921,7 @@ class JsonlStatsSpec extends SparkSpec {
     //    the connector's own _file provenance, so the test never guesses
     //    the layout)
     val absRoot = Paths.get(root).toAbsolutePath.toString
-    val perFile = JsonlStatsQueries.multiColFrame(spark, sfDir)
+    val perFile = JsonlFixtures.multiColFrame(spark, sfDir)
       .groupBy(col(JsonlStats.FileMeta).as("f"))
       .agg(min($"event_id").as("ei_lo"), max($"event_id").as("ei_hi"),
         min($"user_id").as("u_lo"), max($"user_id").as("u_hi"),
@@ -2936,7 +2936,7 @@ class JsonlStatsSpec extends SparkSpec {
     // 2. planning-time pruning on a column the table never DECLARED as
     //    its stats column: the id-range layout gives tight event_id
     //    intervals, so the q189 cut prunes most files
-    val schema = JsonlStatsQueries.multiColFrame(spark, sfDir).schema
+    val schema = JsonlFixtures.multiColFrame(spark, sfDir).schema
     def partitionsFor(filters: org.apache.spark.sql.sources.Filter*): Int = {
       val sb = new JsonlStatsScanBuilder(root, schema)
       val residual = sb.pushFilters(filters.toArray)
@@ -2951,7 +2951,7 @@ class JsonlStatsSpec extends SparkSpec {
     // 3. q188's plan substitutes the manifest-agg scan — MIN/MAX over
     //    three columns, two of them undeclared — and a bare copy with
     //    every data file deleted still answers it (zero data IO)
-    val agg = JsonlStatsQueries.multiColAggregate(spark, sfDir)
+    val agg = JsonlLayoutQueries.multiColAggregate(spark, sfDir)
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
@@ -2977,7 +2977,7 @@ class JsonlStatsSpec extends SparkSpec {
         min($"event_id").as("min_id"), max($"event_id").as("max_id"))
     assert(bareAgg.collect().toSeq === expect.collect().toSeq)
     // 4. pruning is invisible in the q189 result
-    val q189 = JsonlStatsQueries.multiColSkippingScan(spark, sfDir)
+    val q189 = JsonlLayoutQueries.multiColSkippingScan(spark, sfDir)
     val expect189 = graft.ingest.Tables.events(spark, sfDir)
       .filter($"event_id" <= cut)
       .groupBy($"event_type")
@@ -3019,11 +3019,11 @@ class JsonlStatsSpec extends SparkSpec {
     assert(JsonlStats.strCompare(JsonlStats.truncUpper(longA).get, "a" * 100) > 0)
     // 2. writer truth on the ISO fixture: every entry's scols bounds
     //    bracket the file's attained min/max (through _file provenance)
-    val root = JsonlStatsQueries.ensureIsoStringFixture(spark, sfDir)
+    val root = JsonlFixtures.ensureIsoStringFixture(spark, sfDir)
     val stats = JsonlStats.readStats(root)
     assert(stats.size >= 8, "fixture must fan out across time-range files")
     val absRoot = Paths.get(root).toAbsolutePath.toString
-    val perFile = JsonlStatsQueries.isoStringFrame(spark, sfDir)
+    val perFile = JsonlFixtures.isoStringFrame(spark, sfDir)
       .groupBy(col(JsonlStats.FileMeta).as("f"))
       .agg(min($"ts_iso").as("t_lo"), max($"ts_iso").as("t_hi"),
         min($"event_type").as("e_lo"), max($"event_type").as("e_hi"))
@@ -3041,7 +3041,7 @@ class JsonlStatsSpec extends SparkSpec {
       assert(s.colNonNull.contains("ts_iso") && s.colNonNull.contains("event_type"))
     }
     // 3. planning-time pruning through string bounds alone
-    val schema = JsonlStatsQueries.isoStringFrame(spark, sfDir).schema
+    val schema = JsonlFixtures.isoStringFrame(spark, sfDir).schema
     def partitionsFor(filters: org.apache.spark.sql.sources.Filter*): Int = {
       val sb = new JsonlStatsScanBuilder(root, schema)
       val residual = sb.pushFilters(filters.toArray)
@@ -3060,7 +3060,7 @@ class JsonlStatsSpec extends SparkSpec {
       .agg(unix_micros(min($"ts")).as("lo"), unix_micros(max($"ts")).as("hi")).head()
     val cutMicros = (b.getLong(0) + b.getLong(1)) / 2L
     val cutIso = java.time.format.DateTimeFormatter
-      .ofPattern(JsonlStatsQueries.isoMicroFmt).withZone(java.time.ZoneOffset.UTC)
+      .ofPattern(JsonlFixtures.isoMicroFmt).withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.ofEpochSecond(
         Math.floorDiv(cutMicros, 1000000L), Math.floorMod(cutMicros, 1000000L) * 1000L))
     val kept = partitionsFor(GreaterThanOrEqual("ts_iso", cutIso))
@@ -3072,7 +3072,7 @@ class JsonlStatsSpec extends SparkSpec {
     val attained = perFile.values.head.getString(1)
     assert(partitionsFor(EqualTo("ts_iso", attained)) >= 1)
     // 4. pruning is invisible in the q227 result
-    val q227 = JsonlStatsQueries.stringSkippingScan(spark, sfDir)
+    val q227 = JsonlLayoutQueries.stringSkippingScan(spark, sfDir)
     val expect = graft.ingest.Tables.events(spark, sfDir)
       .filter(unix_micros($"ts") >= cutMicros)
       .groupBy($"event_type")
@@ -3221,7 +3221,7 @@ class JsonlStatsSpec extends SparkSpec {
     def scanOf(df: org.apache.spark.sql.DataFrame) =
       nodes(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.executedPlan).collect { case b: BatchScanExec => b.scan }
-    val agg = JsonlStatsQueries.keyedGroupAggregate(spark, sfDir)
+    val agg = JsonlLayoutQueries.keyedGroupAggregate(spark, sfDir)
     assert(scanOf(agg).forall(_.isInstanceOf[JsonlManifestAggScan]),
       "grouped aggregate must ride the manifest-only scan")
     val expect = graft.ingest.Tables.events(spark, sfDir)
@@ -3231,7 +3231,7 @@ class JsonlStatsSpec extends SparkSpec {
       .orderBy($"event_type")
     assert(agg.collect().toSeq === expect.collect().toSeq)
     // bare copy (manifest + meta only, every data file absent) still answers
-    val dir = JsonlStatsQueries.ensureTypeKeyedFact(spark, sfDir)
+    val dir = JsonlFixtures.ensureTypeKeyedFact(spark, sfDir)
     val bare = Files.createTempDirectory("jsonl_keyed_bare")
     Files.copy(Paths.get(dir, "_stats.jsonl"), bare.resolve("_stats.jsonl"))
     Files.copy(Paths.get(dir, "_table.json"), bare.resolve("_table.json"))
@@ -3249,7 +3249,7 @@ class JsonlStatsSpec extends SparkSpec {
       .option("path", dir).option("partitionColumn", "event_type").load()
       .groupBy($"user_id").agg(count(lit(1)).as("n"))
     assert(scanOf(byUser).forall(_.isInstanceOf[JsonlStatsScan]))
-    val unkeyed = JsonlStatsQueries.scanFrame(spark, sfDir)
+    val unkeyed = JsonlFixtures.scanFrame(spark, sfDir)
       .groupBy($"event_type").agg(count(lit(1)).as("n"))
     assert(scanOf(unkeyed).forall(_.isInstanceOf[JsonlStatsScan]))
   }
@@ -3946,7 +3946,7 @@ class JsonlStatsSpec extends SparkSpec {
     // scans DIRECTLY — the reported per-partition key ordering
     // (identity-keyed: every partition is one key) satisfies the
     // join's requirement, so EnsureRequirements inserts no SortExec
-    val df = JsonlStatsQueries.storagePartitionedJoin(spark, sfDir)
+    val df = JsonlLayoutQueries.storagePartitionedJoin(spark, sfDir)
     df.collect()
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.Tables
-import graft.sources.{JsonlStats, JsonlStatsQueries, JsonlStatsScanBuilder}
+import graft.sources.{JsonlFixtures, JsonlLayoutQueries, JsonlStats, JsonlStatsScanBuilder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -33,7 +33,7 @@ class ManifestSpec extends SparkSpec {
     qe.executedPlan
   }
 
-  private def table: String = JsonlStatsQueries.ensureLineitemByShipdate(spark, sfDir)
+  private def table: String = JsonlFixtures.ensureLineitemByShipdate(spark, sfDir)
 
   /** Files the connector plans under `filters`: push them, then count
     * the planned input partitions (files this small are one split). */
@@ -73,14 +73,14 @@ class ManifestSpec extends SparkSpec {
 
   test("registered scan opens strictly fewer files than the layout and matches the raw filter") {
     val dir = table
-    val (lo, hi) = JsonlStatsQueries.shipdateMidThird(spark, sfDir)
+    val (lo, hi) = JsonlLayoutQueries.shipdateMidThird(spark, sfDir)
     val total = planned(dir)
     assert(total === JsonlStats.readStats(dir).size)
     val kept = planned(dir, dayFilters(lo, hi): _*)
     assert(kept > 0 && kept < total, s"manifest pruned nothing: planned $kept of $total files")
     // the registered read states its range on the raw column, so the
     // scan it plans is exactly the pushed one
-    val pruned = JsonlStatsQueries.shipdateRead(spark, sfDir, lo, hi)
+    val pruned = JsonlLayoutQueries.shipdateRead(spark, sfDir, lo, hi)
     val scans = nodes(executed(pruned)).collect { case b: BatchScanExec => b }
     assert(scans.map(_.inputPartitions.size).sum === kept,
       "the registered range did not reach the connector's planning")
@@ -123,7 +123,7 @@ class ManifestSpec extends SparkSpec {
       val a = rnd.nextLong().abs % (span + 1)
       val b = rnd.nextLong().abs % (span + 1)
       val (lo, hi) = (mnd.plusDays(math.min(a, b)), mnd.plusDays(math.max(a, b)))
-      val got = JsonlStatsQueries.shipdateRead(spark, sfDir, lo, hi)
+      val got = JsonlLayoutQueries.shipdateRead(spark, sfDir, lo, hi)
         .groupBy($"l_returnflag").count()
       val want = rawDays(lo, hi).groupBy($"l_returnflag").count()
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
@@ -133,7 +133,7 @@ class ManifestSpec extends SparkSpec {
     // entirely, and empty, not a crash
     val far = mxd.plusYears(50)
     assert(planned(dir, dayFilters(far, far.plusDays(30)): _*) === 0)
-    assert(JsonlStatsQueries.shipdateRead(spark, sfDir, far, far.plusDays(30)).isEmpty,
+    assert(JsonlLayoutQueries.shipdateRead(spark, sfDir, far, far.plusDays(30)).isEmpty,
       "disjoint range should return zero rows")
   }
 }

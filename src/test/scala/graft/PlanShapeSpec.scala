@@ -237,7 +237,7 @@ class PlanShapeSpec extends SparkSpec {
       .orderBy($"event_type")
     assert(q.collect().toSeq === recomputed.collect().toSeq, "rewrite changed results")
     // negative shapes stay on the raw table while the MV is fresh
-    val raw = graft.sources.JsonlStatsQueries.mvRewriteEvents(spark, sfDir)
+    val raw = graft.sources.JsonlFixtures.mvRewriteEvents(spark, sfDir)
     val distinctQ = raw.groupBy($"event_type").agg(countDistinct($"value").as("u"))
     assert(onRawTable(distinctQ) && !mvRouted(distinctQ),
       "countDistinct is not covered by the MV grain and must not rewrite")
@@ -270,7 +270,7 @@ class PlanShapeSpec extends SparkSpec {
       .collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql }
     assert(filters.exists(c => c.contains("event_type") && c.contains("view") &&
       c.contains("event_date")), s"grain filter not carried onto the MV scan: $filters")
-    val raw = graft.sources.JsonlStatsQueries.mvRewriteEvents(spark, sfDir)
+    val raw = graft.sources.JsonlFixtures.mvRewriteEvents(spark, sfDir)
     // the literal-first spelling of the same day range routes too
     val flipped = raw.filter(lit("2024-01-08") <= to_date($"ts") && lit("2024-01-21") >= to_date($"ts"))
       .groupBy($"event_type").agg(count(lit(1)).as("n"))
@@ -336,6 +336,49 @@ class PlanShapeSpec extends SparkSpec {
     val key = "\"spark\\.graft\\.".r
     val hits = mainSourceHits((_, line) => key.findFirstIn(line).isDefined)
     assert(hits.isEmpty, s"spark.graft.* conf keys read under src/main:\n${hits.mkString("\n")}")
+  }
+
+  test("session hygiene: conf.set only in Confs.withConfs, the fixture catalog " +
+    "registration and MicroBatch's derived stream session") {
+    val hits = mainSourceHits((f, line) => line.contains("conf.set(") && !(
+      f.getFileName.toString == "Confs.scala" ||
+        line.contains("conf.set(s\"spark.sql.catalog.") ||
+        (f.getFileName.toString == "MicroBatch.scala" && line.trim.startsWith("s.conf.set("))))
+    assert(hits.isEmpty,
+      s"session confs set outside the session builder:\n${hits.mkString("\n")}")
+  }
+
+  test("session hygiene: environment variables are read only by the Bench, Verify " +
+    "and ScaleGen mains") {
+    val harness = Set("Bench.scala", "Verify.scala", "ScaleGen.scala")
+    val hits = mainSourceHits((f, line) =>
+      (line.contains("sys.env") || line.contains("System.getenv")) &&
+        !harness.contains(f.getFileName.toString))
+    assert(hits.isEmpty, s"env knobs outside the harness mains:\n${hits.mkString("\n")}")
+  }
+
+  test("session hygiene: query order does not change rows, and no query leaves a " +
+    "session conf behind but its catalog registration") {
+    val sample = Seq("q169_dsv2_spj", "q177_catalog_ctas_partitioned", "q242_hidden_bucket_spj",
+      "q244_bucket_reduced_spj", "q257_analyzed_star_join", "q261_histogram_skew_filter",
+      "q170_catalog_sql", "q211_association_rules", "q03_revenue_by_nation")
+    def confs(): Map[String, String] =
+      spark.conf.getAll.filter { case (k, _) => !k.startsWith("spark.sql.catalog.graft_") }
+    def runAll(order: Seq[String]): Map[String, Seq[org.apache.spark.sql.Row]] =
+      order.map { name =>
+        val before = confs()
+        val rows = SparkEntry.queries(name)(spark, sfDir).collect().toSeq
+        val after = confs()
+        val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+        assert(changed.isEmpty, s"$name left session confs behind: " +
+          changed.map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", "))
+        name -> rows
+      }.toMap
+    val forward = runAll(sample)
+    val backward = runAll(sample.reverse)
+    sample.foreach { name =>
+      assert(forward(name) === backward(name), s"$name rows depend on query order")
+    }
   }
 
   test("build-once fixtures: one marker convention — no _FIXTURE_OK outside Landing, " +

@@ -230,6 +230,24 @@ class RefsSpec extends SparkSpec {
       "catalog access must roll the unapplied leg forward before serving")
     assert(ks("fact") === Seq(1L, 2L, 3L, 4L), "the applied leg is a no-op on recovery")
     assert(!Files.exists(Paths.get(parent, Refs.Wtxn.Marker)), "recovery settles the marker")
+    // the same torn marker over NAMESPACED legs: recovery must not put
+    // the leg's path separator into a commit temp-file name
+    writeRows("ns/fact", Seq(1L), "overwrite")
+    writeRows("ns/agg", Seq(10L), "overwrite")
+    spark.sql(s"CALL $cat.create_branch('ns/fact', 'load')")
+    spark.sql(s"CALL $cat.create_branch('ns/agg', 'load')")
+    spark.sql(s"INSERT INTO $cat.ns.fact.branch_load VALUES (2)")
+    spark.sql(s"INSERT INTO $cat.ns.agg.branch_load VALUES (20)")
+    val nsFactRef = Refs.readRef(Paths.get(parent, "ns/fact").toString, Refs.branchManifest("load"))
+    val nsAggRef = Refs.readRef(Paths.get(parent, "ns/agg").toString, Refs.branchManifest("load"))
+    spark.sql(s"CALL $cat.fast_forward('ns/fact', 'load')")
+    Files.write(Paths.get(parent, Refs.Wtxn.Marker), java.util.List.of(
+      s"""{"id":"crash-test-ns","legs":[""" +
+        s"""{"table":"ns/fact","branch":"load","fork_hash":"${nsFactRef.baseHash.get}"},""" +
+        s"""{"table":"ns/agg","branch":"load","fork_hash":"${nsAggRef.baseHash.get}"}]}"""))
+    assert(ks("ns.agg") === Seq(10L, 20L), "namespaced unapplied leg rolls forward")
+    assert(ks("ns.fact") === Seq(1L, 2L))
+    assert(!Files.exists(Paths.get(parent, Refs.Wtxn.Marker)), "recovery settles the namespaced marker")
     // a diverged table fails the WHOLE publish with nothing applied
     spark.sql(s"CALL $cat.drop_branch('agg', 'load')")
     spark.sql(s"CALL $cat.create_branch('agg', 'load')")

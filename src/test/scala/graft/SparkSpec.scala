@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. One session per suite (cheap —
-  * getOrCreate reuses the JVM-wide session), UTC, nanos-as-long for the
-  * driver's TIMESTAMP(NANOS) events table, small shuffle fan-out. */
+/** Shared local SparkSession for specs, built by [[GraftSession]] like
+  * Bench's and Verify's, on 4 cores. One session per suite (cheap —
+  * getOrCreate reuses the JVM-wide session). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-    .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
 
   /** Smallest driver-generated SF — fast enough for unit tests. */
   val sfDir = "/root/testdata/sf0.001"

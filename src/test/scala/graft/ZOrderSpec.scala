@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.{ColumnarFormats, Tables}
-import graft.sources.{JsonlStats, JsonlStatsQueries, JsonlStatsScanBuilder}
+import graft.sources.{JsonlFixtures, JsonlLayoutQueries, JsonlStats, JsonlStatsScanBuilder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, to_date}
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThan, LessThanOrEqual}
@@ -21,7 +21,7 @@ class ZOrderSpec extends SparkSpec {
 
   private val boxCols = Seq("o_custkey", "o_orderdate", "o_orderpriority", "o_totalprice")
 
-  private def zTable: String = JsonlStatsQueries.ensureOrdersZordered(spark, sfDir)
+  private def zTable: String = JsonlFixtures.ensureOrdersZordered(spark, sfDir)
 
   private def src: DataFrame = Tables.orders(spark, sfDir).select(boxCols.map(col): _*)
 
@@ -55,8 +55,8 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("pruned box read returns exactly the box rows") {
-    val (klo, khi, dlo, dhi) = JsonlStatsQueries.ordersBox(spark, sfDir)
-    val got = JsonlStatsQueries.ordersBoxRead(spark, sfDir, klo, khi, dlo, dhi)
+    val (klo, khi, dlo, dhi) = JsonlLayoutQueries.ordersBox(spark, sfDir)
+    val got = JsonlLayoutQueries.ordersBoxRead(spark, sfDir, klo, khi, dlo, dhi)
       .select(boxCols.map(col): _*)
     val expect = rawBox(klo, khi, dlo, dhi)
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
@@ -100,7 +100,7 @@ class ZOrderSpec extends SparkSpec {
       val (klo, khi) = (math.min(k1, k2), math.max(k1, k2))
       val d1 = rnd.nextLong(span + 1); val d2 = rnd.nextLong(span + 1)
       val (dlo, dhi) = (mnd.plusDays(math.min(d1, d2)), mnd.plusDays(math.max(d1, d2)))
-      val pruned = JsonlStatsQueries.ordersBoxRead(spark, sfDir, klo, khi, dlo, dhi)
+      val pruned = JsonlLayoutQueries.ordersBoxRead(spark, sfDir, klo, khi, dlo, dhi)
         .select(boxCols.map(col): _*)
       val raw = rawBox(klo, khi, dlo, dhi)
       assert(pruned.exceptAll(raw).isEmpty && raw.exceptAll(pruned).isEmpty,
@@ -111,7 +111,7 @@ class ZOrderSpec extends SparkSpec {
   test("2-d box reads a smaller file fraction of the z layout than of the linear layout") {
     import spark.implicits._
     val z = zTable
-    val (klo, khi, dlo, dhi) = JsonlStatsQueries.ordersBox(spark, sfDir)
+    val (klo, khi, dlo, dhi) = JsonlLayoutQueries.ordersBox(spark, sfDir)
     val box = boxFilters(klo, khi, dlo, dhi)
     val (zTotal, zBox) = (planned(z), planned(z, box: _*))
     // the linear twin: same rows, as many files, range-clustered on
