@@ -76,17 +76,19 @@ object MvIncremental {
   private def auxName(j: Int) = s"graft_ivm_a$j"
   private def nnName(j: Int) = s"graft_ivm_c$j"
   private def repairedName(j: Int) = s"graft_ivm_r$j"
+  private def retractedName(j: Int) = s"graft_ivm_x$j"
   private def placeholder(j: Int) = s"GRAFT_IVM_P$j"
 
   sealed trait SlotKind
   case object SumSlot extends SlotKind
   case object CountSlot extends SlotKind
   /** MIN/MAX (r13b): exact under ANY merge over an insert-only window
-    * ([[graft.sources.ChangeFeed.windowInsertOnly]]) — comparisons, no
-    * arithmetic. A DELETION can retract the stored extremum, so a
-    * deleting window REPAIRS instead (r14): the delta carries each
-    * affected group's extremum recomputed from source
-    * ([[Slot.repaired]]), which the merge takes verbatim. */
+    * ([[graft.sources.ChangeFeed.WindowDiff.insertOnly]]) — comparisons,
+    * no arithmetic. A DELETION can retract the stored extremum: under a
+    * deleting window only a group that may have LOST the extremum the
+    * merge would keep ([[lostExtremaSql]]) REPAIRS (r14 — its extremum
+    * recomputed from source, [[Slot.repaired]], taken verbatim by the
+    * merge); every other group merges as if insert-only. */
   case object MinSlot extends SlotKind
   case object MaxSlot extends SlotKind
   /** COUNT(DISTINCT x) (r15): not distributive over the signed delta —
@@ -129,6 +131,10 @@ object MvIncremental {
     /** MIN/MAX only: the delta column holding the group's extremum
       * recomputed from source under a deleting window. */
     def repaired: String = repairedName(j)
+    /** MIN/MAX only: the delta column holding the extremum over the
+      * window's -1 rows — what the repair probe compares with the
+      * extremum the merge would keep. */
+    def retracted: String = retractedName(j)
     /** The aggregate function's input expressions, resolved against the
       * body's relation — [[CatalogMvRewrite]] rebases these by name onto
       * a query's relation to prove measure coverage. */
@@ -170,10 +176,9 @@ object MvIncremental {
                    havingSql: Option[String] = None,
                    moverStatus: Seq[MoverStatus] = Nil) {
     def groupOuts: Seq[OutCol] = outs.filter(_.isGroup)
-    /** MIN/MAX present ⇒ the delta path additionally requires an
-      * insert-only window. */
-    def needsInsertOnly: Boolean =
-      slots.exists(sl => sl.kind == MinSlot || sl.kind == MaxSlot)
+    /** MIN/MAX slots — a deleting window probes them for retracted
+      * extrema. */
+    def minMaxSlots: Seq[Slot] = slots.filter(sl => sl.kind == MinSlot || sl.kind == MaxSlot)
     /** COUNT(DISTINCT) slots — each owns a per-(group, value) liveness
       * table the refresh maintains alongside the backing (r15). */
     def distinctSlots: Seq[Slot] = slots.filter(_.kind == DistinctSlot)
@@ -370,9 +375,11 @@ object MvIncremental {
             nnDeltaSql = None, typeSql = LongType.sql)
           Some(j)
         // MIN/MAX: exact for every orderable type (comparisons only).
-        // The delta ignores _sign — over an insert-only window a MIN of
-        // the inserted rows IS the window's contribution; a deleting
-        // window merges the repaired extremum instead ([[mergeSql]]).
+        // deltaSql splits the window's rows by sign — over an insert-
+        // only window a MIN of the inserted rows IS the window's
+        // contribution; a deleting window probes the -1 side for a
+        // retracted extremum ([[lostExtremaSql]]). This SQL itself is
+        // the repair's recompute over source rows.
         case m: Min if !hasMap(ae.dataType) =>
           val j = slots.size
           slots += Slot(j, MinSlot, ae,
@@ -866,14 +873,24 @@ object MvIncremental {
     * ([[splicedChild]] — body filter, projections and joins already
     * applied, `_sign` riding): group keys by the SAME expressions,
     * every slot as a signed sum. Negative or zero net groups are
-    * legitimate (deletions); the merge consumes the signs. */
+    * legitimate (deletions); the merge consumes the signs. A MIN/MAX
+    * slot carries two extrema: over the +1 rows ([[Slot.aux]], what
+    * the merge folds in) and over the -1 rows ([[Slot.retracted]],
+    * what [[lostExtremaSql]] checks against the stored one). */
   def deltaSql(shape: Shape, signedView: String,
                auxReadViews: Map[Int, String] = Map.empty,
                auxDeltaViews: Map[Int, String] = Map.empty): String = {
     val groupSel = shape.groupOuts.map(o => s"(${o.groupSql.get}) AS ${q(o.name)}")
     val slotSel = shape.slots.filterNot(_.kind == DistinctSlot).flatMap { s =>
-      s"${s.deltaSql} AS ${q(s.aux)}" +:
-        s.nnDeltaSql.map(n => s"$n AS ${q(s.nn)}").toSeq
+      s.kind match {
+        case MinSlot | MaxSlot =>
+          val fn = if (s.kind == MinSlot) "MIN" else "MAX"
+          val e = bareSql(s.fnChildren.head)
+          Seq(s"$fn(CASE WHEN _sign > 0 THEN ($e) END) AS ${q(s.aux)}",
+            s"$fn(CASE WHEN _sign < 0 THEN ($e) END) AS ${q(s.retracted)}")
+        case _ =>
+          s"${s.deltaSql} AS ${q(s.aux)}" +: s.nnDeltaSql.map(n => s"$n AS ${q(s.nn)}").toSeq
+      }
     }
     val livenessSel = s"CAST(SUM(_sign) AS BIGINT) AS ${q(LivenessCol)}"
     val groupBy =
@@ -909,8 +926,9 @@ object MvIncremental {
   /** Merged raw state for slot `s`, as SQL over MERGE aliases b/d. A
     * SUM whose surviving non-null count is zero is NULL (SQL sum
     * semantics the raw addition cannot express); counts add. Under a
-    * `repaired` (deleting) window a MIN/MAX slot takes the delta's
-    * recomputed extremum: no merge of extrema can express a retraction. */
+    * `repaired` window a MIN/MAX slot of a group the repair recomputed
+    * (`graft_ivm_rep`) takes the recomputed extremum: no merge of
+    * extrema can express a retraction. */
   private def mergedSql(s: Slot, repaired: Boolean): String = s.kind match {
     case SumSlot =>
       s"CASE WHEN (b.${q(s.nn)} + d.${q(s.nn)}) = 0 THEN CAST(NULL AS ${s.typeSql}) " +
@@ -920,7 +938,9 @@ object MvIncremental {
     // liveness state — the backing's count just shifts by it
     case DistinctSlot =>
       s"CAST(coalesce(b.${q(s.aux)}, 0) + coalesce(d.${q(s.aux)}, 0) AS BIGINT)"
-    case MinSlot | MaxSlot if repaired => s"d.${q(s.repaired)}"
+    case MinSlot | MaxSlot if repaired =>
+      s"CASE WHEN d.`$RepairedFlag` THEN d.${q(s.repaired)} " +
+        s"ELSE ${mergedSql(s, repaired = false)} END"
     // Spark's least/greatest SKIP nulls (both-null gives NULL) —
     // exactly SQL's MIN/MAX-ignore-nulls merge, no counters needed
     case MinSlot => s"least(b.${q(s.aux)}, d.${q(s.aux)})"
@@ -929,19 +949,67 @@ object MvIncremental {
 
   /** Slot value for a group new to the backing: the delta IS the state
     * (only net-positive groups can be new — their rows were inserted
-    * inside the window). Not so for a MIN/MAX under a `repaired`
-    * window: rows cancelling across telescoped self-join terms can
-    * leave a raw delta extremum no live row holds, so a new group
-    * takes the recomputed one too. */
+    * inside the window). Not always so for a MIN/MAX: rows cancelling
+    * across telescoped self-join terms can leave a +1 extremum no live
+    * row holds — the probe flags such a group and it takes the
+    * recomputed extremum. */
   private def insertSql(s: Slot, repaired: Boolean): String = s.kind match {
-    case MinSlot | MaxSlot if repaired => s"d.${q(s.repaired)}"
+    case MinSlot | MaxSlot if repaired =>
+      s"CASE WHEN d.`$RepairedFlag` THEN d.${q(s.repaired)} ELSE d.${q(s.aux)} END"
     case _ => s"d.${q(s.aux)}"
   }
 
-  /** Do any visible outputs or slots need the group-scoped repair pass
-    * under a deleting window? Exactly the MIN/MAX slots. */
-  def minMaxSlots(shape: Shape): Seq[Slot] =
-    shape.slots.filter(s => s.kind == MinSlot || s.kind == MaxSlot)
+  /** Delta column marking the groups whose MIN/MAX the repair
+    * recomputed from source. */
+  val RepairedFlag = "graft_ivm_rep"
+
+  /** The repair probe of a deleting window: the groups that may have
+    * LOST the extremum the merge would keep. Two SQL statements, the
+    * second run only when the first returns rows.
+    *
+    * Per group and MIN slot (MAX mirrors), with the window's signed
+    * rows P (+1) and N (-1), stored minimum m and head = rec + P − N
+    * as multisets: no head value lies below t = least(m, min P) (a
+    * value below both is in neither rec nor P, so it cannot be in N
+    * either), so the head minimum is t unless t's head count is zero.
+    * That needs t ∈ N — and min N ≥ t, so t ∈ N iff min N = t: the
+    * FIRST statement ([[Slot.retracted]] = t, a join of the delta with
+    * the backing) keeps those candidates, and is empty in the common
+    * case of a DELETE that missed every extremum. The SECOND reads t's
+    * net count from the signed rows of the candidate groups only:
+    * head(t) = rec(t) + net(t) with rec(t) ≥ 1 exactly when the stored
+    * minimum is t, so the group is lost when net(t) < 0 (t stored) or
+    * net(t) < 1 (t only in P — possibly a cancelled copy). Rows a
+    * rewrite re-images net zero at t, so a compaction keeps every
+    * extremum and repairs nothing. A group new to the backing has no
+    * stored extremum and falls under the second rule. */
+  def lostExtremaSql(shape: Shape, deltaView: String, backingFqn: String,
+                     signedView: String, candidateView: String): (String, String) = {
+    val mm = shape.minMaxSlots
+    val gs = shape.groupOuts.zipWithIndex
+    def t(s: Slot) = s"${if (s.kind == MinSlot) "least" else "greatest"}" +
+      s"(b.${q(s.aux)}, d.${q(s.aux)})"
+    val candidates =
+      s"""SELECT ${(gs.map { case (o, i) => s"d.${q(o.name)} AS graft_ivm_g$i" } ++
+           mm.flatMap(s => Seq(s"${t(s)} AS graft_ivm_t${s.j}",
+             s"coalesce(b.${q(s.aux)} = ${t(s)}, false) AS graft_ivm_s${s.j}",
+             s"coalesce(d.${q(s.retracted)} = ${t(s)}, false) AS graft_ivm_h${s.j}")))
+           .mkString(",\n  ")}
+         |FROM $deltaView d LEFT JOIN $backingFqn b
+         |ON ${gs.map { case (o, _) => s"b.${q(o.name)} <=> d.${q(o.name)}" }.mkString(" AND ")}
+         |WHERE ${mm.map(s => s"d.${q(s.retracted)} = ${t(s)}").mkString(" OR ")}""".stripMargin
+    val candCols = gs.map { case (_, i) => s"c.graft_ivm_g$i" } ++
+      mm.flatMap(s => Seq(s"c.graft_ivm_t${s.j}", s"c.graft_ivm_s${s.j}", s"c.graft_ivm_h${s.j}"))
+    val lost =
+      s"""SELECT ${gs.map { case (o, i) => s"c.graft_ivm_g$i AS ${q(o.name)}" }.mkString(", ")}
+         |FROM $signedView JOIN $candidateView c
+         |ON ${gs.map { case (o, i) => s"(${o.groupSql.get}) <=> c.graft_ivm_g$i" }.mkString(" AND ")}
+         |GROUP BY ${candCols.mkString(", ")}
+         |HAVING ${mm.map(s => s"(c.graft_ivm_h${s.j} AND SUM(CASE WHEN " +
+           s"(${bareSql(s.fnChildren.head)}) = c.graft_ivm_t${s.j} THEN _sign ELSE 0 END) < " +
+           s"CASE WHEN c.graft_ivm_s${s.j} THEN 0 ELSE 1 END)").mkString(" OR ")}""".stripMargin
+    (candidates, lost)
+  }
 
   private def fillTemplate(template: String, shape: Shape, bySlot: Slot => String): String =
     // descending index so P10 never matches inside a P1 replacement
@@ -955,10 +1023,10 @@ object MvIncremental {
     * every visible aggregate column from the MERGED raw state (so the
     * stored value is bit-identical to a recompute); new groups insert
     * the delta state directly. `repaired` (r14, a deleting window over
-    * MIN/MAX slots): the delta view also carries each slot's
-    * [[Slot.repaired]] extremum, recomputed from source for the
-    * affected groups, and both branches take it — one write of the
-    * backing per refresh. */
+    * MIN/MAX slots that retracted a stored extremum): the delta view
+    * also carries each slot's [[Slot.repaired]] extremum, recomputed
+    * from source for the groups flagged [[RepairedFlag]], and both
+    * branches take it there — one write of the backing per refresh. */
   def mergeSql(shape: Shape, backingFqn: String, deltaView: String,
                repaired: Boolean): String = {
     val on = shape.groupOuts.map(o => s"b.${q(o.name)} <=> d.${q(o.name)}")

@@ -37,10 +37,17 @@ import scala.jdk.CollectionConverters._
   *     rows are `delete` images, read by the same range reader with
   *     the mask INVERTED (emit ONLY the masked positions);
   *   - a file REMOVED (copy-on-write rewrite, truncate, compaction,
-  *     zorder) ⇒ REFUSE loudly: those commits' row-level deltas need
-  *     the image-cancelling join — use batch `tableChanges`, which
-  *     handles them. Stated, not silent: a streaming CDF that guessed
-  *     would fabricate or drop changes.
+  *     zorder) or RE-IMAGED (a DV list that shrank — a rollback
+  *     restores entries verbatim — or a moved equality-delete set) ⇒
+  *     REFUSE loudly: those commits' row-level deltas need the
+  *     image-cancelling join — use batch `tableChanges`, which handles
+  *     them. Stated, not silent: a streaming CDF that guessed would
+  *     fabricate or drop changes.
+  *
+  * The three legs are [[ChangeFeed.windowDiff]]'s — the batch feed
+  * ([[ChangeFeed.signedChanges]], [[ChangeFeed.tableChanges]]) reads
+  * the same added and retracted legs through the connector scan, and
+  * handles the re-imaged files this stream refuses.
   *
   * Offsets are versions, so restarts replay exactly: archived
   * manifests are immutable, and a vacuumed generation fails loudly
@@ -118,76 +125,34 @@ class JsonlCdfMicroBatchStream(root: String, tableSchema: StructType,
   override def latestOffset(): Offset = JsonlCdfOffset(JsonlCdfStream.settledVersion(root))
   override def deserializeOffset(json: String): Offset = JsonlCdfOffset.fromJson(json)
 
-  /** The version-v manifest, RACE-SAFELY (r8 review): the archive
-    * `_history/v{v}.jsonl` is immutable and authoritative whenever it
-    * exists (it appears the instant v is superseded — or reserved —
-    * and holds exactly generation v's content), so prefer it; only a
-    * still-live version has no archive, and a commit landing between
-    * our read of the live manifest and now would have CREATED the
-    * archive — re-check after reading and fall back to it, or a batch
-    * ending at offset v could emit version v+1's files and the next
-    * batch would emit them AGAIN (a duplicate, breaking exactly-once). */
-  private def statsAt(v: Int): Seq[JsonlStats.FileStats] = {
-    if (v <= 0) return Nil
-    val arch = s"${JsonlStats.HistoryDir}/v$v.jsonl"
-    val archPath = Paths.get(root, arch)
-    if (Files.exists(archPath)) JsonlStats.readStats(root, arch)
-    else {
-      val live = JsonlStats.readStats(root, "_stats.jsonl")
-      if (Files.exists(archPath)) JsonlStats.readStats(root, arch) else live
-    }
-  }
-
-  /** Version-v eqdel set, with [[statsAt]]'s archive-or-live race
-    * safety. */
-  private def eqAt(v: Int): Seq[JsonlEqualityDeletes.EqDelete] = {
-    if (v <= 0) return Nil
-    val arch = s"${JsonlStats.HistoryDir}/v$v.jsonl"
-    val archPath = Paths.get(root, arch)
-    if (Files.exists(archPath)) JsonlEqualityDeletes.readEqDeletes(root, arch)
-    else {
-      val live = JsonlEqualityDeletes.readEqDeletes(root, "_stats.jsonl")
-      if (Files.exists(archPath)) JsonlEqualityDeletes.readEqDeletes(root, arch) else live
-    }
-  }
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val a = start.asInstanceOf[JsonlCdfOffset].v
     val b = end.asInstanceOf[JsonlCdfOffset].v
     if (a >= b) return Array.empty
-    val from = statsAt(a).map(s => s.file -> s).toMap
-    val to = statsAt(b).map(s => s.file -> s).toMap
+    // the batch feed's diff, race-safe per side (archive once a version
+    // is superseded, live re-checked) and loud on a vacuumed version
+    val d = ChangeFeed.windowDiff(root, a, b)
     // equality deletes (r9b): an upsert's retraction is KEY-scoped —
     // its row-level delta needs the image-cancelling join, exactly like
     // a rewrite. Refuse the window loudly; batch tableChanges handles
     // it (derived manifests carry each version's eqdel lines).
-    if (eqAt(a).map(_.file).toSet != eqAt(b).map(_.file).toSet)
+    if (d.eqFrom.map(_.file).toSet != d.eqTo.map(_.file).toSet)
       throw new UnsupportedOperationException(
         s"streaming change feed of $root: versions ($a, $b] committed equality " +
           "deletes (an upsert) — key-scoped retraction needs the image-cancelling " +
           "join of batch tableChanges, or rewrite_deletes to materialize first")
-    val removed = from.keySet.diff(to.keySet)
-    if (removed.nonEmpty)
+    if (d.removed.nonEmpty)
       throw new UnsupportedOperationException(
-        s"streaming change feed of $root: versions ($a, $b] removed " +
-          s"file(s) ${removed.take(3).mkString(", ")} — a copy-on-write rewrite, " +
-          "truncate or compaction; its row-level delta needs the image-cancelling " +
-          "join of batch tableChanges. The stream serves append + merge-on-read " +
-          "commits exactly")
-    val inserts = to.valuesIterator.filterNot(s => from.contains(s.file)).map { s =>
+        s"streaming change feed of $root: versions ($a, $b] removed or re-imaged " +
+          s"file(s) ${d.removed.take(3).map(_.file).mkString(", ")} — a copy-on-write " +
+          "rewrite, truncate, compaction, or a deletion-vector change other than " +
+          "growth (a rollback restores a shorter list); its row-level delta needs the " +
+          "image-cancelling join of batch tableChanges. The stream serves append + " +
+          "merge-on-read commits exactly")
+    def part(s: JsonlStats.FileStats, changeType: String): InputPartition =
       JsonlCdfPartition(Paths.get(root, s.file).toString,
-        s.dvs.map(d => Paths.get(root, d).toString), invert = false,
-        changeType = "insert"): InputPartition
-    }
-    val deletes = from.valuesIterator.flatMap { was =>
-      val now = to(was.file)
-      val newDvs = now.dvs.filterNot(was.dvs.contains)
-      if (newDvs.isEmpty) None
-      else Some(JsonlCdfPartition(Paths.get(root, was.file).toString,
-        newDvs.map(d => Paths.get(root, d).toString), invert = true,
-        changeType = "delete"): InputPartition)
-    }
-    (inserts ++ deletes).toArray
+        s.dvs.map(dv => Paths.get(root, dv).toString), s.inv, changeType)
+    (d.added.map(part(_, "insert")) ++ d.retracted.map(part(_, "delete"))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

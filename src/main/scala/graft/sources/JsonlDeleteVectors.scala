@@ -48,9 +48,11 @@ import scala.jdk.CollectionConverters._
   *     Σ(n_rows − n_dels).
   *   - compaction (byte concat) excludes DV'd members — concatenation
   *     shifts positions; rewrite_deletes is the maintenance path.
-  *   - the change feed treats (file, dvs) as the unit of identity: a
-  *     file whose DV set changed is re-imaged on both sides and the
-  *     deleted rows surface as `delete` changes, untouched rows cancel.
+  *   - the change feed reads a GROWN DV list as its retracted leg: the
+  *     file once, the mask inverted over only the new sidecars — the
+  *     newly deleted rows and nothing else ([[ChangeFeed.windowDiff]]).
+  *     Any other DV change (a rollback's shorter list) re-images the
+  *     file on both sides, where untouched rows cancel.
   *
   * DELETE and (on unkeyed layouts) UPDATE and MERGE take the delta
   * path on tables that opted in (`deleteMode=merge-on-read`): UPDATE =

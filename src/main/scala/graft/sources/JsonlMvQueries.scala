@@ -414,9 +414,10 @@ object JsonlMvQueries extends QueryModule {
     * can express. r13 rebuilt on any removed file identity; r14
     * repairs GROUP-SCOPED instead: sums/counts/liveness still merge
     * from the signed delta, while the MIN/MAX columns of exactly the
-    * AFFECTED groups (the delta's groups) recompute from the source
-    * at head — a grain-predicate scan the connector prunes — and ride
-    * into the same maintenance MERGE as extra delta columns. This
+    * groups whose kept extremum a deleted row held recompute from the
+    * source at head — a grain-predicate scan the connector prunes —
+    * and ride into the same maintenance MERGE as extra delta columns
+    * (this window's DELETE removes such a row at every scale). This
     * lifecycle pins BOTH modes in the ORACLE: an append window
     * refreshes 'incremental', a row-level DELETE window refreshes
     * 'incremental-repair', and the final rows must equal DuckDB's

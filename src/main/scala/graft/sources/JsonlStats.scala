@@ -342,7 +342,16 @@ object JsonlStats {
                              // breaks it (compaction byte-concat,
                              // zorder). Absent = unknown = report no
                              // ordering (conservative).
-                             sorted: Option[String] = None)
+                             sorted: Option[String] = None,
+                             // INVERTED mask: the entry serves ONLY the
+                             // positions its `dvs` mask (`dels` of them)
+                             // — the change feed's retracted leg. Set
+                             // only in private `_cdf/` derived
+                             // manifests, never in a live one.
+                             inv: Boolean = false) {
+    /** Rows a read of this entry serves (before equality deletes). */
+    def live: Long = if (inv) dels else rows - dels
+  }
 
   /** Bounds of `col` for a file: the multi-column map first, falling
     * back to the legacy single-stats interval (whose all-null sentinel
@@ -644,7 +653,8 @@ object JsonlStats {
             b.result()
           },
           // declared-sort stamp (r12b) — absent on every older manifest
-          if (n.hasNonNull("sorted")) Some(n.get("sorted").asText()) else None)
+          if (n.hasNonNull("sorted")) Some(n.get("sorted").asText()) else None,
+          n.hasNonNull("inv") && n.get("inv").asBoolean())
       }
   }
 
@@ -684,6 +694,7 @@ object JsonlStats {
       val a = n.putArray("dvs")
       s.dvs.foreach(a.add)
       n.put("n_dels", s.dels)
+      if (s.inv) n.put("inv", true)
     }
     if (s.colNonNull.nonEmpty) {
       val c = n.putObject("colns")

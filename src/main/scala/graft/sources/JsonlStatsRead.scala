@@ -365,6 +365,10 @@ class JsonlStatsScanBuilder(root: String, full: StructType,
     val stats = JsonlStats.readStats(root, manifest)
     // a manifest without row counts cannot serve aggregates
     if (stats.exists(_.rows < 0)) return false
+    // an inverted entry (the change feed's retracted leg) serves only
+    // its masked positions: its counts and bounds describe the whole
+    // file, so nothing here may answer for it
+    if (stats.exists(_.inv)) return false
     // equality deletes (r9b) are KEY-scoped masks: how many rows they
     // remove from WHICH file is unknowable without reading, so every
     // manifest-served aggregate declines while any exist
@@ -833,14 +837,15 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
     * pushdown), so any superset is correct — pruning is pure win. */
   private def topLimitPrune(surviving: Seq[JsonlStats.FileStats]): Seq[JsonlStats.FileStats] = {
     if (limitK.isEmpty && topN.isEmpty) return surviving
-    if (pushed.nonEmpty || surviving.exists(_.rows < 0) || eqDeletes.nonEmpty) return surviving
+    if (pushed.nonEmpty || surviving.exists(s => s.rows < 0 || s.inv) || eqDeletes.nonEmpty)
+      return surviving
     (limitK, topN) match {
       case (Some(k), _) =>
         // the shortest manifest-order prefix whose guarantees reach k;
         // if they never do, no pruning
         var acc = 0L
         var n = 0
-        while (n < surviving.size && acc < k) { acc += math.max(0L, surviving(n).rows - surviving(n).dels); n += 1 }
+        while (n < surviving.size && acc < k) { acc += math.max(0L, surviving(n).live); n += 1 }
         if (acc >= k) surviving.take(n) else surviving
       case (_, Some(JsonlStatsScan.TopNPush(col, desc, nullsFirst, k))) =>
         val pc = columnMapping.getOrElse(col, col)
@@ -887,12 +892,13 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
         val lin = JsonlStats.Lineage.of(s)
         if (grouped)
           Seq(JsonlKeyedFilePartition(path, s.pkey.get, dvs,
-            intKey = bucketGrouped, eqds = eqds, lin = lin): InputPartition)
+            intKey = bucketGrouped, eqds = eqds, lin = lin, invert = s.inv): InputPartition)
         else {
           val size =
             try Files.size(Paths.get(path)) catch { case _: Throwable => 0L }
           if (!canSplit || size <= splitBytes)
-            Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin): InputPartition)
+            Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin,
+              invert = s.inv): InputPartition)
           else if (s.ckpts.nonEmpty)
             // checkpoint-aligned EXACT splits (r8): each boundary is a
             // manifest-recorded (line start, rows before) pair, so every
@@ -905,13 +911,14 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
               s.segb,
               pushed.toSeq.filter(f => JsonlStats.skipColumn(f)
                 .map(c => columnMapping.getOrElse(c, c)).contains(statsCol)),
-              eqds = eqds, lin = lin)
+              eqds = eqds, lin = lin, invert = s.inv)
           else if (dvs.nonEmpty || wantPos)
             // legacy manifests without checkpoints: DV masks and `_pos`
             // are keyed by physical position, which a blind byte-range
             // reader cannot know mid-file — whole-file partitions
             // (CALL rewrite_deletes / rewrite regenerates checkpoints)
-            Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin): InputPartition)
+            Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin,
+              invert = s.inv): InputPartition)
           else {
             val n = ((size + splitBytes - 1) / splitBytes).toInt
             (0 until n).map { i =>
@@ -1081,7 +1088,7 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val surviving = survivingStats()
     val haveRows = surviving.forall(_.rows >= 0)
-    val liveRows = if (haveRows) Some(surviving.map(s => s.rows - s.dels).sum) else None
+    val liveRows = if (haveRows) Some(surviving.map(_.live).sum) else None
     // COLUMN statistics (r9c): NDV and string lengths from the ANALYZE
     // sidecar ([[ColStats]] — possibly stale, capped at live rows);
     // min/max and null counts from the MANIFEST of this very snapshot
@@ -1113,7 +1120,8 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
           case _ => None // string bounds are pruning-only (truncated, not values)
         }
         val nulls: Option[Long] =
-          if (surviving.nonEmpty && haveRows && surviving.forall(_.colNonNull.contains(pc)))
+          if (surviving.nonEmpty && haveRows &&
+              surviving.forall(s => !s.inv && s.colNonNull.contains(pc)))
             Some(surviving.map(s => math.max(0L, s.rows - s.dels - s.colNonNull(pc))).sum)
           else None
         val a = analyzed.get(pc)
@@ -1165,7 +1173,7 @@ class JsonlStatsScan(root: String, required: StructType, pushed: Array[Filter],
           if (Files.exists(p)) Files.size(p) else 0L
         }.sum)
       override def numRows(): java.util.OptionalLong =
-        if (haveRows) java.util.OptionalLong.of(surviving.map(s => s.rows - s.dels).sum)
+        if (haveRows) java.util.OptionalLong.of(surviving.map(_.live).sum)
         else java.util.OptionalLong.empty()
       override def columnStats(): java.util.Map[
           org.apache.spark.sql.connector.expressions.NamedReference,
@@ -1233,13 +1241,14 @@ object JsonlStatsScan {
                                         segb: Seq[(Double, Double)] = Nil,
                                         zoneFilters: Seq[Filter] = Nil,
                                         eqds: Seq[(String, Seq[String])] = Nil,
-                                        lin: JsonlStats.Lineage = JsonlStats.Lineage()): Seq[InputPartition] = {
+                                        lin: JsonlStats.Lineage = JsonlStats.Lineage(),
+                                        invert: Boolean = false): Seq[InputPartition] = {
     val bounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
     var last = 0L
     ckpts.zipWithIndex.foreach { case ((o, r), i) =>
       if (o - last >= splitBytes && o < size) { bounds += ((o, r, i)); last = o }
     }
-    if (bounds.isEmpty) Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin))
+    if (bounds.isEmpty) Seq(JsonlFilePartition(path, dvs = dvs, eqds = eqds, lin = lin, invert = invert))
     else {
       val starts = (0L, 0L, -1) +: bounds.toSeq
       val zoned = zoneFilters.nonEmpty && segb.size == ckpts.size + 1
@@ -1256,7 +1265,8 @@ object JsonlStatsScan {
             zoneFilters.forall(f => JsonlStats.intervalMayMatch(f, lo, h))
           }
         }
-        if (keep) Some(JsonlFilePartition(path, o, hi, dvs, startRow = r, eqds = eqds, lin = lin)) else None
+        if (keep) Some(JsonlFilePartition(path, o, hi, dvs, startRow = r, eqds = eqds, lin = lin,
+          invert = invert)) else None
       }
     }
   }
@@ -1418,13 +1428,17 @@ object JsonlManifestOffset {
   * discard-through-newline dance, owns lines with first byte in
   * [start, end), and serves `_pos`/DV masking from `startRow` (both
   * impossible on blind byte ranges, which is why those reads used to
-  * pin whole-file partitions). */
+  * pin whole-file partitions).
+  *
+  * `invert` (an inverted manifest entry, [[JsonlStats.FileStats.inv]])
+  * emits ONLY the positions `dvs` masks. */
 final case class JsonlFilePartition(file: String, start: Long = 0L,
                                     end: Long = Long.MaxValue,
                                     dvs: Seq[String] = Nil,
                                     startRow: Long = -1L,
                                     eqds: Seq[(String, Seq[String])] = Nil,
-                                    lin: JsonlStats.Lineage = JsonlStats.Lineage())
+                                    lin: JsonlStats.Lineage = JsonlStats.Lineage(),
+                                    invert: Boolean = false)
   extends InputPartition
 
 /** A file of a key-grouped layout: every row carries `key` in the
@@ -1434,7 +1448,8 @@ final case class JsonlKeyedFilePartition(file: String, key: String,
                                          dvs: Seq[String] = Nil,
                                          intKey: Boolean = false,
                                          eqds: Seq[(String, Seq[String])] = Nil,
-                                         lin: JsonlStats.Lineage = JsonlStats.Lineage())
+                                         lin: JsonlStats.Lineage = JsonlStats.Lineage(),
+                                         invert: Boolean = false)
     extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
   // the partition value's type must match the reported transform's
   // result type: identity over a string column -> UTF8String; a bucket
@@ -1495,12 +1510,12 @@ class JsonlReaderFactory(required: StructType,
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
     case f: JsonlFilePartition =>
       new JsonlPartitionReader(f.file, required, f.start, f.end, bloomSets, f.dvs,
-        columnMapping, f.startRow, gramRequired = gramRequired, eqds = f.eqds,
-        lin = f.lin)
+        columnMapping, f.startRow, invertMask = f.invert, gramRequired = gramRequired,
+        eqds = f.eqds, lin = f.lin)
     case k: JsonlKeyedFilePartition =>
       new JsonlPartitionReader(k.file, required, bloomSets = bloomSets, dvs = k.dvs,
-        columnMapping = columnMapping, gramRequired = gramRequired, eqds = k.eqds,
-        lin = k.lin)
+        columnMapping = columnMapping, invertMask = k.invert, gramRequired = gramRequired,
+        eqds = k.eqds, lin = k.lin)
     case other => throw new IllegalArgumentException(s"unexpected partition $other")
   }
 }
@@ -1764,9 +1779,9 @@ class JsonlPartitionReader(file: String, required: StructType,
           pos += 1
           // DV mask: pos counts every physical line (so positions stay
           // stable across deletes), masked rows are simply not emitted.
-          // INVERTED mode (r8, the streaming change feed's delete leg)
-          // emits ONLY the masked positions — the before-images of the
-          // rows a DV commit deleted.
+          // INVERTED mode (the change feed's retracted leg, batch and
+          // streaming) emits ONLY the masked positions — the
+          // before-images of the rows a DV commit deleted.
           val masked = deleted != null && deleted.contains(pos)
           if (if (invertMask) masked else !masked) {
             if (eqMasks.isEmpty) { node = null; found = true }

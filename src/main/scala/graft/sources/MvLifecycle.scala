@@ -551,19 +551,20 @@ object MvLifecycle {
       def statusOf(i: Int) = shape.moverStatus.lift(i)
       val compMover = moverIdxs.exists(i =>
         statusOf(i).contains(MvIncremental.CompMover))
+      // each mover's window diff, read once: it decides whether the
+      // window deletes and feeds that mover's signed change feed
+      val diffs = ms.map(m => m.root -> ChangeFeed.windowDiff(m.root, m.fromV, m.toV)).toMap
       // MIN/MAX slots merge freely over INSERT-ONLY windows (an
       // insert only ever extends an extremum); a DELETING window can
-      // retract one, which no merge of extrema can express — r14
-      // repairs GROUP-SCOPED instead of rebuilding: the SUM/COUNT/
-      // liveness legs still merge from the signed delta, while the
-      // MIN/MAX columns of exactly the AFFECTED groups (the delta's
-      // groups) recompute from the source at head — a grain-predicate
-      // scan the connector prunes — and ride the same MERGE as extra
-      // delta columns. Cost ∝ affected groups' rows, never the
-      // source. A comp-mover window needs the repair regardless of
-      // its own insert-onlyness (its flip rows retract).
-      val needsRepair = shape.needsInsertOnly && (compMover || ms.exists(m =>
-        !ChangeFeed.windowInsertOnly(m.root, m.fromV, m.toV)))
+      // retract one, which no merge of extrema can express. Only a
+      // group that may have lost its extremum (MvIncremental.
+      // lostExtremaSql) REPAIRS (r14: its MIN/MAX recomputed from the
+      // source at head — a grain-predicate scan the connector prunes
+      // — riding the same MERGE as extra delta columns); every other
+      // group merges as if insert-only. A comp-mover window deletes
+      // regardless of its own insert-onlyness (its flip rows retract).
+      val deleting = shape.minMaxSlots.nonEmpty &&
+        (compMover || diffs.valuesIterator.exists(!_.insertOnly))
       // signed delta + the delta aggregate, ANALYZED before anything
       // mutates (a vacuumed window or unrenderable expression lands
       // here, declining to RTAS). The nonce makes this call's derived
@@ -586,6 +587,7 @@ object MvLifecycle {
       if (moverIdxs.exists(i => !statusOf(i).exists(_ != MvIncremental.FrozenMover)))
         return None
       val termViews = moverIdxs.indices.map(k => s"${signedView}_t$k")
+      val candidateView = s"graft_ivm_cand_$viewTag"
       // version-pinned scans, one per (root, version) actually used —
       // each a PRIVATE manifest snapshot under _cdf/ (swept below)
       val pinnedScans = scala.collection.mutable.Map.empty[(String, Int), LogicalPlan]
@@ -599,8 +601,8 @@ object MvLifecycle {
       // (version-pinned scan) — the body's own filter/join structure
       // applies verbatim above each term, and the terms union into
       // one signed view (Δview telescopes over leaf occurrences)
-      val signedByRoot = ms.map(m => m.root ->
-        classicPlan(ChangeFeed.signedChanges(spark, m.root, m.fromV, m.toV, nonce))).toMap
+      val signedByRoot = diffs.map { case (r, d) =>
+        r -> classicPlan(ChangeFeed.signedChanges(spark, d, nonce)) }
       def pinnedAt(r: String, v: Int): LogicalPlan =
         pinnedScans.getOrElseUpdate((r, v), classicPlan(ChangeFeed.pinnedScan(spark, r, v, nonce)))
       val recordedVerByRoot = ms.map(m => m.root -> m.fromV).toMap
@@ -679,74 +681,89 @@ object MvLifecycle {
       }
       val delta = spark.sql(MvIncremental.deltaSql(shape, signedView, auxReadViews, auxDeltaViews))
       // the delta is consumed several times on deleting windows (the
-      // affected-group probe, the repair restriction's bounds and
+      // retracted-extremum probe, the repair restriction's bounds and
       // semi-join build, the maintenance MERGE itself) — persist it
       // so the signed window is SCANNED ONCE however many consumers
       // read it (delta-sized state, spills if ever large)
       delta.persist(StorageLevel.MEMORY_AND_DISK)
       persistedDeltas += delta
-      // group-scoped MIN/MAX repair, built BEFORE any state moves.
-      // Two restriction strategies by affected-group cardinality (r15
-      // — the cap no longer forces RTAS):
+      // group-scoped MIN/MAX repair, built BEFORE any state moves, for
+      // exactly the groups that may have LOST the extremum the merge
+      // would keep: a probe of the delta against the backing finds
+      // candidates (usually none), and only then a read of their
+      // signed rows decides (MvIncremental.lostExtremaSql). Two
+      // restriction strategies by that group count (r15 — the cap no
+      // longer forces RTAS):
       //   - up to RepairMaxGroups: a driver IN-list per grain column,
       //     which the connector's file pruning understands (a
-      //     per-column list is a SUPERSET of the affected tuples — the
+      //     per-column list is a SUPERSET of the lost tuples — the
       //     left join onto the delta drops the extras).
       //   - past the cap: a LEFT-SEMI join of the pinned source
-      //     against the delta's distinct groups — unbounded group
-      //     count, no driver materialization. No broadcast HINT
-      //     (ADVICE r15): past the cap is exactly the regime where
-      //     the group set can be huge, and a hint ignores
-      //     autoBroadcastJoinThreshold — the planner picks broadcast
-      //     when the build side is actually small, shuffles otherwise.
+      //     against the lost groups — unbounded group count, no
+      //     driver materialization. No broadcast HINT (ADVICE r15):
+      //     past the cap is exactly the regime where the group set can
+      //     be huge, and a hint ignores autoBroadcastJoinThreshold —
+      //     the planner picks broadcast when the build side is
+      //     actually small, shuffles otherwise.
       // Either way the repaired extrema land in a private parquet
       // spool (never the driver — ADVICE r15 task 9), which left-joins
-      // onto the delta null-safe on the group keys: the one MERGE
-      // reads each affected group's extremum from there.
-      val repairedDelta: Option[DataFrame] = if (!needsRepair) None else {
-        val affected = delta.select(gNames.map(n => col(s"`$n`")): _*)
-          .distinct().limit(RepairMaxGroups + 1).collect()
-        if (affected.isEmpty) None
+      // onto the delta null-safe on the group keys and flags the
+      // repaired groups for the one MERGE.
+      val repairedDelta: Option[DataFrame] = if (!deleting) None else {
+        delta.createOrReplaceTempView(deltaView)
+        val (candSql, lostSql) = MvIncremental.lostExtremaSql(
+          shape, deltaView, backingFqn, signedView, candidateView)
+        val cand = spark.sql(candSql)
+        if (cand.isEmpty) None
         else {
-          // the repair reads the source at the recorded HEAD versions
-          // (every leaf pinned), never live — ADVICE r14: a racing
-          // source commit would otherwise repair extrema from data
-          // newer than the versions this refresh records
-          val pinnedAll = leafRoots.indices
-            .map(j => j -> pinnedAt(leafRoots(j), headVerByRoot(leafRoots(j)))).toMap
-          val src = Bridge.ofRows(
-            spark, MvIncremental.pinnedChild(shape, pinnedAll).getOrElse(return None))
-          val mm = MvIncremental.minMaxSlots(shape)
-          val mmAggs = mm.map(s => expr(s.deltaSql).as(s.repaired))
-          val grainExprs = shape.groupOuts.map(o => expr(o.groupSql.get))
-          val restricted =
-            if (affected.length <= RepairMaxGroups) {
-              val conds = grainExprs.zipWithIndex.map { case (e, i) =>
-                val vals = affected.map(_.get(i)).toSeq
-                val nonNull = vals.filter(_ != null).distinct
-                val inList =
-                  if (nonNull.isEmpty) lit(false) else e.isin(nonNull: _*)
-                if (vals.contains(null)) inList || e.isNull else inList
+          cand.createOrReplaceTempView(candidateView)
+          val lost = spark.sql(lostSql)
+          val affected = lost.limit(RepairMaxGroups + 1).collect()
+          if (affected.isEmpty) None
+          else {
+            // the repair reads the source at the recorded HEAD versions
+            // (every leaf pinned), never live — ADVICE r14: a racing
+            // source commit would otherwise repair extrema from data
+            // newer than the versions this refresh records
+            val pinnedAll = leafRoots.indices
+              .map(j => j -> pinnedAt(leafRoots(j), headVerByRoot(leafRoots(j)))).toMap
+            val src = Bridge.ofRows(
+              spark, MvIncremental.pinnedChild(shape, pinnedAll).getOrElse(return None))
+            val mm = shape.minMaxSlots
+            val mmAggs = mm.map(s => expr(s.deltaSql).as(s.repaired)) :+
+              lit(true).as(MvIncremental.RepairedFlag)
+            val grainExprs = shape.groupOuts.map(o => expr(o.groupSql.get))
+            val restricted =
+              if (affected.length <= RepairMaxGroups) {
+                val conds = grainExprs.zipWithIndex.map { case (e, i) =>
+                  val vals = affected.map(_.get(i)).toSeq
+                  val nonNull = vals.filter(_ != null).distinct
+                  val inList =
+                    if (nonNull.isEmpty) lit(false) else e.isin(nonNull: _*)
+                  if (vals.contains(null)) inList || e.isNull else inList
+                }
+                src.filter(conds.reduce(_ && _))
+              } else {
+                val gdf = lost.select(gNames.zipWithIndex.map { case (n, i) =>
+                  col(s"`$n`").as(s"graft_ivm_g$i") }: _*).distinct()
+                val cond = grainExprs.zipWithIndex.map { case (e, i) =>
+                  e <=> col(s"`graft_ivm_g$i`") }.reduce(_ && _)
+                // the semi-join restricts exactly; the group bands ride
+                // as an extra pushable filter
+                src.filter(groupBands(lost, gNames, grainExprs).reduce(_ && _))
+                  .join(gdf, cond, "left_semi")
               }
-              src.filter(conds.reduce(_ && _))
-            } else {
-              val gdf = delta.select(gNames.zipWithIndex.map { case (n, i) =>
-                col(s"`$n`").as(s"graft_ivm_g$i") }: _*).distinct()
-              val cond = grainExprs.zipWithIndex.map { case (e, i) =>
-                e <=> col(s"`graft_ivm_g$i`") }.reduce(_ && _)
-              // the semi-join restricts exactly; the group bands ride
-              // as an extra pushable filter
-              src.filter(groupBands(delta, gNames, grainExprs).reduce(_ && _))
-                .join(gdf, cond, "left_semi")
-            }
-          val tmp = Files.createTempDirectory("graft_ivm_repair")
-          repairSpools += tmp
-          restricted.groupBy(shape.groupOuts.map(o => expr(o.groupSql.get).as(o.name)): _*)
-            .agg(mmAggs.head, mmAggs.tail: _*)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val on = gNames.map(n => col(s"d.`$n`") <=> col(s"r.`$n`")).reduce(_ && _)
-          Some(delta.as("d").join(spark.read.parquet(tmp.toString).as("r"), on, "left")
-            .select(col("d.*") +: mm.map(s => col(s"r.`${s.repaired}`")): _*))
+            val tmp = Files.createTempDirectory("graft_ivm_repair")
+            repairSpools += tmp
+            restricted.groupBy(shape.groupOuts.map(o => expr(o.groupSql.get).as(o.name)): _*)
+              .agg(mmAggs.head, mmAggs.tail: _*)
+              .write.mode("overwrite").parquet(tmp.toString)
+            val on = gNames.map(n => col(s"d.`$n`") <=> col(s"r.`$n`")).reduce(_ && _)
+            Some(delta.as("d").join(spark.read.parquet(tmp.toString).as("r"), on, "left")
+              .select(col("d.*") +: mm.map(s => col(s"r.`${s.repaired}`")) :+
+                functions.coalesce(col(s"r.`${MvIncremental.RepairedFlag}`"), lit(false))
+                  .as(MvIncremental.RepairedFlag): _*))
+          }
         }
       }
       repairedDelta.getOrElse(delta).createOrReplaceTempView(deltaView)
@@ -817,7 +834,7 @@ object MvLifecycle {
           GraftViews.write(nsDir, d.copy(properties = d.properties +
             (GraftViews.MvSourcesProp -> GraftViews.mvSourcesEncode(head))
             - GraftViews.MvPendingProp), replace = true)
-          Some(if (needsRepair) "incremental-repair" else "incremental")
+          Some(if (repairedDelta.isDefined) "incremental-repair" else "incremental")
         } catch {
           case _: Exception =>
             // once spark.sql(merge) has been INVOKED, a failure cannot
@@ -837,10 +854,10 @@ object MvLifecycle {
         // every exit path — success, merge failure, or a decline
         // AFTER temp views were created (a failed splice term, an unpinnable
         // repair child) — drops the session temp views it created and
-        // sweeps the derived _cdf manifests: the signed window pair
+        // sweeps the derived _cdf manifests: the signed window legs
         // per mover plus every version-pin snapshot. Nothing else
         // (vacuum included) would ever sweep them (ADVICE r13/r14).
-        (termViews ++ Seq(signedView, deltaView) ++ auxDeltaViews.values ++
+        (termViews ++ Seq(signedView, deltaView, candidateView) ++ auxDeltaViews.values ++
           auxReadViews.values).foreach(spark.catalog.dropTempView)
         ms.foreach(m => ChangeFeed.signedManifests(m.root, m.fromV, m.toV, nonce)
           .foreach(Files.deleteIfExists))

@@ -3773,9 +3773,10 @@ class JsonlStatsSpec extends SparkSpec {
       java.nio.file.Paths.get(dir).getParent.toString)
     val table = java.nio.file.Paths.get(dir).getFileName.toString
     val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, String)]]
-    def drain(): Unit = {
+    def drain(checkpoint: String = ckpt, startingVersion: Int = 1): Unit = {
       val q = spark.readStream.format("graft-jsonl-stats")
-        .option("path", dir).option("readChangeFeed", "true").load()
+        .option("path", dir).option("readChangeFeed", "true")
+        .option("startingVersion", startingVersion.toString).load()
         .writeStream
         .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => {
           batches.synchronized {
@@ -3784,7 +3785,7 @@ class JsonlStatsSpec extends SparkSpec {
           }
           ()
         })
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", checkpoint)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -3823,6 +3824,82 @@ class JsonlStatsSpec extends SparkSpec {
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
     assert(msgs.exists(_.contains("tableChanges")),
       s"expected the COW refusal, got: $e")
+    // a ROLLBACK across a drained DV commit restores the file with a
+    // SHORTER dv list, so its masked rows come back: the stream must
+    // refuse that window as loudly as a removal (it used to emit
+    // nothing), while the batch feeds serve it exactly through the
+    // re-image pair
+    val ckpt2 = Files.createTempDirectory("jsonl_cdf_ckpt_rb").toString
+    val vPre = JsonlStats.currentVersion(dir)
+    val back = spark.table(s"$cat.`$table`").filter($"value" >= 100.0 && $"value" < 200.0)
+      .select($"event_id").as[Long].collect().toSet
+    assert(back.nonEmpty)
+    spark.sql(s"DELETE FROM $cat.`$table` WHERE value >= 100.0 AND value < 200.0")
+    val vDel = JsonlStats.currentVersion(dir)
+    drain(ckpt2, startingVersion = vDel)
+    val d5 = batches.flatten.toSeq; batches.clear()
+    assert(d5.forall(_._2 == "delete") && d5.map(_._1).toSet === back)
+    spark.sql(s"CALL $cat.rollback('$table', '$vPre')")
+    val vRb = JsonlStats.currentVersion(dir)
+    val rb = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(ckpt2, startingVersion = vDel)
+    }
+    val rbMsgs = Iterator.iterate(rb: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(rbMsgs.exists(m => m.contains("rollback") && m.contains("tableChanges")),
+      s"expected the re-image refusal, got: $rb")
+    assert(batches.flatten.isEmpty, "a refused window emits nothing")
+    val signed = graft.sources.ChangeFeed.signedChanges(spark, dir, vDel, vRb, "rb")
+      .groupBy($"event_id").agg(sum($"_sign").as("net")).filter($"net" =!= 0)
+      .as[(Long, Long)].collect()
+    graft.sources.ChangeFeed.signedManifests(dir, vDel, vRb, "rb").foreach(Files.deleteIfExists)
+    assert(signed.forall(_._2 == 1L) && signed.map(_._1).toSet === back,
+      "the signed feed nets exactly the restored rows at +1")
+    val restored = graft.sources.ChangeFeed.tableChanges(spark, dir, vDel, vRb, Seq("event_id"))
+      .select($"event_id", $"change_type").as[(Long, String)].collect()
+    assert(restored.forall(_._2 == "insert") && restored.map(_._1).toSet === back,
+      "tableChanges reports exactly the restored rows as inserts")
+  }
+
+  test("a retracted-leg derived manifest serves only the newly deleted rows: " +
+    "no manifest-served aggregate answers for the whole file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("jsonl_cdf_retracted").toString
+    graft.ingest.Tables.events(spark, sfDir)
+      .select($"event_id", $"user_id", $"event_type", $"value").coalesce(1)
+      .write.format("graft-jsonl-stats").option("path", dir).mode("overwrite").save()
+    val meta0 = JsonlStats.readTableMeta(dir)
+    JsonlStats.writeTableMeta(dir, meta0.statsCol.get, meta0.partitionCol,
+      meta0.schema.get, meta0.bloomCol, deleteMode = Some("merge-on-read"))
+    val cat = "graft_cdfr_" + java.lang.Integer.toHexString(dir.hashCode)
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root",
+      java.nio.file.Paths.get(dir).getParent.toString)
+    val table = java.nio.file.Paths.get(dir).getFileName.toString
+    val n = spark.table(s"$cat.`$table`").count()
+    val dead = spark.table(s"$cat.`$table`").filter($"value" >= 10.0 && $"value" < 20.0)
+      .select($"value").as[Double].collect()
+    assert(dead.nonEmpty && dead.length < n / 2, s"${dead.length} of $n rows")
+    val vPre = JsonlStats.currentVersion(dir)
+    spark.sql(s"DELETE FROM $cat.`$table` WHERE value >= 10.0 AND value < 20.0")
+    val vDel = JsonlStats.currentVersion(dir)
+    // the window's legs: nothing removed or added, one retracted entry
+    val d = graft.sources.ChangeFeed.windowDiff(dir, vPre, vDel)
+    assert(d.removed.isEmpty && d.added.isEmpty && d.retracted.size === 1, d)
+    graft.sources.ChangeFeed.signedChanges(spark, dir, vPre, vDel, "guard")
+    val manifests = graft.sources.ChangeFeed.signedManifests(dir, vPre, vDel, "guard")
+    try {
+      val leg = manifests.find(_.getFileName.toString.endsWith("retracted.jsonl")).get
+      val read = spark.read.format("graft-jsonl-stats").option("path", dir)
+        .option("manifest", s"_cdf/${leg.getFileName}").load()
+      // COUNT(*) alone is what the manifest could serve (rows − dels);
+      // MIN/MAX and COUNT(col) already decline on any DV'd entry
+      assert(read.count() === dead.length.toLong,
+        s"count(*) must count the deleted rows, not the file's ${n - dead.length} survivors")
+      val agg = read.agg(count($"value"), min($"value"), max($"value")).head()
+      assert(agg.getLong(0) === dead.length.toLong)
+      assert(agg.getDouble(1) === dead.min && agg.getDouble(2) === dead.max)
+    } finally manifests.foreach(Files.deleteIfExists)
   }
 
   test("manifest delta chains resolve iteratively: 4000-deep chain, loud cycle failure (r9 review)") {

@@ -49,6 +49,32 @@ class MvIncrementalSpec extends SparkSpec {
   private def direct(sql: String): Seq[org.apache.spark.sql.Row] =
     spark.sql(sql + " ORDER BY 1").collect().toSeq
 
+  /** Logical plans of the queries `f` ran (nested ones included) whose
+    * text mentions `marker`. Listener calls arrive asynchronously, in
+    * order: a sentinel query run after `f` bounds the wait. */
+  private def plansMentioning(marker: String)(f: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.logical.toString)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.logical.toString)
+    }
+    val manager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
+    val sentinel = s"mvinc_sentinel_${System.nanoTime()}"
+    manager.register(listener)
+    try {
+      f
+      spark.range(1).selectExpr(s"'$sentinel' AS s").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.contains(sentinel)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.asScala.exists(_.contains(sentinel)), "listener never saw the sentinel")
+    } finally manager.unregister(listener)
+    seen.asScala.filter(_.contains(marker)).toSeq
+  }
+
   test("delta-merge refresh equals the full recompute through appends, " +
     "deletes, group birth/death, and NULL-sum restoration") {
     cat
@@ -163,6 +189,29 @@ class MvIncrementalSpec extends SparkSpec {
       "CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sv FROM mvinc.src5 GROUP BY k"
     spark.sql(s"CALL mvinc.create_materialized_view('mv5', '$body', or_replace => true)")
     spark.sql("DELETE FROM mvinc.src5 WHERE v = 2.0")
+    assert(refreshMode("mv5") === "incremental")
+    assert(mvRows("mv5") === direct(body))
+    // the feed reads a DV-grown file at delete cost: a k-row DELETE over
+    // N rows yields exactly k signed rows (the retracted leg, read with
+    // the mask inverted over only the new sidecar), not the whole file
+    // re-imaged at -1 and +1 (about 2N rows)
+    spark.sql("INSERT INTO mvinc.src5 SELECT CAST(id % 3 AS STRING), " +
+      "CAST(id AS DOUBLE) FROM range(0, 400, 1, 1)")
+    val root5 = java.nio.file.Paths.get(root, "src5").toString
+    val v0 = graft.sources.JsonlStats.currentVersion(root5)
+    spark.sql("DELETE FROM mvinc.src5 WHERE v >= 100 AND v < 107")
+    val v1 = graft.sources.JsonlStats.currentVersion(root5)
+    val signed = graft.sources.ChangeFeed.signedChanges(spark, root5, v0, v1, "spec")
+    val rows = signed.select("v", "_sign").collect()
+    assert(rows.length === 7, s"expected exactly the 7 deleted rows, got ${rows.length}")
+    assert(rows.map(r => (r.getDouble(0), r.getInt(1))).toSet ===
+      (100 until 107).map(i => (i.toDouble, -1)).toSet)
+    val manifests = graft.sources.ChangeFeed.signedManifests(root5, v0, v1, "spec")
+    val retracted = manifests.filter(_.getFileName.toString.endsWith("retracted.jsonl"))
+    assert(retracted.size === 1 && Files.exists(retracted.head), manifests)
+    assert(graft.sources.JsonlStats.readStats(root5, s"_cdf/${retracted.head.getFileName}")
+      .forall(e => e.inv && e.dels === 7L), "the retracted leg's entry is inverted")
+    manifests.foreach(Files.deleteIfExists)
     assert(refreshMode("mv5") === "incremental")
     assert(mvRows("mv5") === direct(body))
   }
@@ -744,6 +793,21 @@ class MvIncrementalSpec extends SparkSpec {
     spark.sql("INSERT INTO mvinc.src7 VALUES ('a', 4.0)")
     assert(refreshMode("mv7") === "incremental")
     assert(mvRows("mv7") === direct(body))
+    // a DELETE that misses every stored extremum (a keeps 1.0 and
+    // 9.0) repairs nothing: no recompute, no spool — the copy-on-write
+    // rewrite re-images 9.0, which nets zero
+    val spools = plansMentioning("graft_ivm_repair") {
+      spark.sql("DELETE FROM mvinc.src7 WHERE v = 5.0")
+      assert(refreshMode("mv7") === "incremental")
+    }
+    assert(spools.isEmpty, s"a non-extremal DELETE must write no repair spool: $spools")
+    assert(mvRows("mv7") === direct(body))
+    // a compaction window re-images every row at -1 and +1: the rows
+    // holding the extrema net zero, so nothing was lost
+    graft.sources.GraftProcedures.compact(java.nio.file.Paths.get(root, "src7").toString,
+      targetBytes = Long.MaxValue)
+    assert(refreshMode("mv7") === "incremental")
+    assert(mvRows("mv7") === direct(body))
     // a DELETE retracts group a's stored MIN (1.0): the window is not
     // insert-only, so the refresh repairs the AFFECTED groups' extrema
     // from source (and says so) — sums/counts still merge signed
@@ -752,7 +816,10 @@ class MvIncrementalSpec extends SparkSpec {
     // takes exactly one commit
     val backing = java.nio.file.Paths.get(root, "_mv_mv7").toString
     val v0 = graft.sources.JsonlStats.currentVersion(backing)
-    assert(refreshMode("mv7") === "incremental-repair")
+    val repairSpools = plansMentioning("graft_ivm_repair") {
+      assert(refreshMode("mv7") === "incremental-repair")
+    }
+    assert(repairSpools.nonEmpty, "a retracted extremum recomputes through the spool")
     assert(graft.sources.JsonlStats.currentVersion(backing) === v0 + 1)
     assert(mvRows("mv7") === direct(body))
     val a = mvRows("mv7").find(_.getString(0) == "a").get
