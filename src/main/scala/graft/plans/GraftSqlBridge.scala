@@ -3,9 +3,10 @@ package org.apache.spark.sql.graftops
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The `private[sql]` doorways the custom-operator API needs:
-  * constructing a DataFrame from a custom LogicalPlan (`Dataset.ofRows`
-  * has no public equivalent), and raising the SAME decimal-overflow
+/** The `private[sql]` doorways the engine needs: constructing a
+  * DataFrame from a custom LogicalPlan (`Dataset.ofRows` has no public
+  * equivalent), cloning a session (`cloneSession` has none either), and
+  * raising the SAME decimal-overflow
   * error Cast/CheckOverflow raise (so the native decimal folds are
   * indistinguishable from the HOF chain under ANSI, error class
   * included). Lives under `org.apache.spark.sql` for scope access only —
@@ -14,6 +15,13 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A new session over the same SparkContext and shared state holding
+    * copies of `spark`'s confs, temp views, functions and execution
+    * listeners; what is set or registered on either afterwards stays on
+    * that one. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** `DataTypeErrors.cannotChangeDecimalPrecisionError` — what ANSI
     * Cast(decimal) and CheckOverflow throw on overflow

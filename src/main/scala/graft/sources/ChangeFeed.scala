@@ -108,6 +108,11 @@ object ChangeFeed {
     derivedScan(spark, root, s"_cdf/v${v}_pin$nonce.jsonl", stats, eqs)
   }
 
+  /** Live rows of version `v`, from its manifest (what a [[pinnedScan]]
+    * of it reads, before equality deletes). */
+  def liveRowsAt(root: String, v: Int): Long =
+    statsAt(root, v)._1.iterator.map(_.live).sum
+
   /** The derived manifest a [[pinnedScan]] call with this (version,
     * nonce) wrote — callers delete it once the pinned plan is spent. */
   def pinnedManifest(root: String, v: Int, nonce: String): java.nio.file.Path =
@@ -129,6 +134,10 @@ object ChangeFeed {
     /** No row left the table: MIN/MAX merge freely (an insert only ever
       * extends an extremum, a deletion can retract one). */
     def insertOnly: Boolean = removed.isEmpty && retracted.isEmpty
+
+    /** Rows the signed feed of this window reads: each removed or added
+      * entry's live rows, each retracted entry's newly deleted ones. */
+    def rows: Long = (removed.iterator ++ retracted ++ added).map(_.live).sum
   }
 
   def windowDiff(root: String, fromV: Int, toV: Int): WindowDiff = {

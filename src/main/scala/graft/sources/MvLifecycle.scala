@@ -35,6 +35,21 @@ object MvLifecycle {
     * column; past it, by a semi-join against the delta's groups. */
   private[graft] val RepairMaxGroups = 10000
 
+  /** Rows read (window legs, version-pinned leaves, MERGE targets) up
+    * to which an incremental refresh runs interpreted: no whole-stage
+    * codegen, no generated expression classes. A small refresh then
+    * compiles next to nothing, where compiled it spends more time in
+    * the Java compiler than on its rows. Placed from a measured sweep
+    * (SCALING.md "Small refreshes run interpreted"): a join refresh
+    * reading 59k rows ran as fast or faster interpreted, one reading
+    * 588k rows ran twice as fast compiled. */
+  private[graft] val InterpretMaxRows = 100000L
+
+  /** The settings of an interpreted refresh. */
+  private val Interpreted = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   class MvDdlUnbound(catName: String, root: String, verb: String) extends UnboundProcedure {
     override def name(): String = verb
     override def description(): String = verb match {
@@ -351,6 +366,15 @@ object MvLifecycle {
   private[sources] def dropOwnedTables(nsDir: Path, d: GraftViews.ViewDef): Unit =
     dropTables(nsDir, d.properties.get(GraftViews.MvTableProp).toSeq ++ auxTablesOf(d))
 
+  /** Run `body` with `spark` as this thread's active session, then put
+    * back the one that was active before. */
+  private def withActive[T](spark: SparkSession)(body: => T): T = {
+    import org.apache.spark.sql.classic.{SparkSession => Classic}
+    val before = Classic.getActiveSession
+    Classic.setActiveSession(spark.asInstanceOf[Classic])
+    try body finally before.fold(Classic.clearActiveSession())(Classic.setActiveSession)
+  }
+
   /** Run `bodies` on their own threads with `spark` active (a lone body
     * runs inline), wait for every one to settle, then rethrow the FIRST
     * failure — so the caller never sees an error while another body is
@@ -474,9 +498,11 @@ object MvLifecycle {
   /** Attempt the delta-merge refresh; Some(mode) when it (or a no-op)
     * settled the MV, None to fall back to the full rebuild. Every
     * unprovable condition declines BEFORE any state is touched; only
-    * the MERGE itself runs inside the pending bracket. */
+    * the MERGE itself runs inside the pending bracket. The checks read
+    * `caller`; everything that runs a query or registers a view does
+    * so on a private session derived from it. */
   private def tryIncrementalRefresh(
-      spark: SparkSession, root: String, nsDir: Path,
+      caller: SparkSession, root: String, nsDir: Path,
       catName: String, cat: GraftCatalog, ident: Identifier,
       backingFqn: String, d: GraftViews.ViewDef,
       recorded: Seq[(String, Int)], head: Seq[(String, Int)]): Option[String] = {
@@ -505,12 +531,12 @@ object MvLifecycle {
     if (movers.isEmpty) return None // set drift (shouldn't happen): RTAS
     if (movers.exists { case (t, v) => v >= headMap(t) }) return None
     try {
-      val analyzed = classicPlan(Bridge.ofRows(spark,
-        new graft.plans.ResolveGraftViews(spark).bodyPlan(catName, cat, ident, d)))
+      val analyzed = classicPlan(Bridge.ofRows(caller,
+        new graft.plans.ResolveGraftViews(caller).bodyPlan(catName, cat, ident, d)))
       val shape = MvIncremental.detect(analyzed).getOrElse(return None)
       // the backing must already carry the state columns (it might
       // predate r13 or have been built by a non-maintainable twin)
-      val backingCols = spark.table(backingFqn).schema.fieldNames.toSet
+      val backingCols = caller.table(backingFqn).schema.fieldNames.toSet
       if (!shape.auxCols.forall(backingCols.contains)) return None
       // COUNT(DISTINCT) slots (r15) additionally need their
       // per-(group, value) liveness tables — a backing predating the
@@ -565,19 +591,6 @@ object MvLifecycle {
       // regardless of its own insert-onlyness (its flip rows retract).
       val deleting = shape.minMaxSlots.nonEmpty &&
         (compMover || diffs.valuesIterator.exists(!_.insertOnly))
-      // signed delta + the delta aggregate, ANALYZED before anything
-      // mutates (a vacuumed window or unrenderable expression lands
-      // here, declining to RTAS). The nonce makes this call's derived
-      // _cdf manifests private — deletable on exit without racing a
-      // concurrent refresh of ANOTHER view over the same source.
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val viewTag = math.abs(backingFqn.hashCode)
-      val signedView = s"graft_ivm_signed_$viewTag"
-      val deltaView = s"graft_ivm_delta_$viewTag"
-      val auxDeltaViews = shape.distinctSlots.map(s =>
-        s.j -> s"graft_ivm_dvals_${viewTag}_${s.j}").toMap
-      val auxReadViews = shape.distinctSlots.map(s =>
-        s.j -> s"graft_ivm_dcur_${viewTag}_${s.j}").toMap
       // left-outer bodies (r15/r16): a LINEAR mover splices directly;
       // a COMP mover (single-leaf right side of a left-outer join)
       // splices via the Griffin–Libkin flip term, built below with
@@ -586,25 +599,6 @@ object MvLifecycle {
       // expresses it. Decline before any state.
       if (moverIdxs.exists(i => !statusOf(i).exists(_ != MvIncremental.FrozenMover)))
         return None
-      val termViews = moverIdxs.indices.map(k => s"${signedView}_t$k")
-      val candidateView = s"graft_ivm_cand_$viewTag"
-      // version-pinned scans, one per (root, version) actually used —
-      // each a PRIVATE manifest snapshot under _cdf/ (swept below)
-      val pinnedScans = scala.collection.mutable.Map.empty[(String, Int), LogicalPlan]
-      // parquet spools of the repair rows (swept below)
-      val repairSpools = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val persistedDeltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      try {
-      // one telescoping term per mover occurrence: that leaf reads
-      // its signed (fromV, toV] window at ±1, EARLIER leaves read
-      // live, LATER mover occurrences read their recorded manifest
-      // (version-pinned scan) — the body's own filter/join structure
-      // applies verbatim above each term, and the terms union into
-      // one signed view (Δview telescopes over leaf occurrences)
-      val signedByRoot = diffs.map { case (r, d) =>
-        r -> classicPlan(ChangeFeed.signedChanges(spark, d, nonce)) }
-      def pinnedAt(r: String, v: Int): LogicalPlan =
-        pinnedScans.getOrElseUpdate((r, v), classicPlan(ChangeFeed.pinnedScan(spark, r, v, nonce)))
       val recordedVerByRoot = ms.map(m => m.root -> m.fromV).toMap
       // the pin version for leaf occurrence j inside the term whose
       // signed occurrence is i (ADVICE r14 — EVERY leaf pins, so the
@@ -617,19 +611,94 @@ object MvLifecycle {
         if (j > signedI && moverRoots.contains(r)) recordedVerByRoot(r)
         else headVerByRoot(r)
       }
+      // the version-pinned reads of each term: its other leaves, and a
+      // COMP mover's old state
+      val termPins = moverIdxs.map(i =>
+        leafRoots.indices.filter(_ != i).map(j => j -> (leafRoots(j) -> pinVersion(j, i))).toMap)
+      val oldPins = moverIdxs.map(i =>
+        Option.when(statusOf(i).contains(MvIncremental.CompMover))(
+          leafRoots(i) -> recordedVerByRoot(leafRoots(i))))
+      // the MERGE targets: the backing and the liveness tables. They
+      // only change under this view's refresh lock, so what is read
+      // here holds until the MERGEs.
+      val targets = (d.properties(GraftViews.MvTableProp) +: auxNameByJ.values.toSeq)
+        .map(n => nsDir.resolve(n).toString).map(r => r -> JsonlStats.readStats(r))
+      // Cost-based ELISION of Spark's runtime group-filter subquery
+      // (r17, guide §3.2's own logic turned around): for group-based
+      // row-level ops the optimizer injects a runtime subquery that
+      // pre-computes the affected _file set so the rewrite prunes
+      // unaffected files — one extra subquery JOB per MERGE whose
+      // only possible benefit is the files it prunes. When the
+      // TARGET fits in a single scan task (total bytes ≤
+      // maxPartitionBytes over at most a handful of files) the prune
+      // can never repay the job, exactly the inverse of the
+      // application-side-size threshold Spark's runtime bloom-filter
+      // injection uses. The gate reads the target's ACTUAL manifest:
+      // a large backing at cluster scale keeps its group filter
+      // automatically (past 64 manifest entries the gate does not
+      // even stat the files). Semantics are unchanged either way —
+      // the filter is purely a rewrite-set prune; without it the
+      // rewrite re-emits unmatched rows of unpruned files verbatim.
+      def singleTask(r: String, st: Seq[JsonlStats.FileStats]): Boolean =
+        st.length <= 64 && {
+          val bytes = st.iterator.map { e =>
+            try Files.size(Paths.get(r, e.file))
+            catch { case _: Exception => Long.MaxValue / 128 }
+          }.sum
+          bytes <= caller.sessionState.conf.filesMaxPartitionBytes
+        }
+      val elideGroupFilter = targets.forall { case (r, st) => singleTask(r, st) }
+      // the rows the refresh reads, from the manifests above: the
+      // window legs, the terms' pinned leaves and the MERGE targets (a
+      // MIN/MAX repair reads only its lost groups' files). At most
+      // InterpretMaxRows of them run interpreted (see its doc).
+      val readRows = diffs.valuesIterator.map(_.rows).sum +
+        (termPins.flatMap(_.values) ++ oldPins.flatten).distinct
+          .map { case (r, v) => ChangeFeed.liveRowsAt(r, v) }.sum +
+        targets.iterator.flatMap(_._2).map(_.live).sum
+      // everything from here on runs on a PRIVATE session derived from
+      // the caller's: its settings and temp views never reach the
+      // caller, whichever other refresh runs beside this one
+      val spark = graft.util.Confs.derived(caller,
+        (Option.when(elideGroupFilter)(
+          "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled" -> "false") ++
+          (if (readRows <= InterpretMaxRows) Interpreted else Nil)).toSeq: _*)
+      // signed delta + the delta aggregate, ANALYZED before anything
+      // mutates (a vacuumed window or unrenderable expression lands
+      // here, declining to RTAS). The nonce makes this call's derived
+      // _cdf manifests private — deletable on exit without racing a
+      // concurrent refresh of ANOTHER view over the same source.
+      val nonce = java.util.UUID.randomUUID().toString.take(8)
+      val signedView = "graft_ivm_signed"
+      val deltaView = "graft_ivm_delta"
+      val auxDeltaViews = shape.distinctSlots.map(s => s.j -> s"graft_ivm_dvals_${s.j}").toMap
+      val auxReadViews = shape.distinctSlots.map(s => s.j -> s"graft_ivm_dcur_${s.j}").toMap
+      val termViews = moverIdxs.indices.map(k => s"${signedView}_t$k")
+      val candidateView = "graft_ivm_cand"
+      // version-pinned scans, one per (root, version) actually used —
+      // each a PRIVATE manifest snapshot under _cdf/ (swept below)
+      val pinnedScans = scala.collection.mutable.Map.empty[(String, Int), LogicalPlan]
+      // parquet spools of the repair rows (swept below)
+      val repairSpools = scala.collection.mutable.ArrayBuffer.empty[Path]
+      val persistedDeltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      withActive(spark) { try {
+      // one telescoping term per mover occurrence: that leaf reads
+      // its signed (fromV, toV] window at ±1, EARLIER leaves read
+      // live, LATER mover occurrences read their recorded manifest
+      // (version-pinned scan) — the body's own filter/join structure
+      // applies verbatim above each term, and the terms union into
+      // one signed view (Δview telescopes over leaf occurrences)
+      val signedByRoot = diffs.map { case (r, d) =>
+        r -> classicPlan(ChangeFeed.signedChanges(spark, d, nonce)) }
+      def pinnedAt(pin: (String, Int)): LogicalPlan = pinnedScans.getOrElseUpdate(pin,
+        classicPlan(ChangeFeed.pinnedScan(spark, pin._1, pin._2, nonce)))
       val childNames = shape.aggregate.child.output.map(_.name)
       moverIdxs.zipWithIndex.foreach { case (i, k) =>
-        val pin = leafRoots.indices.filter(_ != i)
-          .map(j => j -> pinnedAt(leafRoots(j), pinVersion(j, i))).toMap
         // a COMP mover's flip set needs the moved leaf's OLD state
         // too: the n0 probe reads it at the RECORDED version (the
         // window's fromV), key-bounded by the window's join keys
-        val oldPin =
-          if (statusOf(i).contains(MvIncremental.CompMover))
-            Some(pinnedAt(leafRoots(i), recordedVerByRoot(leafRoots(i))))
-          else None
-        val term = MvIncremental.splicedTerm(
-          shape, i, signedByRoot(leafRoots(i)), pin, oldPin).getOrElse(return None)
+        val term = MvIncremental.splicedTerm(shape, i, signedByRoot(leafRoots(i)),
+          termPins(k).view.mapValues(pinnedAt).toMap, oldPins(k).map(pinnedAt)).getOrElse(return None)
         // normalize column ORDER across terms (the `_sign` tag sits
         // wherever the signed leaf sits in the join output)
         Bridge.ofRows(spark, term)
@@ -670,7 +739,7 @@ object MvLifecycle {
         // state — which is what lets the main and liveness MERGEs
         // below run CONCURRENTLY (guide §2.6). Registered in
         // pinnedScans, so the finally sweeps the snapshot.
-        val auxRead = Bridge.ofRows(spark, pinnedAt(auxRoot, JsonlStats.currentVersion(auxRoot)))
+        val auxRead = Bridge.ofRows(spark, pinnedAt(auxRoot -> JsonlStats.currentVersion(auxRoot)))
         // the leg's LEFT JOIN only ever matches inside the window's
         // group bands — restrict the liveness read to them so
         // clustered grains prune its files instead of scanning the
@@ -680,13 +749,18 @@ object MvLifecycle {
           .createOrReplaceTempView(auxReadViews(s.j))
       }
       val delta = spark.sql(MvIncremental.deltaSql(shape, signedView, auxReadViews, auxDeltaViews))
-      // the delta is consumed several times on deleting windows (the
+      // a deleting window reads the delta several times (the
       // retracted-extremum probe, the repair restriction's bounds and
-      // semi-join build, the maintenance MERGE itself) — persist it
-      // so the signed window is SCANNED ONCE however many consumers
-      // read it (delta-sized state, spills if ever large)
-      delta.persist(StorageLevel.MEMORY_AND_DISK)
-      persistedDeltas += delta
+      // semi-join build, the maintenance MERGE), and so does a MERGE
+      // that keeps its runtime group filter (a subquery over the
+      // source) — persist it then, so the signed window is SCANNED
+      // ONCE (delta-sized state, spills if ever large). Otherwise the
+      // MERGE is its only reader and a cache fill would cost one more
+      // job for nothing.
+      if (deleting || !elideGroupFilter) {
+        delta.persist(StorageLevel.MEMORY_AND_DISK)
+        persistedDeltas += delta
+      }
       // group-scoped MIN/MAX repair, built BEFORE any state moves, for
       // exactly the groups that may have LOST the extremum the merge
       // would keep: a probe of the delta against the backing finds
@@ -726,7 +800,7 @@ object MvLifecycle {
             // source commit would otherwise repair extrema from data
             // newer than the versions this refresh records
             val pinnedAll = leafRoots.indices
-              .map(j => j -> pinnedAt(leafRoots(j), headVerByRoot(leafRoots(j)))).toMap
+              .map(j => j -> pinnedAt(leafRoots(j) -> headVerByRoot(leafRoots(j)))).toMap
             val src = Bridge.ofRows(
               spark, MvIncremental.pinnedChild(shape, pinnedAll).getOrElse(return None))
             val mm = shape.minMaxSlots
@@ -784,88 +858,53 @@ object MvLifecycle {
       GraftViews.write(nsDir, d.copy(properties = d.properties +
         (GraftViews.MvPendingProp ->
           ms.map(m => s"${m.fromV}->${m.toV}").mkString(","))), replace = true)
-      // Cost-based ELISION of Spark's runtime group-filter subquery
-      // (r17, guide §3.2's own logic turned around): for group-based
-      // row-level ops the optimizer injects a runtime subquery that
-      // pre-computes the affected _file set so the rewrite prunes
-      // unaffected files — one extra subquery JOB per MERGE whose
-      // only possible benefit is the files it prunes. When the
-      // TARGET fits in a single scan task (total bytes ≤
-      // maxPartitionBytes over at most a handful of files) the prune
-      // can never repay the job, exactly the inverse of the
-      // application-side-size threshold Spark's runtime bloom-filter
-      // injection uses. The gate reads the target's ACTUAL manifest:
-      // a large backing at cluster scale keeps its group filter
-      // automatically (past 64 manifest entries the gate does not
-      // even stat the files). Semantics are unchanged either way —
-      // the filter is purely a rewrite-set prune; without it the
-      // rewrite re-emits unmatched rows of unpruned files verbatim.
-      // The flip is scoped to these MERGEs: the caller's value comes
-      // back afterwards, set or unset.
-      def singleTaskTable(r: String): Boolean = {
-        val st = JsonlStats.readStats(r)
-        st.length <= 64 && {
-          val bytes = st.iterator.map { e =>
-            try Files.size(Paths.get(r, e.file))
-            catch { case _: Exception => Long.MaxValue / 128 }
-          }.sum
-          bytes <= spark.sessionState.conf.filesMaxPartitionBytes
-        }
-      }
-      val elideGroupFilter =
-        singleTaskTable(nsDir.resolve(d.properties(GraftViews.MvTableProp)).toString) &&
-          auxNameByJ.values.forall(an => singleTaskTable(nsDir.resolve(an).toString))
-      graft.util.Confs.withConfs(spark, Option.when(elideGroupFilter)(
-          "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled" -> "false").toSeq: _*) {
-        try {
-          // main MERGE and the liveness MERGEs run CONCURRENTLY
-          // (r17, guide §2.6 / VERDICT r16 #1 "fuse aux/liveness
-          // MERGEs where ordering allows").
-          // Ordering is free to drop because (a) the delta's
-          // distinct leg reads the liveness state through the
-          // version-PINNED snapshot above — the liveness commit
-          // cannot change what any plan or recompute of the delta
-          // sees; (b) the two chains mutate DISJOINT tables, each
-          // behind its own atomic manifest swap; (c) both run inside
-          // the same pending bracket, so a failure of either leaves
-          // the marker standing exactly as a sequential run would.
-          runConcurrently(spark, (() => { spark.sql(merge); () }) +:
-            Option.when(auxMerges.nonEmpty)(() => auxMerges.foreach(spark.sql(_))).toSeq)
-          GraftViews.write(nsDir, d.copy(properties = d.properties +
-            (GraftViews.MvSourcesProp -> GraftViews.mvSourcesEncode(head))
-            - GraftViews.MvPendingProp), replace = true)
-          Some(if (repairedDelta.isDefined) "incremental-repair" else "incremental")
-        } catch {
-          case _: Exception =>
-            // once spark.sql(merge) has been INVOKED, a failure cannot
-            // prove the main MERGE did not commit (a liveness merge,
-            // or the version re-record, may be what failed) — so the
-            // marker STAYS STANDING (ADVICE r14): reads keep taking the
-            // correct body path, and whichever refresh completes next
-            // is forced through the full RTAS, which clears the marker
-            // AFTER the rebuild commits. Clearing it here would open a
-            // crash window (marker gone, half-applied backing, stale
-            // recorded versions) in which the same delta window could
-            // be applied twice.
-            None
-        }
+      try {
+        // main MERGE and the liveness MERGEs run CONCURRENTLY
+        // (r17, guide §2.6 / VERDICT r16 #1 "fuse aux/liveness
+        // MERGEs where ordering allows").
+        // Ordering is free to drop because (a) the delta's
+        // distinct leg reads the liveness state through the
+        // version-PINNED snapshot above — the liveness commit
+        // cannot change what any plan or recompute of the delta
+        // sees; (b) the two chains mutate DISJOINT tables, each
+        // behind its own atomic manifest swap; (c) both run inside
+        // the same pending bracket, so a failure of either leaves
+        // the marker standing exactly as a sequential run would.
+        runConcurrently(spark, (() => { spark.sql(merge); () }) +:
+          Option.when(auxMerges.nonEmpty)(() => auxMerges.foreach(spark.sql(_))).toSeq)
+        GraftViews.write(nsDir, d.copy(properties = d.properties +
+          (GraftViews.MvSourcesProp -> GraftViews.mvSourcesEncode(head))
+          - GraftViews.MvPendingProp), replace = true)
+        Some(if (repairedDelta.isDefined) "incremental-repair" else "incremental")
+      } catch {
+        case _: Exception =>
+          // once spark.sql(merge) has been INVOKED, a failure cannot
+          // prove the main MERGE did not commit (a liveness merge,
+          // or the version re-record, may be what failed) — so the
+          // marker STAYS STANDING (ADVICE r14): reads keep taking the
+          // correct body path, and whichever refresh completes next
+          // is forced through the full RTAS, which clears the marker
+          // AFTER the rebuild commits. Clearing it here would open a
+          // crash window (marker gone, half-applied backing, stale
+          // recorded versions) in which the same delta window could
+          // be applied twice.
+          None
       }
       } finally {
         // every exit path — success, merge failure, or a decline
-        // AFTER temp views were created (a failed splice term, an unpinnable
-        // repair child) — drops the session temp views it created and
-        // sweeps the derived _cdf manifests: the signed window legs
-        // per mover plus every version-pin snapshot. Nothing else
-        // (vacuum included) would ever sweep them (ADVICE r13/r14).
-        (termViews ++ Seq(signedView, deltaView, candidateView) ++ auxDeltaViews.values ++
-          auxReadViews.values).foreach(spark.catalog.dropTempView)
+        // AFTER derived manifests were written (a failed splice term,
+        // an unpinnable repair child) — sweeps the derived _cdf
+        // manifests: the signed window legs per mover plus every
+        // version-pin snapshot. Nothing else (vacuum included) would
+        // ever sweep them (ADVICE r13/r14). The temp views die with
+        // the private session.
         ms.foreach(m => ChangeFeed.signedManifests(m.root, m.fromV, m.toV, nonce)
           .foreach(Files.deleteIfExists))
         pinnedScans.keys.foreach { case (r, v) =>
           Files.deleteIfExists(ChangeFeed.pinnedManifest(r, v, nonce)) }
         repairSpools.foreach(p => graft.util.Fs.deleteRecursively(p.toString))
         persistedDeltas.foreach(_.unpersist(false))
-      }
+      } }
     } catch {
       case _: Exception => None // any unprovable leg: RTAS
     }

@@ -49,31 +49,34 @@ class MvIncrementalSpec extends SparkSpec {
   private def direct(sql: String): Seq[org.apache.spark.sql.Row] =
     spark.sql(sql + " ORDER BY 1").collect().toSeq
 
-  /** Logical plans of the queries `f` ran (nested ones included) whose
-    * text mentions `marker`. Listener calls arrive asynchronously, in
-    * order: a sentinel query run after `f` bounds the wait. */
-  private def plansMentioning(marker: String)(f: => Unit): Seq[String] = {
+  /** The queries `f` ran (nested ones included), on the caller's
+    * session or on one cloned from it. Listener calls arrive
+    * asynchronously, in order: a sentinel query run after `f` bounds
+    * the wait. */
+  private def queriesRun(f: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
     import org.apache.spark.sql.execution.QueryExecution
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(qe.logical.toString)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(qe.logical.toString)
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
     }
     val manager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
     val sentinel = s"mvinc_sentinel_${System.nanoTime()}"
+    def sentinelSeen = seen.asScala.exists(_.logical.toString.contains(sentinel))
     manager.register(listener)
     try {
       f
       spark.range(1).selectExpr(s"'$sentinel' AS s").collect()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_.contains(sentinel)) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.asScala.exists(_.contains(sentinel)), "listener never saw the sentinel")
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinelSeen, "listener never saw the sentinel")
     } finally manager.unregister(listener)
-    seen.asScala.filter(_.contains(marker)).toSeq
+    seen.asScala.toSeq
   }
+
+  /** Logical plans of the queries `f` ran whose text mentions `marker`. */
+  private def plansMentioning(marker: String)(f: => Unit): Seq[String] =
+    queriesRun(f).map(_.logical.toString).filter(_.contains(marker))
 
   test("delta-merge refresh equals the full recompute through appends, " +
     "deletes, group birth/death, and NULL-sum restoration") {
@@ -837,5 +840,148 @@ class MvIncrementalSpec extends SparkSpec {
     spark.sql("INSERT INTO mvinc.src7 VALUES ('c', -2.0)")
     assert(refreshMode("mv7") === "incremental")
     assert(mvRows("mv7") === direct(body))
+  }
+
+  test("session hygiene: concurrent refreshes of two views leave the caller's " +
+    "confs and temp views exactly as they were") {
+    cat
+    Seq("h1", "h2").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS mvinc.src_$t")
+      Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("k", "v").createOrReplaceTempView("mvinc_seed_h")
+      spark.sql(s"CREATE TABLE mvinc.src_$t AS SELECT * FROM mvinc_seed_h")
+    }
+    spark.catalog.dropTempView("mvinc_seed_h")
+    val bodies = Map(
+      "h1" -> ("SELECT k, count(*) AS n, CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sv " +
+        "FROM mvinc.src_h1 GROUP BY k"),
+      "h2" -> "SELECT k, min(v) AS mn, max(v) AS mx, count(*) AS n FROM mvinc.src_h2 GROUP BY k")
+    bodies.foreach { case (t, b) =>
+      spark.sql(s"CALL mvinc.create_materialized_view('mv_$t', '$b', or_replace => true)")
+    }
+    def tempViews(): Seq[String] = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog.getTempViewNames().sorted
+    val confsBefore = spark.conf.getAll
+    val viewsBefore = tempViews()
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val modes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val futures = bodies.keys.toSeq.map(t => pool.submit(new Runnable {
+      override def run(): Unit = {
+        barrier.await()
+        (1 to 4).foreach { i =>
+          spark.sql(s"INSERT INTO mvinc.src_$t VALUES ('k$i', ${i * 10}.0), ('a', $i.5)")
+          // the MIN/MAX view's windows delete too: its probe runs
+          if (t == "h2") spark.sql(s"DELETE FROM mvinc.src_h2 WHERE k = 'k${i - 1}'")
+          modes.add(refreshMode(s"mv_$t"))
+        }
+      }
+    }))
+    try futures.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    finally pool.shutdown()
+    assert(modes.asScala.forall(_.startsWith("incremental")), modes.asScala)
+    bodies.foreach { case (t, b) => assert(mvRows(s"mv_$t") === direct(b), t) }
+    val confsAfter = spark.conf.getAll
+    val moved = (confsBefore.keySet ++ confsAfter.keySet)
+      .filter(k => confsBefore.get(k) != confsAfter.get(k))
+    assert(moved.isEmpty, "refreshes left session confs behind: " +
+      moved.map(k => s"$k: ${confsBefore.get(k)} -> ${confsAfter.get(k)}").mkString(", "))
+    assert(tempViews() === viewsBefore)
+  }
+
+  test("session hygiene: no graft_ivm_* temp view is ever registered on the " +
+    "caller's session — every query over one runs on a private session") {
+    cat
+    spark.sql("DROP TABLE IF EXISTS mvinc.src_h3")
+    Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)).toDF("k", "v").createOrReplaceTempView("mvinc_seed_h3")
+    spark.sql("CREATE TABLE mvinc.src_h3 AS SELECT * FROM mvinc_seed_h3")
+    val body = "SELECT k, min(v) AS mn, max(v) AS mx, count(*) AS n FROM mvinc.src_h3 GROUP BY k"
+    spark.sql(s"CALL mvinc.create_materialized_view('mv_h3', '$body', or_replace => true)")
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // a DELETE of a stored extremum: the window runs the signed feed,
+    // the probe, the repair and the MERGE
+    spark.sql("INSERT INTO mvinc.src_h3 VALUES ('c', 4.0)")
+    spark.sql("DELETE FROM mvinc.src_h3 WHERE v = 5.0")
+    val seenOnCaller = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var refreshing = true
+    val poller = new Thread(() => while (refreshing) {
+      classic.sessionState.catalog.getTempViewNames().filter(_.startsWith("graft_ivm_"))
+        .foreach(seenOnCaller.add)
+    })
+    poller.start()
+    val queries = try queriesRun(assert(refreshMode("mv_h3") === "incremental-repair"))
+    finally { refreshing = false; poller.join() }
+    assert(mvRows("mv_h3") === direct(body))
+    val overViews = queries.filter(_.logical.toString.contains("graft_ivm_delta"))
+    assert(overViews.nonEmpty, "the refresh ran no query over its delta view")
+    assert(overViews.forall(_.sparkSession ne spark),
+      "a query over a graft_ivm_* view ran on the caller's session")
+    assert(seenOnCaller.isEmpty, seenOnCaller.asScala)
+  }
+
+  test("a warm small refresh compiles next to nothing, however many classes " +
+    "the codegen cache has seen since the last one") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    cat
+    spark.sql("DROP TABLE IF EXISTS mvinc.src_cg")
+    Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v").createOrReplaceTempView("mvinc_seed_cg")
+    spark.sql("CREATE TABLE mvinc.src_cg AS SELECT * FROM mvinc_seed_cg")
+    val body = "SELECT k, count(*) AS n, CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sv " +
+      "FROM mvinc.src_cg GROUP BY k"
+    spark.sql(s"CALL mvinc.create_materialized_view('mv_cg', '$body', or_replace => true)")
+    spark.sql("INSERT INTO mvinc.src_cg VALUES ('a', 3.0), ('c', 4.0)")
+    assert(refreshMode("mv_cg") === "incremental")
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // more distinct generated classes than Spark's codegen cache keeps
+    // (100): whatever the refresh compiled before is evicted
+    val churnFrom = compiles
+    (1 to 120).foreach(i => spark.range(4).selectExpr(s"id * ${i + 7} + $i AS x")
+      .filter(s"x % ${i + 2} >= 0").collect())
+    assert(compiles - churnFrom > 100, "the churn compiled too few classes to evict anything")
+    spark.sql("INSERT INTO mvinc.src_cg VALUES ('a', 5.0), ('d', 6.0)")
+    val from = compiles
+    assert(refreshMode("mv_cg") === "incremental")
+    val compiled = compiles - from
+    // the few left are Spark generators with no interpreted path: the
+    // MERGE's row predicates (MergeRowsExec) and the partial
+    // aggregate's row joiner; compiled, this refresh makes about 34
+    val maxCompiles = 12
+    assert(compiled <= maxCompiles,
+      s"the refresh compiled $compiled classes (at most $maxCompiles expected)")
+    // the next refresh finds them all cached: its tasks run under the
+    // same executor class loader as the previous refresh's (the codegen
+    // cache is keyed by loader and source)
+    spark.sql("INSERT INTO mvinc.src_cg VALUES ('b', 7.0)")
+    val warmFrom = compiles
+    assert(refreshMode("mv_cg") === "incremental")
+    assert(compiles - warmFrom <= 2,
+      s"a refresh right after another compiled ${compiles - warmFrom} classes (at most 2 expected)")
+    assert(mvRows("mv_cg") === direct(body))
+  }
+
+  test("the interpreted gate: a refresh reading at most InterpretMaxRows rows plans " +
+    "no whole-stage codegen; one reading more keeps it") {
+    cat
+    val stage = """\*\(\d+\) """.r
+    def codegenPlans(view: String): Seq[String] =
+      queriesRun(assert(refreshMode(view) === "incremental"))
+        .filter(_.sparkSession ne spark)
+        .map(qe => scala.util.Try(qe.executedPlan.toString).getOrElse(""))
+        .filter(stage.findFirstIn(_).isDefined)
+    def sumMv(name: String, rows: Long): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS mvinc.src_$name")
+      spark.sql(s"CREATE TABLE mvinc.src_$name AS SELECT id AS k, CAST(id % 7 AS DOUBLE) AS v " +
+        s"FROM range($rows)")
+      val body = "SELECT k, count(*) AS n, CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sv " +
+        s"FROM mvinc.src_$name GROUP BY k"
+      spark.sql(s"CALL mvinc.create_materialized_view('mv_$name', '$body', or_replace => true)")
+      spark.sql(s"INSERT INTO mvinc.src_$name VALUES (0, 1.0), (${rows + 1}, 2.0)")
+    }
+    // a one-row-per-key MV: the backing alone holds the source's rows
+    sumMv("gate_small", 50)
+    val small = codegenPlans("mv_gate_small")
+    assert(small.isEmpty, s"a small refresh planned whole-stage codegen:\n${small.mkString("\n")}")
+    sumMv("gate_big", graft.sources.MvLifecycle.InterpretMaxRows + 1)
+    assert(codegenPlans("mv_gate_big").nonEmpty,
+      "a refresh past InterpretMaxRows planned no whole-stage codegen")
   }
 }
