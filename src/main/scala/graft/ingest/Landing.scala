@@ -116,19 +116,30 @@ object Landing {
     * tooling keyed on `_FIXTURE_OK` could not see sibling `__ok`
     * markers, and a wiped dir beside a stale sibling marker would
     * silently serve a missing table): marker INSIDE the directory, so
-    * wiping the directory always forces a rebuild. Spark readers
-    * ignore underscore-prefixed files. A PlanShapeSpec source scan
-    * keeps the marker literal out of every other file. */
+    * wiping the directory always forces a rebuild. The marker holds the
+    * directory's absolute path: built fixtures record absolute paths
+    * (stream source logs, catalog roots), so a directory copied or
+    * moved elsewhere reads as unbuilt there and rebuilds once. Spark
+    * readers ignore underscore-prefixed files. A PlanShapeSpec source
+    * scan keeps the marker literal out of every other file. */
   def ensureBuilt(dir: String)(build: String => Unit): String = {
     val marker = Paths.get(dir, "_FIXTURE_OK")
-    if (!Files.exists(marker)) {
+    val stamp = Paths.get(dir).toAbsolutePath.normalize.toString.getBytes("UTF-8")
+    if (!Files.exists(marker) || !java.util.Arrays.equals(Files.readAllBytes(marker), stamp)) {
       graft.util.Fs.deleteRecursively(dir)
       build(dir)
-      Files.write(marker, Array.emptyByteArray,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      Files.write(marker, stamp, StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     }
     dir
   }
+
+  /** A stream's persistent state directory, its sink and checkpoint
+    * inside, kept under the build-once marker. A checkout copied to
+    * another path rebuilds the fixtures a stream reads, so it must also
+    * start the stream over: the old checkpoint and sink log name the
+    * old absolute paths. */
+  def streamState(sfDir: String, name: String): String =
+    ensureBuilt(fixtureDir(sfDir, name))(d => Files.createDirectories(Paths.get(d)))
 
   /** Write a bounded dimension as ONE multiLine JSON array file — the
     * static `customers.json` fixture shape. Dim tables are bounded by

@@ -749,14 +749,6 @@ object MvIncremental {
     rec(shape.aggregate.child)
   }
 
-  /** Back-compat single-mover shape: the tree with ONE moved leaf
-    * signed and everything else live. */
-  def splicedChild(shape: Shape, moved: DataSourceV2Relation,
-                   signed: LogicalPlan): Option[LogicalPlan] =
-    shape.leaves.zipWithIndex.collectFirst {
-      case (l, i) if l eq moved => i
-    }.flatMap(i => splicedTerm(shape, i, signed, Map.empty))
-
   /** The body plan with the hidden state columns appended: same
     * grouping, same child, aggregate list extended with the liveness
     * COUNT(*), each slot's raw aggregate, and each SUM slot's non-null
@@ -870,7 +862,7 @@ object MvIncremental {
   }
 
   /** The delta aggregate over a temp view of the SPLICED source tree
-    * ([[splicedChild]] — body filter, projections and joins already
+    * ([[splicedTerm]] — body filter, projections and joins already
     * applied, `_sign` riding): group keys by the SAME expressions,
     * every slot as a signed sum. Negative or zero net groups are
     * legitimate (deletions); the merge consumes the signs. A MIN/MAX

@@ -221,8 +221,8 @@ object MergeUpsert extends QueryModule {
     * one version. */
   def streamMergeUpsert(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val silverDir = Landing.fixtureDir(d, "silver_merge_stream")
-    val ckpt = Landing.fixtureDir(d, "silver_merge_stream_ckpt")
+    val state = Landing.streamState(d, "silver_merge_stream")
+    val (silverDir, ckpt) = (s"$state/silver", s"$state/ckpt")
     val wire = deltaEvents(spark, d).select(
       $"event_id", $"user_id", $"event_type", $"value",
       date_format($"ts", tsFmt).as("ts_str"), $"load_seq")

@@ -1012,59 +1012,23 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
 
   /** Maintenance procedures (`ProcedureCatalog`): CALL-addressable
     * table services — `CALL <cat>.compact('<table>', <target_bytes>)`
-    * bin-packs small data files ([[GraftProcedures]]). */
+    * bin-packs small data files. Lookup and discovery both read the one
+    * procedure table, [[GraftProcedures.all]]. */
   override def loadProcedure(ident: Identifier): org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
-    if (ident.namespace().nonEmpty)
-      throw new RuntimeException(s"no such procedure $ident in $catName")
-    else ident.name() match {
-      case "compact" => new GraftProcedures.CompactUnbound(root)
-      case "history" => new GraftProcedures.HistoryUnbound(root)
-      case "vacuum"  => new GraftProcedures.VacuumUnbound(root)
-      case "clone"   => new GraftProcedures.CloneUnbound(root)
-      case "zorder"  => new GraftProcedures.ZOrderUnbound(root)
-      case "rewrite_deletes" => new GraftProcedures.RewriteDeletesUnbound(root)
-      case "build_gram_index" => new GraftProcedures.GramIndexUnbound(root)
-      case "evolve_partition_spec" => new GraftProcedures.EvolveSpecUnbound(root)
-      case "compact_history" => new GraftProcedures.CompactHistoryUnbound(root)
-      case "create_tag"    => new GraftProcedures.RefUnbound(root, "create_tag")
-      case "drop_tag"      => new GraftProcedures.RefUnbound(root, "drop_tag")
-      case "create_branch" => new GraftProcedures.RefUnbound(root, "create_branch")
-      case "drop_branch"   => new GraftProcedures.RefUnbound(root, "drop_branch")
-      case "fast_forward"  => new GraftProcedures.RefUnbound(root, "fast_forward")
-      case "fast_forward_pair" => new GraftProcedures.FfPairUnbound(root)
-      case "fast_forward_all"  => new GraftProcedures.FfAllUnbound(root)
-      case "rollback"      => new GraftProcedures.RefUnbound(root, "rollback")
-      case "cherry_pick"   => new GraftProcedures.RefUnbound(root, "cherry_pick")
-      case "analyze_table" => new GraftProcedures.AnalyzeUnbound(root)
-      case "detail"  => new GraftProcedures.DetailUnbound(root)
-      case v @ ("create_view" | "drop_view" | "rename_view" | "list_views" |
-                "describe_view") => new GraftProcedures.ViewDdlUnbound(root, v)
-      case v @ ("create_materialized_view" | "refresh_materialized_view") =>
-        new MvLifecycle.MvDdlUnbound(catName, root, v)
-      case _ => throw new RuntimeException(s"no such procedure $ident in $catName")
-    }
+    GraftProcedures.all.get(ident.name()).filter(_ => ident.namespace().isEmpty)
+      .map(new GraftProcedures.ProcAdapter(_, GraftProcedures.ProcCtx(catName, root)))
+      .getOrElse(throw new RuntimeException(s"no such procedure $ident in $catName"))
 
-  /** One shared inventory drives discovery — every name here resolves
-    * in [[loadProcedure]] and vice versa (ProcedureSpec pins the
-    * round-trip; r9 review: the old hand-kept list omitted nine). */
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    if (namespace.isEmpty)
-      GraftCatalog.ProcedureNames.map(Identifier.of(namespace, _))
+    if (namespace.isEmpty) GraftProcedures.all.keys.map(Identifier.of(namespace, _)).toArray
     else Array.empty
 
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    if (namespace.isEmpty)
-      Array("sqnorm", "graft_cell", "graft_norm", "graft_map_get")
-        .map(Identifier.of(namespace, _))
+    if (namespace.isEmpty) GraftCatalog.Functions.keys.map(Identifier.of(namespace, _)).toArray
     else throw new NoSuchNamespaceException(namespace)
 
   override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.name() == "sqnorm") GraftCatalog.SqNorm
-    else if (ident.name() == "bucket") GraftCatalog.BucketFn
-    else if (ident.name() == "graft_cell") GraftCatalog.VecCellFn
-    else if (ident.name() == "graft_norm") GraftCatalog.VecNormFn
-    else if (ident.name() == "graft_map_get") GraftCatalog.MapGetFn
-    else throw new NoSuchFunctionException(ident)
+    GraftCatalog.Functions.getOrElse(ident.name(), throw new NoSuchFunctionException(ident))
 }
 
 object GraftCatalog {
@@ -1081,17 +1045,11 @@ object GraftCatalog {
     registeredRoots.asScala.toSeq
   }
 
-  /** Every CALL-addressable procedure; [[GraftCatalog]]'s
-    * `loadProcedure` match and `listProcedures` both answer from this
-    * one list. */
-  val ProcedureNames: Array[String] = Array(
-    "compact", "history", "vacuum", "clone", "zorder", "rewrite_deletes",
-    "build_gram_index", "evolve_partition_spec", "compact_history",
-    "create_tag", "drop_tag", "create_branch", "drop_branch",
-    "fast_forward", "fast_forward_pair", "fast_forward_all",
-    "rollback", "cherry_pick", "analyze_table", "detail",
-    "create_view", "drop_view", "rename_view", "list_views", "describe_view",
-    "create_materialized_view", "refresh_materialized_view")
+  /** The catalog's functions by name; `loadFunction` and
+    * `listFunctions` both answer from this one map. */
+  private lazy val Functions: Map[String, UnboundFunction] =
+    scala.collection.immutable.ListMap(
+      Seq(SqNorm, BucketFn, VecCellFn, VecNormFn, MapGetFn).map(f => f.name() -> f): _*)
 
   /** The staged side of an atomic CTAS/RTAS. Data files land in the
     * final directory under attempt-unique names but are INVISIBLE until

@@ -5,13 +5,19 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.unsafe.types.UTF8String
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Stored procedures for [[GraftCatalog]] (`ProcedureCatalog`, Spark 4's
   * V2 procedure API): table MAINTENANCE addressed as SQL —
   * `CALL <catalog>.compact('<table>', <target_bytes>)` — the Iceberg
   * `rewrite_data_files` shape on this engine's manifest protocol.
+  *
+  * Every procedure is one [[Proc]] entry of the table [[all]]: name,
+  * parameters, result schema and body. One adapter, [[ProcAdapter]],
+  * serves any entry to Spark, and the catalog's procedure lookup and
+  * listing both read the table.
   *
   * Compaction is the inverse pressure of the reader's byte-range
   * splits: splits keep one oversized file from becoming one task, while
@@ -51,487 +57,484 @@ object GraftProcedures {
                                entry: JsonlStats.FileStats,
                                matLineages: Option[Seq[JsonlStats.Lineage]] = None)
 
-  class CompactUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "compact"
-    override def description(): String =
-      "compact(table, target_bytes): bin-pack small data files into target-sized ones"
-    override def bind(inputType: StructType): BoundProcedure = new CompactBound(root)
+  /** What a procedure body sees besides its arguments: the catalog it
+    * was called through and that catalog's warehouse root. */
+  final case class ProcCtx(catalog: String, root: String)
+
+  /** One CALL procedure: its name, a usage line, its parameters (names,
+    * types and defaults as CALL binds them), its result schema, and a
+    * body that turns the bound arguments into result rows. */
+  final case class Proc(name: String, usage: String, params: Seq[ProcedureParameter],
+                        schema: StructType, body: (ProcCtx, InternalRow) => Seq[InternalRow])
+
+  /** Spark's procedure API for any [[Proc]]. The parameters do not
+    * depend on the input type, so binding is the identity; the rows
+    * come back through [[rowsScan]]. */
+  final class ProcAdapter(p: Proc, ctx: ProcCtx) extends UnboundProcedure with BoundProcedure {
+    override def name(): String = p.name
+    override def description(): String = p.usage
+    override def bind(inputType: StructType): BoundProcedure = this
+    override def isDeterministic: Boolean = false
+    override def parameters(): Array[ProcedureParameter] = p.params.toArray
+    override def call(input: InternalRow): java.util.Iterator[Scan] =
+      java.util.List.of(rowsScan(p.schema, p.body(ctx, input).toArray, s"CALL ${p.name}")).iterator()
   }
 
-  class CompactBound(root: String) extends BoundProcedure {
-    override def name(): String = "compact"
-    override def description(): String =
-      "bin-pack small manifest files into target-sized ones (manifest-swap commit)"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("target_bytes", LongType)
-        .defaultValue(JsonlStats.DefaultSplitBytes.toString).build(),
-      // SCOPED maintenance (r9c, the Delta `OPTIMIZE ... WHERE` shape):
-      // '' = whole table; a partition value compacts only files whose
-      // manifest pkey equals it — at 100 TB you compact yesterday's
-      // partition, never the table
-      ProcedureParameter.in("partition", StringType).defaultValue("''").build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val target = input.getLong(1)
-      require(target > 0, s"target_bytes must be positive, got $target")
-      val part = Option(input.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (before, after, merged) = GraftProcedures.compact(dir.toString, target, part)
-      java.util.List.of[Scan](new CompactResultScan(before, after, merged)).iterator()
+  /** The engine's one in-memory result set: procedure results and the
+    * metadata tables ([[MetaTables]]) are both served by it. */
+  private[sources] def rowsScan(schema: StructType, result: Array[InternalRow], desc: String): Scan =
+    new LocalScan {
+      override def readSchema(): StructType = schema
+      override def rows(): Array[InternalRow] = result
+      override def description(): String = desc
     }
+
+  /** A table's directory under the warehouse root; refuses a name with
+    * no manifest. */
+  private def tableDir(root: String, table: String): Path = {
+    val dir = Paths.get(root, table)
+    require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
+    dir
   }
 
-  /** CALL's result set: one row of compaction accounting. */
-  class CompactResultScan(before: Int, after: Int, merged: Int) extends LocalScan {
-    override def readSchema(): StructType = StructType(Seq(
-      StructField("files_before", IntegerType, nullable = false),
-      StructField("files_after", IntegerType, nullable = false),
-      StructField("files_merged", IntegerType, nullable = false)))
-    override def rows(): Array[InternalRow] =
-      Array(InternalRow(before, after, merged))
-    override def description(): String =
-      s"compact result: $before -> $after files ($merged merged)"
-  }
+  private def arg(name: String, t: DataType): ProcedureParameter = ProcedureParameter.in(name, t).build()
+  private def arg(name: String, t: DataType, default: String): ProcedureParameter =
+    ProcedureParameter.in(name, t).defaultValue(default).build()
+  private def field(name: String, t: DataType, nullable: Boolean = false): StructField =
+    StructField(name, t, nullable)
+  private def strings(names: String*): StructType =
+    StructType(names.map(StructField(_, StringType, nullable = false)))
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+  /** One result row of string columns. */
+  private[sources] def stringRow(values: String*): Seq[InternalRow] =
+    Seq(InternalRow(values.map(utf8): _*))
+  private def str(row: InternalRow, i: Int): String = row.getUTF8String(i).toString
+  /** An optional string argument: `''` (or null) means absent. */
+  private def optStr(row: InternalRow, i: Int): Option[String] =
+    Option(row.getUTF8String(i)).map(_.toString).filter(_.nonEmpty)
+  private def txnId(prefix: String): String =
+    s"$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  class ZOrderUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "zorder"
-    override def description(): String =
-      "zorder(table, col_a, col_b, target_bytes): rewrite data files clustered by the Morton interleave of two columns"
-    override def bind(inputType: StructType): BoundProcedure = new ZOrderBound(root)
-  }
+  /** REF management (r9, [[Refs]]) — one shape for the seven verbs.
+    * `create_tag(table, name[, version])` pins a snapshot (live by
+    * default, or `VERSION AS OF version`); `create_branch(table, name)`
+    * forks the live manifest for staged writes
+    * (`INSERT INTO <cat>.<table>.branch_<name> …`);
+    * `fast_forward(table, name)` is the PUBLISH half of
+    * write-audit-publish — one OCC commit that conflicts loudly if main
+    * diverged since the fork; the drop verbs delete the ref file (its
+    * exclusively-staged data files become age-gated vacuum orphans).
+    * Returns (ref, action, version): version = the pinned/fork/
+    * superseded generation (0 for drops). */
+  private def refProc(verb: String, usage: String, params: Seq[ProcedureParameter],
+                      refOf: InternalRow => String = str(_, 1))
+                     (op: (String, String, InternalRow) => Int): Proc =
+    Proc(verb, usage, params,
+      StructType(Seq(field("ref", StringType), field("action", StringType),
+        field("version", IntegerType))),
+      (ctx, row) => {
+        val table = str(row, 0)
+        val ref = refOf(row)
+        val version = op(tableDir(ctx.root, table).toString, ref, row)
+        Seq(InternalRow(utf8(ref), utf8(verb), version))
+      })
 
-  /** `CALL <cat>.zorder('<table>', 'col_a', 'col_b'[, target_bytes])` —
-    * OPTIMIZE ZORDER BY for the manifest protocol. Unlike [[compact]]
-    * (a byte-level repack that never parses a row), zorder is a full
-    * REWRITE: rows are re-bucketed by the Morton interleave of the two
-    * named columns' 256-rank range buckets and re-written range-
-    * partitioned + sorted by that z-value, so each output file covers a
-    * compact z-cell run. The payoff is pure synergy with the r7b
-    * per-column manifest stats: a z-clustered file has TIGHT bounds on
-    * BOTH dimensions at once, so an ordinary 2-D box predicate prunes
-    * ≈ the product of the selectivities from the manifest alone — no
-    * z-cell arithmetic, no bounds artifact, no special read path: the
-    * manifest IS the index and plain range predicates do the work
-    * (q122, q190). Either dimension may be a number, a DATE or a
-    * timestamp. */
-  class ZOrderBound(root: String) extends BoundProcedure {
-    override def name(): String = "zorder"
-    override def description(): String =
-      "rewrite the table clustered by the Morton interleave of two columns"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("col_a", StringType).build(),
-      ProcedureParameter.in("col_b", StringType).build(),
-      ProcedureParameter.in("target_bytes", LongType)
-        .defaultValue(JsonlStats.DefaultSplitBytes.toString).build(),
-      // SCOPED maintenance (r12, the `OPTIMIZE ... WHERE` shape): '' =
-      // whole table (unkeyed layouts only); a partition value
-      // re-clusters ONE pkey's files — at 100 TB you zorder
-      // yesterday's partition after it closes, never the table
-      ProcedureParameter.in("partition", StringType).defaultValue("''").build())
+  private val publishResult =
+    StructType(Seq(field("tables", StringType), field("legs_applied", IntegerType)))
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val colA = input.getUTF8String(1).toString
-      val colB = input.getUTF8String(2).toString
-      val target = input.getLong(3)
-      require(target > 0, s"target_bytes must be positive, got $target")
-      val part = Option(input.getUTF8String(4)).map(_.toString).filter(_.nonEmpty)
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (before, after, rows) = GraftProcedures.zorder(dir.toString, colA, colB, target, part)
-      java.util.List.of[Scan](new ZOrderResultScan(before, after, rows)).iterator()
-    }
-  }
+  /** Every CALL procedure, by name. [[GraftCatalog]]'s `loadProcedure`
+    * and `listProcedures` both answer from this one table. */
+  lazy val all: Map[String, Proc] = {
+    val procs = Seq(
+      // small-file bin-packing, the Iceberg `rewrite_data_files` shape
+      // (see the object doc)
+      Proc("compact",
+        "compact(table, target_bytes): bin-pack small data files into target-sized ones",
+        Seq(arg("table", StringType),
+          arg("target_bytes", LongType, JsonlStats.DefaultSplitBytes.toString),
+          // SCOPED maintenance (r9c, the Delta `OPTIMIZE ... WHERE` shape):
+          // '' = whole table; a partition value compacts only files whose
+          // manifest pkey equals it — at 100 TB you compact yesterday's
+          // partition, never the table
+          arg("partition", StringType, "''")),
+        StructType(Seq(field("files_before", IntegerType), field("files_after", IntegerType),
+          field("files_merged", IntegerType))),
+        (ctx, row) => {
+          val table = str(row, 0)
+          val target = row.getLong(1)
+          require(target > 0, s"target_bytes must be positive, got $target")
+          val part = optStr(row, 2)
+          val (before, after, merged) = compact(tableDir(ctx.root, table).toString, target, part)
+          Seq(InternalRow(before, after, merged))
+        }),
 
-  /** CALL's result set: one row of rewrite accounting. */
-  class ZOrderResultScan(before: Int, after: Int, rows: Long) extends LocalScan {
-    override def readSchema(): StructType = StructType(Seq(
-      StructField("files_before", IntegerType, nullable = false),
-      StructField("files_after", IntegerType, nullable = false),
-      StructField("n_rows", LongType, nullable = false)))
-    override def rows(): Array[InternalRow] =
-      Array(InternalRow(before, after, rows))
-    override def description(): String =
-      s"zorder result: $before -> $after files, $rows rows"
-  }
+      // OPTIMIZE ZORDER BY for the manifest protocol. Unlike [[compact]]
+      // (a byte-level repack that never parses a row), zorder is a full
+      // REWRITE: rows are re-bucketed by the Morton interleave of the two
+      // named columns' 256-rank range buckets and re-written range-
+      // partitioned + sorted by that z-value, so each output file covers a
+      // compact z-cell run. The payoff is pure synergy with the r7b
+      // per-column manifest stats: a z-clustered file has TIGHT bounds on
+      // BOTH dimensions at once, so an ordinary 2-D box predicate prunes
+      // ≈ the product of the selectivities from the manifest alone — no
+      // z-cell arithmetic, no bounds artifact, no special read path: the
+      // manifest IS the index and plain range predicates do the work
+      // (q122, q190). Either dimension may be a number, a DATE or a
+      // timestamp.
+      Proc("zorder",
+        "zorder(table, col_a, col_b, target_bytes): rewrite data files clustered by the Morton interleave of two columns",
+        Seq(arg("table", StringType), arg("col_a", StringType), arg("col_b", StringType),
+          arg("target_bytes", LongType, JsonlStats.DefaultSplitBytes.toString),
+          // SCOPED maintenance (r12, the `OPTIMIZE ... WHERE` shape): '' =
+          // whole table (unkeyed layouts only); a partition value
+          // re-clusters ONE pkey's files — at 100 TB you zorder
+          // yesterday's partition after it closes, never the table
+          arg("partition", StringType, "''")),
+        StructType(Seq(field("files_before", IntegerType), field("files_after", IntegerType),
+          field("n_rows", LongType))),
+        (ctx, row) => {
+          val table = str(row, 0)
+          val (colA, colB) = (str(row, 1), str(row, 2))
+          val target = row.getLong(3)
+          require(target > 0, s"target_bytes must be positive, got $target")
+          val part = optStr(row, 4)
+          val (before, after, rows) =
+            zorder(tableDir(ctx.root, table).toString, colA, colB, target, part)
+          Seq(InternalRow(before, after, rows))
+        }),
 
-  class RewriteDeletesUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "rewrite_deletes"
-    override def description(): String =
-      "rewrite_deletes(table): collapse deletion vectors into clean rewritten data files"
-    override def bind(inputType: StructType): BoundProcedure = new RewriteDeletesBound(root)
-  }
+      // Iceberg's `rewrite_position_delete_files` / DV major compaction:
+      // every data file carrying deletion vectors is rewritten WITHOUT its
+      // masked rows, its stats recomputed from the survivors (fresh
+      // attained bounds — re-arming the MIN/MAX pushdown that DVs had
+      // declined), and the manifest swap replaces entry + DVs in one
+      // commit. Clean files regain byte-range splittability and
+      // compaction eligibility. One task per DV'd file (metadata-bounded
+      // task list, like [[compact]]); untouched files never read. Old
+      // files + DVs stay on disk for archived snapshots (deferred GC).
+      Proc("rewrite_deletes",
+        "rewrite_deletes(table): collapse deletion vectors into clean rewritten data files",
+        Seq(arg("table", StringType)),
+        StructType(Seq(field("files_rewritten", IntegerType), field("dvs_collapsed", IntegerType),
+          field("rows_dropped", LongType))),
+        (ctx, row) => {
+          val (rewritten, dvsDropped, rowsDropped) =
+            rewriteDeletes(tableDir(ctx.root, str(row, 0)).toString)
+          Seq(InternalRow(rewritten, dvsDropped, rowsDropped))
+        }),
 
-  /** `CALL <cat>.rewrite_deletes('<table>')` — Iceberg's
-    * `rewrite_position_delete_files` / DV major compaction: every data
-    * file carrying deletion vectors is rewritten WITHOUT its masked
-    * rows, its stats recomputed from the survivors (fresh attained
-    * bounds — re-arming the MIN/MAX pushdown that DVs had declined),
-    * and the manifest swap replaces entry + DVs in one commit. Clean
-    * files regain byte-range splittability and compaction eligibility.
-    * One task per DV'd file (metadata-bounded task list, like
-    * [[compact]]); untouched files never read. Old files + DVs stay on
-    * disk for archived snapshots (deferred GC). */
-  class RewriteDeletesBound(root: String) extends BoundProcedure {
-    override def name(): String = "rewrite_deletes"
-    override def description(): String =
-      "collapse deletion vectors into clean rewritten data files"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build())
+      Proc("detail",
+        "detail(table): one-row table report — version, files, rows, deletes, bytes",
+        Seq(arg("table", StringType)),
+        StructType(Seq(
+          field("version", IntegerType),
+          field("n_files", IntegerType),
+          field("n_rows_physical", LongType, nullable = true),
+          field("n_rows_live", LongType, nullable = true),
+          field("n_files_with_dvs", IntegerType),
+          field("n_rows_masked", LongType),
+          field("live_bytes", LongType),
+          field("key_grouped", BooleanType),
+          field("stats_column", StringType),
+          field("n_oversized_no_ckpts", IntegerType),
+          field("partition_spec", StringType, nullable = true),
+          field("spec_uniform", BooleanType),
+          field("gram_column", StringType, nullable = true),
+          field("n_delta_snapshots", IntegerType))),
+        (ctx, row) => Seq(detail(tableDir(ctx.root, str(row, 0))))),
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (rewritten, dvsDropped, rowsDropped) = GraftProcedures.rewriteDeletes(dir.toString)
-      val schema = StructType(Seq(
-        StructField("files_rewritten", IntegerType, nullable = false),
-        StructField("dvs_collapsed", IntegerType, nullable = false),
-        StructField("rows_dropped", LongType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] =
-          Array(InternalRow(rewritten, dvsDropped, rowsDropped))
-        override def description(): String =
-          s"rewrite_deletes result: $rewritten files, $dvsDropped DVs, $rowsDropped rows dropped"
-      }).iterator()
-    }
-  }
+      // The deletion point of the deferred-GC protocol (Delta VACUUM /
+      // Iceberg `expire_snapshots` + `remove_orphan_files` in one
+      // service). `retain_last` counts VERSIONS kept including the live
+      // one (default 2 = live + newest archive); `orphan_grace_ms` guards
+      // the unreferenced-file sweep (default 7 days — an in-flight
+      // write's uncommitted task files look exactly like crash orphans,
+      // and only AGE distinguishes them; tests pass 0 on quiesced tables).
+      Proc("vacuum",
+        "vacuum(table, retain_last, orphan_grace_ms): expire old snapshots and GC their files",
+        Seq(arg("table", StringType), arg("retain_last", IntegerType, "2"),
+          arg("orphan_grace_ms", LongType, (7L * 24 * 3600 * 1000).toString)),
+        StructType(Seq(field("expired_versions", IntegerType),
+          field("data_files_deleted", IntegerType), field("orphan_files_deleted", IntegerType),
+          field("oldest_retained_version", IntegerType))),
+        (ctx, row) => {
+          val table = str(row, 0)
+          val retain = row.getInt(1)
+          val grace = row.getLong(2)
+          require(retain >= 1, s"retain_last must be >= 1, got $retain")
+          require(grace >= 0, s"orphan_grace_ms must be >= 0, got $grace")
+          val (expired, dataDeleted, orphans, oldest) =
+            vacuum(tableDir(ctx.root, table).toString, retain, grace)
+          Seq(InternalRow(expired, dataDeleted, orphans, oldest))
+        }),
 
-  class DetailUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "detail"
-    override def description(): String =
-      "detail(table): one-row table report — version, files, rows, deletes, bytes"
-    override def bind(inputType: StructType): BoundProcedure = new DetailBound(root)
-  }
+      // The dev/test-sandbox idiom (Delta SHALLOW CLONE): a new table
+      // whose manifest lists the source's CURRENT data files,
+      // materialized as HARD LINKS — zero bytes copied, metadata-bounded
+      // work. The immutable-data-file contract makes this safe with no
+      // refcounting of its own: neither table ever modifies a shared file
+      // (every write path publishes new names), and when one side's
+      // VACUUM unlinks its link the filesystem's link count keeps the
+      // other side's bytes alive. The clone starts with fresh history
+      // (version 1) and no horizon; bloom sidecars link along with their
+      // files. Cross-device roots degrade to a byte copy per file (still
+      // correct, no longer zero-cost).
+      Proc("clone",
+        "clone(source, target): zero-copy clone — hard-link data files, fresh manifest",
+        Seq(arg("source", StringType), arg("target", StringType)),
+        StructType(Seq(field("files_linked", IntegerType), field("files_copied", IntegerType))),
+        (ctx, row) => {
+          val dst = str(row, 1)
+          val srcDir = tableDir(ctx.root, str(row, 0))
+          val dstDir = Paths.get(ctx.root, dst)
+          require(!Files.exists(dstDir.resolve("_stats.jsonl")), s"table $dst already exists")
+          val (linked, copied) = cloneTable(srcDir.toString, dstDir.toString)
+          Seq(InternalRow(linked, copied))
+        }),
 
-  /** `CALL <cat>.detail('<table>')` — DESCRIBE DETAIL for the manifest
-    * protocol: the one-row operational report every table format ships
-    * (Delta's DESCRIBE DETAIL): current version, live file/row/byte
-    * counts, deletion-vector debt (files carrying DVs + masked rows —
-    * the rewrite_deletes backlog), and layout facts (keyed?, stats
-    * column). Pure manifest arithmetic plus per-file `Files.size` —
-    * metadata-priced, no data file opened. */
-  class DetailBound(root: String) extends BoundProcedure {
-    override def name(): String = "detail"
-    override def description(): String = "one-row table report from manifest arithmetic"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build())
+      // r9c, [[ColStats]]: one distributed scan computes per-column NDV
+      // (HLL++) and string lengths into the `_colstats.json` sidecar; the
+      // scan's `estimateStatistics` then serves them to CBO. Returns the
+      // analyze accounting, including how stale the previous sidecar had
+      // become.
+      Proc("analyze_table",
+        "analyze_table(table): compute NDV/length column statistics for cost-based planning",
+        Seq(arg("table", StringType), arg("histogram", BooleanType, "false"),
+          arg("hist_bins", IntegerType, "32"),
+          // restrict the (two-pass) histogram work to named columns;
+          // '' = every numeric column
+          arg("hist_cols", StringType, "''")),
+        StructType(Seq(field("columns_analyzed", IntegerType), field("n_rows", LongType),
+          field("analyzed_version", IntegerType), field("versions_stale_before", IntegerType),
+          field("files_scanned", IntegerType))),
+        (ctx, row) => {
+          val dir = tableDir(ctx.root, str(row, 0)).toString
+          val prev = ColStats.read(dir)
+          val hc = optStr(row, 3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+          // plain ANALYZE is delta-proportional (r15): only file identities
+          // missing from the sketch cache are read; histograms keep the
+          // full pass (a second bounded pass is inherently non-incremental)
+          val (s, filesScanned) =
+            if (row.getBoolean(1))
+              (ColStats.analyze(SparkSession.active, dir,
+                histogram = true, histBins = row.getInt(2), histCols = hc),
+                JsonlStats.readStats(dir).size)
+            else ColStats.analyzeIncremental(SparkSession.active, dir)
+          Seq(InternalRow(s.cols.size, s.rows, s.version,
+            prev.map(p => s.version - p.version).getOrElse(-1), filesScanned))
+        }),
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val stats = JsonlStats.readStats(dir.toString)
-      val meta = JsonlStats.readTableMeta(dir.toString)
-      val sized = stats.map { s =>
-        val p = dir.resolve(s.file)
-        s -> (if (Files.exists(p)) Files.size(p) else 0L)
-      }
-      val bytes = sized.map(_._2).sum
-      val haveRows = stats.forall(_.rows >= 0)
-      val row = InternalRow(
-        JsonlStats.currentVersion(dir.toString),
-        stats.size,
-        if (haveRows) Long.box(stats.map(_.rows).sum) else null,
-        if (haveRows) Long.box(stats.map(s => s.rows - s.dels).sum) else null,
-        stats.count(_.dvs.nonEmpty),
-        stats.map(_.dels).sum,
-        bytes,
-        meta.partitionCol.isDefined,
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          meta.statsCol.getOrElse(JsonlStats.statsColumn)),
-        // splittability debt (r8): oversized files whose pre-checkpoint
-        // manifests pin whole-file tasks for DV'd/_pos reads — what a
-        // compact/rewrite_deletes pass (which regenerates checkpoints)
-        // would clear
-        sized.count { case (s, sz) =>
-          sz > JsonlStats.DefaultSplitBytes && s.ckpts.isEmpty },
-        // r9 tier state: the declared partition spec, whether every
-        // live file's key derives from it (SPJ eligibility — FALSE mid
-        // partition-evolution until rewrites migrate the stragglers),
-        // the gram-index column, and how many archived snapshots are
-        // delta-encoded (compact_history's footprint)
-        meta.partitionCol.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-        meta.partitionCol.forall(pc =>
-          stats.forall(_.pspec.forall(_ == pc))) && stats.forall(_.pkey.isDefined ||
-            meta.partitionCol.isEmpty),
-        meta.gramCol.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-        JsonlStats.historyVersions(dir.toString).count { v =>
-          val pth = dir.resolve(s"${JsonlStats.HistoryDir}/v$v.jsonl")
-          scala.util.Try(Files.newBufferedReader(pth).readLine())
-            .toOption.exists(l => l != null && l.startsWith("{\"delta_base\""))
-        })
-      val schema = StructType(Seq(
-        StructField("version", IntegerType, nullable = false),
-        StructField("n_files", IntegerType, nullable = false),
-        StructField("n_rows_physical", LongType),
-        StructField("n_rows_live", LongType),
-        StructField("n_files_with_dvs", IntegerType, nullable = false),
-        StructField("n_rows_masked", LongType, nullable = false),
-        StructField("live_bytes", LongType, nullable = false),
-        StructField("key_grouped", BooleanType, nullable = false),
-        StructField("stats_column", StringType, nullable = false),
-        StructField("n_oversized_no_ckpts", IntegerType, nullable = false),
-        StructField("partition_spec", StringType),
-        StructField("spec_uniform", BooleanType, nullable = false),
-        StructField("gram_column", StringType),
-        StructField("n_delta_snapshots", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(row)
-        override def description(): String = s"detail of $table"
-      }).iterator()
-    }
-  }
+      // Declares the substring gram index ([[Bloom]] r9) on a STRING
+      // column and BACKFILLS the per-file gram sidecars for every live
+      // data file. Declaration lands FIRST (sidecar write under the meta
+      // lock), so a write racing the backfill sidecars its own files; the
+      // backfill is one Spark job over the manifest's file list — a
+      // file-count-bounded maintenance pass, each task one streaming
+      // parse (the same shape as rewrite_deletes). Re-CALLing rebuilds —
+      // idempotent.
+      Proc("build_gram_index",
+        "build_gram_index(table, column): declare + backfill the substring gram index",
+        Seq(arg("table", StringType), arg("column", StringType)),
+        StructType(Seq(field("files_indexed", IntegerType))),
+        (ctx, row) => {
+          val column = str(row, 1)
+          Seq(InternalRow(buildGramIndex(tableDir(ctx.root, str(row, 0)).toString, column)))
+        }),
 
-  class HistoryUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "history"
-    override def description(): String =
-      "history(table): one row per generation — version, supersede time, files, rows"
-    override def bind(inputType: StructType): BoundProcedure = new HistoryBound(root)
-  }
+      // HISTORY COMPACTION (r9), see [[compactHistory]]
+      Proc("compact_history",
+        "compact_history(table, keep_recent, full_every): re-encode archived snapshots as reverse deltas",
+        Seq(arg("table", StringType), arg("keep_recent", IntegerType, "4"),
+          arg("full_every", IntegerType, "16")),
+        StructType(Seq(field("snapshots_rewritten", IntegerType), field("bytes_before", LongType),
+          field("bytes_after", LongType))),
+        (ctx, row) => {
+          val table = str(row, 0)
+          val keepRecent = row.getInt(1)
+          val fullEvery = row.getInt(2)
+          require(keepRecent >= 2, s"keep_recent must be >= 2 (OCC lease slots), got $keepRecent")
+          require(fullEvery >= 2, s"full_every must be >= 2, got $fullEvery")
+          val (rewritten, before, after) =
+            compactHistory(tableDir(ctx.root, table).toString, keepRecent, fullEvery)
+          Seq(InternalRow(rewritten, before, after))
+        }),
 
-  /** `CALL <cat>.history('<table>')` — DESCRIBE HISTORY for the
-    * manifest protocol: version number, the instant it was superseded
-    * (null for the live generation — an archive file's mtime IS that
-    * instant, the same convention TIMESTAMP AS OF resolves by), and
-    * the generation's file/row counts read from its archived manifest.
-    * Metadata-only: no data file is touched. */
-  class HistoryBound(root: String) extends BoundProcedure {
-    override def name(): String = "history"
-    override def description(): String = "per-generation version/supersede/files/rows"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build())
+      // PARTITION EVOLUTION ([[PartitionTransforms]] r9), see
+      // [[evolvePartitionSpec]]
+      Proc("evolve_partition_spec",
+        "evolve_partition_spec(table, spec): change the partition transform without rewriting data",
+        Seq(arg("table", StringType), arg("spec", StringType)),
+        StructType(Seq(field("spec_before", StringType, nullable = true),
+          field("spec_after", StringType, nullable = true), field("files_stamped", IntegerType))),
+        (ctx, row) => {
+          val specStr = str(row, 1)
+          val (before, stamped) =
+            evolvePartitionSpec(tableDir(ctx.root, str(row, 0)).toString, specStr)
+          Seq(InternalRow(before.map(utf8).orNull,
+            if (specStr.isEmpty) null else utf8(specStr), stamped))
+        }),
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val current = JsonlStats.currentVersion(dir.toString)
-      // vacuumed generations have no manifest to describe: list only
-      // the surviving archive versions (a vacuumed prefix is a gap)
-      val generations = (JsonlStats.historyVersions(dir.toString) :+ current).map { v =>
-        val (manifest, supersedeUs) =
-          if (v == current) ("_stats.jsonl", null)
-          else {
-            val p = s"${JsonlStats.HistoryDir}/v$v.jsonl"
-            (p, Long.box(Files.getLastModifiedTime(dir.resolve(p)).toMillis * 1000L))
+      refProc("create_tag", "create_tag(table, name[, version]): pin a named immutable snapshot",
+        Seq(arg("table", StringType), arg("name", StringType), arg("version", IntegerType, "-1"))) {
+        (dir, ref, row) =>
+          val v = row.getInt(2)
+          Refs.createTag(dir, ref, if (v < 0) None else Some(v))
+      },
+      refProc("drop_tag", "drop_tag(table, name): delete a tag (its files become vacuumable)",
+        Seq(arg("table", StringType), arg("name", StringType))) { (dir, ref, _) =>
+        Refs.dropRef(dir, Refs.tagManifest(ref)); 0
+      },
+      refProc("create_branch", "create_branch(table, name): fork a writable staging branch",
+        Seq(arg("table", StringType), arg("name", StringType))) { (dir, ref, _) =>
+        Refs.createBranch(dir, ref)
+      },
+      refProc("drop_branch", "drop_branch(table, name): delete a branch head",
+        Seq(arg("table", StringType), arg("name", StringType))) { (dir, ref, _) =>
+        Refs.dropRef(dir, Refs.branchManifest(ref)); 0
+      },
+      refProc("fast_forward", "fast_forward(table, name): publish a branch head to main (WAP)",
+        Seq(arg("table", StringType), arg("name", StringType))) { (dir, ref, _) =>
+        Refs.fastForward(dir, ref, txnId("ff"))
+      },
+      refProc("rollback", "rollback(table, target): restore main to a tag or version - metadata only",
+        Seq(arg("table", StringType), arg("name", StringType))) { (dir, ref, _) =>
+        Refs.rollbackTo(dir, ref, txnId("rb"))
+      },
+      refProc("cherry_pick",
+        "cherry_pick(table, version): re-apply an append-shaped version's delta onto main",
+        Seq(arg("table", StringType), arg("version", IntegerType)),
+        _.getInt(1).toString) { (dir, ref, _) =>
+        Refs.cherryPick(dir, ref.toInt, txnId("cp"))
+      },
+
+      // r11: the ATOMIC two-table publish — both branch heads land on
+      // their mains or neither does ([[Refs.Wtxn]]: marker-committed
+      // roll-forward, recovered by every catalog access). The fact+agg
+      // WAP shape: stage both, audit both, publish as one warehouse
+      // transaction.
+      Proc("fast_forward_pair",
+        "fast_forward_pair(table1, branch1, table2, branch2): publish two branch heads atomically",
+        Seq(arg("table1", StringType), arg("branch1", StringType),
+          arg("table2", StringType), arg("branch2", StringType)),
+        publishResult,
+        (ctx, row) => {
+          val (t1, b1, t2, b2) = (str(row, 0), str(row, 1), str(row, 2), str(row, 3))
+          Seq(t1, t2).foreach(tableDir(ctx.root, _))
+          val applied = Refs.Wtxn.publish(ctx.root, Seq((t1, b1), (t2, b2)), txnId("ffp"))
+          Seq(InternalRow(utf8(s"$t1,$t2"), applied))
+        }),
+
+      // r11: the N-table generalization of the pair publish — `legs` =
+      // "table:branch,table:branch,..." and every named branch head lands
+      // on its main or none does ([[Refs.Wtxn]] is leg-count-agnostic;
+      // the pair procedure is the common-case sugar). The fact + N
+      // downstream aggregates publish as ONE warehouse transaction.
+      Proc("fast_forward_all",
+        "fast_forward_all('t1:b1,t2:b2,...'): publish N branch heads atomically",
+        Seq(arg("legs", StringType)),
+        publishResult,
+        (ctx, row) => {
+          val legs = str(row, 0).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { s =>
+            s.split(":", 2) match {
+              case Array(t, b) if t.nonEmpty && b.nonEmpty => (t, b)
+              case _ => throw new IllegalArgumentException(
+                s"fast_forward_all: each leg must be table:branch, got '$s'")
+            }
           }
-        val stats = JsonlStats.readStats(dir.toString, manifest)
-        InternalRow(v, supersedeUs,
-          stats.size, if (stats.forall(_.rows >= 0)) Long.box(stats.map(_.rows).sum) else null)
-      }
-      val schema = StructType(Seq(
-        StructField("version", IntegerType, nullable = false),
-        StructField("superseded_at", TimestampType),
-        StructField("n_files", IntegerType, nullable = false),
-        StructField("n_rows", LongType)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = generations.toArray
-        override def description(): String = s"history of $table: $current generations"
-      }).iterator()
+          legs.foreach { case (t, _) => tableDir(ctx.root, t) }
+          val applied = Refs.Wtxn.publish(ctx.root, legs, txnId("ffa"))
+          Seq(InternalRow(utf8(legs.map(_._1).mkString(",")), applied))
+        }),
+
+      Proc("create_view",
+        "create_view(name, sql[, comment][, or_replace][, columns]): store a persistent SQL view",
+        Seq(arg("name", StringType), arg("sql", StringType), arg("comment", StringType, "''"),
+          arg("or_replace", BooleanType, "false"),
+          // r14: comma-joined column ALIASES — the view's visible column
+          // names, positionally over the body's output (the CREATE VIEW
+          // `(a, b, ...)` column-list form)
+          arg("columns", StringType, "''")),
+        strings("view", "action", "columns"),
+        (ctx, row) => createView(ctx.root, row)),
+      Proc("drop_view", "drop_view(name): delete a stored view definition",
+        Seq(arg("name", StringType), arg("if_exists", BooleanType, "false")),
+        strings("view", "action"),
+        (ctx, row) => dropView(ctx.root, row)),
+      Proc("rename_view", "rename_view(name, to): move a stored view to a new name/namespace",
+        Seq(arg("name", StringType), arg("to", StringType)),
+        strings("view", "action", "to"),
+        (ctx, row) => renameView(ctx.root, row)),
+      Proc("list_views", "list_views([namespace]): the stored views of a namespace",
+        Seq(arg("namespace", StringType, "''")),
+        StructType(Seq(field("namespace", StringType), field("view", StringType),
+          field("comment", StringType, nullable = true))),
+        (ctx, row) => listViews(ctx.root, row)),
+      Proc("describe_view", "describe_view(name): a stored view's definition, context and schema",
+        Seq(arg("name", StringType)),
+        strings("view", "sql", "current_catalog", "current_namespace", "schema", "properties"),
+        (ctx, row) => describeView(ctx.root, row)),
+
+      Proc("create_materialized_view",
+        "create_materialized_view(name, sql[, or_replace]): store a view with a precomputed backing table",
+        Seq(arg("name", StringType), arg("sql", StringType), arg("or_replace", BooleanType, "false")),
+        strings("view", "action", "backing", "sources"),
+        MvLifecycle.create),
+      Proc("refresh_materialized_view",
+        "refresh_materialized_view(name): rebuild the backing table and re-record source versions",
+        Seq(arg("name", StringType)),
+        strings("view", "action", "mode", "sources"),
+        MvLifecycle.refresh))
+    val byName = scala.collection.immutable.ListMap(procs.map(p => p.name -> p): _*)
+    require(byName.size == procs.size, "duplicate procedure name")
+    byName
+  }
+
+  /** DESCRIBE DETAIL for the manifest protocol: the one-row operational
+    * report every table format ships (Delta's DESCRIBE DETAIL): current
+    * version, live file/row/byte counts, deletion-vector debt (files
+    * carrying DVs + masked rows — the rewrite_deletes backlog), and
+    * layout facts (keyed?, stats column). Pure manifest arithmetic plus
+    * per-file `Files.size` — metadata-priced, no data file opened. */
+  private def detail(dir: Path): InternalRow = {
+    val stats = JsonlStats.readStats(dir.toString)
+    val meta = JsonlStats.readTableMeta(dir.toString)
+    val sized = stats.map { s =>
+      val p = dir.resolve(s.file)
+      s -> (if (Files.exists(p)) Files.size(p) else 0L)
     }
-  }
-
-  class VacuumUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String =
-      "vacuum(table, retain_last, orphan_grace_ms): expire old snapshots and GC their files"
-    override def bind(inputType: StructType): BoundProcedure = new VacuumBound(root)
-  }
-
-  /** `CALL <cat>.vacuum('<table>', retain_last, orphan_grace_ms)` — the
-    * deletion point of the deferred-GC protocol (Delta VACUUM / Iceberg
-    * `expire_snapshots` + `remove_orphan_files` in one service).
-    * `retain_last` counts VERSIONS kept including the live one
-    * (default 2 = live + newest archive); `orphan_grace_ms` guards the
-    * unreferenced-file sweep (default 7 days — an in-flight write's
-    * uncommitted task files look exactly like crash orphans, and only
-    * AGE distinguishes them; tests pass 0 on quiesced tables). */
-  class VacuumBound(root: String) extends BoundProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String =
-      "expire archived generations beyond retention; delete their unreferenced files"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("retain_last", IntegerType).defaultValue("2").build(),
-      ProcedureParameter.in("orphan_grace_ms", LongType)
-        .defaultValue((7L * 24 * 3600 * 1000).toString).build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val retain = input.getInt(1)
-      val grace = input.getLong(2)
-      require(retain >= 1, s"retain_last must be >= 1, got $retain")
-      require(grace >= 0, s"orphan_grace_ms must be >= 0, got $grace")
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (expired, dataDeleted, orphans, oldest) =
-        GraftProcedures.vacuum(dir.toString, retain, grace)
-      val schema = StructType(Seq(
-        StructField("expired_versions", IntegerType, nullable = false),
-        StructField("data_files_deleted", IntegerType, nullable = false),
-        StructField("orphan_files_deleted", IntegerType, nullable = false),
-        StructField("oldest_retained_version", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] =
-          Array(InternalRow(expired, dataDeleted, orphans, oldest))
-        override def description(): String =
-          s"vacuum result: $expired versions expired, $dataDeleted + $orphans files deleted"
-      }).iterator()
-    }
-  }
-
-  class CloneUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "clone"
-    override def description(): String =
-      "clone(source, target): zero-copy clone — hard-link data files, fresh manifest"
-    override def bind(inputType: StructType): BoundProcedure = new CloneBound(root)
-  }
-
-  /** `CALL <cat>.clone('<src>', '<dst>')` — the dev/test-sandbox idiom
-    * (Delta SHALLOW CLONE): a new table whose manifest lists the
-    * source's CURRENT data files, materialized as HARD LINKS — zero
-    * bytes copied, metadata-bounded work. The immutable-data-file
-    * contract makes this safe with no refcounting of its own: neither
-    * table ever modifies a shared file (every write path publishes new
-    * names), and when one side's VACUUM unlinks its link the
-    * filesystem's link count keeps the other side's bytes alive. The
-    * clone starts with fresh history (version 1) and no horizon; bloom
-    * sidecars link along with their files. Cross-device roots degrade
-    * to a byte copy per file (still correct, no longer zero-cost). */
-  class CloneBound(root: String) extends BoundProcedure {
-    override def name(): String = "clone"
-    override def description(): String = "hard-link clone of a table's live generation"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("source", StringType).build(),
-      ProcedureParameter.in("target", StringType).build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val src = input.getUTF8String(0).toString
-      val dst = input.getUTF8String(1).toString
-      val srcDir = Paths.get(root, src)
-      val dstDir = Paths.get(root, dst)
-      require(Files.exists(srcDir.resolve("_stats.jsonl")), s"no such table $src under $root")
-      require(!Files.exists(dstDir.resolve("_stats.jsonl")), s"table $dst already exists")
-      val (linked, copied) = GraftProcedures.cloneTable(srcDir.toString, dstDir.toString)
-      val schema = StructType(Seq(
-        StructField("files_linked", IntegerType, nullable = false),
-        StructField("files_copied", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(linked, copied))
-        override def description(): String = s"clone result: $linked linked, $copied copied"
-      }).iterator()
-    }
-  }
-
-  /** `CALL analyze_table(table)` (r9c, [[ColStats]]): one distributed
-    * scan computes per-column NDV (HLL++) and string lengths into the
-    * `_colstats.json` sidecar; the scan's `estimateStatistics` then
-    * serves them to CBO. Returns the analyze accounting, including how
-    * stale the previous sidecar had become. */
-  class AnalyzeUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "analyze_table"
-    override def description(): String =
-      "analyze_table(table): compute NDV/length column statistics for cost-based planning"
-    override def bind(inputType: StructType): BoundProcedure = new AnalyzeBound(root)
-  }
-
-  class AnalyzeBound(root: String) extends BoundProcedure {
-    override def name(): String = "analyze_table"
-    override def description(): String = "one-pass column statistics scan"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("histogram", BooleanType).defaultValue("false").build(),
-      ProcedureParameter.in("hist_bins", IntegerType).defaultValue("32").build(),
-      // restrict the (two-pass) histogram work to named columns;
-      // '' = every numeric column
-      ProcedureParameter.in("hist_cols", StringType).defaultValue("''").build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val prev = ColStats.read(dir.toString)
-      val hc = Option(input.getUTF8String(3)).map(_.toString).filter(_.nonEmpty)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      // plain ANALYZE is delta-proportional (r15): only file identities
-      // missing from the sketch cache are read; histograms keep the
-      // full pass (a second bounded pass is inherently non-incremental)
-      val (s, filesScanned) =
-        if (input.getBoolean(1))
-          (ColStats.analyze(SparkSession.active, dir.toString,
-            histogram = true, histBins = input.getInt(2), histCols = hc),
-            JsonlStats.readStats(dir.toString).size)
-        else ColStats.analyzeIncremental(SparkSession.active, dir.toString)
-      val schema = StructType(Seq(
-        StructField("columns_analyzed", IntegerType, nullable = false),
-        StructField("n_rows", LongType, nullable = false),
-        StructField("analyzed_version", IntegerType, nullable = false),
-        StructField("versions_stale_before", IntegerType, nullable = false),
-        StructField("files_scanned", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(
-          s.cols.size, s.rows, s.version,
-          prev.map(p => s.version - p.version).getOrElse(-1), filesScanned))
-        override def description(): String = s"analyze_table $table"
-      }).iterator()
-    }
-  }
-
-  class GramIndexUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "build_gram_index"
-    override def description(): String =
-      "build_gram_index(table, column): declare + backfill the substring gram index"
-    override def bind(inputType: StructType): BoundProcedure = new GramIndexBound(root)
-  }
-
-  /** `CALL <cat>.build_gram_index('<table>', '<column>')` — declares
-    * the substring gram index ([[Bloom]] r9) on a STRING column and
-    * BACKFILLS the per-file gram sidecars for every live data file.
-    * Declaration lands FIRST (sidecar write under the meta lock), so a
-    * write racing the backfill sidecars its own files; the backfill is
-    * one Spark job over the manifest's file list — a file-count-bounded
-    * maintenance pass, each task one streaming parse (the same shape as
-    * rewrite_deletes). Re-CALLing rebuilds — idempotent. */
-  class GramIndexBound(root: String) extends BoundProcedure {
-    override def name(): String = "build_gram_index"
-    override def description(): String = "backfill substring gram sidecars"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("column", StringType).build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val column = input.getUTF8String(1).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val n = GraftProcedures.buildGramIndex(dir.toString, column)
-      val schema = StructType(Seq(
-        StructField("files_indexed", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(n))
-        override def description(): String = s"gram index: $n files indexed"
-      }).iterator()
-    }
+    val bytes = sized.map(_._2).sum
+    val haveRows = stats.forall(_.rows >= 0)
+    InternalRow(
+      JsonlStats.currentVersion(dir.toString),
+      stats.size,
+      if (haveRows) Long.box(stats.map(_.rows).sum) else null,
+      if (haveRows) Long.box(stats.map(s => s.rows - s.dels).sum) else null,
+      stats.count(_.dvs.nonEmpty),
+      stats.map(_.dels).sum,
+      bytes,
+      meta.partitionCol.isDefined,
+      utf8(meta.statsCol.getOrElse(JsonlStats.statsColumn)),
+      // splittability debt (r8): oversized files whose pre-checkpoint
+      // manifests pin whole-file tasks for DV'd/_pos reads — what a
+      // compact/rewrite_deletes pass (which regenerates checkpoints)
+      // would clear
+      sized.count { case (s, sz) =>
+        sz > JsonlStats.DefaultSplitBytes && s.ckpts.isEmpty },
+      // r9 tier state: the declared partition spec, whether every
+      // live file's key derives from it (SPJ eligibility — FALSE mid
+      // partition-evolution until rewrites migrate the stragglers),
+      // the gram-index column, and how many archived snapshots are
+      // delta-encoded (compact_history's footprint)
+      meta.partitionCol.map(utf8).orNull,
+      meta.partitionCol.forall(pc =>
+        stats.forall(_.pspec.forall(_ == pc))) && stats.forall(_.pkey.isDefined ||
+          meta.partitionCol.isEmpty),
+      meta.gramCol.map(utf8).orNull,
+      JsonlStats.historyVersions(dir.toString).count { v =>
+        val pth = dir.resolve(s"${JsonlStats.HistoryDir}/v$v.jsonl")
+        scala.util.Try(Files.newBufferedReader(pth).readLine())
+          .toOption.exists(l => l != null && l.startsWith("{\"delta_base\""))
+      })
   }
 
   /** Declare the gram column in `_table.json` (logical name — layout
@@ -577,13 +580,6 @@ object GraftProcedures {
     grams.writeSidecar(Paths.get(root, file))
   }
 
-  class CompactHistoryUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "compact_history"
-    override def description(): String =
-      "compact_history(table, keep_recent, full_every): re-encode archived snapshots as reverse deltas"
-    override def bind(inputType: StructType): BoundProcedure = new CompactHistoryBound(root)
-  }
-
   /** `CALL <cat>.compact_history('<table>')` — HISTORY COMPACTION (r9):
     * the MetaBench law (SCALING.md) says every commit archives a FULL manifest, so
     * metadata history grows at manifest-size × commit-rate. This
@@ -600,41 +596,9 @@ object GraftProcedures {
     * `history-deltas` read-gating feature (an unaware reader would
     * take a delta's add-lines as the whole snapshot). VACUUM
     * materializes the first retained archive before expiring its
-    * bases, so expiry never strands a chain. */
-  class CompactHistoryBound(root: String) extends BoundProcedure {
-    override def name(): String = "compact_history"
-    override def description(): String = "reverse-delta encoding of archived manifests"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("keep_recent", IntegerType).defaultValue("4").build(),
-      ProcedureParameter.in("full_every", IntegerType).defaultValue("16").build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val keepRecent = input.getInt(1)
-      val fullEvery = input.getInt(2)
-      require(keepRecent >= 2, s"keep_recent must be >= 2 (OCC lease slots), got $keepRecent")
-      require(fullEvery >= 2, s"full_every must be >= 2, got $fullEvery")
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (rewritten, before, after) =
-        GraftProcedures.compactHistory(dir.toString, keepRecent, fullEvery)
-      val schema = StructType(Seq(
-        StructField("snapshots_rewritten", IntegerType, nullable = false),
-        StructField("bytes_before", LongType, nullable = false),
-        StructField("bytes_after", LongType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(rewritten, before, after))
-        override def description(): String =
-          s"history compaction: $rewritten snapshots, $before -> $after bytes"
-      }).iterator()
-    }
-  }
-
-  /** Core of [[CompactHistoryBound]]. Returns (rewritten, archive bytes
-    * before, after) over the candidate range. */
+    * bases, so expiry never strands a chain.
+    * Returns (rewritten, archive bytes before, after) over the candidate
+    * range. */
   def compactHistory(tableRoot: String, keepRecent: Int, fullEvery: Int): (Int, Long, Long) = {
     val versions = JsonlStats.historyVersions(tableRoot)
     val newest = versions.lastOption.getOrElse(0)
@@ -726,13 +690,6 @@ object GraftProcedures {
       }
     }
 
-  class EvolveSpecUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "evolve_partition_spec"
-    override def description(): String =
-      "evolve_partition_spec(table, spec): change the partition transform without rewriting data"
-    override def bind(inputType: StructType): BoundProcedure = new EvolveSpecBound(root)
-  }
-
   /** `CALL <cat>.evolve_partition_spec('<table>', '<spec>')` — PARTITION
     * EVOLUTION ([[PartitionTransforms]] r9): the table's layout contract
     * changes (`bucket(16,user_id)`, `truncate(100,event_id)`, a bare
@@ -747,40 +704,8 @@ object GraftProcedures {
     * key-grouped reporting (SPJ) stays OFF until every surviving file
     * is uniform under the current spec. A crash between the two steps
     * leaves explicit stamps equal to the still-current spec — a no-op,
-    * re-CALL to finish. */
-  class EvolveSpecBound(root: String) extends BoundProcedure {
-    override def name(): String = "evolve_partition_spec"
-    override def description(): String = "stamp per-file specs and swap the table transform"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("spec", StringType).build())
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val specStr = input.getUTF8String(1).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val (before, stamped) = GraftProcedures.evolvePartitionSpec(dir.toString, specStr)
-      val schema = StructType(Seq(
-        StructField("spec_before", StringType, nullable = true),
-        StructField("spec_after", StringType, nullable = true),
-        StructField("files_stamped", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(
-          before.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-          if (specStr.isEmpty) null
-          else org.apache.spark.unsafe.types.UTF8String.fromString(specStr),
-          stamped))
-        override def description(): String =
-          s"partition evolution: ${before.getOrElse("<none>")} -> $specStr"
-      }).iterator()
-    }
-  }
-
-  /** Stamp + swap core of [[EvolveSpecBound]]. Returns (previous spec,
-    * entries stamped). */
+    * re-CALL to finish.
+    * Returns (previous spec, entries stamped). */
   def evolvePartitionSpec(tableRoot: String, newSpecStr: String): (Option[String], Int) = {
     val newSpec = if (newSpecStr.isEmpty) None else Some(newSpecStr)
     val meta = JsonlStats.readTableMeta(tableRoot)
@@ -1843,175 +1768,6 @@ object GraftProcedures {
     } catch { case _: Throwable => false }
   }
 
-  /** REF management (r9, [[Refs]]) — one bound shape for the five
-    * verbs. `create_tag(table, name[, version])` pins a snapshot (live
-    * by default, or `VERSION AS OF version`); `create_branch(table,
-    * name)` forks the live manifest for staged writes
-    * (`INSERT INTO <cat>.<table>.branch_<name> …`);
-    * `fast_forward(table, name)` is the PUBLISH half of
-    * write-audit-publish — one OCC commit that conflicts loudly if main
-    * diverged since the fork; the drop verbs delete the ref file (its
-    * exclusively-staged data files become age-gated vacuum orphans).
-    * Returns (ref, action, version): version = the pinned/fork/
-    * superseded generation (0 for drops). */
-  class RefUnbound(root: String, verb: String) extends UnboundProcedure {
-    override def name(): String = verb
-    override def description(): String = verb match {
-      case "create_tag"    => "create_tag(table, name[, version]): pin a named immutable snapshot"
-      case "drop_tag"      => "drop_tag(table, name): delete a tag (its files become vacuumable)"
-      case "create_branch" => "create_branch(table, name): fork a writable staging branch"
-      case "drop_branch"   => "drop_branch(table, name): delete a branch head"
-      case "rollback"      => "rollback(table, target): restore main to a tag or version - metadata only"
-      case "cherry_pick"   => "cherry_pick(table, version): re-apply an append-shaped version's delta onto main"
-      case _               => "fast_forward(table, name): publish a branch head to main (WAP)"
-    }
-    override def bind(inputType: StructType): BoundProcedure = new RefBound(root, verb)
-  }
-
-  class RefBound(root: String, verb: String) extends BoundProcedure {
-    override def name(): String = verb
-    override def description(): String = s"$verb on the refs tier"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = {
-      if (verb == "cherry_pick")
-        return Array(
-          ProcedureParameter.in("table", StringType).build(),
-          ProcedureParameter.in("version", IntegerType).build())
-      val base = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("name", StringType).build())
-      if (verb == "create_tag")
-        base :+ ProcedureParameter.in("version", IntegerType).defaultValue("-1").build()
-      else base
-    }
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val refName =
-        if (verb == "cherry_pick") input.getInt(1).toString
-        else input.getUTF8String(1).toString
-      val dir = Paths.get(root, table)
-      require(Files.exists(dir.resolve("_stats.jsonl")), s"no such table $table under $root")
-      val version = verb match {
-        case "create_tag" =>
-          val v = input.getInt(2)
-          Refs.createTag(dir.toString, refName, if (v < 0) None else Some(v))
-        case "drop_tag" =>
-          Refs.dropRef(dir.toString, Refs.tagManifest(refName)); 0
-        case "create_branch" =>
-          Refs.createBranch(dir.toString, refName)
-        case "drop_branch" =>
-          Refs.dropRef(dir.toString, Refs.branchManifest(refName)); 0
-        case "fast_forward" =>
-          Refs.fastForward(dir.toString, refName,
-            s"ff-${java.util.UUID.randomUUID().toString.take(8)}")
-        case "rollback" =>
-          Refs.rollbackTo(dir.toString, refName,
-            s"rb-${java.util.UUID.randomUUID().toString.take(8)}")
-        case "cherry_pick" =>
-          Refs.cherryPick(dir.toString, refName.toInt,
-            s"cp-${java.util.UUID.randomUUID().toString.take(8)}")
-      }
-      val schema = StructType(Seq(
-        StructField("ref", StringType, nullable = false),
-        StructField("action", StringType, nullable = false),
-        StructField("version", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(refName),
-          org.apache.spark.unsafe.types.UTF8String.fromString(verb), version))
-        override def description(): String = s"$verb $refName on $table"
-      }).iterator()
-    }
-  }
-
-  /** `fast_forward_pair(table1, branch1, table2, branch2)` (r11): the
-    * ATOMIC two-table publish — both branch heads land on their mains
-    * or neither does ([[Refs.Wtxn]]: marker-committed roll-forward,
-    * recovered by every catalog access). The fact+agg WAP shape: stage
-    * both, audit both, publish as one warehouse transaction. */
-  class FfPairUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "fast_forward_pair"
-    override def description(): String =
-      "fast_forward_pair(table1, branch1, table2, branch2): publish two branch heads atomically"
-    override def bind(inputType: StructType): BoundProcedure = new FfPairBound(root)
-  }
-
-  class FfPairBound(root: String) extends BoundProcedure {
-    override def name(): String = "fast_forward_pair"
-    override def description(): String = "atomic two-table branch publish"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table1", StringType).build(),
-      ProcedureParameter.in("branch1", StringType).build(),
-      ProcedureParameter.in("table2", StringType).build(),
-      ProcedureParameter.in("branch2", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val t1 = input.getUTF8String(0).toString
-      val b1 = input.getUTF8String(1).toString
-      val t2 = input.getUTF8String(2).toString
-      val b2 = input.getUTF8String(3).toString
-      Seq(t1, t2).foreach(t => require(
-        Files.exists(Paths.get(root, t, "_stats.jsonl")), s"no such table $t under $root"))
-      val applied = Refs.Wtxn.publish(root, Seq((t1, b1), (t2, b2)),
-        s"ffp-${java.util.UUID.randomUUID().toString.take(8)}")
-      val schema = StructType(Seq(
-        StructField("tables", StringType, nullable = false),
-        StructField("legs_applied", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s"$t1,$t2"), applied))
-        override def description(): String = s"fast_forward_pair $t1/$b1 + $t2/$b2"
-      }).iterator()
-    }
-  }
-
-  /** `fast_forward_all(legs)` (r11): the N-table generalization of the
-    * pair publish — `legs` = "table:branch,table:branch,..." and every
-    * named branch head lands on its main or none does ([[Refs.Wtxn]]
-    * is leg-count-agnostic; the pair procedure is the common-case
-    * sugar). The fact + N downstream aggregates publish as ONE
-    * warehouse transaction. */
-  class FfAllUnbound(root: String) extends UnboundProcedure {
-    override def name(): String = "fast_forward_all"
-    override def description(): String =
-      "fast_forward_all('t1:b1,t2:b2,...'): publish N branch heads atomically"
-    override def bind(inputType: StructType): BoundProcedure = new FfAllBound(root)
-  }
-
-  class FfAllBound(root: String) extends BoundProcedure {
-    override def name(): String = "fast_forward_all"
-    override def description(): String = "atomic N-table branch publish"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("legs", StringType).build())
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val legs = input.getUTF8String(0).toString.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq.map { s =>
-          s.split(":", 2) match {
-            case Array(t, b) if t.nonEmpty && b.nonEmpty => (t, b)
-            case _ => throw new IllegalArgumentException(
-              s"fast_forward_all: each leg must be table:branch, got '$s'")
-          }
-        }
-      legs.foreach { case (t, _) => require(
-        Files.exists(Paths.get(root, t, "_stats.jsonl")), s"no such table $t under $root") }
-      val applied = Refs.Wtxn.publish(root, legs,
-        s"ffa-${java.util.UUID.randomUUID().toString.take(8)}")
-      val schema = StructType(Seq(
-        StructField("tables", StringType, nullable = false),
-        StructField("legs_applied", IntegerType, nullable = false)))
-      java.util.List.of[Scan](new LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = Array(InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            legs.map(_._1).mkString(",")), applied))
-        override def description(): String = s"fast_forward_all ${legs.size} legs"
-      }).iterator()
-    }
-  }
-
   /** Splice-concat for runaway-run bins (r12): like [[concatFiles]],
     * but each member's manifest lineage MATERIALIZES in-row as it
     * streams — stamped ids/luvs land as the `_row_id`/`_luv` prefix
@@ -2121,19 +1877,6 @@ object GraftProcedures {
   // session's current catalog/namespace as the definition context, so
   // the body later re-resolves exactly as the author saw it.
 
-  private def utf8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
-
-  /** A procedure result of one row of string columns. */
-  private[sources] def oneRowScan(fields: Seq[(String, String)], desc: String): java.util.Iterator[Scan] = {
-    val schema = StructType(fields.map { case (n, _) => StructField(n, StringType, nullable = false) })
-    java.util.List.of[Scan](new LocalScan {
-      override def readSchema(): StructType = schema
-      override def rows(): Array[InternalRow] =
-        Array(InternalRow(fields.map(f => utf8(f._2)): _*))
-      override def description(): String = desc
-    }).iterator()
-  }
-
   private[sources] def splitViewName(root: String, dotted: String): (java.nio.file.Path, Array[String], String) = {
     val parts = dotted.split('.')
     val ns = parts.init
@@ -2146,173 +1889,124 @@ object GraftProcedures {
     (nsDir, ns, parts.last)
   }
 
-  class ViewDdlUnbound(root: String, verb: String) extends UnboundProcedure {
-    override def name(): String = verb
-    override def description(): String = verb match {
-      case "create_view" => "create_view(name, sql[, comment][, or_replace][, columns]): store a persistent SQL view"
-      case "drop_view" => "drop_view(name): delete a stored view definition"
-      case "rename_view" => "rename_view(name, to): move a stored view to a new name/namespace"
-      case "list_views" => "list_views([namespace]): the stored views of a namespace"
-      case _ => "describe_view(name): a stored view's definition, context and schema"
+  private def createView(root: String, input: InternalRow): Seq[InternalRow] = {
+    val dotted = input.getUTF8String(0).toString
+    val sql = input.getUTF8String(1).toString
+    val comment = Option(input.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
+    val orReplace = input.getBoolean(3)
+    val (nsDir, _, vname) = splitViewName(root, dotted)
+    GraftViews.requireValidName(vname)
+    require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
+      s"a TABLE named '$dotted' exists — views and tables share one identifier space")
+    require(orReplace || !GraftViews.exists(nsDir, vname),
+      s"view '$dotted' already exists (pass or_replace => true to redefine)")
+    // analyze NOW, in the calling session: schema capture plus the
+    // loud create-time failure for a body that doesn't resolve
+    val spark = SparkSession.active
+    val schema = spark.sql(sql).schema
+    require(schema.fieldNames.toSeq.distinct.size == schema.size,
+      s"view body output has duplicate column names " +
+        s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
+    // r14: an explicit column list renames the body's output
+    // positionally (the `CREATE VIEW v (a, b) AS ...` form) — the
+    // stored schema carries the ALIAS names (what readers see), the
+    // queryColumnNames keep the body's names (what the expansion
+    // projects by)
+    val aliases = Option(input.getUTF8String(4)).map(_.toString).filter(_.nonEmpty)
+      .map(_.split(',').map(_.trim).toSeq)
+    aliases.foreach { as =>
+      require(as.size == schema.size,
+        s"column list has ${as.size} names but the view body produces " +
+          s"${schema.size} columns (${schema.fieldNames.mkString(", ")})")
+      require(as.forall(_.nonEmpty) && as.distinct.size == as.size,
+        s"view column list must be distinct non-empty names: ${as.mkString(", ")}")
     }
-    override def bind(inputType: StructType): BoundProcedure = new ViewDdlBound(root, verb)
+    val visibleSchema = aliases match {
+      case Some(as) => StructType(schema.fields.zip(as).map { case (f, a) => f.copy(name = a) })
+      case None => schema
+    }
+    val cm = spark.sessionState.catalogManager
+    GraftViews.write(nsDir, GraftViews.ViewDef(
+      name = vname, sql = sql,
+      currentCatalog = cm.currentCatalog.name(),
+      currentNamespace = cm.currentNamespace.toSeq,
+      schema = visibleSchema,
+      queryColumnNames = schema.fieldNames.toSeq,
+      columnAliases = visibleSchema.fieldNames.toSeq,
+      columnComments = Seq.empty,
+      properties = comment.map(c => Map("comment" -> c)).getOrElse(Map.empty)),
+      replace = orReplace)
+    stringRow(dotted, "created", visibleSchema.fieldNames.mkString(","))
   }
 
-  class ViewDdlBound(root: String, verb: String) extends BoundProcedure {
-    override def name(): String = verb
-    override def description(): String = s"$verb on the stored-view tier"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = verb match {
-      case "create_view" => Array(
-        ProcedureParameter.in("name", StringType).build(),
-        ProcedureParameter.in("sql", StringType).build(),
-        ProcedureParameter.in("comment", StringType).defaultValue("''").build(),
-        ProcedureParameter.in("or_replace", BooleanType).defaultValue("false").build(),
-        // r14: comma-joined column ALIASES — the view's visible column
-        // names, positionally over the body's output (the CREATE VIEW
-        // `(a, b, ...)` column-list form)
-        ProcedureParameter.in("columns", StringType).defaultValue("''").build())
-      case "rename_view" => Array(
-        ProcedureParameter.in("name", StringType).build(),
-        ProcedureParameter.in("to", StringType).build())
-      case "drop_view" => Array(
-        ProcedureParameter.in("name", StringType).build(),
-        ProcedureParameter.in("if_exists", BooleanType).defaultValue("false").build())
-      case "list_views" => Array(
-        ProcedureParameter.in("namespace", StringType).defaultValue("''").build())
-      case _ => Array(ProcedureParameter.in("name", StringType).build())
+  private def dropView(root: String, input: InternalRow): Seq[InternalRow] = {
+    val dotted = input.getUTF8String(0).toString
+    val ifExists = input.getBoolean(1)
+    val (nsDir, ns, vname) = splitViewName(root, dotted)
+    if (ifExists && !GraftViews.exists(nsDir, vname))
+      return stringRow(dotted, "not-found")
+    // a view referenced by OTHER stored views must not vanish out
+    // from under them — fail loudly naming every dependent (the
+    // alternative, a nested view that errors at next read, debugs
+    // like a corruption)
+    val dependents = GraftViews.referencingViews(
+      s => SparkSession.active.sessionState.sqlParser.parsePlan(s),
+      root, ns.toSeq, vname)
+    require(dependents.isEmpty,
+      s"cannot drop view '$dotted': referenced by stored view(s) " +
+        s"${dependents.mkString(", ")} — drop or redefine the dependents first")
+    // a materialized view owns its backing table and any
+    // COUNT(DISTINCT) liveness tables (r15) — dropping the
+    // definition removes all of them (engine-managed storage,
+    // unreachable from listings; leaving them would orphan it)
+    val defn = GraftViews.read(nsDir, vname)
+    require(GraftViews.drop(nsDir, vname), s"no such view '$dotted' under $root")
+    defn.foreach(MvLifecycle.dropOwnedTables(nsDir, _))
+    stringRow(dotted, "dropped")
+  }
+
+  private def renameView(root: String, input: InternalRow): Seq[InternalRow] = {
+    val from = input.getUTF8String(0).toString
+    val to = input.getUTF8String(1).toString
+    val (fromDir, _, fromName) = splitViewName(root, from)
+    val (toDir, _, toName) = splitViewName(root, to)
+    GraftViews.requireValidName(toName)
+    val d = GraftViews.read(fromDir, fromName)
+      .getOrElse(throw new IllegalArgumentException(s"no such view '$from' under $root"))
+    require(!GraftViews.exists(toDir, toName), s"view '$to' already exists")
+    require(!Files.exists(toDir.resolve(toName).resolve("_stats.jsonl")),
+      s"a TABLE named '$to' exists — views and tables share one identifier space")
+    // definition context stays: rename moves the ADDRESS, the body
+    // still resolves exactly as written. A materialized view's
+    // backing table moves with it (backing first, sidecar second —
+    // a crash in between reads as a stale MV, never a lost one)
+    val moved = GraftViews.moveMvBacking(fromDir, toDir, d, toName)
+    GraftViews.write(toDir, moved.copy(name = toName), replace = false)
+    GraftViews.drop(fromDir, fromName)
+    stringRow(from, "renamed", to)
+  }
+
+  private def listViews(root: String, input: InternalRow): Seq[InternalRow] = {
+    val ns = Option(input.getUTF8String(0)).map(_.toString).filter(_.nonEmpty)
+    val nsDir = ns.map(s => Paths.get(root, s.split('.'): _*)).getOrElse(Paths.get(root))
+    require(ns.isEmpty || Files.isDirectory(nsDir), s"no such namespace ${ns.get} under $root")
+    GraftViews.list(nsDir).map { n =>
+      val c = GraftViews.read(nsDir, n).flatMap(_.properties.get("comment"))
+      InternalRow(utf8(ns.getOrElse("")), utf8(n), c.map(utf8).orNull)
     }
+  }
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = verb match {
-      case "create_view" =>
-        val dotted = input.getUTF8String(0).toString
-        val sql = input.getUTF8String(1).toString
-        val comment = Option(input.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
-        val orReplace = input.getBoolean(3)
-        val (nsDir, _, vname) = splitViewName(root, dotted)
-        GraftViews.requireValidName(vname)
-        require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
-          s"a TABLE named '$dotted' exists — views and tables share one identifier space")
-        require(orReplace || !GraftViews.exists(nsDir, vname),
-          s"view '$dotted' already exists (pass or_replace => true to redefine)")
-        // analyze NOW, in the calling session: schema capture plus the
-        // loud create-time failure for a body that doesn't resolve
-        val spark = SparkSession.active
-        val schema = spark.sql(sql).schema
-        require(schema.fieldNames.toSeq.distinct.size == schema.size,
-          s"view body output has duplicate column names " +
-            s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
-        // r14: an explicit column list renames the body's output
-        // positionally (the `CREATE VIEW v (a, b) AS ...` form) — the
-        // stored schema carries the ALIAS names (what readers see), the
-        // queryColumnNames keep the body's names (what the expansion
-        // projects by)
-        val aliases = Option(input.getUTF8String(4)).map(_.toString).filter(_.nonEmpty)
-          .map(_.split(',').map(_.trim).toSeq)
-        aliases.foreach { as =>
-          require(as.size == schema.size,
-            s"column list has ${as.size} names but the view body produces " +
-              s"${schema.size} columns (${schema.fieldNames.mkString(", ")})")
-          require(as.forall(_.nonEmpty) && as.distinct.size == as.size,
-            s"view column list must be distinct non-empty names: ${as.mkString(", ")}")
-        }
-        val visibleSchema = aliases match {
-          case Some(as) => StructType(schema.fields.zip(as).map { case (f, a) => f.copy(name = a) })
-          case None => schema
-        }
-        val cm = spark.sessionState.catalogManager
-        GraftViews.write(nsDir, GraftViews.ViewDef(
-          name = vname, sql = sql,
-          currentCatalog = cm.currentCatalog.name(),
-          currentNamespace = cm.currentNamespace.toSeq,
-          schema = visibleSchema,
-          queryColumnNames = schema.fieldNames.toSeq,
-          columnAliases = visibleSchema.fieldNames.toSeq,
-          columnComments = Seq.empty,
-          properties = comment.map(c => Map("comment" -> c)).getOrElse(Map.empty)),
-          replace = orReplace)
-        oneRowScan(Seq("view" -> dotted, "action" -> "created",
-          "columns" -> visibleSchema.fieldNames.mkString(",")), s"create_view $dotted")
-
-      case "drop_view" =>
-        val dotted = input.getUTF8String(0).toString
-        val ifExists = input.getBoolean(1)
-        val (nsDir, ns, vname) = splitViewName(root, dotted)
-        if (ifExists && !GraftViews.exists(nsDir, vname))
-          return oneRowScan(Seq("view" -> dotted, "action" -> "not-found"),
-            s"drop_view $dotted")
-        // a view referenced by OTHER stored views must not vanish out
-        // from under them — fail loudly naming every dependent (the
-        // alternative, a nested view that errors at next read, debugs
-        // like a corruption)
-        val dependents = GraftViews.referencingViews(
-          s => SparkSession.active.sessionState.sqlParser.parsePlan(s),
-          root, ns.toSeq, vname)
-        require(dependents.isEmpty,
-          s"cannot drop view '$dotted': referenced by stored view(s) " +
-            s"${dependents.mkString(", ")} — drop or redefine the dependents first")
-        // a materialized view owns its backing table and any
-        // COUNT(DISTINCT) liveness tables (r15) — dropping the
-        // definition removes all of them (engine-managed storage,
-        // unreachable from listings; leaving them would orphan it)
-        val defn = GraftViews.read(nsDir, vname)
-        require(GraftViews.drop(nsDir, vname), s"no such view '$dotted' under $root")
-        defn.foreach(MvLifecycle.dropOwnedTables(nsDir, _))
-        oneRowScan(Seq("view" -> dotted, "action" -> "dropped"), s"drop_view $dotted")
-
-      case "rename_view" =>
-        val from = input.getUTF8String(0).toString
-        val to = input.getUTF8String(1).toString
-        val (fromDir, _, fromName) = splitViewName(root, from)
-        val (toDir, _, toName) = splitViewName(root, to)
-        GraftViews.requireValidName(toName)
-        val d = GraftViews.read(fromDir, fromName)
-          .getOrElse(throw new IllegalArgumentException(s"no such view '$from' under $root"))
-        require(!GraftViews.exists(toDir, toName), s"view '$to' already exists")
-        require(!Files.exists(toDir.resolve(toName).resolve("_stats.jsonl")),
-          s"a TABLE named '$to' exists — views and tables share one identifier space")
-        // definition context stays: rename moves the ADDRESS, the body
-        // still resolves exactly as written. A materialized view's
-        // backing table moves with it (backing first, sidecar second —
-        // a crash in between reads as a stale MV, never a lost one)
-        val moved = GraftViews.moveMvBacking(fromDir, toDir, d, toName)
-        GraftViews.write(toDir, moved.copy(name = toName), replace = false)
-        GraftViews.drop(fromDir, fromName)
-        oneRowScan(Seq("view" -> from, "action" -> "renamed", "to" -> to),
-          s"rename_view $from -> $to")
-
-      case "list_views" =>
-        val ns = Option(input.getUTF8String(0)).map(_.toString).filter(_.nonEmpty)
-        val nsDir = ns.map(s => Paths.get(root, s.split('.'): _*)).getOrElse(Paths.get(root))
-        require(ns.isEmpty || Files.isDirectory(nsDir), s"no such namespace ${ns.get} under $root")
-        val names = GraftViews.list(nsDir)
-        val schema = StructType(Seq(
-          StructField("namespace", StringType, nullable = false),
-          StructField("view", StringType, nullable = false),
-          StructField("comment", StringType, nullable = true)))
-        java.util.List.of[Scan](new LocalScan {
-          override def readSchema(): StructType = schema
-          override def rows(): Array[InternalRow] = names.map { n =>
-            val c = GraftViews.read(nsDir, n).flatMap(_.properties.get("comment"))
-            InternalRow(utf8(ns.getOrElse("")), utf8(n), c.map(utf8).orNull)
-          }.toArray
-          override def description(): String = s"views of ${ns.getOrElse("(root)")}"
-        }).iterator()
-
-      case "describe_view" =>
-        val dotted = input.getUTF8String(0).toString
-        val (nsDir, ns, vname) = splitViewName(root, dotted)
-        val d = GraftViews.read(nsDir, vname)
-          .getOrElse(throw new IllegalArgumentException(s"no such view '$dotted' under $root"))
-        oneRowScan(Seq(
-          "view" -> dotted,
-          "sql" -> d.sql,
-          "current_catalog" -> d.currentCatalog,
-          "current_namespace" -> d.currentNamespace.mkString("."),
-          "schema" -> d.schema.toDDL,
-          "properties" -> d.properties.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString(", ")),
-          s"describe_view $dotted")
-    }
+  private def describeView(root: String, input: InternalRow): Seq[InternalRow] = {
+    val dotted = input.getUTF8String(0).toString
+    val (nsDir, _, vname) = splitViewName(root, dotted)
+    val d = GraftViews.read(nsDir, vname)
+      .getOrElse(throw new IllegalArgumentException(s"no such view '$dotted' under $root"))
+    stringRow(
+      dotted,
+      d.sql,
+      d.currentCatalog,
+      d.currentNamespace.mkString("."),
+      d.schema.toDDL,
+      d.properties.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(", "))
   }
 }

@@ -32,8 +32,7 @@ object JsonlDmlQueries extends QueryModule {
   def streamingManifestWrite(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val src = ensureWrittenFixture(spark, d)
-    val sink = Landing.fixtureDir(d, "jsonl_stream_sink")
-    Files.createDirectories(Paths.get(sink))
+    val sink = Landing.streamState(d, "jsonl_stream_sink")
     streamInto(spark, src, sink, s"$sink/_checkpoint", "q192")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), msum($"value").as("value_sum"))
@@ -381,8 +380,7 @@ object JsonlDmlQueries extends QueryModule {
   def streamingHiddenBucket(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val src = ensureWrittenFixture(spark, d)
-    val sink = Landing.fixtureDir(d, "jsonl_stream_bucket")
-    Files.createDirectories(Paths.get(sink))
+    val sink = Landing.streamState(d, "jsonl_stream_bucket")
     val out = streamInto(spark, src, sink, s"$sink/_checkpoint", "q246",
       sinkOpts = Map("partitionColumn" -> "bucket(8,user_id)"))
     val probeUid = Tables.events(spark, d).agg(max($"user_id")).head().getLong(0)

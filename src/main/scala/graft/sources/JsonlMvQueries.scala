@@ -488,7 +488,7 @@ object JsonlMvQueries extends QueryModule {
     * longer rebuilds nightly. The body's source side may be a tree of
     * INNER joins: it is LINEAR in each leaf, so when exactly ONE
     * source moved the refresh splices that leaf's SIGNED window into
-    * the body ([[graft.plans.MvIncremental.splicedChild]]) — a fact
+    * the body ([[graft.plans.MvIncremental.splicedTerm]]) — a fact
     * window joins the recorded dims, and the one maintenance MERGE
     * applies the result; group birth/death flows through the join.
     * TWO movers in one window TELESCOPE (r15): Δview = ΔF⋈D_head +

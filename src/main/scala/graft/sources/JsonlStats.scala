@@ -213,32 +213,14 @@ object JsonlStats {
     * so a re-rewrite recognizes it). */
   val LuvField = "_luv"
 
-  /** Manifest lineage of one file, resolved per physical position —
-    * the executor-side view of (`frid`, `luv`, `frids`), shipped in
-    * the input partition. `rowIdAt`/`luvAt` return -1 when the
-    * manifest does not know (unassigned, or a materialized file whose
-    * answer lives in-row). */
+  /** Manifest lineage of one file — the executor-side view of (`frid`,
+    * `luv`, `frids`), shipped in the input partition. Each `runs`
+    * element is (first position, first id or -1 on a luv-only run,
+    * length, luv). The reader resolves it per physical position itself
+    * (`linRunAt`, `rowIdValue` and `luvValue` in [[JsonlStatsRead]]),
+    * as does compaction's splice ([[GraftProcedures.concatMaterialize]]). */
   final case class Lineage(frid: Long = -1L, luv: Long = 0L,
-                           runs: Seq[(Long, Long, Long, Long)] = Nil) {
-    /** -1 on luv-only runs (firstId = -1, r12): ids live in-row there. */
-    def rowIdAt(pos: Long): Long =
-      if (frid >= 0L) frid + pos
-      else if (runs.nonEmpty)
-        runs.find(r => pos >= r._1 && pos < r._1 + r._3)
-          .map(r => if (r._2 == -1L) -1L else r._2 + (pos - r._1)).getOrElse(-1L)
-      else -1L
-    def luvAt(pos: Long): Long =
-      if (frid >= 0L) luv
-      else if (runs.nonEmpty)
-        runs.find(r => pos >= r._1 && pos < r._1 + r._3).map(_._4).getOrElse(-1L)
-      else -1L
-    /** The luv backing null-luv MATERIALIZED rows at `pos` (the
-      * entry-luv / luv-only-run fallback, r12). 0 = none. */
-    def backLuvAt(pos: Long): Long =
-      if (frid == -2L) luv
-      else runs.find(r => pos >= r._1 && pos < r._1 + r._3 && r._2 == -1L)
-        .map(_._4).getOrElse(0L)
-  }
+                           runs: Seq[(Long, Long, Long, Long)] = Nil)
   object Lineage {
     def of(s: FileStats): Lineage = Lineage(s.frid, s.luv, s.runs)
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,12 +19,12 @@ import java.nio.file.{Files, Paths}
   * genuine table named `files` always wins.
   *
   * Every row here is manifest/ref ARITHMETIC — file-count-bounded
-  * driver work (the same contract as `CALL detail`/`history`), served
-  * as a [[LocalScan]]: at 100 TB the manifest is the metadata tier's
-  * own scale problem and it is measured separately (MetaBench,
-  * SCALING.md); the DATA tier is never touched. Rows materialize when
-  * the scan is BUILT, so each query sees one consistent snapshot of
-  * the manifest. */
+  * driver work (the same contract as `CALL detail`), served by the
+  * procedures' in-memory scan ([[GraftProcedures.rowsScan]]): at 100 TB
+  * the manifest is the metadata tier's own scale problem and it is
+  * measured separately (MetaBench, SCALING.md); the DATA tier is never
+  * touched. Rows materialize when the scan is BUILT, so each query sees
+  * one consistent snapshot of the manifest. */
 object MetaTables {
   val Names: Set[String] = Set("files", "partitions", "history", "refs", "stats")
 
@@ -193,14 +193,9 @@ object MetaTables {
         java.util.EnumSet.of(TableCapability.BATCH_READ)
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
         new ScanBuilder {
-          override def build(): Scan = {
-            val snapshot = rowsOf(root) // one consistent manifest snapshot per scan
-            new LocalScan {
-              override def readSchema(): StructType = tableSchema
-              override def rows(): Array[InternalRow] = snapshot
-              override def description(): String = s"metadata table $which of $root"
-            }
-          }
+          // one consistent manifest snapshot per scan
+          override def build(): Scan =
+            GraftProcedures.rowsScan(tableSchema, rowsOf(root), s"metadata table $which of $root")
         }
     }
 }

@@ -5,16 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.Identifier
-import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
-import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.graftops.Bridge
-import org.apache.spark.sql.types.{BooleanType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Path, Paths}
 
-/** The materialized-view lifecycle (r12b): the `create_materialized_view`
-  * and `refresh_materialized_view` procedures of [[GraftCatalog]].
+/** The materialized-view lifecycle (r12b): the bodies of the
+  * `create_materialized_view` and `refresh_materialized_view` entries
+  * of the procedure table ([[GraftProcedures.all]]).
   *
   * `create_materialized_view(name, sql)` = the stored view plus an
   * engine-managed backing table `_mv_<name>` (atomic CTAS) plus the
@@ -50,252 +48,228 @@ object MvLifecycle {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  class MvDdlUnbound(catName: String, root: String, verb: String) extends UnboundProcedure {
-    override def name(): String = verb
-    override def description(): String = verb match {
-      case "create_materialized_view" =>
-        "create_materialized_view(name, sql[, or_replace]): store a view with a precomputed backing table"
-      case _ =>
-        "refresh_materialized_view(name): rebuild the backing table and re-record source versions"
+  /** The body's source TABLES as warehouse-relative paths, resolved
+    * under `ctx` (the calling session's context at create — exactly
+    * the context the definition stores — or the stored context at
+    * refresh). A stored-VIEW source FLATTENS (r15): the walk recurses
+    * into its body under the view's OWN stored context, collecting
+    * the underlying tables for version tracking plus the view itself
+    * as a definition-hash dependency ([[GraftViews.MvViewDepsProp]] —
+    * views have no versions, so freshness pins the definition).
+    * Every leaf must be a plain table of THIS catalog. */
+  private def sourceTables(spark: SparkSession, catName: String, root: String, sql: String,
+                           ctx: Seq[String]): (Seq[String], Seq[(String, String)]) = {
+    import org.apache.spark.sql.catalyst.analysis.{CTESubstitution, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    val cm = spark.sessionState.catalogManager
+    def rels(pl: LogicalPlan): Seq[Seq[String]] = {
+      val direct = pl.collect { case UnresolvedRelation(parts, _, false) => parts }
+      val inSubq = pl.flatMap(_.expressions.flatMap(_.collect {
+        case sq: SubqueryExpression => rels(sq.plan)
+      }.flatten))
+      direct ++ inSubq
     }
-    override def bind(inputType: StructType): BoundProcedure = new MvDdlBound(catName, root, verb)
-  }
-
-  class MvDdlBound(catName: String, root: String, verb: String) extends BoundProcedure {
-    override def name(): String = verb
-    override def description(): String = s"$verb on the stored-view tier"
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = verb match {
-      case "create_materialized_view" => Array(
-        ProcedureParameter.in("name", StringType).build(),
-        ProcedureParameter.in("sql", StringType).build(),
-        ProcedureParameter.in("or_replace", BooleanType).defaultValue("false").build())
-      case _ => Array(ProcedureParameter.in("name", StringType).build())
-    }
-
-    /** The body's source TABLES as warehouse-relative paths, resolved
-      * under `ctx` (the calling session's context at create — exactly
-      * the context the definition stores — or the stored context at
-      * refresh). A stored-VIEW source FLATTENS (r15): the walk recurses
-      * into its body under the view's OWN stored context, collecting
-      * the underlying tables for version tracking plus the view itself
-      * as a definition-hash dependency ([[GraftViews.MvViewDepsProp]] —
-      * views have no versions, so freshness pins the definition).
-      * Every leaf must be a plain table of THIS catalog. */
-    private def sourceTables(spark: SparkSession, sql: String, ctx: Seq[String])
-        : (Seq[String], Seq[(String, String)]) = {
-      import org.apache.spark.sql.catalyst.analysis.{CTESubstitution, UnresolvedRelation}
-      import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-      val cm = spark.sessionState.catalogManager
-      def rels(pl: LogicalPlan): Seq[Seq[String]] = {
-        val direct = pl.collect { case UnresolvedRelation(parts, _, false) => parts }
-        val inSubq = pl.flatMap(_.expressions.flatMap(_.collect {
-          case sq: SubqueryExpression => rels(sq.plan)
-        }.flatten))
-        direct ++ inSubq
-      }
-      val tables = scala.collection.mutable.LinkedHashSet.empty[String]
-      val viewDeps = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-      def walk(sql: String, ctx: Seq[String], seen: Set[String], depth: Int): Unit = {
-        require(depth < 16,
-          "materialized view source nesting deeper than 16 — flatten the chain")
-        val parsed = CTESubstitution.apply(spark.sessionState.sqlParser.parsePlan(sql))
-        rels(parsed).foreach { parts =>
-          val full =
-            if (parts.size == 1) ctx ++ parts
-            else if (cm.isCatalogRegistered(parts.head)) parts
-            else ctx.head +: parts
-          val sameCat = cm.isCatalogRegistered(full.head) && (cm.catalog(full.head) match {
-            case g: GraftCatalog => g.warehouseRoot == root
-            case _ => false
-          })
-          require(sameCat,
-            s"materialized view sources must be tables of catalog '$catName' — " +
-              s"'${parts.mkString(".")}' resolves to '${full.mkString(".")}' " +
-              "(temp views and foreign catalogs have no trackable versions)")
-          val rel = full.tail.mkString("/")
-          if (Files.exists(Paths.get(tableRoot(root, rel), "_stats.jsonl"))) tables += rel
-          else {
-            val nsDir = if (full.tail.size > 1)
-              Paths.get(root, full.tail.init: _*) else Paths.get(root)
-            GraftViews.read(nsDir, full.last) match {
-              case Some(vd) =>
-                require(!seen.contains(rel),
-                  s"cyclic view reference through '${full.mkString(".")}'")
-                viewDeps += (rel -> GraftViews.defHash(nsDir, full.last))
-                walk(vd.sql, vd.currentCatalog +: vd.currentNamespace,
-                  seen + rel, depth + 1)
-              case None => throw new IllegalArgumentException(
-                s"no such source table '${full.mkString(".")}' for the materialized view")
-            }
+    val tables = scala.collection.mutable.LinkedHashSet.empty[String]
+    val viewDeps = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
+    def walk(sql: String, ctx: Seq[String], seen: Set[String], depth: Int): Unit = {
+      require(depth < 16,
+        "materialized view source nesting deeper than 16 — flatten the chain")
+      val parsed = CTESubstitution.apply(spark.sessionState.sqlParser.parsePlan(sql))
+      rels(parsed).foreach { parts =>
+        val full =
+          if (parts.size == 1) ctx ++ parts
+          else if (cm.isCatalogRegistered(parts.head)) parts
+          else ctx.head +: parts
+        val sameCat = cm.isCatalogRegistered(full.head) && (cm.catalog(full.head) match {
+          case g: GraftCatalog => g.warehouseRoot == root
+          case _ => false
+        })
+        require(sameCat,
+          s"materialized view sources must be tables of catalog '$catName' — " +
+            s"'${parts.mkString(".")}' resolves to '${full.mkString(".")}' " +
+            "(temp views and foreign catalogs have no trackable versions)")
+        val rel = full.tail.mkString("/")
+        if (Files.exists(Paths.get(tableRoot(root, rel), "_stats.jsonl"))) tables += rel
+        else {
+          val nsDir = if (full.tail.size > 1)
+            Paths.get(root, full.tail.init: _*) else Paths.get(root)
+          GraftViews.read(nsDir, full.last) match {
+            case Some(vd) =>
+              require(!seen.contains(rel),
+                s"cyclic view reference through '${full.mkString(".")}'")
+              viewDeps += (rel -> GraftViews.defHash(nsDir, full.last))
+              walk(vd.sql, vd.currentCatalog +: vd.currentNamespace,
+                seen + rel, depth + 1)
+            case None => throw new IllegalArgumentException(
+              s"no such source table '${full.mkString(".")}' for the materialized view")
           }
         }
       }
-      walk(sql, ctx, Set.empty, 0)
-      (tables.toSeq, viewDeps.toSeq)
     }
+    walk(sql, ctx, Set.empty, 0)
+    (tables.toSeq, viewDeps.toSeq)
+  }
 
-    override def call(input: InternalRow): java.util.Iterator[Scan] = verb match {
-      case "create_materialized_view" =>
-        val dotted = input.getUTF8String(0).toString
-        val sql = input.getUTF8String(1).toString
-        val orReplace = input.getBoolean(2)
-        val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
-        GraftViews.requireValidName(vname)
-        require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
-          s"a TABLE named '$dotted' exists — views and tables share one identifier space")
-        val existing = GraftViews.read(nsDir, vname)
-        require(orReplace || existing.isEmpty,
-          s"view '$dotted' already exists (pass or_replace => true to redefine)")
-        val spark = SparkSession.active
-        // source versions recorded BEFORE the build: a source commit
-        // racing the CTAS leaves the MV stale (correct), never serving
-        // a backing built from data newer than the recorded versions
-        val cm = spark.sessionState.catalogManager
-        val (sources, viewDeps) = sourceTables(spark, sql,
-          cm.currentCatalog.name() +: cm.currentNamespace.toSeq)
-        require(sources.nonEmpty, "a materialized view needs at least one source table")
-        val versions = versionsNow(root, sources)
-        val df = spark.sql(sql)
-        val schema = df.schema
-        require(schema.fieldNames.toSeq.distinct.size == schema.size,
-          s"view body output has duplicate column names " +
-            s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
-        val backing = s"_mv_$vname"
-        // maintainable bodies (distributive SUM/COUNT at the stored
-        // grain) back with the AUGMENTED aggregate — visible columns
-        // plus hidden graft_ivm_* state (and one liveness table per
-        // COUNT(DISTINCT) slot, r15) — built from version-PINNED reads
-        // so the recorded versions exactly describe the state. The
-        // fresh-read path projects the declared columns, so the state
-        // columns never surface.
-        // REPLACE crash bracket (ADVICE r15, same family as the refresh
-        // rebuild): the OLD sidecar stays live while the shared backing
-        // `_mv_<name>` is createOrReplace'd with the NEW body — a crash
-        // before the new sidecar publishes would leave the old
-        // definition pointing at a backing built from a different body,
-        // and its next refresh would merge the old body's delta into
-        // it. The standing marker forces that refresh through the
-        // rebuild; the new sidecar write below (marker-free properties)
-        // clears it.
-        existing.foreach { old =>
-          if (old.properties.contains(GraftViews.MvTableProp) &&
-              !old.properties.contains(GraftViews.MvPendingProp))
-            GraftViews.write(nsDir, old.copy(properties = old.properties +
-              (GraftViews.MvPendingProp -> "replace")), replace = true)
-        }
+  /** `CALL create_materialized_view(name, sql[, or_replace])`. */
+  def create(pc: GraftProcedures.ProcCtx, input: InternalRow): Seq[InternalRow] = {
+    val (catName, root) = (pc.catalog, pc.root)
+    val dotted = input.getUTF8String(0).toString
+    val sql = input.getUTF8String(1).toString
+    val orReplace = input.getBoolean(2)
+    val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
+    GraftViews.requireValidName(vname)
+    require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
+      s"a TABLE named '$dotted' exists — views and tables share one identifier space")
+    val existing = GraftViews.read(nsDir, vname)
+    require(orReplace || existing.isEmpty,
+      s"view '$dotted' already exists (pass or_replace => true to redefine)")
+    val spark = SparkSession.active
+    // source versions recorded BEFORE the build: a source commit
+    // racing the CTAS leaves the MV stale (correct), never serving
+    // a backing built from data newer than the recorded versions
+    val cm = spark.sessionState.catalogManager
+    val (sources, viewDeps) = sourceTables(spark, catName, root, sql,
+      cm.currentCatalog.name() +: cm.currentNamespace.toSeq)
+    require(sources.nonEmpty, "a materialized view needs at least one source table")
+    val versions = versionsNow(root, sources)
+    val df = spark.sql(sql)
+    val schema = df.schema
+    require(schema.fieldNames.toSeq.distinct.size == schema.size,
+      s"view body output has duplicate column names " +
+        s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
+    val backing = s"_mv_$vname"
+    // maintainable bodies (distributive SUM/COUNT at the stored
+    // grain) back with the AUGMENTED aggregate — visible columns
+    // plus hidden graft_ivm_* state (and one liveness table per
+    // COUNT(DISTINCT) slot, r15) — built from version-PINNED reads
+    // so the recorded versions exactly describe the state. The
+    // fresh-read path projects the declared columns, so the state
+    // columns never surface.
+    // REPLACE crash bracket (ADVICE r15, same family as the refresh
+    // rebuild): the OLD sidecar stays live while the shared backing
+    // `_mv_<name>` is createOrReplace'd with the NEW body — a crash
+    // before the new sidecar publishes would leave the old
+    // definition pointing at a backing built from a different body,
+    // and its next refresh would merge the old body's delta into
+    // it. The standing marker forces that refresh through the
+    // rebuild; the new sidecar write below (marker-free properties)
+    // clears it.
+    existing.foreach { old =>
+      if (old.properties.contains(GraftViews.MvTableProp) &&
+          !old.properties.contains(GraftViews.MvPendingProp))
+        GraftViews.write(nsDir, old.copy(properties = old.properties +
+          (GraftViews.MvPendingProp -> "replace")), replace = true)
+    }
+    val (auxTables, havingSql) = buildMvBacking(
+      spark, root, catName, ns.toSeq, vname, df, versions, orReplace)
+    // a replaced MV may have owned MORE liveness tables than the
+    // new shape: drop the orphans (engine-managed storage)
+    existing.foreach(old => dropTables(nsDir, auxTablesOf(old).filterNot(auxTables.contains)))
+    GraftViews.write(nsDir, GraftViews.ViewDef(
+      name = vname, sql = sql,
+      currentCatalog = cm.currentCatalog.name(),
+      currentNamespace = cm.currentNamespace.toSeq,
+      schema = schema,
+      queryColumnNames = schema.fieldNames.toSeq,
+      columnAliases = schema.fieldNames.toSeq,
+      columnComments = Seq.empty,
+      properties = builtProps(Map(GraftViews.MvTableProp -> backing),
+        versions, auxTables, havingSql, viewDeps)),
+      replace = orReplace)
+    GraftProcedures.stringRow(dotted, "created", backing, GraftViews.mvSourcesEncode(versions))
+  }
+
+  /** `CALL refresh_materialized_view(name)`. */
+  def refresh(pc: GraftProcedures.ProcCtx, input: InternalRow): Seq[InternalRow] = {
+    val (catName, root) = (pc.catalog, pc.root)
+    val dotted = input.getUTF8String(0).toString
+    val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
+    // ATOMIC CLAIM (r14, ADVICE r13): refreshes of one view
+    // serialize on a per-view file lock — without it two concurrent
+    // calls could both pass the pending check and both apply the
+    // same (fromV, toV] delta window, double-counting it. The lock
+    // is an OS FileLock (released on process death, no stale-lock
+    // sweep needed) behind a JVM monitor (same-process threads
+    // would otherwise hit OverlappingFileLockException). The loser
+    // BLOCKS, then re-reads the sidecar: the winner's re-recorded
+    // versions make the second refresh a noop (or a genuinely new,
+    // disjoint window) — never the same window twice.
+    MvRefreshLock.withLock(nsDir, vname) {
+    val d = GraftViews.read(nsDir, vname)
+      .getOrElse(throw new IllegalArgumentException(s"no such view '$dotted' under $root"))
+    val backing = d.properties.getOrElse(GraftViews.MvTableProp,
+      throw new IllegalArgumentException(
+        s"'$dotted' is a plain view — only materialized views refresh"))
+    val spark = SparkSession.active
+    val cat = spark.sessionState.catalogManager.catalog(catName)
+      .asInstanceOf[GraftCatalog]
+    val recorded = GraftViews.mvSourcesDecode(
+      d.properties.getOrElse(GraftViews.MvSourcesProp, ""))
+    // versions re-recorded BEFORE the rebuild — same conservatism
+    val versions = versionsNow(root, recorded.map(_._1))
+    val backingFqn = quoted(catName +: (ns.toSeq :+ backing))
+    val ident = Identifier.of(ns, vname)
+
+    // INCREMENTAL path (r13): a single-source distributive body
+    // whose backing carries the graft_ivm_* state refreshes by
+    // applying the signed change feed of (recorded, head] to the
+    // backing with one maintenance MERGE — cost proportional to the
+    // DELTA, not the source. Crash protocol: a pending marker
+    // brackets the MERGE; while it stands, reads take the (correct)
+    // body path and the next refresh rebuilds fully — an
+    // interrupted window can never be applied twice.
+    // a redefined VIEW dependency (r15) changes the body's meaning
+    // with no table version moving — the incremental window cannot
+    // express that, so stale deps force the rebuild (which also
+    // re-derives the source set: the new definition may reference
+    // different tables)
+    val depsFresh = GraftViews.mvViewDepsFresh(root, d)
+    val mode = (if (depsFresh) tryIncrementalRefresh(
+      spark, root, nsDir, catName, cat, ident, backingFqn, d, recorded, versions)
+      else None) match {
+      case Some(m) => m
+      case None =>
+        // full RTAS fallback — always correct, and it (re)writes
+        // the hidden state columns (and COUNT(DISTINCT) liveness
+        // tables, r15) when the body is maintainable, from
+        // version-PINNED reads of `versions`, so the NEXT refresh
+        // can go incremental. Atomic: readers see the old backing
+        // or the new one, and the definition updates only AFTER
+        // the swap.
+        // crash bracket (ADVICE r15): the backing's createOrReplace
+        // commits BEFORE the sidecar re-records versions — reached
+        // via a pre-marker decline (stale backing schema, a frozen
+        // mover), no marker may be standing, and a crash between
+        // the two writes would leave the backing NEWER than the
+        // recorded versions: the next refresh's incremental MERGE
+        // would re-apply the already-included window (the r14
+        // double-count family). Put the marker down first; the
+        // sidecar publish below clears it in the same write that
+        // re-records versions.
+        if (!d.properties.contains(GraftViews.MvPendingProp))
+          GraftViews.write(nsDir, d.copy(properties = d.properties +
+            (GraftViews.MvPendingProp -> "rebuild")), replace = true)
+        // re-derive the source set from the body (a redefined view
+        // dependency may reference different tables) and re-record
+        // its versions BEFORE the rebuild — same conservatism
+        val (srcTabs, newDeps) = sourceTables(spark, catName, root, d.sql,
+          d.currentCatalog +: d.currentNamespace)
+        val newVersions = versionsNow(root, srcTabs)
+        val df = Bridge.ofRows(spark,
+          new graft.plans.ResolveGraftViews(spark).bodyPlan(catName, cat, ident, d))
         val (auxTables, havingSql) = buildMvBacking(
-          spark, root, catName, ns.toSeq, vname, df, versions, orReplace)
-        // a replaced MV may have owned MORE liveness tables than the
-        // new shape: drop the orphans (engine-managed storage)
-        existing.foreach(old => dropTables(nsDir, auxTablesOf(old).filterNot(auxTables.contains)))
-        GraftViews.write(nsDir, GraftViews.ViewDef(
-          name = vname, sql = sql,
-          currentCatalog = cm.currentCatalog.name(),
-          currentNamespace = cm.currentNamespace.toSeq,
-          schema = schema,
-          queryColumnNames = schema.fieldNames.toSeq,
-          columnAliases = schema.fieldNames.toSeq,
-          columnComments = Seq.empty,
-          properties = builtProps(Map(GraftViews.MvTableProp -> backing),
-            versions, auxTables, havingSql, viewDeps)),
-          replace = orReplace)
-        GraftProcedures.oneRowScan(Seq("view" -> dotted, "action" -> "created",
-          "backing" -> backing, "sources" -> GraftViews.mvSourcesEncode(versions)),
-          s"create_materialized_view $dotted")
-
-      case "refresh_materialized_view" =>
-        val dotted = input.getUTF8String(0).toString
-        val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
-        // ATOMIC CLAIM (r14, ADVICE r13): refreshes of one view
-        // serialize on a per-view file lock — without it two concurrent
-        // calls could both pass the pending check and both apply the
-        // same (fromV, toV] delta window, double-counting it. The lock
-        // is an OS FileLock (released on process death, no stale-lock
-        // sweep needed) behind a JVM monitor (same-process threads
-        // would otherwise hit OverlappingFileLockException). The loser
-        // BLOCKS, then re-reads the sidecar: the winner's re-recorded
-        // versions make the second refresh a noop (or a genuinely new,
-        // disjoint window) — never the same window twice.
-        MvRefreshLock.withLock(nsDir, vname) {
-        val d = GraftViews.read(nsDir, vname)
-          .getOrElse(throw new IllegalArgumentException(s"no such view '$dotted' under $root"))
-        val backing = d.properties.getOrElse(GraftViews.MvTableProp,
-          throw new IllegalArgumentException(
-            s"'$dotted' is a plain view — only materialized views refresh"))
-        val spark = SparkSession.active
-        val cat = spark.sessionState.catalogManager.catalog(catName)
-          .asInstanceOf[GraftCatalog]
-        val recorded = GraftViews.mvSourcesDecode(
-          d.properties.getOrElse(GraftViews.MvSourcesProp, ""))
-        // versions re-recorded BEFORE the rebuild — same conservatism
-        val versions = versionsNow(root, recorded.map(_._1))
-        val backingFqn = quoted(catName +: (ns.toSeq :+ backing))
-        val ident = Identifier.of(ns, vname)
-
-        // INCREMENTAL path (r13): a single-source distributive body
-        // whose backing carries the graft_ivm_* state refreshes by
-        // applying the signed change feed of (recorded, head] to the
-        // backing with one maintenance MERGE — cost proportional to the
-        // DELTA, not the source. Crash protocol: a pending marker
-        // brackets the MERGE; while it stands, reads take the (correct)
-        // body path and the next refresh rebuilds fully — an
-        // interrupted window can never be applied twice.
-        // a redefined VIEW dependency (r15) changes the body's meaning
-        // with no table version moving — the incremental window cannot
-        // express that, so stale deps force the rebuild (which also
-        // re-derives the source set: the new definition may reference
-        // different tables)
-        val depsFresh = GraftViews.mvViewDepsFresh(root, d)
-        val mode = (if (depsFresh) tryIncrementalRefresh(
-          spark, root, nsDir, catName, cat, ident, backingFqn, d, recorded, versions)
-          else None) match {
-          case Some(m) => m
-          case None =>
-            // full RTAS fallback — always correct, and it (re)writes
-            // the hidden state columns (and COUNT(DISTINCT) liveness
-            // tables, r15) when the body is maintainable, from
-            // version-PINNED reads of `versions`, so the NEXT refresh
-            // can go incremental. Atomic: readers see the old backing
-            // or the new one, and the definition updates only AFTER
-            // the swap.
-            // crash bracket (ADVICE r15): the backing's createOrReplace
-            // commits BEFORE the sidecar re-records versions — reached
-            // via a pre-marker decline (stale backing schema, a frozen
-            // mover), no marker may be standing, and a crash between
-            // the two writes would leave the backing NEWER than the
-            // recorded versions: the next refresh's incremental MERGE
-            // would re-apply the already-included window (the r14
-            // double-count family). Put the marker down first; the
-            // sidecar publish below clears it in the same write that
-            // re-records versions.
-            if (!d.properties.contains(GraftViews.MvPendingProp))
-              GraftViews.write(nsDir, d.copy(properties = d.properties +
-                (GraftViews.MvPendingProp -> "rebuild")), replace = true)
-            // re-derive the source set from the body (a redefined view
-            // dependency may reference different tables) and re-record
-            // its versions BEFORE the rebuild — same conservatism
-            val (srcTabs, newDeps) = sourceTables(spark, d.sql,
-              d.currentCatalog +: d.currentNamespace)
-            val newVersions = versionsNow(root, srcTabs)
-            val df = Bridge.ofRows(spark,
-              new graft.plans.ResolveGraftViews(spark).bodyPlan(catName, cat, ident, d))
-            val (auxTables, havingSql) = buildMvBacking(
-              spark, root, catName, ns.toSeq, vname, df, newVersions, orReplace = true)
-            dropTables(nsDir, auxTablesOf(d).filterNot(auxTables.contains))
-            GraftViews.write(nsDir, d.copy(properties = builtProps(d.properties,
-              newVersions, auxTables, havingSql, newDeps)), replace = true)
-            "full"
-        }
-        // readout sources from the POST-refresh sidecar: a rebuild may
-        // have re-derived the set through redefined view dependencies
-        val sourcesNow = GraftViews.read(nsDir, vname)
-          .flatMap(_.properties.get(GraftViews.MvSourcesProp))
-          .getOrElse(GraftViews.mvSourcesEncode(versions))
-        GraftProcedures.oneRowScan(Seq("view" -> dotted, "action" -> "refreshed",
-          "mode" -> mode, "sources" -> sourcesNow),
-          s"refresh_materialized_view $dotted")
-        }
+          spark, root, catName, ns.toSeq, vname, df, newVersions, orReplace = true)
+        dropTables(nsDir, auxTablesOf(d).filterNot(auxTables.contains))
+        GraftViews.write(nsDir, d.copy(properties = builtProps(d.properties,
+          newVersions, auxTables, havingSql, newDeps)), replace = true)
+        "full"
+    }
+    // readout sources from the POST-refresh sidecar: a rebuild may
+    // have re-derived the set through redefined view dependencies
+    val sourcesNow = GraftViews.read(nsDir, vname)
+      .flatMap(_.properties.get(GraftViews.MvSourcesProp))
+      .getOrElse(GraftViews.mvSourcesEncode(versions))
+    GraftProcedures.stringRow(dotted, "refreshed", mode, sourcesNow)
     }
   }
 

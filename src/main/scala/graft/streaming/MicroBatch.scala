@@ -73,8 +73,8 @@ object MicroBatch extends QueryModule {
   def streamMicrobatch(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val landing = ensureLanding(spark, d)
-    val sink = Landing.fixtureDir(d, "stream_sink_events")
-    val ckpt = Landing.fixtureDir(d, "stream_ckpt_events")
+    val state = Landing.streamState(d, "stream_events")
+    val (sink, ckpt) = (s"$state/sink", s"$state/ckpt")
     val q = spark.readStream.schema(wireSchema).json(landing)
       .withColumn("ts", to_timestamp($"ts_str", tsFmt))
       // no null-dropping here: the oracle groups nulls, so the engine
@@ -148,8 +148,8 @@ object MicroBatch extends QueryModule {
     val landing = ensureLanding(spark0, d)
     val spark = streamSession(spark0)
     import spark.implicits._
-    val sink = Landing.fixtureDir(d, s"${name}_sink")
-    val ckpt = Landing.fixtureDir(d, s"${name}_ckpt")
+    val state = Landing.streamState(d, name)
+    val (sink, ckpt) = (s"$state/sink", s"$state/ckpt")
     def src = spark.readStream.schema(wireSchema)
       .option("maxFilesPerTrigger", "1000000")
       .json(landing)
@@ -300,8 +300,8 @@ object MicroBatch extends QueryModule {
     }
     val spark = streamSession(spark0)
     import spark.implicits._
-    val sink = Landing.fixtureDir(d, "stream_dedup_sink")
-    val ckpt = Landing.fixtureDir(d, "stream_dedup_ckpt")
+    val state = Landing.streamState(d, "stream_dedup")
+    val (sink, ckpt) = (s"$state/sink", s"$state/ckpt")
     // single AvailableNow batch for the unordered fixture (see q68 note)
     val q = spark.readStream.schema(wireSchema)
       .option("maxFilesPerTrigger", "1000000")
@@ -335,8 +335,8 @@ object MicroBatch extends QueryModule {
   def streamForeachBatch(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val landing = ensureLanding(spark, d)
-    val outRoot = Landing.fixtureDir(d, "febatch_out")
-    val ckpt = Landing.fixtureDir(d, "febatch_ckpt")
+    val state = Landing.streamState(d, "febatch")
+    val (outRoot, ckpt) = (s"$state/out", s"$state/ckpt")
     def drain(): Unit = {
       val q = spark.readStream.schema(wireSchema).json(landing)
         .withColumn("ts", to_timestamp($"ts_str", tsFmt))
@@ -417,8 +417,8 @@ object MicroBatch extends QueryModule {
   def streamStaticEnrich(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val landing = ensureLanding(spark, d)
-    val sink = Landing.fixtureDir(d, "stream_enrich_sink")
-    val ckpt = Landing.fixtureDir(d, "stream_enrich_ckpt")
+    val state = Landing.streamState(d, "stream_enrich")
+    val (sink, ckpt) = (s"$state/sink", s"$state/ckpt")
     val dim = Tables.customer(spark, d)
       .select($"c_custkey".as("user_id"), $"c_mktsegment".as("segment"))
     val q = spark.readStream.schema(wireSchema).json(landing)

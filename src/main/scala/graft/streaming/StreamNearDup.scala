@@ -69,7 +69,7 @@ object StreamNearDup extends QueryModule {
       Tables.documents(spark, d).repartition(4)
         .write.mode("overwrite").parquet(dd)
     }
-    val root = Landing.fixtureDir(d, "stream_neardup")
+    val root = Landing.streamState(d, "stream_neardup")
     val ckpt = s"$root/ckpt"
     val idxRoot = s"$root/index"
     val sigRoot = s"$root/sigs"

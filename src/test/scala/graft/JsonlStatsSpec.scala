@@ -1883,11 +1883,11 @@ class JsonlStatsSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $cat.tt_gc")
   }
 
-  test("CALL history lists generations with supersede instants (r7)") {
+  test("<t>.history lists generations with supersede instants (r7)") {
     import spark.implicits._
     val cat = JsonlFixtures.ensureCatalog(spark, sfDir)
     JsonlVersionQueries.timeTravel(spark, sfDir).collect() // 2-generation fixture
-    val h = spark.sql(s"CALL $cat.history('jsonl_versioned')")
+    val h = spark.sql(s"SELECT version, superseded_ms, rows FROM $cat.jsonl_versioned.history")
       .orderBy($"version").collect()
     assert(h.length >= 2)
     assert(h.map(_.getInt(0)).toSeq === (1 to h.length))
@@ -1897,8 +1897,8 @@ class JsonlStatsSpec extends SparkSpec {
     assert(h.last.isNullAt(1))
     // generation row counts: v1 = the non-click feed, live = the full
     val ev = graft.ingest.Tables.events(spark, sfDir)
-    assert(h.head.getLong(3) === ev.filter($"event_type" =!= "click").count())
-    assert(h.last.getLong(3) === ev.count())
+    assert(h.head.getLong(2) === ev.filter($"event_type" =!= "click").count())
+    assert(h.last.getLong(2) === ev.count())
   }
 
   test("q180: CALL vacuum — retention arithmetic, shared-file safety, orphan grace (r7)") {
@@ -1946,8 +1946,8 @@ class JsonlStatsSpec extends SparkSpec {
       spark.sql(s"SELECT * FROM $cat.vac_spec VERSION AS OF 1").collect()
     }
     assert(vErr.toString.contains("vacuum"), s"expected a vacuum error, got $vErr")
-    // CALL history skips the vacuumed generation instead of crashing
-    val h = spark.sql(s"CALL $cat.history('vac_spec')").orderBy($"version").collect()
+    // the history metadata table skips the vacuumed generation instead of crashing
+    val h = spark.sql(s"SELECT version FROM $cat.vac_spec.history").orderBy($"version").collect()
     assert(h.map(_.getInt(0)).toSeq === Seq(2, 3))
     spark.sql(s"DROP TABLE $cat.vac_spec")
   }

@@ -391,6 +391,52 @@ class PlanShapeSpec extends SparkSpec {
       s"hand-rolled build-once markers (use Landing.ensureBuilt):\n${hits.mkString("\n")}")
   }
 
+  test("build-once fixtures: a fixture copied to another directory rebuilds there " +
+    "exactly once") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("ensure_built")
+    val (a, b) = (base.resolve("a"), base.resolve("b"))
+    var builds = 0
+    def build(dir: String): Unit = {
+      builds += 1
+      Files.createDirectories(Paths.get(dir))
+      Files.write(Paths.get(dir, "data.txt"), Array[Byte](1))
+    }
+    graft.ingest.Landing.ensureBuilt(a.toString)(build)
+    graft.ingest.Landing.ensureBuilt(a.toString)(build)
+    assert(builds === 1, "a built fixture must not rebuild in place")
+    // copy A (marker included) to B, as a checkout copied with its
+    // target/ would: B's marker names A, so B rebuilds once, then holds
+    val walk = Files.walk(a)
+    try walk.forEach { p =>
+      val q = b.resolve(a.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    } finally walk.close()
+    graft.ingest.Landing.ensureBuilt(b.toString)(build)
+    graft.ingest.Landing.ensureBuilt(b.toString)(build)
+    assert(builds === 2, "a copied fixture must rebuild exactly once at its new path")
+    graft.ingest.Landing.ensureBuilt(a.toString)(build)
+    assert(builds === 2, "the original must stay built")
+    graft.util.Fs.deleteRecursively(base.toString)
+  }
+
+  test("one procedure table: one adapter implements the procedure API, one " +
+    "LocalScan serves every in-memory result, and no match dispatches a procedure name") {
+    val api = "(extends|with)\\s+(Unbound|Bound)Procedure\\b".r
+    val adapters = mainSourceHits((_, line) => api.findFirstIn(line).isDefined)
+    assert(adapters.size == 1 && adapters.head.contains("class ProcAdapter"),
+      s"procedure API implemented outside the one adapter:\n${adapters.mkString("\n")}")
+    val scans = mainSourceHits((_, line) => line.contains("new LocalScan"))
+    assert(scans.size == 1, s"more than one LocalScan under src/main:\n${scans.mkString("\n")}")
+    val names = graft.sources.GraftProcedures.all.keySet
+    assert(names.nonEmpty)
+    val dispatch = mainSourceHits((f, line) =>
+      f.getFileName.toString == "GraftCatalog.scala" &&
+        names.exists(n => line.contains("\"" + n + "\"")))
+    assert(dispatch.isEmpty,
+      s"procedure names dispatched outside GraftProcedures.all:\n${dispatch.mkString("\n")}")
+  }
+
   test("q165 SQL UDFs are inlined: no eval barrier, plan stays in whole-stage codegen") {
     val df = graft.analytics.SqlSurface.sqlUdfTiers(spark, sfDir)
     df.collect()

@@ -552,15 +552,47 @@ class RefsSpec extends SparkSpec {
     val (cat, _, _) = scratch("procs")
     val plugin = spark.sessionState.catalogManager.catalog(cat)
       .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    val table = graft.sources.GraftProcedures.all.keySet
     val listed = plugin.listProcedures(Array.empty).map(_.name()).toSet
-    assert(listed === GraftCatalog.ProcedureNames.toSet,
-      s"discovery must inventory the full procedure set; missing: ${GraftCatalog.ProcedureNames.toSet -- listed}")
+    assert(listed === table,
+      s"discovery must inventory the full procedure set; missing: ${table -- listed}")
     // every listed name round-trips through loadProcedure
-    GraftCatalog.ProcedureNames.foreach { n =>
+    table.foreach { n =>
       val p = plugin.loadProcedure(
         org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, n))
-      assert(p.name() != null, s"procedure $n failed to load")
+      assert(p.name() === n, s"procedure $n failed to load")
     }
     assert(listed.size >= 18)
+    // `<table>.history` is the one generation report: no procedure shadows it
+    intercept[Exception](plugin.loadProcedure(
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, "history")))
+  }
+
+  test("function discovery: every listed function loads, and every function the " +
+    "catalog defines is listed") {
+    import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier}
+    import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
+    val (cat, _, _) = scratch("fns")
+    val plugin = spark.sessionState.catalogManager.catalog(cat).asInstanceOf[FunctionCatalog]
+    val listed = plugin.listFunctions(Array.empty).map(_.name()).toSeq
+    assert(listed.distinct.size === listed.size, s"duplicate listing: $listed")
+    listed.foreach { n =>
+      assert(plugin.loadFunction(Identifier.of(Array.empty, n)).name() === n,
+        s"listed function $n does not load under its name")
+    }
+    // every UnboundFunction object the catalog companion declares must
+    // load under its own name and be listed (bucket once loaded unlisted)
+    val defined = classOf[GraftCatalog].getDeclaredClasses.toSeq
+      .filter(c => classOf[UnboundFunction].isAssignableFrom(c))
+      .map(c => c.getField("MODULE$").get(null).asInstanceOf[UnboundFunction])
+    assert(defined.map(_.name()).contains("bucket"), s"found ${defined.map(_.name())}")
+    defined.foreach { f =>
+      assert(plugin.loadFunction(Identifier.of(Array.empty, f.name())) eq f,
+        s"${f.name()} does not load")
+      assert(listed.contains(f.name()), s"${f.name()} loads but is not listed")
+    }
+    assert(listed.toSet === defined.map(_.name()).toSet)
+    intercept[org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException](
+      plugin.loadFunction(Identifier.of(Array.empty, "no_such_fn")))
   }
 }
