@@ -19,7 +19,7 @@ object PipelineQueries extends QueryModule {
 
   private val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 
-  /** S1: events → JSONL landing glob (ISO-8601 'Z' wire timestamps) →
+  /** S1: events → JSONL landing directory (ISO-8601 'Z' wire timestamps) →
     * explicit-schema read-back → aggregate. */
   def jsonlRoundtrip(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -31,7 +31,7 @@ object PipelineQueries extends QueryModule {
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("event_type", StringType), StructField("value", DoubleType),
       StructField("ts_str", StringType)))
-    Landing.readJsonl(spark, s"$dir/*.json", schema)
+    Landing.readJsonl(spark, dir, schema)
       .withColumn("ts", to_timestamp($"ts_str", tsFmt))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),

@@ -121,7 +121,7 @@ object ReferenceEtl extends QueryModule {
   def flattenTransactions(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val dir = ensureTransactionsFixture(spark, d)
-    Landing.readJsonl(spark, s"$dir/*.json", txSchema)
+    Landing.readJsonl(spark, dir, txSchema)
       .withColumn("item", explode($"line_items"))
       .select(
         $"transaction_id", $"user_id", $"status", $"total",
@@ -141,7 +141,7 @@ object ReferenceEtl extends QueryModule {
   def sparseUserEvents(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val dir = ensureUserEventsFixture(spark, d)
-    Landing.readJsonl(spark, s"$dir/*.json", sparseEventSchema)
+    Landing.readJsonl(spark, dir, sparseEventSchema)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
            count($"search_query").as("n_search_query"),

@@ -850,8 +850,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
     if (!viewExists(ident) && !orCreate)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident)
     // ATOMIC_MOVE with REPLACE_EXISTING: a concurrent reader sees the
-    // old definition or the new one, never a torn file
+    // old definition or the new one, never a torn file; a replaced
+    // materialized view's tables go after the new sidecar is published
+    val replaced = GraftViews.read(nsDir(ident.namespace()), ident.name())
     GraftViews.write(nsDir(ident.namespace()), viewDefOf(info), replace = true)
+    replaced.foreach(MvLifecycle.dropOwnedTables(nsDir(ident.namespace()), _))
     loadView(ident)
   }
 
@@ -871,22 +874,17 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
 
   override def dropView(ident: Identifier): Boolean = {
     // same contract as the CALL surface: refuse while other stored
-    // views expand through this one, and take an MV's backing table
-    // with the definition
+    // views expand through this one, and take an MV's backing and
+    // liveness tables with the definition
     val dependents = GraftViews.referencingViews(
       s => org.apache.spark.sql.SparkSession.active.sessionState.sqlParser.parsePlan(s),
       root, ident.namespace().toSeq, ident.name())
     require(dependents.isEmpty,
       s"cannot drop view '${ident}': referenced by stored view(s) " +
         s"${dependents.mkString(", ")} — drop or redefine the dependents first")
-    val backing = GraftViews.read(nsDir(ident.namespace()), ident.name())
-      .flatMap(_.properties.get(GraftViews.MvTableProp))
+    val defn = GraftViews.read(nsDir(ident.namespace()), ident.name())
     val dropped = GraftViews.drop(nsDir(ident.namespace()), ident.name())
-    if (dropped) backing.foreach { b =>
-      val dir = nsDir(ident.namespace()).resolve(b)
-      if (java.nio.file.Files.exists(dir.resolve("_stats.jsonl")))
-        graft.util.Fs.deleteRecursively(dir.toString)
-    }
+    if (dropped) defn.foreach(MvLifecycle.dropOwnedTables(nsDir(ident.namespace()), _))
     dropped
   }
 

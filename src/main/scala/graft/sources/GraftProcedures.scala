@@ -25,13 +25,14 @@ import scala.jdk.CollectionConverters._
   * natural output) from costing a thousand task launches and manifest
   * entries. Together they bound task size from both ends.
   *
-  * The operation never parses a row: JSONL is concatenation-safe, so a
-  * bin of small files becomes one file by STREAMING BYTE COPY (the
-  * engine guarantees newline-terminated data files; a missing trailing
-  * newline is patched during the copy), and the merged manifest entry
-  * is derived from the members' entries — bounds = min/max of member
-  * bounds, rows = sum of member counts, pkey preserved (bins never
-  * cross keys, so a compacted key-grouped table keeps its SPJ layout).
+  * Compaction parses no row, save in the runaway-run bins [[Bin]]
+  * describes: JSONL is concatenation-safe, so a bin of small files
+  * becomes one file by STREAMING BYTE COPY (the engine guarantees
+  * newline-terminated data files; a missing trailing newline is patched
+  * during the copy), and the merged manifest entry is derived from the
+  * members' entries — bounds = min/max of member bounds, rows = sum of
+  * member counts, pkey preserved (bins never cross keys, so a compacted
+  * key-grouped table keeps its SPJ layout).
   * Bins copy in parallel as one Spark job; the manifest swap is the
   * commit, so a crash mid-copy leaves invisible orphans and the old
   * generation intact; member files are GC'd only after the swap.
@@ -46,16 +47,15 @@ import scala.jdk.CollectionConverters._
   * reference them until [[vacuum]] expires those (deferred GC, r7). */
 object GraftProcedures {
 
-  /** One compaction bin: member data files (relative names) → the
-    * merged output file, with its ready-made manifest entry.
-    * `matLineages` (r12): present when the bin's run list crossed
-    * [[JsonlStats.MaxRunsPerEntry]] — the copy job then SPLICES each
-    * member's manifest lineage in-row (one `Lineage` per member, in
-    * order) instead of a pure byte concat, and the entry declares
-    * frid = -2 with no runs. */
-  private final case class Bin(members: Seq[String], out: String,
-                               entry: JsonlStats.FileStats,
-                               matLineages: Option[Seq[JsonlStats.Lineage]] = None)
+  /** One compaction bin: its member entries, in concat order, and the
+    * merged output file. `entry` is the merged manifest entry derived
+    * from the members' entries when the bin is a pure byte concat. It is
+    * None when the bin's coalesced run list crossed
+    * [[JsonlStats.MaxRunsPerEntry]] (r12): the bin then rewrites its rows
+    * through [[rewriteRows]], which materializes lineage in-row, and
+    * publishes the sink's entry (frid = -2, zero runs). */
+  private final case class Bin(members: Seq[JsonlStats.FileStats], out: String,
+                               entry: Option[JsonlStats.FileStats])
 
   /** What a procedure body sees besides its arguments: the catalog it
     * was called through and that catalog's warehouse root. */
@@ -1127,12 +1127,57 @@ object GraftProcedures {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** The DV-collapse core: one Spark task per DV'd file, each streaming
-    * its survivors to a fresh file while re-deriving the full stats the
-    * writer would have (statsCol bounds, per-numeric-column bounds,
-    * bloom hashes) by parsing kept lines — the one maintenance op that
-    * must parse, because attained bounds cannot be derived from masked
-    * entries. Returns (filesRewritten, dvsCollapsed, rowsDropped). */
+  /** The one row-rewrite path of table maintenance: each output file —
+    * its members as whole-file scan partitions ([[wholeFile]]), its
+    * name and its pkey — is one Spark task. The connector's own reader
+    * serves each member's surviving rows (DVs, equality deletes and
+    * lineage applied exactly as a scan applies them), `_row_id` and
+    * `_last_updated_version` included, into one [[JsonlFileSink]]
+    * configured from the table's metadata, so the output carries every
+    * statistic and sidecar the writer publishes and keeps its members'
+    * row order. Returns each output's commit in order; `file` is null
+    * when no row survived (the sink leaves no file). */
+  private def rewriteRows(tableRoot: String,
+      outputs: Seq[(Seq[JsonlFilePartition], String, Option[String])]): Seq[JsonlFileCommit] = {
+    if (outputs.isEmpty) return Nil
+    val meta = JsonlStats.readTableMeta(tableRoot)
+    // lineage rides as the two metadata columns the reader serves and
+    // the sink materializes in-row
+    val schema = meta.schema.getOrElse(JsonlStats.schema)
+      .add(JsonlStats.RowIdMeta, LongType).add(JsonlStats.LuvMeta, LongType)
+    val statsCol = meta.statsCol.getOrElse(JsonlStats.statsColumn)
+    val (bloomCol, gramCol, mapping) = (meta.bloomCol, meta.gramCol, meta.columnMapping)
+    val readers = new JsonlReaderFactory(schema, columnMapping = mapping)
+    SparkSession.active.sparkContext
+      .parallelize(outputs, math.min(outputs.size, 32))
+      .map { case (members, out, pkey) =>
+        val sink = new JsonlFileSink(tableRoot, out, schema, statsCol, bloomCol, mapping, gramCol)
+        try {
+          members.foreach { m =>
+            val r = readers.createReader(m)
+            try while (r.next()) sink.write(r.get()) finally r.close()
+          }
+          sink.finish(pkey)
+        } catch { case e: Throwable => sink.abort(); throw e }
+      }
+      .collect().toSeq // file-count-bounded: one commit per output
+  }
+
+  /** `s`'s whole file as a scan partition, with its DVs, the given
+    * applicable equality deletes and its manifest lineage. */
+  private def wholeFile(tableRoot: String, s: JsonlStats.FileStats,
+                        eqds: Seq[(String, Seq[String])] = Nil): JsonlFilePartition =
+    JsonlFilePartition(Paths.get(tableRoot, s.file).toString,
+      dvs = s.dvs.map(Paths.get(tableRoot, _).toString), eqds = eqds,
+      lin = JsonlStats.Lineage.of(s))
+
+  /** The DV-collapse core: each DV'd (or equality-deleted) file becomes
+    * one fresh file holding its survivors, written by [[rewriteRows]] —
+    * the one maintenance op that must parse, because attained bounds
+    * cannot be derived from masked entries. Survivors SHIFT physical
+    * positions, so their lineage materializes in-row and the entry
+    * declares frid = -2. Returns (filesRewritten, dvsCollapsed,
+    * rowsDropped). */
   def rewriteDeletes(tableRoot: String): (Int, Int, Long) = {
     val stats = JsonlStats.readStats(tableRoot)
     // equality deletes (r9b) materialize here too: every file an eqdel
@@ -1147,28 +1192,18 @@ object GraftProcedures {
         .map(d => (Paths.get(tableRoot, d.file).toString, d.cols))
     val dirty = stats.filter(s => s.dvs.nonEmpty || eqdsFor(s).nonEmpty)
     if (dirty.isEmpty && eqdels.isEmpty) return (0, 0, 0L)
-    val meta = JsonlStats.readTableMeta(tableRoot)
-    val schema = meta.schema.getOrElse(JsonlStats.schema)
-    val schemaJson = schema.json
-    val statsCol = meta.statsCol.getOrElse(JsonlStats.statsColumn)
-    val bloomCol = meta.bloomCol
-    val gramCol = meta.gramCol
-    val mapping = meta.columnMapping
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val work = dirty.zipWithIndex.map { case (s, i) =>
-      (s.file, s.dvs, s.pkey, s.pspec, f"part-rwdel-$runId-$i%05d.jsonl", eqdsFor(s),
-        JsonlStats.Lineage.of(s), s.sorted)
+    val commits = rewriteRows(tableRoot, dirty.zipWithIndex.map { case (s, i) =>
+      (Seq(wholeFile(tableRoot, s, eqdsFor(s))), f"part-rwdel-$runId-$i%05d.jsonl", s.pkey)
+    })
+    // a wholly-deleted file rewrites to nothing: no entry, no file. The
+    // collapse preserves the file's LAYOUT — same pkey, same partition
+    // spec (lazy spec migration is COW's job, not this one's) and the
+    // same sort stamp (survivors keep the source's row order); seq stays
+    // 0, so an eqdel a concurrent upsert commits still applies
+    val fresh = dirty.zip(commits).collect {
+      case (s, c) if c.file != null => c.entry(s.pspec, s.sorted)
     }
-    val rootCopy = tableRoot
-    val fresh: Seq[JsonlStats.FileStats] =
-      if (work.isEmpty) Nil
-      else SparkSession.active.sparkContext
-        .parallelize(work, math.min(work.size, 32))
-        .map { case (file, dvs, pkey, pspec, out, eqds, lin, sorted) =>
-          GraftProcedures.rewriteOneFile(rootCopy, file, dvs, pkey, out,
-            schemaJson, statsCol, bloomCol, mapping, gramCol, pspec, eqds, lin, sorted)
-        }
-        .collect().toSeq // file-count-bounded: one manifest entry per task
     // OCC rewrite (r8): the collapsed files' planned entries must
     // survive verbatim — a DV attached since planning would mean the
     // rewritten survivors resurrect freshly-masked rows, so that
@@ -1181,7 +1216,7 @@ object GraftProcedures {
     JsonlStats.commitAtomic(tableRoot, s"rwdel-$runId",
       JsonlStats.rebaseRewrite(
         dirty.map(JsonlStats.statsLine) ++ eqdels.map(JsonlEqualityDeletes.line),
-        fresh.filter(_.rows > 0).map(JsonlStats.statsLine)))
+        fresh.map(JsonlStats.statsLine)))
     // rows_dropped is the MATERIALIZED count — DV'd positions AND
     // eq-masked keys (review r9c: the DV-only sum reported 0 for a
     // pure-upsert rewrite): physical in minus physical out
@@ -1189,308 +1224,12 @@ object GraftProcedures {
       dirty.map(_.rows).sum - fresh.map(_.rows).sum)
   }
 
-  /** Executor side of [[rewriteDeletes]]: stream `file` minus the DV'd
-    * positions into `out`, tracking exactly the stats
-    * [[JsonlFileSink]] would. Position counting mirrors the reader
-    * (physical non-blank lines, 0-based). */
-  private[sources] def rewriteOneFile(root: String, file: String, dvs: Seq[String],
-                                      pkey: Option[String], out: String,
-                                      schemaJson: String, statsCol: String,
-                                      bloomCol: Option[String],
-                                      columnMapping: Map[String, String] = Map.empty,
-                                      gramCol: Option[String] = None,
-                                      pspec: Option[String] = None,
-                                      eqds: Seq[(String, Seq[String])] = Nil,
-                                      lin: JsonlStats.Lineage = JsonlStats.Lineage(),
-                                      sorted: Option[String] = None): JsonlStats.FileStats = {
-    import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructType}
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val deleted = JsonlDeleteVectors.readDvPositions(dvs.map(d => Paths.get(root, d).toString))
-    // equality deletes (r9b): materialize the key-scoped masks too —
-    // the rewritten file drops both position- and key-deleted rows
-    val eqMasks = if (eqds.isEmpty) Nil else JsonlEqualityDeletes.readMasks(eqds)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // Data bytes carry PHYSICAL names on column-mapped tables; stats
-    // keys are physical too (readers translate logical→physical before
-    // consulting them). Parse and key everything by the physical name,
-    // mirroring JsonlFileSink.
-    def physOf(name: String): String = columnMapping.getOrElse(name, name)
-    // temporal columns (r11) bound like longs here too: their stored
-    // JSON image IS the epoch number, so asDouble() below reads it —
-    // rewrite_deletes regenerates time bounds instead of dropping them
-    val numFields = schema.fields.filter(f => JsonlStats.numericStatType(f.dataType))
-      .map(f => f.copy(name = physOf(f.name)))
-    // vector stats (r12): the collapse regenerates `#norm`/`#cell`
-    // bounds AND the exact cell bitmap for float/double arrays —
-    // pre-r12 rewrites silently DROPPED them (conservative but a full
-    // scan on every probe after the first rewrite). Same arithmetic as
-    // the sink ([[JsonlStats.vecNormOf]]/[[JsonlStats.vecCellOf]]).
-    val vecNames: Array[String] = schema.fields
-      .filter(f => JsonlStats.isVectorType(f.dataType)).map(f => physOf(f.name))
-    // nested leaf stats (r12): the collapse regenerates the per-leaf
-    // bounds too — JSON-byte navigation by path segments
-    val leafDefs: Array[JsonlStats.LeafRef] =
-      JsonlStats.structLeaves(schema, physOf).toArray
-    val leafMn = scala.collection.mutable.Map.empty[String, Double]
-    val leafMx = scala.collection.mutable.Map.empty[String, Double]
-    val leafCnt = scala.collection.mutable.Map.empty[String, Long]
-    val leafSMn = scala.collection.mutable.Map.empty[String, String]
-    val leafSMx = scala.collection.mutable.Map.empty[String, String]
-    val vecNormMn = scala.collection.mutable.Map.empty[String, Double]
-    val vecNormMx = scala.collection.mutable.Map.empty[String, Double]
-    val vecCellMn = scala.collection.mutable.Map.empty[String, Int]
-    val vecCellMx = scala.collection.mutable.Map.empty[String, Int]
-    val vecBm = scala.collection.mutable.Map.empty[String, Long]
-    val colMn = scala.collection.mutable.Map.empty[String, Double]
-    val colMx = scala.collection.mutable.Map.empty[String, Double]
-    val colCnt = scala.collection.mutable.Map.empty[String, Long]
-    numFields.foreach(f => colCnt(f.name) = 0L)
-    // string bounds + counts (r8), tracked like the writer's sink
-    val strNames = schema.fields.filter(_.dataType == StringType).map(f => physOf(f.name))
-    val strMn = scala.collection.mutable.Map.empty[String, String]
-    val strMx = scala.collection.mutable.Map.empty[String, String]
-    strNames.foreach(c => colCnt(c) = 0L)
-    val bloomHashes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val grams = if (gramCol.isDefined) new Bloom.GramTracker else null
-    var rows = 0L
-    // row-offset checkpoints for the rewritten file (r8): same rule as
-    // JsonlFileSink — one (line start, rows before) pair per granularity
-    val ckpts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var bytesOut = 0L
-    var lastCkpt = 0L
-    // zone maps (r8): per-segment stats-column bounds, regenerated like
-    // the sink's — rewrite_deletes re-arms range skipping too. The
-    // shared tracker owns the boundary law (seal at the checkpoint
-    // BEFORE the boundary row's value merges).
-    val zones = new JsonlStats.ZoneTracker
-    // monotone run cursor (r11, ADVICE r10 low): positions are scanned
-    // in increasing order, so the run lookup advances O(1) amortized
-    // instead of a per-row runs.find — O(rows × runs) on a bin-packed
-    // compaction product. Mirrors JsonlPartitionReader.linRunAt.
-    val linRuns: Array[(Long, Long, Long, Long)] = lin.runs.sortBy(_._1).toArray
-    var linIdx = 0
-    def linRunAt(p: Long): Int = {
-      if (linRuns.isEmpty) -1
-      else {
-        while (linIdx < linRuns.length && p >= linRuns(linIdx)._1 + linRuns(linIdx)._3) linIdx += 1
-        if (linIdx < linRuns.length && p >= linRuns(linIdx)._1) linIdx else -1
-      }
-    }
-    val dest = Paths.get(root, out)
-    val os = Files.newBufferedWriter(dest)
-    val in = Files.newBufferedReader(Paths.get(root, file))
-    try {
-      var pos = -1L
-      var line = in.readLine()
-      while (line != null) {
-        if (line.nonEmpty && line != "\r") {
-          pos += 1
-          val n0 =
-            if (deleted.contains(pos)) null
-            else {
-              val parsed = mapper.readTree(line)
-              val eqMasked = eqMasks.exists { case (cols, set) =>
-                set.contains(JsonlEqualityDeletes.canonicalKey(parsed, cols)) }
-              if (eqMasked) null else parsed
-            }
-          if (n0 != null) {
-            if (rows > 0 && bytesOut - lastCkpt >= JsonlStats.CheckpointBytes) {
-              ckpts += ((bytesOut, rows)); lastCkpt = bytesOut
-              zones.seal() // BEFORE this row's value: it starts the next segment
-            }
-            // row lineage (r10): survivors SHIFT physical positions, so
-            // the collapse is the one maintenance op that must
-            // MATERIALIZE ids — each kept row gets its manifest-derived
-            // `_row_id`/`_luv` as in-row fields (prefix splice; a row
-            // already materialized by an earlier rewrite keeps its own
-            // fields — `lin` cannot cover its position)
-            val ri = if (lin.frid >= 0L) -1 else linRunAt(pos)
-            // luv-only runs (r12, ADVICE r11 high): firstId = -1 marks
-            // "ids are in-row; this luv backs rows whose in-row `_luv`
-            // is null" — the shape compact records for a materialized
-            // member that carried an entry luv (COW-update images)
-            val luvOnly = ri >= 0 && linRuns(ri)._2 == -1L
-            val rid =
-              if (lin.frid >= 0L) lin.frid + pos
-              else if (ri >= 0 && !luvOnly) linRuns(ri)._2 + (pos - linRuns(ri)._1)
-              else -1L
-            val rluv =
-              if (lin.frid >= 0L) lin.luv
-              else if (ri >= 0 && !luvOnly) linRuns(ri)._4
-              else -1L
-            // the version that backs null-luv materialized rows at THIS
-            // position: the entry luv (frid = -2 sources) or the
-            // covering luv-only run's (recompacted products)
-            val backLuv =
-              if (lin.frid == -2L) lin.luv
-              else if (luvOnly) linRuns(ri)._4
-              else 0L
-            val outLine =
-              if (rid >= 0L && line.startsWith("{")) {
-                val pre = s"""{"${JsonlStats.RowIdMeta}":$rid,"${JsonlStats.LuvField}":$rluv"""
-                if (line.length > 2) pre + "," + line.substring(1) else pre + "}"
-              } else if (backLuv > 0L && n0.hasNonNull(JsonlStats.RowIdMeta) &&
-                         !n0.hasNonNull(JsonlStats.LuvField)) {
-                // MATERIALIZE the fallback (r12, ADVICE r11 high): a
-                // COW-updated row (in-row id, null `_luv`) served its
-                // version via the entry-luv fallback; the rewrite
-                // splices that version IN-ROW so no later maintenance
-                // generation (compact bins, restamped entries) can
-                // strand it. Only affected rows pay the re-serialize.
-                n0.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-                  .put(JsonlStats.LuvField, backLuv)
-                mapper.writeValueAsString(n0)
-              } else line
-            os.write(outLine); os.write('\n')
-            bytesOut += outLine.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 1L
-            rows += 1
-            val n = n0
-            numFields.foreach { f =>
-              val v = n.get(f.name)
-              if (v != null && !v.isNull) {
-                val d = v.asDouble()
-                // NaN poisons to vacuous bounds (never pruned): finite
-                // bounds computed past it would exclude `=== NaN` rows
-                if (d.isNaN) {
-                  colMn(f.name) = Double.MinValue; colMx(f.name) = Double.MaxValue
-                } else {
-                  if (d < colMn.getOrElse(f.name, Double.PositiveInfinity)) colMn(f.name) = d
-                  if (d > colMx.getOrElse(f.name, Double.NegativeInfinity)) colMx(f.name) = d
-                }
-                colCnt(f.name) += 1L
-                if (f.name == statsCol) zones.add(d)
-              }
-            }
-            strNames.foreach { c =>
-              val v = n.get(c)
-              if (v != null && !v.isNull) {
-                val s = v.asText()
-                if (!strMn.contains(c) || JsonlStats.strCompare(s, strMn(c)) < 0) strMn(c) = s
-                if (!strMx.contains(c) || JsonlStats.strCompare(s, strMx(c)) > 0) strMx(c) = s
-                colCnt(c) += 1L
-              }
-            }
-            leafDefs.foreach { l =>
-              var v: com.fasterxml.jackson.databind.JsonNode = n
-              var k = 0
-              while (v != null && !v.isNull && k < l.names.length) {
-                v = v.get(l.names(k)); k += 1
-              }
-              if (v != null && !v.isNull) {
-                if (l.dt == StringType) {
-                  val s = v.asText()
-                  if (!leafSMn.contains(l.key) ||
-                    JsonlStats.strCompare(s, leafSMn(l.key)) < 0) leafSMn(l.key) = s
-                  if (!leafSMx.contains(l.key) ||
-                    JsonlStats.strCompare(s, leafSMx(l.key)) > 0) leafSMx(l.key) = s
-                } else {
-                  val d = v.asDouble()
-                  if (d.isNaN) { leafMn(l.key) = Double.MinValue; leafMx(l.key) = Double.MaxValue }
-                  else {
-                    if (d < leafMn.getOrElse(l.key, Double.PositiveInfinity)) leafMn(l.key) = d
-                    if (d > leafMx.getOrElse(l.key, Double.NegativeInfinity)) leafMx(l.key) = d
-                  }
-                }
-                leafCnt(l.key) = leafCnt.getOrElse(l.key, 0L) + 1L
-              }
-            }
-            vecNames.foreach { c =>
-              val v = n.get(c)
-              if (v != null && v.isArray) {
-                var normSq = 0.0
-                var cell = 0
-                var j = 0
-                val m = v.size()
-                while (j < m) {
-                  val el = v.get(j)
-                  val e = if (el == null || el.isNull) 0.0 else el.asDouble()
-                  normSq += e * e
-                  if (j < JsonlStats.VecCellBits && e > 0) cell |= 1 << j
-                  j += 1
-                }
-                val nrm = math.sqrt(normSq)
-                if (nrm.isNaN) { vecNormMn(c) = 0.0; vecNormMx(c) = Double.MaxValue }
-                else {
-                  if (nrm < vecNormMn.getOrElse(c, Double.PositiveInfinity)) vecNormMn(c) = nrm
-                  if (nrm > vecNormMx.getOrElse(c, Double.NegativeInfinity)) vecNormMx(c) = nrm
-                }
-                if (cell < vecCellMn.getOrElse(c, Int.MaxValue)) vecCellMn(c) = cell
-                if (cell > vecCellMx.getOrElse(c, Int.MinValue)) vecCellMx(c) = cell
-                vecBm(c) = vecBm.getOrElse(c, 0L) | (1L << cell)
-              }
-            }
-            bloomCol.foreach { bc =>
-              val v = n.get(bc)
-              if (v != null && !v.isNull) {
-                bloomHashes += (schema.fields.find(_.name == bc).map(_.dataType) match {
-                  case Some(LongType)   => Bloom.hashLong(v.asLong())
-                  case Some(DoubleType) => Bloom.hashDouble(v.asDouble())
-                  case _                => Bloom.hashString(v.asText())
-                })
-              }
-            }
-            gramCol.foreach { gc =>
-              // data bytes carry PHYSICAL names (r9 review: a gram
-              // index declared on a renamed column reads its physical
-              // key, like every other stat here)
-              val v = n.get(physOf(gc))
-              if (v != null && !v.isNull) grams.add(v.asText())
-            }
-          }
-        }
-        line = in.readLine()
-      }
-    } finally { in.close(); os.close() }
-    // a wholly-deleted file rewrites to nothing: no entry, no file
-    // (mirrors the COW zero-survivors case)
-    if (rows == 0) {
-      Files.deleteIfExists(dest)
-      return JsonlStats.FileStats(out, 0, 0, 0, pkey)
-    }
-    // the DV collapse preserves the file's LAYOUT: same pkey, same
-    // partition spec — lazy spec migration is COW's job, not this one's
-    if (bloomCol.isDefined) Bloom.writeSidecar(dest, bloomHashes.toArray)
-    if (gramCol.isDefined) grams.writeSidecar(dest)
-    val cols = colMn.keySet.map(c => c -> (colMn(c), colMx(c))).toMap ++
-      vecNormMn.keySet.map(c => s"$c#norm" -> (vecNormMn(c), vecNormMx(c))).toMap ++
-      vecCellMn.keySet.map(c => s"$c#cell" ->
-        (vecCellMn(c).toDouble, vecCellMx(c).toDouble)).toMap ++
-      leafMn.keySet.map(k => k -> (leafMn(k), leafMx(k))).toMap
-    val strCols = strMn.keySet.map(c =>
-      c -> (JsonlStats.truncLower(strMn(c)), JsonlStats.truncUpper(strMx(c)))).toMap ++
-      leafSMn.keySet.map(k => k -> (JsonlStats.truncLower(leafSMn(k)),
-        JsonlStats.truncUpper(leafSMx(k)))).toMap
-    val (mn, mx) = cols.get(statsCol) match {
-      case Some(b) => b
-      case None => (Double.MinValue, Double.MaxValue) // all-null sentinel
-    }
-    // entries whose rows carry (or inherited) materialized ids must
-    // never be re-stamped — frid = -2 marks in-row lineage; a source
-    // that never had ids stays unassigned and the commit stamps it
-    // fresh (ids that never existed may be invented now)
-    val hadLineage = lin.frid >= 0L || lin.frid == -2L || lin.runs.nonEmpty
-    // carry the source's luv onto the fresh frid = -2 entry (r12,
-    // ADVICE r11 high): an entry published WITHOUT a luv is restamped
-    // by the commit with the MAINTENANCE version, drifting any
-    // fallback-served rows forward. The splice above materialized the
-    // fallback in-row, so the carried luv is belt-and-braces — but it
-    // keeps the entry's version history honest either way.
-    val carriedLuv =
-      if (lin.frid >= 0L || lin.frid == -2L) lin.luv
-      else lin.runs.map(_._4).foldLeft(0L)(math.max)
-    JsonlStats.FileStats(out, mn, mx, rows, pkey, cols,
-      colNonNull = colCnt.toMap ++ leafCnt.toMap,
-      strCols = strCols, ckpts = ckpts.toSeq,
-      segb = zones.zones(ckpts.nonEmpty), pspec = pspec,
-      frid = if (hadLineage) -2L else -1L, luv = carriedLuv,
-      vcells = vecBm.toMap,
-      // survivors keep the source's row order — the stamp carries
-      sorted = sorted)
-  }
-
   /** The maintenance core. Greedy first-fit over size-sorted
     * sub-target files, binned WITHIN each pkey (an unkeyed table is one
-    * key group of None); only bins of ≥2 members rewrite anything.
+    * key group of None); only bins of ≥2 members rewrite anything. A bin
+    * is a byte concat whose entry merges its members' entries, unless
+    * its lineage runs would pass [[JsonlStats.MaxRunsPerEntry]]: then
+    * its rows go through [[rewriteRows]] (see [[Bin]]).
     * Returns (files_before, files_after, files_merged). */
   def compact(tableRoot: String, targetBytes: Long,
               partition: Option[String] = None): (Int, Int, Int) = {
@@ -1688,68 +1427,63 @@ object GraftProcedures {
           }
           // run-list hygiene (r12): same-commit neighbors coalesce
           // (contiguous positions + consecutive ids + one luv); a list
-          // still past the ceiling trips the MATERIALIZE path — the
-          // copy job splices lineage in-row and the entry stays O(1)
-          // instead of accreting one run per member per generation
-          // (SCALING.md's LineageDeepBench kilocommit bloat).
+          // still past the ceiling trips the MATERIALIZE path — the bin
+          // rewrites its rows through the sink, lineage lands in-row and
+          // the entry stays O(1) instead of accreting one run per member
+          // per generation (SCALING.md's LineageDeepBench kilocommit
+          // bloat).
           val mergedRuns = JsonlStats.coalesceRuns(mergedRuns0)
-          val materialize = mergedRuns.size > JsonlStats.MaxRunsPerEntry
           // an ALL-materialized bin produces no runs — the entry must
           // still declare in-row lineage (frid = -2) or the commit
           // would re-stamp it and override every row's carried id
           // (r10 review)
           val mergedFrid =
-            if (materialize || (mergedRuns.isEmpty && members.exists(_.frid == -2L))) -2L
-            else -1L
-          if (!materialize)
-            Bin(members.map(_.file), out,
-              JsonlStats.FileStats(out, mn, mx, members.map(_.rows).sum, pkey, mergedCols,
-                colNonNull = mergedN, strCols = mergedS, ckpts = mergedK,
-                segb = mergedSegB, pspec = pspec, seq = seq,
-                frid = mergedFrid, runs = mergedRuns, vcells = mergedV))
-          else
-            // the splice shifts byte offsets, so checkpoint/zone pairs
-            // are dropped (conservative: whole-file tasks until the
-            // next rewrite regenerates them); row-content stats are
-            // untouched — lineage fields are provenance, not data
-            Bin(members.map(_.file), out,
-              JsonlStats.FileStats(out, mn, mx, members.map(_.rows).sum, pkey, mergedCols,
-                colNonNull = mergedN, strCols = mergedS, ckpts = Nil,
-                segb = Nil, pspec = pspec, seq = seq,
-                frid = -2L, runs = Nil, vcells = mergedV),
-              matLineages = Some(members.map(JsonlStats.Lineage.of)))
+            if (mergedRuns.isEmpty && members.exists(_.frid == -2L)) -2L else -1L
+          Bin(members, out,
+            if (mergedRuns.size > JsonlStats.MaxRunsPerEntry) None
+            else Some(JsonlStats.FileStats(out, mn, mx, members.map(_.rows).sum, pkey,
+              mergedCols, colNonNull = mergedN, strCols = mergedS, ckpts = mergedK,
+              segb = mergedSegB, pspec = pspec, seq = seq,
+              frid = mergedFrid, runs = mergedRuns, vcells = mergedV)))
         }
     }
     if (bins.isEmpty) return (stats.size, stats.size, 0)
-    // bins copy in parallel as one job — a metadata-bounded maintenance
-    // task list, each task a streaming byte concat on shared storage
-    val rootCopy = tableRoot
-    val work = bins.map(b => (b.members, b.out, b.matLineages))
-    SparkSession.active.sparkContext
-      .parallelize(work, math.min(work.size, 32))
-      .foreach {
-        case (members, out, None) => GraftProcedures.concatFiles(rootCopy, members, out)
-        case (members, out, Some(lins)) =>
-          GraftProcedures.concatMaterialize(rootCopy, members.zip(lins), out)
-      }
+    val (concat, materialized) = bins.partition(_.entry.isDefined)
+    // byte-concat bins copy in parallel as one job — a metadata-bounded
+    // maintenance task list, each task a streaming byte concat on
+    // shared storage
+    if (concat.nonEmpty) {
+      val rootCopy = tableRoot
+      val work = concat.map(b => (b.members.map(_.file), b.out))
+      SparkSession.active.sparkContext
+        .parallelize(work, math.min(work.size, 32))
+        .foreach { case (members, out) => GraftProcedures.concatFiles(rootCopy, members, out) }
+    }
+    // runaway-run bins (r12) rewrite their rows through the sink, in
+    // concat order: lineage lands in-row, and the writer's entry
+    // (frid = -2, zero runs, regenerated checkpoints and zones) keeps
+    // the bin's key, spec and sequence number
+    val matEntries = materialized.zip(rewriteRows(tableRoot, materialized.map(b =>
+      (b.members.map(wholeFile(tableRoot, _)), b.out, b.members.head.pkey))))
+      .collect { case (b, c) if c.file != null =>
+        c.entry(b.members.head.pspec).copy(seq = b.members.head.seq) }
+    val entries = concat.flatMap(_.entry) ++ matEntries
     // OCC rewrite (r8): every bin member's planned entry must survive
     // verbatim — a DV attached to a member since planning would have
     // its masked rows resurrected by the byte concat, so that
     // CONFLICTS; files appended concurrently ride through untouched
     // (compaction commutes with ingest)
-    val mergedNames = bins.flatMap(_.members).toSet
+    val mergedNames = bins.flatMap(_.members.map(_.file)).toSet
     JsonlStats.commitAtomic(tableRoot, s"compact-$runId",
       JsonlStats.rebaseRewrite(
         stats.filter(s => mergedNames.contains(s.file)).map(JsonlStats.statsLine),
-        bins.map(b => JsonlStats.statsLine(b.entry))))
+        entries.map(JsonlStats.statsLine)))
     // members leave the live manifest but stay on disk: the archived
     // pre-compaction snapshot still references them, so VERSION AS OF
     // keeps working until [[vacuum]] expires it (deferred GC, r7)
-    (stats.size, stats.size - mergedNames.size + bins.size, mergedNames.size)
+    (stats.size, stats.size - mergedNames.size + entries.size, mergedNames.size)
   }
 
-  /** Streaming byte concat of newline-terminated JSONL members; patches
-    * a missing trailing newline between members so lines never fuse. */
   /** Does the file's last byte equal `\n`? (Empty = vacuously true.)
     * Driver-side, one positioned read per compaction member. */
   private def endsWithNewline(tableRoot: String, file: String): Boolean = {
@@ -1768,84 +1502,8 @@ object GraftProcedures {
     } catch { case _: Throwable => false }
   }
 
-  /** Splice-concat for runaway-run bins (r12): like [[concatFiles]],
-    * but each member's manifest lineage MATERIALIZES in-row as it
-    * streams — stamped ids/luvs land as the `_row_id`/`_luv` prefix
-    * (the rewriteOneFile splice), and null-luv materialized rows get
-    * their backing fallback luv written into the bytes. The merged
-    * entry then declares frid = -2 with ZERO runs, whatever the bin's
-    * member count — the manifest stays O(1) per entry while compaction
-    * cadence grows unbounded. Costs one JSON parse only for rows that
-    * might need the fallback splice; stamped rows pay a string prefix. */
-  private[sources] def concatMaterialize(tableRoot: String,
-      members: Seq[(String, JsonlStats.Lineage)], out: String): Unit = {
-    val dest = Paths.get(tableRoot, out)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val os = Files.newBufferedWriter(dest)
-    try {
-      members.foreach { case (m, lin) =>
-        val in = Files.newBufferedReader(Paths.get(tableRoot, m))
-        // monotone run cursor (the rewriteOneFile discipline): positions
-        // stream in increasing order, so the lookup is O(1) amortized —
-        // the bins that trip this path are exactly the many-run ones
-        val linRuns: Array[(Long, Long, Long, Long)] = lin.runs.sortBy(_._1).toArray
-        var linIdx = 0
-        def runAt(p: Long): Int = {
-          if (linRuns.isEmpty) -1
-          else {
-            while (linIdx < linRuns.length && p >= linRuns(linIdx)._1 + linRuns(linIdx)._3)
-              linIdx += 1
-            if (linIdx < linRuns.length && p >= linRuns(linIdx)._1) linIdx else -1
-          }
-        }
-        try {
-          var pos = -1L
-          var line = in.readLine()
-          while (line != null) {
-            if (line.nonEmpty && line != "\r") {
-              pos += 1
-              val ri = if (lin.frid >= 0L) -1 else runAt(pos)
-              val luvOnly = ri >= 0 && linRuns(ri)._2 == -1L
-              val rid =
-                if (lin.frid >= 0L) lin.frid + pos
-                else if (ri >= 0 && !luvOnly) linRuns(ri)._2 + (pos - linRuns(ri)._1)
-                else -1L
-              val rluv =
-                if (lin.frid >= 0L) lin.luv
-                else if (ri >= 0 && !luvOnly) linRuns(ri)._4
-                else -1L
-              val outLine =
-                if (rid >= 0L && line.startsWith("{")) {
-                  val pre =
-                    s"""{"${JsonlStats.RowIdMeta}":$rid,"${JsonlStats.LuvField}":$rluv"""
-                  if (line.length > 2) pre + "," + line.substring(1) else pre + "}"
-                } else {
-                  val back =
-                    if (lin.frid == -2L) lin.luv
-                    else if (luvOnly) linRuns(ri)._4
-                    else 0L
-                  if (back > 0L) {
-                    // a materialized member with an entry luv / a
-                    // luv-only run: splice the fallback into null-luv
-                    // rows so it survives without any manifest carrier
-                    val n = mapper.readTree(line)
-                    if (n.hasNonNull(JsonlStats.RowIdMeta) &&
-                        !n.hasNonNull(JsonlStats.LuvField)) {
-                      n.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-                        .put(JsonlStats.LuvField, back)
-                      mapper.writeValueAsString(n)
-                    } else line
-                  } else line
-                }
-              os.write(outLine); os.write('\n')
-            }
-            line = in.readLine()
-          }
-        } finally in.close()
-      }
-    } finally os.close()
-  }
-
+  /** Streaming byte concat of newline-terminated JSONL members; patches
+    * a missing trailing newline between members so lines never fuse. */
   private[sources] def concatFiles(tableRoot: String, members: Seq[String], out: String): Unit = {
     val dest = Paths.get(tableRoot, out)
     val os = new java.io.BufferedOutputStream(
@@ -1926,6 +1584,7 @@ object GraftProcedures {
       case None => schema
     }
     val cm = spark.sessionState.catalogManager
+    val replaced = GraftViews.read(nsDir, vname)
     GraftViews.write(nsDir, GraftViews.ViewDef(
       name = vname, sql = sql,
       currentCatalog = cm.currentCatalog.name(),
@@ -1936,6 +1595,9 @@ object GraftProcedures {
       columnComments = Seq.empty,
       properties = comment.map(c => Map("comment" -> c)).getOrElse(Map.empty)),
       replace = orReplace)
+    // a replaced materialized view's tables go once the new sidecar is
+    // published: a crash in between leaves orphans, never a dangling MV
+    replaced.foreach(MvLifecycle.dropOwnedTables(nsDir, _))
     stringRow(dotted, "created", visibleSchema.fieldNames.mkString(","))
   }
 

@@ -201,9 +201,7 @@ class JsonlDvBatchWrite(root: String, queryId: String,
       .groupBy(_._1)
       .map { case (f, es) => f -> es.map(e => (e._2, e._3)) }
     val appended = commits.flatMap(_.files).filter(c => c.file != null && c.rows > 0)
-    val appendedStats = appended.map(c =>
-      JsonlStats.FileStats(c.file, c.min, c.max, c.rows, c.pkey, c.cols,
-        colNonNull = c.colNonNull, strCols = c.strCols, ckpts = c.ckpts, segb = c.segb))
+    val appendedStats = appended.map(_.entry(None))
     val unknown = fresh.keySet.diff(planned.keySet)
     require(unknown.isEmpty,
       s"deletion vectors reference unmanifested files: ${unknown.mkString(", ")}")

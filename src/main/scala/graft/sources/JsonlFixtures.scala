@@ -51,7 +51,7 @@ object JsonlFixtures {
       // manifest: one line per data file with its value bounds; paths
       // relative to the table root so the table relocates freely
       val stats = spark.read.schema(JsonlStats.schema)
-        .json(s"$out/bucket=*/")
+        .json(out)
         .select(col("_metadata.file_path").as("fp"), col("value"))
         .groupBy($"fp")
         .agg(min($"value").as("mn"), max($"value").as("mx"),
@@ -204,7 +204,7 @@ object JsonlFixtures {
         .repartition($"et")
         .write.partitionBy("et").json(out)
       val stats = spark.read.schema(JsonlStats.schema)
-        .json(s"$out/et=*/")
+        .json(out)
         .select(col("_metadata.file_path").as("fp"), $"event_type", $"value")
         .groupBy($"fp")
         .agg(min($"value").as("mn"), max($"value").as("mx"),

@@ -661,32 +661,23 @@ object JsonlLayoutQueries extends QueryModule {
          |FROM $cat.jsonl_stats_table""".stripMargin)
     Seq("jsonl_cbo_fact", "jsonl_cbo_users", "jsonl_cbo_types")
       .foreach(t => spark.sql(s"CALL $cat.analyze_table('$t')"))
-    graft.util.Confs.withConfs(spark,
-        "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true") {
-      val df = spark.sql(
-        s"""SELECT t.event_type, count(*) AS n,
-           |  CAST(SUM(CAST(f.value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum,
-           |  min(u.first_event) AS min_first
-           |FROM $cat.jsonl_cbo_fact f
-           |JOIN $cat.jsonl_cbo_users u ON f.user_id = u.user_id
-           |JOIN $cat.jsonl_cbo_types t ON f.event_type = t.event_type
-           |WHERE t.type_len >= 4
-           |GROUP BY t.event_type
-           |ORDER BY t.event_type""".stripMargin)
-      // force PLANNING (not execution) under CBO before the confs
-      // restore: executedPlan is a cached lazy val, so the caller's
-      // action runs this exact cost-reordered plan — the old collect()
-      // here executed the star join a second, thrown-away time (r16).
-      // NOTE: this pins LOGICAL-phase confs only (CBO join
-      // reorder). AQE re-derives the final physical plan at execution
-      // time, AFTER the conf scope below restores the session confs — any
-      // conf AQE's runtime re-planning reads (broadcast thresholds
-      // etc.) is no longer in effect when the caller executes.
-      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-        .queryExecution.executedPlan
-      df
-    }
+    // planned AND executed on a session of its own with CBO on, so AQE's
+    // runtime re-planning sees CBO too and the caller's session never does
+    cbo(spark).sql(
+      s"""SELECT t.event_type, count(*) AS n,
+         |  CAST(SUM(CAST(f.value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum,
+         |  min(u.first_event) AS min_first
+         |FROM $cat.jsonl_cbo_fact f
+         |JOIN $cat.jsonl_cbo_users u ON f.user_id = u.user_id
+         |JOIN $cat.jsonl_cbo_types t ON f.event_type = t.event_type
+         |WHERE t.type_len >= 4
+         |GROUP BY t.event_type
+         |ORDER BY t.event_type""".stripMargin)
   }
+
+  /** A session derived from `spark` with cost-based join reordering on. */
+  private def cbo(spark: SparkSession): SparkSession = graft.util.Confs.derived(spark,
+    "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true")
 
   /** q262 (r9c): DECLARED WRITE SORT ORDER — `TBLPROPERTIES
     * ('sortColumn' = 'value')` makes the SORT a property of the TABLE
@@ -735,19 +726,13 @@ object JsonlLayoutQueries extends QueryModule {
          |FROM $cat.jsonl_stats_table""".stripMargin)
     spark.sql(s"CALL $cat.analyze_table('jsonl_hist_skew', histogram => true, " +
       "hist_bins => 20, hist_cols => 'sk')")
-    graft.util.Confs.withConfs(spark,
-        "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true") {
-      val df = spark.sql(
-        s"""SELECT count(*) AS n,
-           |  min(event_id) AS min_id, max(event_id) AS max_id,
-           |  CAST(SUM(CAST(sk AS DECIMAL(18,6))) AS DOUBLE) AS sk_sum
-           |FROM $cat.jsonl_hist_skew
-           |WHERE sk >= 262144.0""".stripMargin)
-      // plan (don't execute) under CBO — see q257's note (r16)
-      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-        .queryExecution.executedPlan
-      df
-    }
+    // planned and executed under CBO — see q257
+    cbo(spark).sql(
+      s"""SELECT count(*) AS n,
+         |  min(event_id) AS min_id, max(event_id) AS max_id,
+         |  CAST(SUM(CAST(sk AS DECIMAL(18,6))) AS DOUBLE) AS sk_sum
+         |FROM $cat.jsonl_hist_skew
+         |WHERE sk >= 262144.0""".stripMargin)
   }
 
   /** q258 (r9c): TOP-N PUSHDOWN — `ORDER BY event_id DESC LIMIT 100`

@@ -217,8 +217,8 @@ object JsonlStats {
     * `luv`, `frids`), shipped in the input partition. Each `runs`
     * element is (first position, first id or -1 on a luv-only run,
     * length, luv). The reader resolves it per physical position itself
-    * (`linRunAt`, `rowIdValue` and `luvValue` in [[JsonlStatsRead]]),
-    * as does compaction's splice ([[GraftProcedures.concatMaterialize]]). */
+    * (`linRunAt`, `rowIdValue` and `luvValue` in [[JsonlStatsRead]]);
+    * maintenance rewrites read through that same reader. */
   final case class Lineage(frid: Long = -1L, luv: Long = 0L,
                            runs: Seq[(Long, Long, Long, Long)] = Nil)
   object Lineage {
@@ -398,9 +398,9 @@ object JsonlStats {
   }
 
   /** Per-segment stats-column bounds tracker (r8 zone maps) — the ONE
-    * definition of the boundary law both producers (the write sink and
-    * rewrite_deletes) share: a checkpoint offset is the BOUNDARY ROW's
-    * line start, so that row belongs to the segment AFTER the seal —
+    * definition of the boundary law, kept by the write sink (which every
+    * maintenance rewrite writes through too): a checkpoint offset is the
+    * BOUNDARY ROW's line start, so that row belongs to the segment AFTER the seal —
     * callers must `seal()` at the checkpoint BEFORE `add()`ing the
     * boundary row's value, or the value lands in the wrong segment's
     * bounds and the planner can prune the range that actually holds

@@ -173,15 +173,7 @@ class JsonlStreamingWrite(root: String, writeSchema: StructType, queryId: String
       return
     }
     val fresh = JsonlStats.fileCommits(messages)
-    val freshStats = fresh.map(c =>
-      JsonlStats.FileStats(c.file, c.min, c.max, c.rows, c.pkey, c.cols,
-        colNonNull = c.colNonNull, strCols = c.strCols, ckpts = c.ckpts,
-          segb = c.segb,
-          // partition evolution (r9): every keyed entry records the
-          // spec its pkey derives from, so an append racing an
-          // evolution stays self-describing
-          pspec = if (c.pkey.isDefined) partitionCol else None,
-          vcells = c.vcells))
+    val freshStats = fresh.map(_.entry(partitionCol))
     // STREAMING UPSERT (r9b): the epoch's retraction (its tasks'
     // equality-delete files) and its inserts land in the SAME
     // exactly-once commit as the txn watermark — a replayed epoch can
@@ -236,7 +228,24 @@ final case class JsonlFileCommit(file: String, min: Double, max: Double, rows: L
                                  // vector cell bitmaps (r12): exact
                                  // per-column sign-cell sets
                                  vcells: Map[String, Long] = Map.empty)
-  extends WriterCommitMessage
+  extends WriterCommitMessage {
+
+  /** The manifest entry this file publishes — the one mapping every
+    * commit (batch, replace, streaming) and every maintenance rewrite
+    * uses. `partitionCol` is the spec a keyed file's pkey derives from
+    * (partition evolution, r9: an append racing an evolution stays
+    * self-describing); `sorted` is the declared-order stamp (r12b).
+    * Row lineage (r10): a file holding materialized ids (a rewrite
+    * carried `_row_id` through itself) publishes frid = -2 so the commit
+    * never re-stamps it; an all-null carrier file stays unassigned and
+    * stamps fresh. */
+  def entry(partitionCol: Option[String], sorted: Option[String] = None): JsonlStats.FileStats =
+    JsonlStats.FileStats(file, min, max, rows, pkey, cols,
+      colNonNull = colNonNull, strCols = strCols, ckpts = ckpts, segb = segb,
+      pspec = if (pkey.isDefined) partitionCol else None,
+      frid = if (sawLineage) -2L else -1L,
+      vcells = vcells, sorted = sorted)
+}
 
 /** One task's commits — several files when the layout is keyed (one
   * per key run) or the task wrote nothing (empty). `eq` (r9b): the
@@ -358,23 +367,10 @@ class JsonlBatchWrite(root: String, writeSchema: StructType, queryId: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fresh = JsonlStats.fileCommits(messages)
-    val freshStats = fresh.map(c =>
-      JsonlStats.FileStats(c.file, c.min, c.max, c.rows, c.pkey, c.cols,
-        colNonNull = c.colNonNull, strCols = c.strCols, ckpts = c.ckpts,
-          segb = c.segb,
-          // partition evolution (r9): every keyed entry records the
-          // spec its pkey derives from, so an append racing an
-          // evolution stays self-describing
-          pspec = if (c.pkey.isDefined) partitionCol else None,
-          // row lineage (r10): a file holding materialized ids (a
-          // rewrite projected `_row_id` through itself) publishes
-          // frid = -2 so the commit never re-stamps it; an all-null
-          // carrier file stays unassigned and stamps fresh
-          frid = if (c.sawLineage) -2L else -1L,
-          vcells = c.vcells,
-          // declared-order stamp (r12b): this write REQUESTED the sort,
-          // so its files are provably runs of it
-          sorted = JsonlStats.sortedStampFor(partitionCol, sortCol, columnMapping)))
+    // declared-order stamp (r12b): this write REQUESTED the sort, so its
+    // files are provably runs of it
+    val freshStats = fresh.map(_.entry(partitionCol,
+      JsonlStats.sortedStampFor(partitionCol, sortCol, columnMapping)))
     val freshLines = freshStats.map(JsonlStats.statsLine)
     // equality-delete upsert (r9b): the tasks' delete files, registered
     // in the SAME commit as their data (retract + insert atomically);
@@ -649,21 +645,11 @@ class JsonlReplaceBatchWrite(root: String, writeSchema: StructType, queryId: Str
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fresh = JsonlStats.fileCommits(messages)
     val gone = replaced()
-    val freshStats = fresh.map(c =>
-      JsonlStats.FileStats(c.file, c.min, c.max, c.rows, c.pkey, c.cols,
-        colNonNull = c.colNonNull, strCols = c.strCols, ckpts = c.ckpts,
-          segb = c.segb,
-          // partition evolution (r9): every keyed entry records the
-          // spec its pkey derives from, so an append racing an
-          // evolution stays self-describing
-          pspec = if (c.pkey.isDefined) partitionCol else None,
-          // row lineage (r10): COW rewrites project the lineage
-          // metadata attrs through the plan ([[JsonlRowLevelOperation
-          // .requiredMetadataAttributes]]), so carried rows land with
-          // materialized in-row ids — frid = -2, never re-stamped
-          frid = if (c.sawLineage) -2L else -1L,
-          vcells = c.vcells,
-          sorted = JsonlStats.sortedStampFor(partitionCol, sortCol, columnMapping)))
+    // row lineage (r10): COW rewrites project the lineage metadata attrs
+    // through the plan ([[JsonlRowLevelOperation.requiredMetadataAttributes]]),
+    // so carried rows land with materialized in-row ids — frid = -2
+    val freshStats = fresh.map(_.entry(partitionCol,
+      JsonlStats.sortedStampFor(partitionCol, sortCol, columnMapping)))
     // OCC rewrite (r8): the replaced files' entries must survive
     // verbatim — a concurrent commit that touched one of them (a DV
     // attach, another rewrite) invalidates the survivors this COW pass

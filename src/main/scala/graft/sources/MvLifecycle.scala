@@ -335,7 +335,7 @@ object MvLifecycle {
     if (Files.exists(dir.resolve("_stats.jsonl"))) graft.util.Fs.deleteRecursively(dir.toString)
   }
 
-  /** `drop_view` of a materialized view: its backing and liveness
+  /** A dropped or replaced materialized view: its backing and liveness
     * tables go with the definition (leaving them would orphan them). */
   private[sources] def dropOwnedTables(nsDir: Path, d: GraftViews.ViewDef): Unit =
     dropTables(nsDir, d.properties.get(GraftViews.MvTableProp).toSeq ++ auxTablesOf(d))

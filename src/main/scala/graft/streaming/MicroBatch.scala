@@ -46,12 +46,15 @@ object MicroBatch extends QueryModule {
     * state volume, not a query rewrite. The partition count is locked
     * into each checkpoint's offset log on first start, so existing
     * checkpoints keep whatever they were created with and restarts
-    * stay stable regardless of the session default. */
-  private[graft] def streamSession(spark: SparkSession, partitions: Int = 8): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    s
-  }
+    * stay stable regardless of the session default. `settings` are
+    * further settings of that session (a query's state-store provider). */
+  private[graft] def streamSession(spark: SparkSession,
+                                   settings: (String, String)*): SparkSession =
+    graft.util.Confs.derived(spark, ("spark.sql.shuffle.partitions" -> "8") +: settings: _*)
+
+  /** The RocksDB state-store provider `transformWithState` requires. */
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
   private val wireSchema = StructType(Seq(
@@ -479,36 +482,33 @@ object MicroBatch extends QueryModule {
     * landing buffer. Same per-user gap transition as q70's
     * mapGroupsWithState (the shared `StatefulSessions` state machine),
     * so the q70 oracle pins both APIs to the same sessions. The
-    * provider swap is scoped to this query and restored — the other
-    * streaming legs keep the default HDFS-backed store. */
+    * provider is a setting of this query's own stream session — the
+    * other streaming legs keep the default HDFS-backed store. */
   def streamTransformWithState(spark0: SparkSession, d: String): DataFrame = {
     val landing = ensureLanding(spark0, d)
-    val spark = streamSession(spark0)
+    val spark = streamSession(spark0, rocksDb)
     import spark.implicits._
     val name = "stream_tws_" + d.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + runSeq.incrementAndGet()
-    graft.util.Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val q = spark.readStream.schema(wireSchema)
-        .option("maxFilesPerTrigger", "1000000") // unordered fixture: one batch
-        .json(landing)
-        .withColumn("ts", to_timestamp($"ts_str", tsFmt))
-        .select($"user_id", unix_micros($"ts").as("ts_us"))
-        .as[StatefulSessions.Ev]
-        .groupByKey(_.user_id)
-        .transformWithState(
-          new StatefulSessions.SessionProcessor(StatefulSessions.defaultGapUs),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val q = spark.readStream.schema(wireSchema)
+      .option("maxFilesPerTrigger", "1000000") // unordered fixture: one batch
+      .json(landing)
+      .withColumn("ts", to_timestamp($"ts_str", tsFmt))
+      .select($"user_id", unix_micros($"ts").as("ts_us"))
+      .as[StatefulSessions.Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new StatefulSessions.SessionProcessor(StatefulSessions.defaultGapUs),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF()
+      .writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     spark.table(name)
       .select($"user_id", $"n_sessions", $"n_events")
       .orderBy($"user_id")
@@ -527,33 +527,30 @@ object MicroBatch extends QueryModule {
     * (timers are ms-based) is ≤ the global max event time. */
   def streamTimerSessions(spark0: SparkSession, d: String): DataFrame = {
     val landing = ensureLanding(spark0, d)
-    val spark = streamSession(spark0)
+    val spark = streamSession(spark0, rocksDb)
     import spark.implicits._
     val name = "stream_timer_sess_" + d.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + runSeq.incrementAndGet()
-    graft.util.Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val q = spark.readStream.schema(wireSchema)
-        .option("maxFilesPerTrigger", "1000000") // one data batch; timers fire in the no-data batch
-        .json(landing)
-        .withColumn("ts", to_timestamp($"ts_str", tsFmt))
-        .withWatermark("ts", "0 seconds")
-        .select($"user_id", unix_micros($"ts").as("ts_us"), $"ts")
-        .as[StatefulSessions.TimedEv]
-        .groupByKey(_.user_id)
-        .transformWithState(
-          new StatefulSessions.TimerSessionProcessor(StatefulSessions.defaultGapUs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val q = spark.readStream.schema(wireSchema)
+      .option("maxFilesPerTrigger", "1000000") // one data batch; timers fire in the no-data batch
+      .json(landing)
+      .withColumn("ts", to_timestamp($"ts_str", tsFmt))
+      .withWatermark("ts", "0 seconds")
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"ts")
+      .as[StatefulSessions.TimedEv]
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new StatefulSessions.TimerSessionProcessor(StatefulSessions.defaultGapUs),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF()
+      .writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     spark.table(name)
       .select($"user_id", $"session_start_us", $"session_end_us", $"n_events")
       .orderBy($"user_id", $"session_start_us")

@@ -4240,4 +4240,110 @@ class JsonlStatsSpec extends SparkSpec {
       "WHERE user_id BETWEEN 2 AND 9 AND v BETWEEN 10 AND 40 ORDER BY id")
       .collect().toSeq === box, "re-clustering must not change any result")
   }
+
+
+  test("rewrite_deletes publishes every stat family the writer does: map-key " +
+    "bounds and markers, vector, leaf, string and temporal bounds, checkpoints, " +
+    "zones and sidecars, all attained by the survivors") {
+    val dir = Files.createTempDirectory("jsonl_rwdel_stats").toString
+    // one file past CheckpointBytes (9,000 rows of ~300 bytes), then a
+    // small one that alone carries the map key 'rare'
+    def rows(lo: Long, hi: Long, md: String) = spark.range(lo, hi).selectExpr(
+      "id", "CAST(id % 997 AS DOUBLE) / 7 AS v",
+      "timestamp_micros(1700000000000000 + id * 1000003) AS ts",
+      "concat('name-', lpad(CAST(id % 313 AS STRING), 4, '0'), '-past-sixteen-chars') AS s",
+      "named_struct('n', id % 101, 'tag', concat('t', CAST(id % 17 AS STRING))) AS doc",
+      "array(CAST(sin(id) AS FLOAT), CAST(cos(id) AS FLOAT), CAST(id % 5 - 2 AS FLOAT)) AS emb",
+      s"$md AS md",
+      "map('lang', IF(id % 2 = 0, 'de', 'en'), 'src', concat('feed-', CAST(id % 9 AS STRING))) AS ms",
+      "concat('doc text ', CAST(id AS STRING), ' body') AS txt")
+    def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
+      df.coalesce(1).write.format("graft-jsonl-stats").option("path", dir)
+        .option("statsColumn", "id").option("bloomColumn", "s")
+        .option("gramColumn", "txt").option("sortColumn", "id").mode(mode).save()
+    write(rows(0, 9000, "map('k0', CAST(id % 11 AS DOUBLE), 'k1', CAST(id AS DOUBLE) / 3)"),
+      "overwrite")
+    write(rows(9000, 9300, "map('k0', CAST(id % 11 AS DOUBLE), 'rare', CAST(id AS DOUBLE))"),
+      "append")
+    val m0 = JsonlStats.readTableMeta(dir)
+    JsonlStats.writeTableMeta(dir, m0.copy(deleteMode = Some("merge-on-read")))
+    val cat = "graft_rwst_" + java.lang.Integer.toHexString(dir.hashCode)
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", Paths.get(dir).getParent.toString)
+    val t = s"$cat.`${Paths.get(dir).getFileName}`"
+    val before = JsonlStats.readStats(dir)
+    assert(before.size === 2 && before.exists(s =>
+      Files.size(Paths.get(dir, s.file)) > JsonlStats.CheckpointBytes),
+      s"fixture needs one file past CheckpointBytes: ${before.map(_.file)}")
+    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      df.collect()
+      nodes(df.queryExecution.executedPlan).collect { case b: BatchScanExec => b }
+        .head.scan.asInstanceOf[JsonlStatsScan].toBatch.planInputPartitions()
+        .map {
+          case f: JsonlFilePartition => f.file
+          case k: JsonlKeyedFilePartition => k.file
+        }.distinct.length
+    }
+    val rare = s"SELECT id FROM $t WHERE md['rare'] > 0"
+    val rareBefore = plannedFiles(spark.sql(rare))
+    assert(rareBefore === 1, "the marker prunes the file without the key")
+    spark.sql(s"DELETE FROM $t WHERE id % 7 = 3 OR id IN (0, 8999, 9299)")
+    assert(JsonlStats.readStats(dir).forall(_.dvs.nonEmpty), "both files must carry a DV")
+    spark.sql(s"CALL $cat.rewrite_deletes('${Paths.get(dir).getFileName}')").collect()
+    val after = JsonlStats.readStats(dir)
+    assert(after.size === 2 && after.forall(s => s.dvs.isEmpty && !before.contains(s)))
+    assert(after.map(_.sorted).toSet === before.map(_.sorted).toSet && after.head.sorted.isDefined,
+      "the collapse keeps the sort stamp")
+    val survivors = spark.sql(
+      s"""SELECT _file, id, v, unix_micros(ts), s, doc.n, doc.tag, emb, md, ms
+         |FROM $t""".stripMargin).collect().groupBy(_.getString(0))
+    val strOrd = Ordering.fromLessThan[String](JsonlStats.strCompare(_, _) < 0)
+    def strBounds(vs: Seq[String]) =
+      (JsonlStats.truncLower(vs.min(strOrd)), JsonlStats.truncUpper(vs.max(strOrd)))
+    after.foreach { e =>
+      val rs = survivors(Paths.get(dir, e.file).toString).toSeq
+      val what = s"${e.file} (${rs.size} rows)"
+      assert(e.rows === rs.size.toLong, what)
+      def num(i: Int) = rs.map(r => r.get(i).asInstanceOf[Number].doubleValue())
+      def span(vs: Seq[Double]) = (vs.min, vs.max)
+      assert((e.min, e.max) === span(num(1)), what)
+      Seq("id" -> 1, "v" -> 2, "ts" -> 3, "doc.n" -> 5).foreach { case (c, i) =>
+        assert(e.cols.get(c) === Some(span(num(i))), s"$c of $what")
+      }
+      Seq("s" -> 4, "doc.tag" -> 6).foreach { case (c, i) =>
+        assert(e.strCols.get(c) === Some(strBounds(rs.map(_.getString(i)))), s"$c of $what")
+      }
+      // map-key bounds under the completeness markers, per key
+      assert(e.cols.contains("md#mk") && e.cols.contains("ms#mk"), s"map markers of $what")
+      val md = rs.flatMap(_.getMap[String, Double](8).toSeq).groupBy(_._1)
+      assert(e.cols.keySet.filter(k => k.startsWith("md.")) === md.keySet.map("md." + _), what)
+      md.foreach { case (k, kvs) =>
+        assert(e.cols.get(s"md.$k") === Some(span(kvs.map(_._2))), s"md.$k of $what")
+      }
+      rs.flatMap(_.getMap[String, String](9).toSeq).groupBy(_._1).foreach { case (k, kvs) =>
+        assert(e.strCols.get(s"ms.$k") === Some(strBounds(kvs.map(_._2))), s"ms.$k of $what")
+      }
+      // vector norm and sign-cell stats, the sink's arithmetic
+      val vecs = rs.map(_.getSeq[Float](7).map(_.toDouble))
+      val cells = vecs.map(_.zipWithIndex.foldLeft(0) { case (c, (x, j)) =>
+        if (j < JsonlStats.VecCellBits && x > 0) c | (1 << j) else c })
+      assert(e.cols.get("emb#norm") === Some(span(vecs.map(v => math.sqrt(v.map(x => x * x).sum)))),
+        s"emb#norm of $what")
+      assert(e.cols.get("emb#cell") === Some(span(cells.map(_.toDouble))), s"emb#cell of $what")
+      assert(e.vcells.get("emb") === Some(cells.foldLeft(0L)((m, c) => m | (1L << c))), what)
+      // sidecars, and checkpoints with one zone per segment on the big file
+      val path = Paths.get(dir, e.file)
+      assert(Files.exists(Bloom.sidecarOf(path)) && Files.exists(Bloom.gramSidecarOf(path)), what)
+      if (Files.size(path) > JsonlStats.CheckpointBytes)
+        assert(e.ckpts.nonEmpty && e.segb.size === e.ckpts.size + 1, s"checkpoints of $what")
+    }
+    assert(plannedFiles(spark.sql(rare)) <= rareBefore,
+      "the rewrite must not lose map-key pruning")
+    assert(spark.sql(rare).count() === (9000L until 9300L).count(i => i % 7 != 3 && i != 9299))
+  }
 }

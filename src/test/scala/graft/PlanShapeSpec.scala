@@ -338,14 +338,28 @@ class PlanShapeSpec extends SparkSpec {
     assert(hits.isEmpty, s"spark.graft.* conf keys read under src/main:\n${hits.mkString("\n")}")
   }
 
-  test("session hygiene: conf.set only in Confs.withConfs, the fixture catalog " +
-    "registration and MicroBatch's derived stream session") {
+  test("session hygiene: conf.set only in Confs.derived and the fixture catalog " +
+    "registration") {
     val hits = mainSourceHits((f, line) => line.contains("conf.set(") && !(
       f.getFileName.toString == "Confs.scala" ||
-        line.contains("conf.set(s\"spark.sql.catalog.") ||
-        (f.getFileName.toString == "MicroBatch.scala" && line.trim.startsWith("s.conf.set("))))
+        line.contains("conf.set(s\"spark.sql.catalog.")))
     assert(hits.isEmpty,
       s"session confs set outside the session builder:\n${hits.mkString("\n")}")
+  }
+
+  test("one masking, lineage and stats derivation: only the connector's reader " +
+    "opens deletion vectors, equality-delete masks and a lineage run cursor, and " +
+    "only its sink tracks zone maps") {
+    def only(file: String, definedIn: String, marker: String => Boolean) =
+      mainSourceHits((f, line) => marker(line) &&
+        !Set(file, definedIn).contains(f.getFileName.toString))
+    val hits =
+      only("JsonlStatsRead.scala", "JsonlDeleteVectors.scala", _.contains("readDvPositions(")) ++
+        only("JsonlStatsRead.scala", "JsonlEqualityDeletes.scala", _.contains("readMasks(")) ++
+        only("JsonlStatsRead.scala", "JsonlStats.scala", "\\blin\\.runs\\b".r.findFirstIn(_).isDefined) ++
+        only("JsonlStatsWrite.scala", "JsonlStats.scala", _.contains("new JsonlStats.ZoneTracker"))
+    assert(hits.isEmpty,
+      s"a second copy of the reader's masking/lineage or the sink's stats:\n${hits.mkString("\n")}")
   }
 
   test("session hygiene: environment variables are read only by the Bench, Verify " +

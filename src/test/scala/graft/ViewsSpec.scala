@@ -5,6 +5,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, ViewChange, ViewInfo}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Persistent SQL views ([[graft.sources.GraftViews]] +
   * [[graft.plans.ResolveGraftViews]] + the view DDL procedures).
@@ -928,5 +929,34 @@ class ViewsSpec extends SparkSpec {
     val direct = spark.sql("SELECT * FROM vspec.nsb.mv_pc")
     assert(scans(direct).forall(_.contains("_mv_mv_pc")), scans(direct))
     spark.sql("CALL vspec.drop_view('nsb.mv_pc')")
+  }
+
+
+  test("replacing a COUNT(DISTINCT) MV by a plain view, or dropping one through " +
+    "the catalog, removes its backing and liveness tables") {
+    cat
+    spark.sql("DROP TABLE IF EXISTS vspec.own_t")
+    Seq(("a", "u1"), ("a", "u2"), ("b", "u1")).toDF("k", "u").createOrReplaceTempView("own_seed")
+    spark.sql("CREATE TABLE vspec.own_t AS SELECT * FROM own_seed")
+    def owned(v: String): Seq[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(root))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n == s"_mv_$v" || n.startsWith(s"_mvaux_${v}_")).toList
+      finally ls.close()
+    }
+    Seq("mv_own_r", "mv_own_d").foreach { v =>
+      spark.sql(s"CALL vspec.create_materialized_view('$v', " +
+        "'SELECT k, count(DISTINCT u) AS du FROM vspec.own_t GROUP BY k')")
+      assert(owned(v).contains(s"_mv_$v") && owned(v).exists(_.startsWith(s"_mvaux_${v}_")),
+        s"the MV must own a backing and a liveness table: ${owned(v)}")
+    }
+    spark.sql("CALL vspec.create_view('mv_own_r', 'SELECT k FROM vspec.own_t', " +
+      "or_replace => true)")
+    assert(owned("mv_own_r").isEmpty, s"replaced MV left tables behind: ${owned("mv_own_r")}")
+    assert(spark.sql("SELECT * FROM vspec.mv_own_r").count() === 3L)
+    assert(cat.dropView(Identifier.of(Array.empty[String], "mv_own_d")))
+    assert(owned("mv_own_d").isEmpty, s"dropped MV left tables behind: ${owned("mv_own_d")}")
+    spark.sql("CALL vspec.drop_view('mv_own_r')")
+    spark.sql("DROP TABLE vspec.own_t")
   }
 }
