@@ -96,9 +96,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft relations rewrite to the pushable graft_map_get function,
     // so the per-key file statistics prune from the very predicate
     ext.injectOptimizerRule(s => new graft.plans.MapKeyPushdown(s))
-    // view DDL SQL surface (r13): CREATE/DROP VIEW + SHOW VIEWS on a
-    // graft catalog rewrite to the CALL procedures; everything else
-    // passes through verbatim
+    // view DDL SQL surface (r13): parsed CREATE/DROP VIEW + SHOW VIEWS
+    // on a graft catalog run the catalog's view methods; every other
+    // plan passes through untouched
     ext.injectParser((s, delegate) => new graft.plans.GraftViewDdlParser(s, delegate))
   }
 }

@@ -1,196 +1,104 @@
 package graft.plans
 
 import graft.sources.GraftCatalog
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, NoSuchViewException, SchemaEvolution, UnresolvedIdentifier, UnresolvedNamespace}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.{CreateView, DropView, LogicalPlan, ShowViews}
+import org.apache.spark.sql.catalyst.util.StringUtils
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.graftops.Bridge
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
-/** SQL surface for persistent-view DDL on graft catalogs (r13).
+/** SQL surface for persistent-view DDL on graft catalogs.
   *
-  * Spark 4.1 ships the V2 `ViewCatalog` interface with no parser/
-  * analyzer wiring: `CREATE VIEW cat.v AS ...` dies on
-  * MISSING_CATALOG_ABILITY before the catalog is consulted
-  * ([[ResolveGraftViews]] documents the wall), which left SQL users on
-  * the `CALL create_view(...)` procedures. This injected parser closes
-  * that gap the cheapest sound way: it recognizes exactly the three
-  * statement shapes Spark cannot route —
+  * Spark 4.1 ships the V2 `ViewCatalog` interface with no analyzer
+  * wiring: `CREATE VIEW cat.v AS ...` dies on MISSING_CATALOG_ABILITY
+  * before the catalog is consulted ([[ResolveGraftViews]] documents the
+  * wall). This parser closes that gap the way Iceberg's Spark extensions
+  * do (`RewriteViewCommands`): it parses every statement with the
+  * delegate, once, and rewrites the root of the resulting PLAN — never
+  * the SQL text. When the target of
   *
-  *   - `CREATE [OR REPLACE] VIEW <name> [(col, ...)] [COMMENT '...']
-  *     AS <body>` (r14: column lists and the view comment map onto the
-  *     CALL's `columns`/`comment` parameters)
+  *   - `CREATE [OR REPLACE] VIEW [IF NOT EXISTS] <name> [(col [COMMENT
+  *     '...'], ...)] [COMMENT '...'] [TBLPROPERTIES (...)] AS <body>`
   *   - `DROP VIEW [IF EXISTS] <name>`
-  *   - `SHOW VIEWS [IN <namespace>]`
+  *   - `SHOW VIEWS [IN <namespace>] [LIKE '<pattern>']`
   *
-  * — and, ONLY when the target resolves to a registered
-  * [[GraftCatalog]], rewrites the statement into the equivalent CALL
-  * and hands that to the delegate parser. TEMPORARY views and any
-  * statement over a non-graft catalog pass through verbatim, as does a
-  * single-part `DROP VIEW` whose name is a session temp view (Spark's
-  * documented precedence: the temp view drops, not the stored one —
-  * ADVICE r13). A CREATE VIEW over a graft catalog carrying a clause
-  * with no CALL mapping (TBLPROPERTIES, per-column COMMENT) fails
-  * HELPFULLY, naming `CALL create_view`, instead of falling through to
-  * Spark's opaque MISSING_CATALOG_ABILITY wall (r14). Rewriting to the
-  * CALL keeps ONE implementation of the verbs: analysis-at-create,
-  * the shared-identifier-space refusals, and the drop-side dependency
-  * check all live in the procedures.
+  * resolves to a [[GraftCatalog]] (Spark's own catalog lookup: a leading
+  * registered catalog name is explicit, otherwise the current catalog and
+  * namespace apply), the statement becomes a [[GraftViewCommand]] that
+  * calls the catalog's view method — the one implementation of each verb
+  * (identifier space, dependents, owned tables). The parsed clauses map
+  * directly onto the `ViewInfo` that [[GraftCatalog.viewInfo]] builds.
   *
-  * Name resolution mirrors the read side: a leading registered graft
-  * catalog name is explicit; otherwise the statement targets the
-  * session's CURRENT catalog (when it is a graft catalog), with a
-  * single-part name resolving into the current namespace. */
+  * Everything else is returned untouched: TEMPORARY views (a different
+  * plan node), statements over another catalog (`spark_catalog`'s own v1
+  * views keep working), and a single-part `DROP VIEW` whose name is a
+  * session temp view — Spark's documented precedence drops the temp
+  * view, not the stored one of the same name. */
 class GraftViewDdlParser(spark: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
-  private val Create =
-    ("""(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([\w.`]+)\s*""" +
-      """(?:\(([^)]*)\)\s*)?(?:COMMENT\s+'((?:[^']|'')*)'\s*)?AS\s+(.+?)\s*;?\s*$""").r
-  /** A CREATE VIEW that targets a graft catalog but carries a clause
-    * [[Create]] does not recognize (TBLPROPERTIES, per-column COMMENT,
-    * ...) — intercepted to fail HELPFULLY instead of falling through to
-    * Spark's opaque MISSING_CATALOG_ABILITY wall. */
-  private val CreateHead =
-    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.`]+)[\s(].*$""".r
-  private val Drop =
-    """(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.`]+)\s*;?\s*$""".r
-  private val Show =
-    """(?is)^\s*SHOW\s+VIEWS(?:\s+(?:IN|FROM)\s+([\w.`]+))?\s*;?\s*$""".r
-
-  override def parsePlan(sqlText: String): LogicalPlan =
-    rewrite(sqlText) match {
-      case Some(call) => delegate.parsePlan(call)
-      case None => delegate.parsePlan(sqlText)
-    }
-
-  private def cm = spark.sessionState.catalogManager
-
-  /** Registered AND resolves to a GraftCatalog. `cm.catalog(name)`
-    * deliberately FORCES initialization (r14): gating on the
-    * initialized-roots snapshot first meant the very first view DDL of
-    * a fresh session — before anything had touched the catalog —
-    * passed through to Spark's MISSING_CATALOG_ABILITY wall. Spark
-    * would initialize the registered catalog during that statement's
-    * analysis anyway, so eager initialization here changes nothing but
-    * the first statement's outcome. */
-  private def isGraftCat(name: String): Boolean =
-    cm.isCatalogRegistered(name) &&
-      (try cm.catalog(name).isInstanceOf[GraftCatalog] catch { case _: Exception => false })
-
-  /** An identifier whose head names a DIFFERENT registered catalog is
-    * never ours — `CREATE VIEW spark_catalog.db.v` from a graft-current
-    * session must reach Spark's own (working) v1 path, not be read as
-    * a warehouse-relative namespace. */
-  private def foreignCatalogHead(parts: Seq[String]): Boolean =
-    parts.size > 1 && !isGraftCat(parts.head) &&
-      (parts.head == "spark_catalog" || cm.isCatalogRegistered(parts.head))
-
-  /** (catalog, warehouse-relative dotted name) for a view identifier,
-    * or None when the target is not a graft catalog. */
-  private def target(ident: String): Option[(String, String)] = {
-    val parts = try delegate.parseMultipartIdentifier(ident)
-      catch { case _: Exception => return None }
-    if (parts.size > 1 && isGraftCat(parts.head))
-      Some((parts.head, parts.tail.mkString(".")))
-    else if (!foreignCatalogHead(parts) && isGraftCat(cm.currentCatalog.name())) {
-      val rel = if (parts.size == 1) (cm.currentNamespace :+ parts.head).toSeq else parts
-      Some((cm.currentCatalog.name(), rel.mkString(".")))
-    } else None
+  override def parsePlan(sqlText: String): LogicalPlan = delegate.parsePlan(sqlText) match {
+    case c @ CreateView(UnresolvedIdentifier(GraftIdent(cat, ident), _), columns, comment,
+        collation, properties, Some(body), _, ifNotExists, orReplace, schemaMode) =>
+      require(collation.isEmpty && schemaMode != SchemaEvolution,
+        s"CREATE VIEW $ident over a graft catalog: DEFAULT COLLATION and WITH SCHEMA " +
+          "EVOLUTION are not supported — a stored view's output contract is its " +
+          "definition-time schema")
+      GraftViewCommand(c.nodeName, Nil) { s =>
+        if (!(ifNotExists && cat.viewExists(ident))) {
+          val info = GraftCatalog.viewInfo(s, ident, body, columns, comment, properties)
+          if (orReplace) cat.replaceView(info, true) else cat.createView(info)
+        }
+        Nil
+      }
+    case d @ DropView(UnresolvedIdentifier(parts @ GraftIdent(cat, ident), _), ifExists)
+        if !(parts.size == 1 && hasTempView(parts.head)) =>
+      GraftViewCommand(d.nodeName, Nil) { _ =>
+        if (!cat.dropView(ident) && !ifExists) throw new NoSuchViewException(ident)
+        Nil
+      }
+    case s @ ShowViews(GraftNamespace(cat, ns), pattern, _) =>
+      val output = Seq("namespace", "view").map(AttributeReference(_, StringType, nullable = false)()) :+
+        AttributeReference("comment", StringType)()
+      GraftViewCommand(s.nodeName, output) { _ =>
+        val names = cat.listViews(ns: _*).map(_.name()).toSeq
+        pattern.fold(names)(StringUtils.filterPattern(names, _)).map { n =>
+          Row(ns.mkString("."), n, cat.loadView(Identifier.of(ns.toArray, n)).properties().get("comment"))
+        }
+      }
+    case other => other
   }
 
-  /** Namespace target of SHOW VIEWS — like [[target]] but the whole
-    * identifier is the namespace. */
-  private def nsTarget(ident: Option[String]): Option[(String, String)] = ident match {
-    case None =>
-      val cur = cm.currentCatalog.name()
-      if (isGraftCat(cur)) Some((cur, cm.currentNamespace.mkString("."))) else None
-    case Some(id) =>
-      val parts = try delegate.parseMultipartIdentifier(id)
-        catch { case _: Exception => return None }
-      if (isGraftCat(parts.head)) Some((parts.head, parts.tail.mkString(".")))
-      else if (parts.size == 1 && parts.head == "spark_catalog") None
-      else if (!foreignCatalogHead(parts) && isGraftCat(cm.currentCatalog.name()))
-        Some((cm.currentCatalog.name(), parts.mkString(".")))
-      else None
+  /** A view identifier that resolves to a graft catalog. */
+  private object GraftIdent {
+    def unapply(parts: Seq[String]): Option[(GraftCatalog, Identifier)] =
+      Bridge.catalogAndIdentifier(spark, parts).collect { case (cat: GraftCatalog, id) => (cat, id) }
   }
 
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
+  /** SHOW VIEWS' namespace when it resolves to a graft catalog. */
+  private object GraftNamespace {
+    def unapply(ns: LogicalPlan): Option[(GraftCatalog, Seq[String])] = (ns match {
+      case CurrentNamespace =>
+        val cm = spark.sessionState.catalogManager
+        Some((cm.currentCatalog, cm.currentNamespace.toSeq))
+      case UnresolvedNamespace(parts, _) if parts.nonEmpty =>
+        Some(Bridge.catalogAndNamespace(spark, parts))
+      case _ => None
+    }).collect { case (cat: GraftCatalog, parts) => (cat, parts) }
+  }
 
-  /** A session TEMP view of this name exists — single-part DROP VIEW
-    * must reach Spark's own path (which drops the temp view, Spark's
-    * documented precedence), never the stored view of the same name.
-    * CREATE VIEW needs no such guard: Spark's non-temporary CREATE
-    * always targets the catalog even when a temp view shadows the name.
-    * Known gap: SHOW VIEWS over a graft namespace lists stored views
-    * only — session temp views don't surface through the CALL. */
+  /** A session TEMP view of this name exists. CREATE VIEW needs no such
+    * guard: Spark's non-temporary CREATE always targets the catalog even
+    * when a temp view shadows the name. Known gap: SHOW VIEWS over a
+    * graft namespace lists stored views only. */
   private def hasTempView(name: String): Boolean =
-    try spark.sessionState.catalog.getTempView(name).isDefined
-    catch { case _: Exception => false }
-
-  /** The parenthesised column list of a CREATE VIEW: plain names only
-    * (backticks stripped). A decorated entry (COMMENT, types, ...) has
-    * no CALL mapping — fail naming the supported surface. */
-  private def columnList(raw: String, ident: String): Seq[String] = {
-    // split on TOP-LEVEL commas only — a comma inside backticks is part
-    // of a quoted identifier, not a separator, so `a,b` must surface as
-    // ONE entry (and then be rejected below: the CALL's columns
-    // parameter is itself comma-joined, so such a name cannot round-
-    // trip) rather than silently mis-aliasing as two names (ADVICE r14)
-    val cols = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new StringBuilder
-      var inTick = false
-      raw.foreach {
-        case '`' => inTick = !inTick; sb += '`'
-        case ',' if !inTick => out += sb.toString; sb.clear()
-        case ch => sb += ch
-      }
-      out += sb.toString
-      out.toSeq.map(_.trim).filter(_.nonEmpty)
-    }
-    cols.map { c =>
-      val bare = c.stripPrefix("`").stripSuffix("`")
-      if (bare.isEmpty || bare.exists(ch => ch.isWhitespace || ch == '`' ||
-          ch == '\'' || ch == ','))
-        throw new IllegalArgumentException(
-          s"unsupported column-list entry '$c' in CREATE VIEW $ident over a graft " +
-            "catalog — plain column names only (per-column COMMENT and types are " +
-            s"not supported here; use CALL <catalog>.create_view(...) for the full surface)")
-      bare
-    }
-  }
-
-  private def rewrite(sqlText: String): Option[String] = sqlText match {
-    case Create(orReplace, ident, colList, comment, body) =>
-      target(ident).map { case (cat, rel) =>
-        val colsArg = Option(colList).map(cl =>
-          s", columns => ${lit(columnList(cl, ident).mkString(","))}").getOrElse("")
-        val commentArg = Option(comment).map(c =>
-          s", comment => ${lit(c.replace("''", "'"))}").getOrElse("")
-        s"CALL `$cat`.create_view(${lit(rel)}, ${lit(body)}, " +
-          s"or_replace => ${orReplace != null}$colsArg$commentArg)"
-      }
-    case CreateHead(ident) if target(ident).isDefined =>
-      throw new IllegalArgumentException(
-        s"unsupported CREATE VIEW clause for graft-catalog view $ident — the SQL " +
-          "surface supports CREATE [OR REPLACE] VIEW <name> [(col, ...)] " +
-          "[COMMENT '...'] AS <query>; for anything else (TBLPROPERTIES, " +
-          "per-column COMMENT, ...) use CALL <catalog>.create_view(...)")
-    case Drop(ifExists, ident) =>
-      val parts = try delegate.parseMultipartIdentifier(ident)
-        catch { case _: Exception => Seq.empty }
-      if (parts.size == 1 && hasTempView(parts.head)) None
-      else target(ident).map { case (cat, rel) =>
-        s"CALL `$cat`.drop_view(${lit(rel)}, if_exists => ${ifExists != null})"
-      }
-    case Show(ident) =>
-      nsTarget(Option(ident)).map { case (cat, ns) =>
-        s"CALL `$cat`.list_views(${lit(ns)})"
-      }
-    case _ => None
-  }
+    spark.sessionState.catalog.getTempView(name).isDefined
 
   // ---- pure delegation ------------------------------------------------------
   override def parseExpression(sqlText: String): Expression =
@@ -209,4 +117,13 @@ class GraftViewDdlParser(spark: SparkSession, delegate: ParserInterface)
     delegate.parseTableSchema(sqlText)
   override def parseDataType(sqlText: String): DataType =
     delegate.parseDataType(sqlText)
+}
+
+/** One view statement over a graft catalog, bound to the catalog verb it
+  * runs when the statement executes (view DDL is eager, like every
+  * command). `statement` names the parsed node it replaces. */
+case class GraftViewCommand(statement: String, override val output: Seq[Attribute])(
+    verb: SparkSession => Seq[Row]) extends LeafRunnableCommand {
+  override def run(sparkSession: SparkSession): Seq[Row] = verb(sparkSession)
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(verb)
 }

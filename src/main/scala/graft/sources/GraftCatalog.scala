@@ -787,15 +787,19 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
 
   // ---- ViewCatalog (r12b) --------------------------------------------
   // Persistent SQL views, stored as `_views/<name>.json` sidecars in
-  // their namespace directory ([[GraftViews]]). Spark's analyzer
-  // resolves a SELECT over one natively (ResolveRelations consults
-  // ViewCatalog), re-parsing the stored SQL with the stored
-  // catalog/namespace as context — so the view is a macro: every
-  // scan capability (pushdown, file pruning, runtime filtering)
-  // applies through it unchanged. Tables and views share one
-  // identifier space by refusal: createView refuses a table's name,
-  // validateCreate refuses a view's ([[GraftViews.requireValidName]]
-  // keeps both out of the engine-internal `_` prefix).
+  // their namespace directory ([[GraftViews]]). These methods are the one
+  // implementation of every view verb: SQL view DDL
+  // ([[graft.plans.GraftViewDdlParser]]) and the view CALLs
+  // ([[GraftProcedures]]) only call them. Spark 4.1 ships ViewCatalog as
+  // an interface: no analyzer rule consults it, so a SELECT over a view
+  // resolves through [[graft.plans.ResolveGraftViews]], which re-parses
+  // the stored SQL with the stored catalog/namespace as context — the
+  // view is a macro, and every scan capability (pushdown, file pruning,
+  // runtime filtering) applies through it unchanged. Tables and views
+  // share one identifier space by refusal: [[requireViewSlot]] refuses a
+  // table's name, validateCreate refuses a view's
+  // ([[GraftViews.requireValidName]] keeps both out of the
+  // engine-internal `_` prefix).
 
   override def listViews(namespace: String*): Array[Identifier] = {
     val ns = namespace.toArray
@@ -811,9 +815,52 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
   override def viewExists(ident: Identifier): Boolean =
     GraftViews.exists(nsDir(ident.namespace()), ident.name())
 
-  private def viewDefOf(info: ViewInfo): GraftViews.ViewDef =
-    GraftViews.ViewDef(
-      name = info.ident().name(),
+  /** Where a view named `ident` may be published: a valid name in an
+    * existing namespace, no table of that name (a view must never shadow
+    * a table — the analyzer would answer SELECTs with whichever it
+    * consults first, silently), and no view of that name unless
+    * `replace`. Returns the definition being replaced. Materialized-view
+    * creation ([[MvLifecycle.create]]) runs the same checks. */
+  def requireViewSlot(ident: Identifier, replace: Boolean): Option[GraftViews.ViewDef] = {
+    GraftViews.requireValidName(ident.name())
+    if (!namespaceExists(ident.namespace()))
+      throw new NoSuchNamespaceException(ident.namespace())
+    if (isTableDir(dirOf(ident)))
+      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
+    val existing = GraftViews.read(nsDir(ident.namespace()), ident.name())
+    if (existing.isDefined && !replace)
+      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
+    existing
+  }
+
+  /** Properties under [[GraftViews.EnginePropPrefix]] are the engine's
+    * MV bookkeeping (backing table, recorded versions, the refresh crash
+    * marker): a caller who could set or remove one could, say, clear a
+    * failed refresh's marker and make the next refresh double-count. */
+  private def requireCallerProps(keys: Iterable[String]): Unit =
+    keys.find(_.startsWith(GraftViews.EnginePropPrefix)).foreach { k =>
+      throw new IllegalArgumentException(
+        s"view property '$k' is reserved: '${GraftViews.EnginePropPrefix}*' " +
+          "properties are written by the engine only")
+    }
+
+  override def createView(info: ViewInfo): View = publishView(info, replace = false)
+
+  override def replaceView(info: ViewInfo, orCreate: Boolean): View = {
+    if (!orCreate && !viewExists(info.ident()))
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(info.ident())
+    publishView(info, replace = true)
+  }
+
+  private def publishView(info: ViewInfo, replace: Boolean): View = {
+    val ident = info.ident()
+    val props = Option(info.properties()).map(_.asScala.toMap).getOrElse(Map.empty[String, String])
+    requireCallerProps(props.keys)
+    val replaced = requireViewSlot(ident, replace)
+    // ATOMIC_MOVE (with REPLACE_EXISTING on replace): a concurrent reader
+    // sees the old definition or the new one, never a torn file
+    GraftViews.write(nsDir(ident.namespace()), GraftViews.ViewDef(
+      name = ident.name(),
       sql = info.sql(),
       currentCatalog = info.currentCatalog(),
       currentNamespace = info.currentNamespace().toSeq,
@@ -822,38 +869,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
       columnAliases = Option(info.columnAliases()).map(_.toSeq).getOrElse(Seq.empty),
       columnComments = Option(info.columnComments()).map(_.toSeq.map(c => if (c == null) "" else c))
         .getOrElse(Seq.empty),
-      properties = Option(info.properties()).map(_.asScala.toMap).getOrElse(Map.empty))
-
-  override def createView(info: ViewInfo): View = {
-    val ident = info.ident()
-    GraftViews.requireValidName(ident.name())
-    if (!namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
-    // one identifier space: a view must never shadow a table — the
-    // analyzer would otherwise answer SELECTs with whichever it
-    // consults first, silently
-    if (java.nio.file.Files.exists(dirOf(ident).resolve("_stats.jsonl")))
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    if (viewExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
-    GraftViews.write(nsDir(ident.namespace()), viewDefOf(info), replace = false)
-    loadView(ident)
-  }
-
-  override def replaceView(info: ViewInfo, orCreate: Boolean): View = {
-    val ident = info.ident()
-    GraftViews.requireValidName(ident.name())
-    if (!namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
-    if (java.nio.file.Files.exists(dirOf(ident).resolve("_stats.jsonl")))
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    if (!viewExists(ident) && !orCreate)
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident)
-    // ATOMIC_MOVE with REPLACE_EXISTING: a concurrent reader sees the
-    // old definition or the new one, never a torn file; a replaced
-    // materialized view's tables go after the new sidecar is published
-    val replaced = GraftViews.read(nsDir(ident.namespace()), ident.name())
-    GraftViews.write(nsDir(ident.namespace()), viewDefOf(info), replace = true)
+      properties = props), replace)
+    // a replaced materialized view's tables go once the new sidecar is
+    // published: a crash in between leaves orphans, never a dangling MV
     replaced.foreach(MvLifecycle.dropOwnedTables(nsDir(ident.namespace()), _))
     loadView(ident)
   }
@@ -863,8 +881,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
       .getOrElse(throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident))
     var props = d.properties
     changes.foreach {
-      case set: ViewChange.SetProperty => props += (set.property() -> set.value())
-      case rm: ViewChange.RemoveProperty => props -= rm.property()
+      case set: ViewChange.SetProperty =>
+        requireCallerProps(Seq(set.property())); props += (set.property() -> set.value())
+      case rm: ViewChange.RemoveProperty =>
+        requireCallerProps(Seq(rm.property())); props -= rm.property()
       case other => throw new UnsupportedOperationException(
         s"$catName: unsupported view change $other")
     }
@@ -872,39 +892,32 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
     loadView(ident)
   }
 
-  override def dropView(ident: Identifier): Boolean = {
-    // same contract as the CALL surface: refuse while other stored
-    // views expand through this one, and take an MV's backing and
-    // liveness tables with the definition
-    val dependents = GraftViews.referencingViews(
-      s => org.apache.spark.sql.SparkSession.active.sessionState.sqlParser.parsePlan(s),
-      root, ident.namespace().toSeq, ident.name())
-    require(dependents.isEmpty,
-      s"cannot drop view '${ident}': referenced by stored view(s) " +
-        s"${dependents.mkString(", ")} — drop or redefine the dependents first")
-    val defn = GraftViews.read(nsDir(ident.namespace()), ident.name())
-    val dropped = GraftViews.drop(nsDir(ident.namespace()), ident.name())
-    if (dropped) defn.foreach(MvLifecycle.dropOwnedTables(nsDir(ident.namespace()), _))
-    dropped
-  }
+  override def dropView(ident: Identifier): Boolean =
+    GraftViews.read(nsDir(ident.namespace()), ident.name()).exists { defn =>
+      // a view referenced by OTHER stored views must not vanish out from
+      // under them — fail loudly naming every dependent (the alternative,
+      // a nested view that errors at next read, debugs like a corruption)
+      val dependents = GraftViews.referencingViews(
+        s => org.apache.spark.sql.SparkSession.active.sessionState.sqlParser.parsePlan(s),
+        root, ident.namespace().toSeq, ident.name())
+      require(dependents.isEmpty,
+        s"cannot drop view '${ident}': referenced by stored view(s) " +
+          s"${dependents.mkString(", ")} — drop or redefine the dependents first")
+      // a materialized view owns its backing table and any COUNT(DISTINCT)
+      // liveness tables (r15): they go with the definition
+      val dropped = GraftViews.drop(nsDir(ident.namespace()), ident.name())
+      if (dropped) MvLifecycle.dropOwnedTables(nsDir(ident.namespace()), defn)
+      dropped
+    }
 
   override def renameView(oldIdent: Identifier, newIdent: Identifier): Unit = {
-    if (!viewExists(oldIdent))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent)
-    GraftViews.requireValidName(newIdent.name())
-    if (!namespaceExists(newIdent.namespace()))
-      throw new NoSuchNamespaceException(newIdent.namespace())
-    if (viewExists(newIdent))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(newIdent)
-    if (java.nio.file.Files.exists(dirOf(newIdent).resolve("_stats.jsonl")))
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(newIdent)
+    val d = GraftViews.read(nsDir(oldIdent.namespace()), oldIdent.name())
+      .getOrElse(throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent))
+    requireViewSlot(newIdent, replace = false)
     // the stored definition's currentCatalog/currentNamespace stay —
     // the view's BODY still resolves exactly as written; only its
-    // address moves (rename is an address operation, not a re-analysis)
-    val target = GraftViews.viewFile(nsDir(newIdent.namespace()), newIdent.name())
-    java.nio.file.Files.createDirectories(target.getParent)
-    val d = GraftViews.read(nsDir(oldIdent.namespace()), oldIdent.name()).get
-    // a MATERIALIZED view owns its backing table (`_mv_<name>`, named
+    // address moves (rename is an address operation, not a re-analysis).
+    // A MATERIALIZED view owns its backing table (`_mv_<name>`, named
     // after the view and living in the view's namespace): the backing
     // moves WITH the definition, else a fresh read after the rename
     // would resolve a backing that no longer exists and a later drop
@@ -1014,7 +1027,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with StagingTableCa
     * procedure table, [[GraftProcedures.all]]. */
   override def loadProcedure(ident: Identifier): org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
     GraftProcedures.all.get(ident.name()).filter(_ => ident.namespace().isEmpty)
-      .map(new GraftProcedures.ProcAdapter(_, GraftProcedures.ProcCtx(catName, root)))
+      .map(new GraftProcedures.ProcAdapter(_, GraftProcedures.ProcCtx(this)))
       .getOrElse(throw new RuntimeException(s"no such procedure $ident in $catName"))
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
@@ -1041,6 +1054,39 @@ object GraftCatalog {
   private[graft] def rootsSnapshot: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     registeredRoots.asScala.toSeq
+  }
+
+  /** A view definition from its body's text — what SQL `CREATE VIEW`,
+    * `CALL create_view` and any API caller hand to [[GraftCatalog]]'s
+    * createView/replaceView. The body is analyzed NOW, in `spark`
+    * (schema capture, and a loud create-time failure for a body that
+    * does not resolve), and the session's current catalog and namespace
+    * are stored as the context the body re-resolves in. `columns` — the
+    * `CREATE VIEW v (a COMMENT '...', b)` list — renames the body's
+    * output positionally: the schema and aliases carry the visible
+    * names, queryColumnNames the body's (what the expansion projects
+    * by). `comment` lands in the `comment` property. */
+  def viewInfo(spark: org.apache.spark.sql.SparkSession, ident: Identifier, sql: String,
+               columns: Seq[(String, Option[String])], comment: Option[String],
+               properties: Map[String, String]): ViewInfo = {
+    val schema = spark.sql(sql).schema
+    require(schema.fieldNames.toSeq.distinct.size == schema.size,
+      s"view body output has duplicate column names " +
+        s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
+    val names = columns.map(_._1)
+    require(columns.isEmpty || names.size == schema.size,
+      s"column list has ${names.size} names but the view body produces " +
+        s"${schema.size} columns (${schema.fieldNames.mkString(", ")})")
+    require(names.forall(_.nonEmpty) && names.distinct.size == names.size,
+      s"view column list must be distinct non-empty names: ${names.mkString(", ")}")
+    val visible =
+      if (columns.isEmpty) schema
+      else StructType(schema.fields.zip(names).map { case (f, a) => f.copy(name = a) })
+    val cm = spark.sessionState.catalogManager
+    new ViewInfo(ident, sql, cm.currentCatalog.name(), cm.currentNamespace,
+      visible, schema.fieldNames, visible.fieldNames,
+      if (columns.exists(_._2.isDefined)) columns.map(_._2.orNull).toArray else Array.empty[String],
+      (properties ++ comment.map("comment" -> _)).asJava)
   }
 
   /** The catalog's functions by name; `loadFunction` and

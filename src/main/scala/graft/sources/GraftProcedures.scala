@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
@@ -58,8 +59,11 @@ object GraftProcedures {
                                entry: Option[JsonlStats.FileStats])
 
   /** What a procedure body sees besides its arguments: the catalog it
-    * was called through and that catalog's warehouse root. */
-  final case class ProcCtx(catalog: String, root: String)
+    * was called through, its name and its warehouse root. */
+  final case class ProcCtx(cat: GraftCatalog) {
+    def catalog: String = cat.name()
+    def root: String = cat.warehouseRoot
+  }
 
   /** One CALL procedure: its name, a usage line, its parameters (names,
     * types and defaults as CALL binds them), its result schema, and a
@@ -138,9 +142,6 @@ object GraftProcedures {
         val version = op(tableDir(ctx.root, table).toString, ref, row)
         Seq(InternalRow(utf8(ref), utf8(verb), version))
       })
-
-  private val publishResult =
-    StructType(Seq(field("tables", StringType), field("legs_applied", IntegerType)))
 
   /** Every CALL procedure, by name. [[GraftCatalog]]'s `loadProcedure`
     * and `listProcedures` both answer from this one table. */
@@ -407,32 +408,16 @@ object GraftProcedures {
         Refs.cherryPick(dir, ref.toInt, txnId("cp"))
       },
 
-      // r11: the ATOMIC two-table publish — both branch heads land on
-      // their mains or neither does ([[Refs.Wtxn]]: marker-committed
-      // roll-forward, recovered by every catalog access). The fact+agg
-      // WAP shape: stage both, audit both, publish as one warehouse
-      // transaction.
-      Proc("fast_forward_pair",
-        "fast_forward_pair(table1, branch1, table2, branch2): publish two branch heads atomically",
-        Seq(arg("table1", StringType), arg("branch1", StringType),
-          arg("table2", StringType), arg("branch2", StringType)),
-        publishResult,
-        (ctx, row) => {
-          val (t1, b1, t2, b2) = (str(row, 0), str(row, 1), str(row, 2), str(row, 3))
-          Seq(t1, t2).foreach(tableDir(ctx.root, _))
-          val applied = Refs.Wtxn.publish(ctx.root, Seq((t1, b1), (t2, b2)), txnId("ffp"))
-          Seq(InternalRow(utf8(s"$t1,$t2"), applied))
-        }),
-
-      // r11: the N-table generalization of the pair publish — `legs` =
+      // r11: the ATOMIC multi-table publish — `legs` =
       // "table:branch,table:branch,..." and every named branch head lands
-      // on its main or none does ([[Refs.Wtxn]] is leg-count-agnostic;
-      // the pair procedure is the common-case sugar). The fact + N
-      // downstream aggregates publish as ONE warehouse transaction.
+      // on its main or none does ([[Refs.Wtxn]]: marker-committed
+      // roll-forward, recovered by every catalog access). The fact + N
+      // downstream aggregates WAP shape: stage all, audit all, publish
+      // as ONE warehouse transaction.
       Proc("fast_forward_all",
         "fast_forward_all('t1:b1,t2:b2,...'): publish N branch heads atomically",
         Seq(arg("legs", StringType)),
-        publishResult,
+        StructType(Seq(field("tables", StringType), field("legs_applied", IntegerType))),
         (ctx, row) => {
           val legs = str(row, 0).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { s =>
             s.split(":", 2) match {
@@ -446,6 +431,8 @@ object GraftProcedures {
           Seq(InternalRow(utf8(legs.map(_._1).mkString(",")), applied))
         }),
 
+      // the view verbs: each body reads its arguments and calls the
+      // catalog's ViewCatalog method, the one implementation of the verb
       Proc("create_view",
         "create_view(name, sql[, comment][, or_replace][, columns]): store a persistent SQL view",
         Seq(arg("name", StringType), arg("sql", StringType), arg("comment", StringType, "''"),
@@ -455,24 +442,49 @@ object GraftProcedures {
           // `(a, b, ...)` column-list form)
           arg("columns", StringType, "''")),
         strings("view", "action", "columns"),
-        (ctx, row) => createView(ctx.root, row)),
+        (ctx, row) => {
+          val columns = optStr(row, 4).toSeq.flatMap(_.split(',').map(c => (c.trim, None)))
+          val info = GraftCatalog.viewInfo(SparkSession.active, viewIdent(str(row, 0)),
+            str(row, 1), columns, optStr(row, 2), Map.empty)
+          val v = if (row.getBoolean(3)) ctx.cat.replaceView(info, true) else ctx.cat.createView(info)
+          stringRow(str(row, 0), "created", v.schema().fieldNames.mkString(","))
+        }),
       Proc("drop_view", "drop_view(name): delete a stored view definition",
         Seq(arg("name", StringType), arg("if_exists", BooleanType, "false")),
         strings("view", "action"),
-        (ctx, row) => dropView(ctx.root, row)),
+        (ctx, row) => {
+          val ident = viewIdent(str(row, 0))
+          if (ctx.cat.dropView(ident)) stringRow(str(row, 0), "dropped")
+          else if (row.getBoolean(1)) stringRow(str(row, 0), "not-found")
+          else throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident)
+        }),
       Proc("rename_view", "rename_view(name, to): move a stored view to a new name/namespace",
         Seq(arg("name", StringType), arg("to", StringType)),
         strings("view", "action", "to"),
-        (ctx, row) => renameView(ctx.root, row)),
+        (ctx, row) => {
+          ctx.cat.renameView(viewIdent(str(row, 0)), viewIdent(str(row, 1)))
+          stringRow(str(row, 0), "renamed", str(row, 1))
+        }),
       Proc("list_views", "list_views([namespace]): the stored views of a namespace",
         Seq(arg("namespace", StringType, "''")),
         StructType(Seq(field("namespace", StringType), field("view", StringType),
           field("comment", StringType, nullable = true))),
-        (ctx, row) => listViews(ctx.root, row)),
+        (ctx, row) => {
+          val ns = optStr(row, 0)
+          ctx.cat.listViews(ns.toSeq.flatMap(_.split('.')): _*).toSeq.map { id =>
+            val c = ctx.cat.loadView(id).properties().get("comment")
+            InternalRow(utf8(ns.getOrElse("")), utf8(id.name()), if (c == null) null else utf8(c))
+          }
+        }),
       Proc("describe_view", "describe_view(name): a stored view's definition, context and schema",
         Seq(arg("name", StringType)),
         strings("view", "sql", "current_catalog", "current_namespace", "schema", "properties"),
-        (ctx, row) => describeView(ctx.root, row)),
+        (ctx, row) => {
+          val v = ctx.cat.loadView(viewIdent(str(row, 0)))
+          stringRow(str(row, 0), v.query(), v.currentCatalog(), v.currentNamespace().mkString("."),
+            v.schema().toDDL,
+            v.properties().asScala.toSeq.sortBy(_._1).map { case (k, w) => s"$k=$w" }.mkString(", "))
+        }),
 
       Proc("create_materialized_view",
         "create_materialized_view(name, sql[, or_replace]): store a view with a precomputed backing table",
@@ -1523,152 +1535,11 @@ object GraftProcedures {
     } finally os.close()
   }
 
-  // ---- view DDL (r12b, [[GraftViews]]) -----------------------------------
-  // Spark 4.1 has no native SQL route to a V2 ViewCatalog (CREATE VIEW
-  // cat.v fails with MISSING_CATALOG_ABILITY before the catalog is
-  // consulted), so the DDL verbs ride the engine's CALL surface — the
-  // same place every other engine verb without parser support lives.
-  // READS need no verb: [[graft.plans.ResolveGraftViews]] resolves
-  // SELECT over a stored view natively. `create_view` analyzes the body
-  // UP FRONT in the calling session (schema + output-column capture,
-  // loud failure on a body that doesn't resolve) and stores the
-  // session's current catalog/namespace as the definition context, so
-  // the body later re-resolves exactly as the author saw it.
-
-  private[sources] def splitViewName(root: String, dotted: String): (java.nio.file.Path, Array[String], String) = {
+  /** A CALL's dotted view name as an identifier: the last part is the
+    * view, the rest its namespace under the warehouse root. */
+  private[sources] def viewIdent(dotted: String): Identifier = {
     val parts = dotted.split('.')
-    val ns = parts.init
-    val nsDir = Paths.get(root, ns: _*)
-    require(parts.forall(_.nonEmpty), s"malformed view name '$dotted'")
-    require(ns.isEmpty || Files.isDirectory(nsDir),
-      s"no such namespace ${ns.mkString(".")} under $root")
-    require(!Files.exists(nsDir.resolve("_stats.jsonl")),
-      s"'${ns.mkString(".")}' is a table, not a namespace")
-    (nsDir, ns, parts.last)
-  }
-
-  private def createView(root: String, input: InternalRow): Seq[InternalRow] = {
-    val dotted = input.getUTF8String(0).toString
-    val sql = input.getUTF8String(1).toString
-    val comment = Option(input.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
-    val orReplace = input.getBoolean(3)
-    val (nsDir, _, vname) = splitViewName(root, dotted)
-    GraftViews.requireValidName(vname)
-    require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
-      s"a TABLE named '$dotted' exists — views and tables share one identifier space")
-    require(orReplace || !GraftViews.exists(nsDir, vname),
-      s"view '$dotted' already exists (pass or_replace => true to redefine)")
-    // analyze NOW, in the calling session: schema capture plus the
-    // loud create-time failure for a body that doesn't resolve
-    val spark = SparkSession.active
-    val schema = spark.sql(sql).schema
-    require(schema.fieldNames.toSeq.distinct.size == schema.size,
-      s"view body output has duplicate column names " +
-        s"(${schema.fieldNames.mkString(", ")}) — alias them apart")
-    // r14: an explicit column list renames the body's output
-    // positionally (the `CREATE VIEW v (a, b) AS ...` form) — the
-    // stored schema carries the ALIAS names (what readers see), the
-    // queryColumnNames keep the body's names (what the expansion
-    // projects by)
-    val aliases = Option(input.getUTF8String(4)).map(_.toString).filter(_.nonEmpty)
-      .map(_.split(',').map(_.trim).toSeq)
-    aliases.foreach { as =>
-      require(as.size == schema.size,
-        s"column list has ${as.size} names but the view body produces " +
-          s"${schema.size} columns (${schema.fieldNames.mkString(", ")})")
-      require(as.forall(_.nonEmpty) && as.distinct.size == as.size,
-        s"view column list must be distinct non-empty names: ${as.mkString(", ")}")
-    }
-    val visibleSchema = aliases match {
-      case Some(as) => StructType(schema.fields.zip(as).map { case (f, a) => f.copy(name = a) })
-      case None => schema
-    }
-    val cm = spark.sessionState.catalogManager
-    val replaced = GraftViews.read(nsDir, vname)
-    GraftViews.write(nsDir, GraftViews.ViewDef(
-      name = vname, sql = sql,
-      currentCatalog = cm.currentCatalog.name(),
-      currentNamespace = cm.currentNamespace.toSeq,
-      schema = visibleSchema,
-      queryColumnNames = schema.fieldNames.toSeq,
-      columnAliases = visibleSchema.fieldNames.toSeq,
-      columnComments = Seq.empty,
-      properties = comment.map(c => Map("comment" -> c)).getOrElse(Map.empty)),
-      replace = orReplace)
-    // a replaced materialized view's tables go once the new sidecar is
-    // published: a crash in between leaves orphans, never a dangling MV
-    replaced.foreach(MvLifecycle.dropOwnedTables(nsDir, _))
-    stringRow(dotted, "created", visibleSchema.fieldNames.mkString(","))
-  }
-
-  private def dropView(root: String, input: InternalRow): Seq[InternalRow] = {
-    val dotted = input.getUTF8String(0).toString
-    val ifExists = input.getBoolean(1)
-    val (nsDir, ns, vname) = splitViewName(root, dotted)
-    if (ifExists && !GraftViews.exists(nsDir, vname))
-      return stringRow(dotted, "not-found")
-    // a view referenced by OTHER stored views must not vanish out
-    // from under them — fail loudly naming every dependent (the
-    // alternative, a nested view that errors at next read, debugs
-    // like a corruption)
-    val dependents = GraftViews.referencingViews(
-      s => SparkSession.active.sessionState.sqlParser.parsePlan(s),
-      root, ns.toSeq, vname)
-    require(dependents.isEmpty,
-      s"cannot drop view '$dotted': referenced by stored view(s) " +
-        s"${dependents.mkString(", ")} — drop or redefine the dependents first")
-    // a materialized view owns its backing table and any
-    // COUNT(DISTINCT) liveness tables (r15) — dropping the
-    // definition removes all of them (engine-managed storage,
-    // unreachable from listings; leaving them would orphan it)
-    val defn = GraftViews.read(nsDir, vname)
-    require(GraftViews.drop(nsDir, vname), s"no such view '$dotted' under $root")
-    defn.foreach(MvLifecycle.dropOwnedTables(nsDir, _))
-    stringRow(dotted, "dropped")
-  }
-
-  private def renameView(root: String, input: InternalRow): Seq[InternalRow] = {
-    val from = input.getUTF8String(0).toString
-    val to = input.getUTF8String(1).toString
-    val (fromDir, _, fromName) = splitViewName(root, from)
-    val (toDir, _, toName) = splitViewName(root, to)
-    GraftViews.requireValidName(toName)
-    val d = GraftViews.read(fromDir, fromName)
-      .getOrElse(throw new IllegalArgumentException(s"no such view '$from' under $root"))
-    require(!GraftViews.exists(toDir, toName), s"view '$to' already exists")
-    require(!Files.exists(toDir.resolve(toName).resolve("_stats.jsonl")),
-      s"a TABLE named '$to' exists — views and tables share one identifier space")
-    // definition context stays: rename moves the ADDRESS, the body
-    // still resolves exactly as written. A materialized view's
-    // backing table moves with it (backing first, sidecar second —
-    // a crash in between reads as a stale MV, never a lost one)
-    val moved = GraftViews.moveMvBacking(fromDir, toDir, d, toName)
-    GraftViews.write(toDir, moved.copy(name = toName), replace = false)
-    GraftViews.drop(fromDir, fromName)
-    stringRow(from, "renamed", to)
-  }
-
-  private def listViews(root: String, input: InternalRow): Seq[InternalRow] = {
-    val ns = Option(input.getUTF8String(0)).map(_.toString).filter(_.nonEmpty)
-    val nsDir = ns.map(s => Paths.get(root, s.split('.'): _*)).getOrElse(Paths.get(root))
-    require(ns.isEmpty || Files.isDirectory(nsDir), s"no such namespace ${ns.get} under $root")
-    GraftViews.list(nsDir).map { n =>
-      val c = GraftViews.read(nsDir, n).flatMap(_.properties.get("comment"))
-      InternalRow(utf8(ns.getOrElse("")), utf8(n), c.map(utf8).orNull)
-    }
-  }
-
-  private def describeView(root: String, input: InternalRow): Seq[InternalRow] = {
-    val dotted = input.getUTF8String(0).toString
-    val (nsDir, _, vname) = splitViewName(root, dotted)
-    val d = GraftViews.read(nsDir, vname)
-      .getOrElse(throw new IllegalArgumentException(s"no such view '$dotted' under $root"))
-    stringRow(
-      dotted,
-      d.sql,
-      d.currentCatalog,
-      d.currentNamespace.mkString("."),
-      d.schema.toDDL,
-      d.properties.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(", "))
+    require(parts.nonEmpty && parts.forall(_.nonEmpty), s"malformed view name '$dotted'")
+    Identifier.of(parts.init, parts.last)
   }
 }

@@ -63,6 +63,10 @@ object GraftViews {
   // expands the body — both derivations are the same SQL, so reads are
   // correct in either state and refresh is a pure optimization.
 
+  /** Prefix of every engine-written MV property below — refused in
+    * caller-supplied properties and view changes ([[GraftCatalog]]). */
+  val EnginePropPrefix = "graft.mv."
+
   /** Property naming the backing table (presence = materialized). */
   val MvTableProp = "graft.mv.table"
 

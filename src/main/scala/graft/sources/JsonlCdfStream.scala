@@ -2,9 +2,10 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,6 +62,22 @@ object JsonlCdfStream {
   def cdfSchema(tableSchema: StructType): StructType =
     StructType(tableSchema.fields :+ StructField(ChangeTypeCol, StringType, nullable = false))
 
+  /** `inner`'s rows with the change type appended: `delete` on an
+    * inverted-mask read (the retracted leg), `insert` otherwise. One
+    * reusable JoinedRow over the inner row and a single-field tag row —
+    * no per-row array allocation on the change-scan hot path. */
+  private[sources] def tagged(inner: PartitionReader[InternalRow],
+                             invert: Boolean): PartitionReader[InternalRow] = {
+    val tagRow = new GenericInternalRow(
+      Array[Any](UTF8String.fromString(if (invert) "delete" else "insert")))
+    val joined = new JoinedRow()
+    new PartitionReader[InternalRow] {
+      override def next(): Boolean = inner.next()
+      override def get(): InternalRow = joined(inner.get(), tagRow)
+      override def close(): Unit = inner.close()
+    }
+  }
+
   /** The newest version whose manifest is actually LIVE: during an OCC
     * commit the version counter advances at slot reservation, one step
     * before the manifest swap — the feed must not read past the swap. */
@@ -109,20 +126,27 @@ object JsonlCdfOffset {
     JsonlCdfOffset(new ObjectMapper().readTree(s).get("v").asInt())
 }
 
-/** One CDF work unit: a whole file read under `mask`, either dropping
-  * the masked positions (insert leg) or emitting ONLY them (delete
-  * leg, `invert = true`). */
-final case class JsonlCdfPartition(file: String, mask: Seq[String],
-                                   invert: Boolean, changeType: String)
-    extends InputPartition
-
+/** Offsets are settled versions; a `Trigger.AvailableNow` drain freezes
+  * its end at the version settled when the query starts. Work units are
+  * the connector's whole-file [[JsonlFilePartition]]s read by its
+  * [[JsonlReaderFactory]]: the added leg reads each file under its
+  * deletion vectors, the retracted leg with the mask inverted (only the
+  * newly masked positions), and the factory tags each row `insert` or
+  * `delete` from that `invert` flag. */
 class JsonlCdfMicroBatchStream(root: String, tableSchema: StructType,
                                mapping: Map[String, String],
                                startingVersion: Int)
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  private var availableNow: Option[Int] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(JsonlCdfStream.settledVersion(root))
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = latestOffset()
 
   override def initialOffset(): Offset = JsonlCdfOffset(math.max(0, startingVersion - 1))
-  override def latestOffset(): Offset = JsonlCdfOffset(JsonlCdfStream.settledVersion(root))
+  override def latestOffset(): Offset =
+    JsonlCdfOffset(availableNow.getOrElse(JsonlCdfStream.settledVersion(root)))
   override def deserializeOffset(json: String): Offset = JsonlCdfOffset.fromJson(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -149,34 +173,12 @@ class JsonlCdfMicroBatchStream(root: String, tableSchema: StructType,
           "growth (a rollback restores a shorter list); its row-level delta needs the " +
           "image-cancelling join of batch tableChanges. The stream serves append + " +
           "merge-on-read commits exactly")
-    def part(s: JsonlStats.FileStats, changeType: String): InputPartition =
-      JsonlCdfPartition(Paths.get(root, s.file).toString,
-        s.dvs.map(dv => Paths.get(root, dv).toString), s.inv, changeType)
-    (d.added.map(part(_, "insert")) ++ d.retracted.map(part(_, "delete"))).toArray
+    (d.added ++ d.retracted).map(s => JsonlFilePartition(Paths.get(root, s.file).toString,
+      dvs = s.dvs.map(dv => Paths.get(root, dv).toString), invert = s.inv): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new JsonlCdfReaderFactory(tableSchema, mapping)
+    new JsonlReaderFactory(tableSchema, columnMapping = mapping, changeType = true)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-class JsonlCdfReaderFactory(tableSchema: StructType, mapping: Map[String, String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val c = p.asInstanceOf[JsonlCdfPartition]
-    val inner = new JsonlPartitionReader(c.file, tableSchema,
-      dvs = c.mask, columnMapping = mapping, invertMask = c.invert)
-    // zero-copy constant-column append (r8 review): one reusable
-    // JoinedRow over the inner row and a single-field tag row — no
-    // per-row array allocation on the change-scan hot path
-    val tagRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](UTF8String.fromString(c.changeType)))
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = inner.next()
-      override def get(): InternalRow = joined(inner.get(), tagRow)
-      override def close(): Unit = inner.close()
-    }
-  }
 }

@@ -155,8 +155,8 @@ object JsonlMvQueries extends QueryModule {
     * skipping, column pruning) applies THROUGH the view unchanged.
     * This query exercises the full lifecycle a SQL user sees: plain
     * `CREATE OR REPLACE VIEW` DDL (r13 —
-    * [[graft.plans.GraftViewDdlParser]] routes the statement shapes
-    * Spark 4.1 cannot, so nobody needs the CALL spelling; the body is
+    * [[graft.plans.GraftViewDdlParser]] routes the parsed statements
+    * Spark 4.1 cannot to the catalog's view methods; the body is
     * analyzed at definition time and unresolvable bodies refuse
     * loudly), a NESTED view over the first, and an aggregate through
     * both layers whose predicate still reaches the manifest (ViewsSpec

@@ -1505,13 +1505,16 @@ class LimitedReaderFactory(inner: PartitionReaderFactory, k: Int)
 class JsonlReaderFactory(required: StructType,
                          bloomSets: Seq[Array[Long]] = Seq.empty,
                          columnMapping: Map[String, String] = Map.empty,
-                         gramRequired: Array[Long] = Array.empty)
+                         gramRequired: Array[Long] = Array.empty,
+                         changeType: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
     case f: JsonlFilePartition =>
-      new JsonlPartitionReader(f.file, required, f.start, f.end, bloomSets, f.dvs,
+      val r = new JsonlPartitionReader(f.file, required, f.start, f.end, bloomSets, f.dvs,
         columnMapping, f.startRow, invertMask = f.invert, gramRequired = gramRequired,
         eqds = f.eqds, lin = f.lin)
+      // the change feed's rows carry `_change_type` ([[JsonlCdfStream]])
+      if (changeType) JsonlCdfStream.tagged(r, f.invert) else r
     case k: JsonlKeyedFilePartition =>
       new JsonlPartitionReader(k.file, required, bloomSets = bloomSets, dvs = k.dvs,
         columnMapping = columnMapping, invertMask = k.invert, gramRequired = gramRequired,

@@ -588,7 +588,7 @@ object JsonlVersionQueries extends QueryModule {
   }
 
   /** q279 (r11): ATOMIC TWO-TABLE PUBLISH — fact and its aggregate
-    * stage on branches and land via `fast_forward_pair` as ONE
+    * stage on branches and land via one `fast_forward_all` as ONE
     * warehouse transaction ([[Refs.Wtxn]]): a marker-committed
     * roll-forward that every catalog access completes, so no
     * catalog-routed reader ever sees fact new / agg old (the torn
@@ -614,8 +614,7 @@ object JsonlVersionQueries extends QueryModule {
     spark.sql(s"INSERT INTO $cat.jsonl_wtxn_fact.branch_load VALUES " +
       "(96100001, 'staged', 10.0), (96100002, 'staged', 20.0)")
     spark.sql(s"INSERT INTO $cat.jsonl_wtxn_agg.branch_load VALUES ('staged', 2, 30.0)")
-    spark.sql(s"CALL $cat.fast_forward_pair(" +
-      "'jsonl_wtxn_fact', 'load', 'jsonl_wtxn_agg', 'load')")
+    spark.sql(s"CALL $cat.fast_forward_all('jsonl_wtxn_fact:load,jsonl_wtxn_agg:load')")
     spark.sql(
       s"""SELECT a.event_type, a.n, a.value_sum,
          |  f.n AS fact_n, f.value_sum AS fact_sum
@@ -633,7 +632,7 @@ object JsonlVersionQueries extends QueryModule {
     * own catalog root (so the pair's transaction marker lives with the
     * pair). Both start with the "hist" slice (day-of-month > 7) at v1;
     * the day ≤ 7 "b1" slice stages on a `load` branch of each and lands
-    * through ONE `fast_forward_pair` (q279's warehouse transaction), so
+    * through ONE `fast_forward_all` (q279's warehouse transaction), so
     * no catalog reader sees one rollup at b1 and the other at hist. The
     * query joins both heads per day; `consistent` asserts the two
     * rollups account for the same events, and the oracle recomputes
@@ -655,7 +654,7 @@ object JsonlVersionQueries extends QueryModule {
         spark.sql(s"CALL $cat.create_branch('$t', 'load')")
         grain(ev.filter(dayofmonth($"ts") <= 7)).writeTo(s"$cat.$t.branch_load").append()
       }
-      spark.sql(s"CALL $cat.fast_forward_pair('bytype', 'load', 'byuser', 'load')")
+      spark.sql(s"CALL $cat.fast_forward_all('bytype:load,byuser:load')")
     }
     val cat = catalogAt(spark, root)
     val byType = spark.table(s"$cat.bytype").groupBy($"event_date")

@@ -116,13 +116,9 @@ object MvLifecycle {
     val dotted = input.getUTF8String(0).toString
     val sql = input.getUTF8String(1).toString
     val orReplace = input.getBoolean(2)
-    val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
-    GraftViews.requireValidName(vname)
-    require(!Files.exists(nsDir.resolve(vname).resolve("_stats.jsonl")),
-      s"a TABLE named '$dotted' exists — views and tables share one identifier space")
-    val existing = GraftViews.read(nsDir, vname)
-    require(orReplace || existing.isEmpty,
-      s"view '$dotted' already exists (pass or_replace => true to redefine)")
+    val ident = GraftProcedures.viewIdent(dotted)
+    val existing = pc.cat.requireViewSlot(ident, orReplace)
+    val (nsDir, ns, vname) = (pc.cat.namespaceDir(ident.namespace()), ident.namespace(), ident.name())
     val spark = SparkSession.active
     // source versions recorded BEFORE the build: a source commit
     // racing the CTAS leaves the MV stale (correct), never serving
@@ -183,7 +179,8 @@ object MvLifecycle {
   def refresh(pc: GraftProcedures.ProcCtx, input: InternalRow): Seq[InternalRow] = {
     val (catName, root) = (pc.catalog, pc.root)
     val dotted = input.getUTF8String(0).toString
-    val (nsDir, ns, vname) = GraftProcedures.splitViewName(root, dotted)
+    val ident = GraftProcedures.viewIdent(dotted)
+    val (nsDir, ns, vname) = (pc.cat.namespaceDir(ident.namespace()), ident.namespace(), ident.name())
     // ATOMIC CLAIM (r14, ADVICE r13): refreshes of one view
     // serialize on a per-view file lock — without it two concurrent
     // calls could both pass the pending check and both apply the
@@ -201,14 +198,11 @@ object MvLifecycle {
       throw new IllegalArgumentException(
         s"'$dotted' is a plain view — only materialized views refresh"))
     val spark = SparkSession.active
-    val cat = spark.sessionState.catalogManager.catalog(catName)
-      .asInstanceOf[GraftCatalog]
     val recorded = GraftViews.mvSourcesDecode(
       d.properties.getOrElse(GraftViews.MvSourcesProp, ""))
     // versions re-recorded BEFORE the rebuild — same conservatism
     val versions = versionsNow(root, recorded.map(_._1))
     val backingFqn = quoted(catName +: (ns.toSeq :+ backing))
-    val ident = Identifier.of(ns, vname)
 
     // INCREMENTAL path (r13): a single-source distributive body
     // whose backing carries the graft_ivm_* state refreshes by
@@ -225,7 +219,7 @@ object MvLifecycle {
     // different tables)
     val depsFresh = GraftViews.mvViewDepsFresh(root, d)
     val mode = (if (depsFresh) tryIncrementalRefresh(
-      spark, root, nsDir, catName, cat, ident, backingFqn, d, recorded, versions)
+      spark, root, nsDir, catName, pc.cat, ident, backingFqn, d, recorded, versions)
       else None) match {
       case Some(m) => m
       case None =>
@@ -256,7 +250,7 @@ object MvLifecycle {
           d.currentCatalog +: d.currentNamespace)
         val newVersions = versionsNow(root, srcTabs)
         val df = Bridge.ofRows(spark,
-          new graft.plans.ResolveGraftViews(spark).bodyPlan(catName, cat, ident, d))
+          new graft.plans.ResolveGraftViews(spark).bodyPlan(catName, pc.cat, ident, d))
         val (auxTables, havingSql) = buildMvBacking(
           spark, root, catName, ns.toSeq, vname, df, newVersions, orReplace = true)
         dropTables(nsDir, auxTablesOf(d).filterNot(auxTables.contains))

@@ -127,7 +127,7 @@ class IncrementalSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{JsonlFixtures, Refs}
     // q141's pair: two connector rollups published together by
-    // fast_forward_pair, in a build-once directory that is their own
+    // fast_forward_all, in a build-once directory that is their own
     // catalog root
     def snapshot() = SparkEntry.queries("q141_multi_table_snapshot")(spark, sfDir).collect().toSeq
     val before = snapshot()

@@ -451,6 +451,21 @@ class PlanShapeSpec extends SparkSpec {
       s"procedure names dispatched outside GraftProcedures.all:\n${dispatch.mkString("\n")}")
   }
 
+  test("one implementation of each view verb: only GraftCatalog and MvLifecycle " +
+    "write, drop, move or probe stored views, and the view DDL parser holds no " +
+    "regex and no CALL text") {
+    val verbs = Seq("GraftViews.write(", "GraftViews.drop(", "GraftViews.moveMvBacking(",
+      "GraftViews.referencingViews(")
+    val owners = Set("GraftCatalog.scala", "MvLifecycle.scala")
+    val copies = mainSourceHits((f, line) =>
+      verbs.exists(line.contains) && !owners.contains(f.getFileName.toString))
+    val regex = "\\.r\\b".r
+    val text = mainSourceHits((f, line) => f.getFileName.toString == "GraftViewDdlParser.scala" &&
+      (regex.findFirstIn(line).isDefined || line.contains("\"CALL")))
+    assert(copies.isEmpty && text.isEmpty,
+      s"a second implementation of a view verb:\n${(copies ++ text).mkString("\n")}")
+  }
+
   test("q165 SQL UDFs are inlined: no eval barrier, plan stays in whole-stage codegen") {
     val df = graft.analytics.SqlSurface.sqlUdfTiers(spark, sfDir)
     df.collect()

@@ -178,7 +178,7 @@ class RefsSpec extends SparkSpec {
       assert(preIds(k) === id, s"survivor $k must keep its fork-time id through the publish") }
   }
 
-  test("fast_forward_pair publishes two tables atomically; a crash between legs rolls forward (r11)") {
+  test("fast_forward_all publishes two tables atomically; a crash between legs rolls forward (r11)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parent = Files.createTempDirectory("refs_ffp").toString
@@ -203,7 +203,7 @@ class RefsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.fact.branch_load VALUES (3)")
     spark.sql(s"INSERT INTO $cat.agg.branch_load VALUES (30)")
     assert(ks("fact") === Seq(1L, 2L) && ks("agg") === Seq(10L), "staged rows invisible")
-    spark.sql(s"CALL $cat.fast_forward_pair('fact', 'load', 'agg', 'load')")
+    spark.sql(s"CALL $cat.fast_forward_all('fact:load,agg:load')")
     assert(ks("fact") === Seq(1L, 2L, 3L) && ks("agg") === Seq(10L, 30L),
       "both tables must publish in one transaction")
     assert(!Files.exists(Paths.get(parent, Refs.Wtxn.Marker)), "marker settles")
@@ -255,7 +255,7 @@ class RefsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.agg VALUES (99)") // main diverges
     val before = (ks("fact"), ks("agg"))
     val ex = intercept[Exception](
-      spark.sql(s"CALL $cat.fast_forward_pair('fact', 'load', 'agg', 'load')"))
+      spark.sql(s"CALL $cat.fast_forward_all('fact:load,agg:load')"))
     assert(ex.getMessage.contains("diverged"), ex.getMessage)
     assert((ks("fact"), ks("agg")) === before, "a failed pair publish applies NOTHING")
     assert(!Files.exists(Paths.get(parent, Refs.Wtxn.Marker)))

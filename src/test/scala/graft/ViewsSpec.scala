@@ -457,6 +457,27 @@ class ViewsSpec extends SparkSpec {
         .exists(_.getString(1) == "v_foreign"), "foreign view must not land here")
       spark.sql("DROP VIEW spark_catalog.default.v_foreign")
     } finally spark.sql(s"USE $prev")
+    // the statement is parsed, not pattern-matched: IF NOT EXISTS,
+    // leading comments, backticked names with spaces, LIKE patterns and
+    // trailing comments all reach the catalog
+    spark.sql("CREATE VIEW IF NOT EXISTS vspec.v_ine AS SELECT k FROM vspec.t1")
+    assert(spark.table("vspec.v_ine").columns.toSeq === Seq("k"))
+    // the second is a no-op: the stored body stays
+    spark.sql("CREATE VIEW IF NOT EXISTS vspec.v_ine AS SELECT v FROM vspec.t1")
+    assert(spark.table("vspec.v_ine").columns.toSeq === Seq("k"))
+    spark.sql("-- note\nCREATE VIEW vspec.v_lead AS SELECT k FROM vspec.t1 WHERE k = 'a'")
+    assert(spark.sql("SELECT * FROM vspec.v_lead").count() === 2)
+    spark.sql("/* note */ CREATE OR REPLACE VIEW vspec.v_lead AS SELECT k FROM vspec.t1")
+    assert(spark.sql("SELECT * FROM vspec.v_lead").count() === 4)
+    spark.sql("CREATE VIEW vspec.`v space` AS SELECT id FROM vspec.t1")
+    assert(GraftViews.exists(java.nio.file.Paths.get(root), "v space"))
+    assert(spark.sql("SELECT * FROM vspec.`v space`").count() === 4)
+    assert(spark.sql("SHOW VIEWS IN vspec LIKE 'v_lea*'").collect().map(_.getString(1)).toSeq
+      === Seq("v_lead"))
+    spark.sql("DROP VIEW vspec.v_lead -- bye")
+    assert(!GraftViews.exists(java.nio.file.Paths.get(root), "v_lead"))
+    spark.sql("DROP VIEW vspec.`v space`")
+    spark.sql("DROP VIEW vspec.v_ine")
   }
 
   test("dropping a view another view expands through fails loudly naming " +
@@ -555,8 +576,9 @@ class ViewsSpec extends SparkSpec {
     assert(e.getMessage.contains("v_sum"))
   }
 
-  test("CREATE VIEW column lists and COMMENT map onto the CALL surface; " +
-    "clauses with no mapping fail naming CALL create_view (r14)") {
+  test("CREATE VIEW clauses map onto the stored definition: column lists, " +
+    "per-column and view COMMENT, TBLPROPERTIES; engine-reserved properties " +
+    "are refused (r14)") {
     cat
     // column list renames the body's output positionally
     spark.sql("CREATE OR REPLACE VIEW vspec.v_cols (grp, total) AS " +
@@ -578,28 +600,32 @@ class ViewsSpec extends SparkSpec {
       spark.sql("CREATE OR REPLACE VIEW vspec.v_badcols (a, b, c) AS SELECT k FROM vspec.t1")
     }
     assert(bad.getMessage.contains("column list"), bad.getMessage)
-    // TBLPROPERTIES has no CALL mapping: fail HELPFULLY, not with
-    // Spark's MISSING_CATALOG_ABILITY wall
-    val tbl = intercept[Exception] {
-      spark.sql("CREATE VIEW vspec.v_props TBLPROPERTIES ('a'='b') AS SELECT 1 AS x")
-    }
-    assert(tbl.getMessage.contains("create_view"), tbl.getMessage)
-    // per-column COMMENT likewise
-    val colc = intercept[Exception] {
-      spark.sql("CREATE VIEW vspec.v_colc (a COMMENT 'c') AS SELECT k FROM vspec.t1")
-    }
-    assert(colc.getMessage.contains("create_view"), colc.getMessage)
-    // a backticked comma is ONE quoted identifier, not a separator — it
-    // cannot round-trip through the CALL's comma-joined columns
-    // parameter, so it must fail naming the CALL, never silently split
-    // into two names that happen to match the body's arity (ADVICE r14)
+    // TBLPROPERTIES land in the stored properties
+    spark.sql("CREATE VIEW vspec.v_props TBLPROPERTIES ('a'='b') AS SELECT 1 AS x")
+    assert(GraftViews.read(java.nio.file.Paths.get(root), "v_props").get
+      .properties.get("a").contains("b"))
+    // a per-column COMMENT lands in the stored column comments
+    spark.sql("CREATE VIEW vspec.v_colc (a COMMENT 'c') AS SELECT k FROM vspec.t1")
+    assert(cat.loadView(Identifier.of(Array.empty[String], "v_colc"))
+      .columnComments().toSeq === Seq("c"))
+    assert(spark.table("vspec.v_colc").schema.fieldNames.toSeq === Seq("a"))
+    // a backticked comma is ONE quoted identifier, not a separator: over a
+    // two-column body it fails the arity check instead of silently
+    // splitting into two names, over one column it is stored as written
     val tick = intercept[Exception] {
       spark.sql("CREATE OR REPLACE VIEW vspec.v_tick (`a,b`) AS SELECT k, v FROM vspec.t1")
     }
-    assert(tick.getMessage.contains("create_view"), tick.getMessage)
-    spark.sql("DROP VIEW vspec.v_cols")
-    spark.sql("DROP VIEW vspec.v_com")
-    spark.sql("DROP VIEW vspec.v_both")
+    assert(tick.getMessage.contains("column list has 1 names"), tick.getMessage)
+    spark.sql("CREATE OR REPLACE VIEW vspec.v_tick (`a,b`) AS SELECT k FROM vspec.t1")
+    assert(spark.table("vspec.v_tick").schema.fieldNames.toSeq === Seq("a,b"))
+    // the engine's MV bookkeeping properties are not the caller's to write
+    val eng = intercept[Exception] {
+      spark.sql("CREATE VIEW vspec.v_eng TBLPROPERTIES ('graft.mv.pending'='x') AS SELECT 1 AS x")
+    }
+    assert(eng.getMessage.contains("reserved"), eng.getMessage)
+    assert(!GraftViews.exists(java.nio.file.Paths.get(root), "v_eng"))
+    Seq("v_cols", "v_com", "v_both", "v_props", "v_colc", "v_tick")
+      .foreach(v => spark.sql(s"DROP VIEW vspec.$v"))
   }
 
   test("single-part DROP VIEW prefers a session TEMP view over the stored " +
@@ -958,5 +984,81 @@ class ViewsSpec extends SparkSpec {
     assert(owned("mv_own_d").isEmpty, s"dropped MV left tables behind: ${owned("mv_own_d")}")
     spark.sql("CALL vspec.drop_view('mv_own_r')")
     spark.sql("DROP TABLE vspec.own_t")
+  }
+
+  test("engine-reserved view properties are refused from callers: a failed " +
+    "refresh's crash marker cannot be removed or forged through the catalog") {
+    cat
+    spark.sql("DROP TABLE IF EXISTS vspec.rsv_t")
+    spark.sql("CREATE TABLE vspec.rsv_t AS SELECT k, v FROM vspec.t1")
+    spark.sql("CALL vspec.create_materialized_view('mv_rsv', " +
+      "'SELECT k, count(*) AS n FROM vspec.rsv_t GROUP BY k', or_replace => true)")
+    val nsDir = java.nio.file.Paths.get(root)
+    val d = GraftViews.read(nsDir, "mv_rsv").get
+    // what a refresh that died mid-MERGE leaves behind
+    GraftViews.write(nsDir, d.copy(properties = d.properties +
+      (GraftViews.MvPendingProp -> "incremental")), replace = true)
+    val ident = Identifier.of(Array.empty[String], "mv_rsv")
+    val rm = intercept[Exception] {
+      cat.alterView(ident, ViewChange.removeProperty(GraftViews.MvPendingProp))
+    }
+    assert(rm.getMessage.contains("reserved"), rm.getMessage)
+    assert(GraftViews.read(nsDir, "mv_rsv").get.properties.contains(GraftViews.MvPendingProp),
+      "the crash marker must survive a caller's removal")
+    intercept[Exception] {
+      cat.alterView(ident, ViewChange.setProperty(GraftViews.MvSourcesProp, "rsv_t@1"))
+    }
+    val schema = spark.table("vspec.t1").schema
+    val forged = intercept[Exception] {
+      cat.createView(new ViewInfo(
+        Identifier.of(Array.empty[String], "v_forged"), "SELECT 1 AS x", "vspec",
+        Array.empty[String], schema, schema.fieldNames, Array.empty[String],
+        Array.empty[String], java.util.Map.of(GraftViews.MvTableProp, "_mv_mv_rsv")))
+    }
+    assert(forged.getMessage.contains("reserved"), forged.getMessage)
+    // caller properties outside the prefix still alter freely
+    cat.alterView(ident, ViewChange.setProperty("owner", "bi"))
+    assert(cat.loadView(ident).properties().get("owner") === "bi")
+    spark.sql("CALL vspec.drop_view('mv_rsv')")
+    spark.sql("DROP TABLE vspec.rsv_t")
+  }
+
+  test("one path: a body defined through SQL, CALL create_view and " +
+    "GraftCatalog.createView stores equal sidecars, and each drop surface " +
+    "removes a materialized view's owned tables") {
+    cat
+    val namespaces = Seq("law_sql", "law_call", "law_api")
+    namespaces.foreach(ns => spark.sql(s"CREATE NAMESPACE IF NOT EXISTS vspec.$ns"))
+    val body = "SELECT k, sum(v) AS sv FROM vspec.t1 GROUP BY k"
+    spark.sql(s"CREATE VIEW vspec.law_sql.v_law (grp, total) COMMENT 'law' AS $body")
+    spark.sql(s"CALL vspec.create_view('law_call.v_law', '$body', comment => 'law', " +
+      "columns => 'grp,total')")
+    cat.createView(GraftCatalog.viewInfo(spark, Identifier.of(Array("law_api"), "v_law"),
+      body, Seq(("grp", None), ("total", None)), Some("law"), Map.empty))
+    val defs = namespaces.map(ns => GraftViews.read(java.nio.file.Paths.get(root, ns), "v_law").get)
+    assert(defs.forall(_ == defs.head), s"the three surfaces stored different definitions: $defs")
+    assert(defs.head.schema.fieldNames.toSeq === Seq("grp", "total") &&
+      defs.head.queryColumnNames === Seq("k", "sv") &&
+      defs.head.properties === Map("comment" -> "law"))
+    // replace each by a COUNT(DISTINCT) MV (a backing and a liveness
+    // table), then drop each through a different surface
+    def owned(ns: String): Seq[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(root, ns))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n == "_mv_v_law" || n.startsWith("_mvaux_v_law_")).toList
+      finally ls.close()
+    }
+    namespaces.foreach { ns =>
+      spark.sql(s"CALL vspec.create_materialized_view('$ns.v_law', " +
+        "'SELECT k, count(DISTINCT id) AS du FROM vspec.t1 GROUP BY k', or_replace => true)")
+      assert(owned(ns).size === 2, s"$ns: ${owned(ns)}")
+    }
+    spark.sql("DROP VIEW vspec.law_sql.v_law")
+    spark.sql("CALL vspec.drop_view('law_call.v_law')")
+    assert(cat.dropView(Identifier.of(Array("law_api"), "v_law")))
+    namespaces.foreach { ns =>
+      assert(!GraftViews.exists(java.nio.file.Paths.get(root, ns), "v_law"), ns)
+      assert(owned(ns).isEmpty, s"$ns kept owned tables: ${owned(ns)}")
+    }
   }
 }
